@@ -18,9 +18,15 @@ final class Ctx(val spark: SparkSession, val tracer: Tracer,
   def seconds: Double = args("seconds").toDouble
   def corrupt: Boolean = args.get("corrupt").contains("1")
 
-  val fixtureMs = mutable.ArrayBuffer[Double]()
-  var warmupMs = 0.0
+  /** Set-up, in process CPU ms: JVM start to session ready, each
+    * fixture build, the warm-up. */
+  var sessionCpuMs = 0.0
+  val fixtureCpuMs = mutable.ArrayBuffer[Double]()
+  var warmupCpuMs = 0.0
+  /** Every op's samples, and those of the ops inside the window. */
   val samples = mutable.LinkedHashMap[String, mutable.ArrayBuffer[Double]]()
+  val windowSamples = mutable.LinkedHashMap[String, mutable.ArrayBuffer[Double]]()
+  var window = Int.MaxValue
   val ops = mutable.ArrayBuffer[(Double, Double)]()
   val counters = mutable.LinkedHashMap[String, Double]()
   val checks = mutable.ArrayBuffer[(String, Boolean, String)]()
@@ -35,8 +41,11 @@ final class Ctx(val spark: SparkSession, val tracer: Tracer,
     * traced run's file counts. */
   val afterOp = mutable.ArrayBuffer[() => Unit]()
 
-  def sample(name: String, ms: Double): Unit =
+  def sample(name: String, ms: Double): Unit = {
     samples.getOrElseUpdate(name, mutable.ArrayBuffer()) += ms
+    if (attempted <= window)
+      windowSamples.getOrElseUpdate(name, mutable.ArrayBuffer()) += ms
+  }
 
   def check(name: String, ok: Boolean, detail: => String = ""): Unit = {
     checks += ((name, ok, if (ok) "" else detail))
@@ -50,32 +59,60 @@ final class Ctx(val spark: SparkSession, val tracer: Tracer,
     (r, (System.nanoTime() - s) / 1e6)
   }
 
-  /** Run `body`, recording its wall time as sample `name_ms` and the
-    * CPU time of the whole process (driver, executor, JIT and GC
-    * threads) as `name_cpu_ms`. CPU time excludes time the hypervisor
-    * stole, so it is the measure that stays put on a shared box. */
-  def measured[T](name: String)(body: => T): T = {
+  /** Run `body`; return its result and the CPU ms the JVM's Java
+    * threads (driver, executor task and Spark threads) spent meanwhile.
+    * CPU time excludes time the hypervisor stole, so it is the measure
+    * that stays put on a shared box. JIT compiler and GC threads are
+    * left out: they work off earlier ops on their own schedule. */
+  def cpuTimed[T](body: => T): (T, Double) = {
+    val c0 = Host.threadCpu()
+    val r = body
+    (r, Host.threadCpuMsSince(c0))
+  }
+
+  /** Like `cpuTimed`, but the CPU ms of the whole process, JIT and GC
+    * threads included: the measure of set-up, whose JIT warm-up is part
+    * of its cost. */
+  def processCpuTimed[T](body: => T): (T, Double) = {
     val c0 = Host.cpuMs()
-    val (r, ms) = timed(body)
-    sample(s"${name}_cpu_ms", Host.cpuMs() - c0)
+    val r = body
+    (r, Host.cpuMs() - c0)
+  }
+
+  /** Run `body`, recording its wall time as sample `name_ms` and its
+    * Java-thread CPU time (`cpuTimed`) as `name_cpu_ms`. */
+  def measured[T](name: String)(body: => T): T = {
+    val ((r, ms), cpu) = cpuTimed(timed(body))
+    sample(s"${name}_cpu_ms", cpu)
     sample(s"${name}_ms", ms)
     r
   }
 
-  /** Runs fixture builds `reps` times and records each duration; the
-    * last build's value is the fixture the workload measures. */
+  /** Runs fixture builds `reps` times and records each one's process
+    * CPU time;
+    * the last build's value is the fixture the workload measures. */
   def fixture[T](reps: Int)(build: Int => T): T =
     (0 until reps).map { r =>
-      val (v, ms) = timed(build(r))
-      fixtureMs += ms
+      val (v, cpu) = processCpuTimed(build(r))
+      fixtureCpuMs += cpu
       v
     }.last
 
+  def warmup(body: => Unit): Unit = warmupCpuMs = processCpuTimed(body)._2
+
   /** The closed loop: one client, the next op starts when the previous
-    * one ends, until `seconds` have passed and the op count is a
-    * multiple of `granule` (a whole request round), or `maxOps` ran.
-    * An op that throws counts as failed and gives no latency sample. */
-  def loop(maxOps: Int, granule: Int = 1)(op: Int => Unit): Unit = {
+    * one ends, until `seconds` have passed, the op count is a multiple
+    * of `granule` (a whole request round) and at least `window` ops
+    * ran, or `maxOps` ran. The gated figures are taken over the first
+    * `window` ops (all ops by default): a workload whose per-op cost
+    * changes with its state sets a window, so that its figures do not
+    * depend on how many ops a run completes. A workload whose ops are of
+    * different kinds names op i's `kind`; its op samples are then
+    * recorded as `op_ms:kind` etc. An op that throws counts as failed
+    * and gives no latency sample. */
+  def loop(maxOps: Int, granule: Int = 1, window: Int = Int.MaxValue,
+      kind: Int => String = _ => "")(op: Int => Unit): Unit = {
+    this.window = window
     Host.log("loop start")
     val gc0 = Host.gcMs()
     val host0 = Host.ticks()
@@ -83,16 +120,22 @@ final class Ctx(val spark: SparkSession, val tracer: Tracer,
     var paused = 0L // time in afterOp bookkeeping, not measured
     var i = 0
     while ((System.nanoTime() - paused - start < seconds * 1e9 ||
-        i % granule != 0) && i < maxOps) {
+        i % granule != 0 || (window < maxOps && i < window)) && i < maxOps) {
       val s = tracer.nowMs
-      val c0 = Host.cpuMs()
+      val c0 = Host.threadCpu()
+      val steal0 = Host.ticks()._1
       attempted += 1
       try {
         op(i)
         val e = tracer.nowMs
         ops += ((s, e))
-        sample("op_ms", e - s)
-        sample("op_cpu_ms", Host.cpuMs() - c0)
+        val k = if (kind(i).isEmpty) "" else s":${kind(i)}"
+        sample(s"op_ms$k", e - s)
+        sample(s"op_cpu_ms$k", Host.threadCpuMsSince(c0))
+        // wall minus this op's share of steal: the box's steal ticks
+        // spread over its CPUs (an estimate; see README)
+        sample(s"op_less_steal_ms$k", e - s - (Host.ticks()._1 - steal0) *
+          Host.TickMs / Runtime.getRuntime.availableProcessors())
         val p = System.nanoTime()
         afterOp.foreach(_())
         paused += System.nanoTime() - p
@@ -129,11 +172,11 @@ object Main {
       case Array(k, v) if k.startsWith("--") => k.drop(2) -> v
     }.toMap
     val w = Workloads(args("workload"))
-    val jvmStart = ManagementFactory.getRuntimeMXBean.getStartTime
     val spark = graft.GraftSession.getOrCreate("perfbench")
-    val sessionMs = (System.currentTimeMillis() - jvmStart).toDouble
     val c = new Ctx(spark, new Tracer(spark.sparkContext,
       args.get("trace").contains("1")), args)
+    // the process's CPU time so far: JVM start and session build
+    c.sessionCpuMs = Host.cpuMs()
     try {
       w.run(c)
     } catch {
@@ -146,9 +189,9 @@ object Main {
     val out = mutable.LinkedHashMap[String, Any](
       "workload" -> args("workload"),
       "seed" -> args.getOrElse("seed", ""),
-      "session_ms" -> sessionMs,
-      "fixture_ms" -> c.fixtureMs.toSeq,
-      "warmup_ms" -> c.warmupMs,
+      "session_cpu_ms" -> c.sessionCpuMs,
+      "fixture_cpu_ms" -> c.fixtureCpuMs.toSeq,
+      "warmup_cpu_ms" -> c.warmupCpuMs,
       "attempted" -> c.attempted,
       "failed" -> c.failed,
       "measure_s" -> c.measureS,
@@ -158,6 +201,7 @@ object Main {
       "steal_s" -> c.stealS,
       "cotenant_cpus" -> c.cotenantCpus,
       "samples" -> c.samples.map { case (k, v) => k -> v.toSeq },
+      "window_samples" -> c.windowSamples.map { case (k, v) => k -> v.toSeq },
       "counters" -> c.counters,
       "checks" -> c.checks.map { case (n, ok, d) =>
         Map("name" -> n, "ok" -> ok, "detail" -> d) },
@@ -180,6 +224,7 @@ object Main {
   * re-run because of them. */
 object Host {
   private val Hz = 100.0
+  val TickMs = 1000.0 / Hz
 
   /** A progress line with the JVM's uptime, to the run's log. */
   def log(msg: String): Unit = System.err.println(
@@ -210,6 +255,20 @@ object Host {
     val other = ((b._2 - a._2) - (b._3 - a._3)) / Hz
     (steal, if (wallS > 0) math.max(0.0, other / wallS) else 0.0)
   }
+
+  /** CPU time of each live Java thread (driver, executor task and
+    * Spark's own threads; the JIT compiler and GC threads are not Java
+    * threads), by thread id, in ns. */
+  def threadCpu(): Map[Long, Long] = {
+    val tb = ManagementFactory.getThreadMXBean
+    tb.getAllThreadIds.map(id => id -> tb.getThreadCpuTime(id))
+      .filter(_._2 >= 0).toMap
+  }
+
+  /** CPU ms the Java threads spent since the `threadCpu()` snapshot
+    * `from`; a thread that ended in between is not counted. */
+  def threadCpuMsSince(from: Map[Long, Long]): Double =
+    threadCpu().map { case (id, ns) => ns - from.getOrElse(id, 0L) }.sum / 1e6
 
   /** CPU time of this process so far, in ms. */
   def cpuMs(): Double = ManagementFactory.getOperatingSystemMXBean

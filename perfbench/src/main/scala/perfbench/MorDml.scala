@@ -14,17 +14,21 @@ import graft.ops.{ManifestTable => MT, ZTable}
   * (mergeBatchDV), updates one seeded key range (updateWhereDV) and
   * deletes another (deleteWhereDV), every `BinPackEvery` ops compacts
   * (optimizeBinPack), and then reads: a pruned range read (scanXRange)
-  * and a Bloom point probe (bloomCandidateFiles). Every op does the
-  * same calls, so the medians do not depend on how many ops a run
-  * completes.
+  * and a Bloom point probe (bloomCandidateFiles). A run measures whole
+  * compaction cycles, and its gated figures cover the first `Cycles`
+  * of them: the medians are taken over ops and calls of that fixed
+  * mix, and the amplification and table shape after its last op, so
+  * none of them depends on how many ops a run completes.
   *
   * Checks (untimed): the final read equals a driver-side model that
   * replays the executed ops as copy-on-write, countVersion equals the
   * row count, and a pruned scan and the Bloom candidates of a live key
   * return what a filter over the full read returns. */
 object MorDml extends Workload {
-  val BinPackEvery = 3
-  val FixtureReps = 3
+  val BinPackEvery = 2
+  val Cycles = 2
+  /** One table for the warm-up, one for the measured loop. */
+  val FixtureReps = 2
   /** binPack compacts the DML fragments and carries the z-ordered
     * base files, which are larger than this. */
   val SmallFileBytes = 128L * 1024
@@ -46,7 +50,7 @@ object MorDml extends Workload {
     val ops = Json.readOps(s"$mor/ops.json")
     // warm-up on an earlier fixture table: every DML call, a compaction
     // and both reads once
-    c.warmupMs = c.timed {
+    c.warmup {
       val w = s"${c.work}/mor_t0"
       val op = ops.head
       merge(c, w, op, "w")
@@ -55,7 +59,7 @@ object MorDml extends Workload {
       MT.optimizeBinPack(spark, w, minFileBytes = SmallFileBytes)
       consume(scan(c, w, op))
       ZTable.bloomCandidateFiles(spark, w, lit(op("probe")))
-    }._2
+    }
     val bytes0 = Host.dirBytes(root)
     var sourceBytes = 0L
     var executed = 0
@@ -69,7 +73,8 @@ object MorDml extends Workload {
       r
     }
 
-    c.loop(ops.size) { i =>
+    val window = BinPackEvery * Cycles
+    c.loop(ops.size, granule = BinPackEvery, window = window) { i =>
       val op = ops(i)
       sourceBytes += java.nio.file.Files.size(
         java.nio.file.Paths.get(s"$mor/${op("batch")}"))
@@ -96,24 +101,29 @@ object MorDml extends Workload {
           probeRec.foreach(_.extra("files_frac") = cands.size / live)
         }
       }
+      if (executed == window) c.afterOp += (() => shape(c, root, bytes0, sourceBytes))
     }
-
-    // amplification and table shape at the end of the run
-    c.counters("write_amp") =
-      (Host.dirBytes(root) - bytes0).toDouble / sourceBytes.max(1L)
-    val finalDf = MT.read(spark, root).get
-    val plainDir = s"${c.work}/mor_plain"
-    finalDf.coalesce(1).write.mode("overwrite").parquet(plainDir)
-    c.counters("space_amp") =
-      liveBytes(c, root).toDouble / Host.dirBytes(plainDir)
-    val v = MT.currentVersion(spark, root).get
-    val live = liveFiles(c, root)
-    c.counters("ops.ManifestTable.live_files") = live.toDouble
-    c.counters("ops.ManifestTable.dv_rows") =
-      (footerRows(c, root) - MT.countVersion(spark, root, v)).toDouble
     c.counters("ops_executed") = executed.toDouble
 
-    checks(c, root, base, ops.take(executed), finalDf, v)
+    val finalDf = MT.read(spark, root).get
+    checks(c, root, base, ops.take(executed), finalDf,
+      MT.currentVersion(spark, root).get)
+  }
+
+  /** Amplification and table shape: bytes added under the table root
+    * per CDC byte, bytes of the live version per byte of its rows as
+    * plain parquet, live files and rows hidden by deletion vectors. */
+  private def shape(c: Ctx, root: String, bytes0: Long, sourceBytes: Long): Unit = {
+    c.counters("write_amp") =
+      (Host.dirBytes(root) - bytes0).toDouble / sourceBytes.max(1L)
+    val plainDir = s"${c.work}/mor_plain"
+    MT.read(c.spark, root).get.coalesce(1).write.mode("overwrite").parquet(plainDir)
+    c.counters("space_amp") =
+      liveBytes(c, root).toDouble / Host.dirBytes(plainDir)
+    val v = MT.currentVersion(c.spark, root).get
+    c.counters("ops.ManifestTable.live_files") = liveFiles(c, root).toDouble
+    c.counters("ops.ManifestTable.dv_rows") =
+      (footerRows(c, root) - MT.countVersion(c.spark, root, v)).toDouble
   }
 
   private def merge(c: Ctx, root: String, op: Map[String, String],

@@ -15,12 +15,18 @@ import org.apache.spark.sql.types.StructType
   * on the seed. One draw of each query warms the JVM first. A draw
   * builds the query's DataFrame (`queries.build`), forces its physical
   * plan (`plan`) and runs that plan, collecting every output row and
-  * column to the client (`exec`).
+  * column to the client (`exec`). Its samples are kept per query, and
+  * the per-op figures average the queries' medians.
   *
   * Checks (untimed): each query's warm-up rows hash
   * (graft.Verify.canonHash) to the oracle-anchored value in
   * VERIFYHASH.json, and every measured draw returns the same rows. */
 object ServeGold extends Workload {
+  /** Rounds of the mix the gated figures cover. A query's CPU time
+    * still falls from draw to draw (JIT), by a third or more from its second
+    * draw to its fifth, so the figures take the same draws every run. */
+  val Rounds = 3
+
   /** Order-insensitive digest of collected rows. */
   def rowsHash(rows: Array[Row]): String = {
     val md = java.security.MessageDigest.getInstance("MD5")
@@ -54,16 +60,17 @@ object ServeGold extends Workload {
       } else if (h != first(n)) differs += n
     }
 
-    c.warmupMs = c.timed {
+    c.warmup {
       mix.foreach { n =>
         val df = queries(n)(spark, dir)
         verify(n, df.collect(), df.schema)
         graft.CacheTracker.releaseAll()
       }
-    }._2
+    }
 
     val t = c.tracer
-    c.loop(draws.size, granule = mix.size) { i =>
+    c.loop(draws.size, granule = mix.size, window = Rounds * mix.size,
+      kind = draws) { i =>
       val n = draws(i)
       val df = t.span("queries.build")(queries(n)(spark, dir))
       t.span("plan")(df.queryExecution.executedPlan)

@@ -2,16 +2,13 @@
 
   python3 -m unittest perfbench/test_perfbench.py
 
-The generator, the tail rule and the span interval arithmetic run in
-seconds. The corrupted-expectation self-test builds the engine and runs
-every workload once with one expected value corrupted; it is opt-in:
-
-  PERFBENCH_SELFTEST=1 python3 -m unittest perfbench/test_perfbench.py
+The generator, the tail rule, the span interval arithmetic and the
+metric lists run in seconds. The corrupted-expectation self-test, which
+builds the engine and runs every workload, is test_selftest.py.
 """
 
 import json
 import os
-import subprocess
 import sys
 import tempfile
 import unittest
@@ -113,25 +110,28 @@ class StatsTest(unittest.TestCase):
         self.assertEqual(stats.covered([(-5, 2), (8, 20)], 0, 10), 4)
         self.assertEqual(stats.covered([(12, 15)], 0, 10), 0)
 
+    def test_mix_median_averages_the_kinds_medians(self):
+        samples = {"op_ms:a": [1, 2, 30], "op_ms:b": [10, 20], "op_msx": [99]}
+        self.assertEqual(run.mix_median(samples, "op_ms"), (2 + 15) / 2)
+        self.assertEqual(run.mix_median({"op_ms": [4, 1, 9]}, "op_ms"), 4)
+
     def test_gap_is_wall_minus_job_cover(self):
         self.assertEqual(stats.gap_ms((0, 100), [(10, 40), (30, 60)]), 50)
         self.assertEqual(stats.gap_ms((0, 100), []), 100)
         self.assertEqual(stats.gap_ms((0, 100), [(-10, 200)]), 0)
 
 
-@unittest.skipUnless(os.environ.get("PERFBENCH_SELFTEST") == "1",
-                     "set PERFBENCH_SELFTEST=1 to build and run the engine")
-class SelfTest(unittest.TestCase):
-    def test_corrupted_expectation_fails_the_run(self):
-        for w in gen.WORKLOADS:
-            p = subprocess.run(
-                [sys.executable, os.path.join(HERE, "run.py"), "--workload", w,
-                 "--seed", "1", "--seconds", "2", "--trace", "0", "--corrupt"],
-                capture_output=True, text=True, timeout=900)
-            last = json.loads(p.stdout.strip().splitlines()[-1])
-            self.assertEqual(p.returncode, 1, w)
-            self.assertFalse(last["correct"], w)
-            self.assertIn("FAILED", p.stdout, w)
+class MetricListTest(unittest.TestCase):
+    def test_benchmark_json_lists_what_the_workloads_report(self):
+        """Every metric a workload reports has a unit in BENCHMARK.json,
+        and BENCHMARK.json lists no metric that no workload reports."""
+        e2e = {n for w in run.WORKLOADS.values() for n in w["end_to_end"]}
+        layer = {n for w in run.WORKLOADS for n in run.per_layer_names(w)}
+        self.assertEqual(e2e, {m["name"] for m in run.BENCHMARK["end_to_end"]})
+        self.assertEqual(layer, {m["name"] for m in run.BENCHMARK["per_layer"]})
+        self.assertEqual(set(run.WORKLOADS), set(gen.WORKLOADS))
+        self.assertEqual(set(run.WORKLOADS),
+                         {w["name"] for w in run.BENCHMARK["workloads"]})
 
 
 if __name__ == "__main__":
