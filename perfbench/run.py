@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Seeded benchmark of the engine: one command per workload.
 
-  python3 perfbench/run.py --workload serve_gold --seed 1 --seconds 9 --trace 0
+  python3 perfbench/run.py --workload serve_gold --seed 1 --seconds 5 --trace 0
 
 Builds the engine and the benchmark from source (sbt, offline) into
 .bench_build (or $CARGO_TARGET_DIR), generates the workload's inputs
@@ -37,8 +37,8 @@ def read(path):
         return fh.read()
 
 
-# BENCHMARK.json names the metrics and their units; run.py and the
-# tests read it from there.
+# BENCHMARK.json gives the units of the metrics it lists; UNITS gives
+# those of the figures and span counters the runs print besides.
 BENCHMARK = json.loads(read(os.path.join(ROOT, "BENCHMARK.json")))
 UNITS = {m["name"]: m["unit"]
          for m in BENCHMARK["end_to_end"] + BENCHMARK["per_layer"]}
@@ -46,20 +46,32 @@ DEFAULT_SEED = 1
 # for confirming a later claim on inputs the benchmark was not tuned on
 HELDOUT_SEED = 7919
 
-# What each workload reports: its gated end-to-end metrics, its spans
-# with their counters beyond SPAN_COUNTERS, its run-level counters, and
-# the wall-clock figures printed on the "# wall:" line (not gated).
+# Every workload reports the same metrics: END_TO_END with tracing off,
+# PER_LAYER with tracing on. A per-layer `op.*` counter is summed over
+# the Spark jobs of the op's named spans (gap_ms: over the spans' gaps)
+# and divided by the op count.
+END_TO_END = ["setup_s", "op_cpu_ms"]
+OP_COUNTERS = ["jobs", "tasks", "cpu_s", "gap_ms", "in_bytes",
+               "shuffle_bytes", "out_bytes"]
+RUN_COUNTERS = ["jvm.gc_ms", "jvm.peak_rss_mb", "setup.session_ms",
+                "setup.prepare_ms", "trace.span_coverage", "trace.op_p50_ms",
+                "trace.op_cpu_ms"]
+PER_LAYER = [f"op.{k}" for k in OP_COUNTERS] + RUN_COUNTERS
+
+# What each workload prints besides, not gated. Traced run ("# span"
+# lines): its named spans with their counters beyond SPAN_COUNTERS, and
+# its run-level counters. Untraced run: its own figures over the gated
+# window ("# figure" lines). Both: wall-clock figures over all ops
+# ("# wall:" line).
 WORKLOADS = {
     "serve_gold": {
-        "end_to_end": ["setup_s", "op_cpu_ms"],
         "spans": {"queries.build": [], "plan": [],
                   "exec": ["in_bytes", "shuffle_bytes"]},
         "counters": [],
+        "figures": [],
         "wall": ["op_p50_ms", "op_less_steal_p50_ms", "ops_per_s"],
     },
     "mor_dml": {
-        "end_to_end": ["setup_s", "op_cpu_ms", "commit_cpu_ms",
-                       "fresh_read_cpu_ms", "write_amp", "space_amp"],
         "spans": {
             "ops.ManifestTable.mergeBatchDV": ["out_bytes"],
             "ops.ManifestTable.updateWhereDV": ["out_bytes"],
@@ -69,38 +81,42 @@ WORKLOADS = {
             "ops.ZTable.bloomCandidateFiles": ["files_frac"],
         },
         "counters": ["ops.ManifestTable.live_files", "ops.ManifestTable.dv_rows"],
+        "figures": ["commit_cpu_ms", "fresh_read_cpu_ms", "write_amp",
+                    "space_amp"],
         "wall": ["op_p50_ms", "op_less_steal_p50_ms", "ops_per_s",
                  "commit_p50_ms", "fresh_read_p50_ms"],
     },
     "corpus_ingest": {
-        "end_to_end": ["setup_s", "op_cpu_ms", "state_bytes_per_doc"],
         "spans": {
             "pipelines.CorpusPipeline.ingestNew": ["admit_frac", "shuffle_bytes"],
             "pipelines.CorpusPipeline.ingestNewNearDup":
                 ["admit_frac", "shuffle_bytes", "spill_bytes"],
         },
         "counters": [],
+        "figures": ["state_bytes_per_doc"],
         "wall": ["op_p50_ms", "op_less_steal_p50_ms", "ops_per_s", "docs_per_s"],
     },
 }
-# every span reports these; a counter the workload noted on the span
-# itself wins, any other is summed over the span's Spark jobs
+# every named span reports these; a counter the workload noted on the
+# span itself wins, any other is summed over the span's Spark jobs
 SPAN_COUNTERS = ["ms", "jobs", "tasks", "cpu_s", "gap_ms"]
-RUN_COUNTERS = ["jvm.gc_ms", "jvm.peak_rss_mb", "setup.session_ms",
-                "setup.fixture_ms", "setup.warmup_ms", "trace.span_coverage",
-                "trace.op_p50_ms"]
-
-
-def per_layer_names(wl):
-    w = WORKLOADS[wl]
-    return [f"{s}.{k}" for s, extra in w["spans"].items()
-            for k in SPAN_COUNTERS + extra] + w["counters"] + RUN_COUNTERS
+UNITS.update({
+    "op_p50_ms": "ms", "op_less_steal_p50_ms": "ms", "ops_per_s": "1/s",
+    "commit_cpu_ms": "ms", "fresh_read_cpu_ms": "ms", "write_amp": "ratio",
+    "space_amp": "ratio", "commit_p50_ms": "ms", "fresh_read_p50_ms": "ms",
+    "state_bytes_per_doc": "B/doc", "docs_per_s": "1/s",
+    "ops.ManifestTable.live_files": "count", "ops.ManifestTable.dv_rows": "count"})
+# a named span's counters, by counter
+SPAN_UNITS = {
+    "ms": "ms", "jobs": "count", "tasks": "count", "cpu_s": "s", "gap_ms": "ms",
+    "in_bytes": "B", "shuffle_bytes": "B", "out_bytes": "B", "spill_bytes": "B",
+    "files_frac": "frac", "admit_frac": "frac"}
 
 
 RUN_TIMEOUT_S = 170
 BUILD_TIMEOUT_S = 840
 CPUS_MAX = 4  # local[n], n = min(CPUS_MAX, cores)
-JVM_HEAP = "3g"
+JVM_HEAP = "2g"
 
 # Spark 4 on JDK 17 outside spark-submit needs these (the root build's
 # javaOptions carry the same list).
@@ -189,7 +205,8 @@ def run_jvm(a, cp_file, work, data):
     java = os.path.join(os.environ["JAVA_HOME"], "bin", "java") \
         if os.environ.get("JAVA_HOME") else "java"
     out = os.path.join(work, "result.json")
-    cmd = [java, f"-Xmx{JVM_HEAP}", "-XX:-UsePerfData", *ADD_OPENS,
+    cmd = [java, f"-Xmx{JVM_HEAP}", f"-Xms{JVM_HEAP}", "-XX:+AlwaysPreTouch",
+           "-XX:-UsePerfData", *ADD_OPENS,
            "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
            f"-Dspark.local.dir={work}/spark-local",
            f"-Dspark.sql.warehouse.dir={work}/warehouse",
@@ -261,7 +278,9 @@ def figures(res, names, samples):
         raise BenchError(f"the run recorded no {e}")
 
 
-def per_layer(res, wl):
+def span_figures(res, wl):
+    """The workload's named spans, per call (mean over the run's calls),
+    and its run-level counters: printed by the traced run, not gated."""
     spans, jobs, m = res["spans"], res["jobs"], {}
     for name, extra in WORKLOADS[wl]["spans"].items():
         recs = [x for x in spans if x["name"] == name]
@@ -271,38 +290,56 @@ def per_layer(res, wl):
         m[f"{name}.jobs"] = len(js) / n
         m[f"{name}.tasks"] = sum(j["tasks"] for j in js) / n
         m[f"{name}.cpu_s"] = sum(j["cpu_ns"] for j in js) / 1e9 / n
-        m[f"{name}.gap_ms"] = sum(stats.gap_ms(
-            (x["start"], x["end"]),
-            [(j["start"], j["end"]) for j in js
-             if j["start"] < x["end"] and j["end"] > x["start"]])
-            for x in recs) / n
+        m[f"{name}.gap_ms"] = sum(span_gap(x, js) for x in recs) / n
         for k in extra:
             noted = [x["extra"][k] for x in recs if k in x["extra"]]
             m[f"{name}.{k}"] = sum(noted) / len(noted) if noted else \
                 sum(j[k] for j in js) / n
-    c = res["counters"]
     for k in WORKLOADS[wl]["counters"]:
-        m[k] = c[k]
-    m["jvm.gc_ms"] = res["gc_ms"] / len(res["ops"])
-    m["jvm.peak_rss_mb"] = res["peak_rss_mb"]
-    (m["setup.session_ms"], m["setup.fixture_ms"],
-     m["setup.warmup_ms"]) = setup_ms(res)
-    # share of op wall time inside the named spans, and the traced run's
-    # op latency (minus the untraced run's op_p50_ms = tracing overhead)
-    named = [(x["start"], x["end"]) for x in spans
-             if x["name"] in WORKLOADS[wl]["spans"]]
-    wall = sum(b - a for a, b in res["ops"])
-    inside = sum(stats.covered(named, a, b) for a, b in res["ops"])
-    m["trace.span_coverage"] = inside / wall if wall else 0.0
-    m["trace.op_p50_ms"] = mix_median(res["samples"], "op_ms")
+        m[k] = res["counters"][k]
     return m
+
+
+def span_gap(span, jobs):
+    """The span's wall time not covered by the given jobs."""
+    return stats.gap_ms((span["start"], span["end"]),
+                        [(j["start"], j["end"]) for j in jobs
+                         if j["start"] < span["end"] and j["end"] > span["start"]])
+
+
+def per_layer(res, wl):
+    """The PER_LAYER metrics of a traced run."""
+    names = WORKLOADS[wl]["spans"]
+    spans = [x for x in res["spans"] if x["name"] in names]
+    jobs = [j for j in res["jobs"] if j["span"] in names]
+    ops = len(res["ops"])
+    m = {f"op.{k}": sum(j[k] for j in jobs) / ops
+         for k in ("tasks", "in_bytes", "shuffle_bytes", "out_bytes")}
+    m["op.jobs"] = len(jobs) / ops
+    m["op.cpu_s"] = sum(j["cpu_ns"] for j in jobs) / 1e9 / ops
+    m["op.gap_ms"] = sum(span_gap(x, [j for j in jobs if j["span"] == x["name"]])
+                         for x in spans) / ops
+    m["jvm.gc_ms"] = res["gc_ms"] / ops
+    m["jvm.peak_rss_mb"] = res["peak_rss_mb"]
+    m["setup.session_ms"], fixture, warmup = setup_ms(res)
+    m["setup.prepare_ms"] = fixture + warmup
+    # share of op wall time inside the named spans, and the traced run's
+    # op latency and CPU (minus the untraced run's op_p50_ms and
+    # op_cpu_ms = tracing overhead)
+    wall = sum(b - a for a, b in res["ops"])
+    inside = sum(stats.covered([(x["start"], x["end"]) for x in spans], a, b)
+                 for a, b in res["ops"])
+    m["trace.span_coverage"] = inside / wall
+    m["trace.op_p50_ms"] = mix_median(res["samples"], "op_ms")
+    m["trace.op_cpu_ms"] = mix_median(res["window_samples"], "op_cpu_ms")
+    return {k: m[k] for k in PER_LAYER}
 
 
 def main(argv=None):
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     ap.add_argument("--workload", required=True, choices=sorted(WORKLOADS))
     ap.add_argument("--seed", type=int, default=DEFAULT_SEED)
-    ap.add_argument("--seconds", type=float, default=9)
+    ap.add_argument("--seconds", type=float, default=5)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     ap.add_argument("--corrupt", action="store_true",
                     help="self-test: corrupt one expected value; the run must fail")
@@ -324,8 +361,12 @@ def main(argv=None):
         if not by_kind(res["samples"], "op_ms"):
             raise BenchError("no op completed")
         w = WORKLOADS[a.workload]
-        metrics = per_layer(res, a.workload) if a.trace else \
-            figures(res, w["end_to_end"], res["window_samples"])
+        if a.trace:
+            metrics = per_layer(res, a.workload)
+            extra = span_figures(res, a.workload)
+        else:
+            metrics = figures(res, END_TO_END, res["window_samples"])
+            extra = figures(res, w["figures"], res["window_samples"])
         # wall-clock figures over all ops: printed, not gated (see README)
         wall = figures(res, w["wall"], res["samples"])
     except BenchError as e:
@@ -336,6 +377,9 @@ def main(argv=None):
 
     for k, v in metrics.items():
         print(f"{k} {v:.6g} {UNITS[k]}")
+    for k, v in extra.items():
+        print(f"# {'span' if a.trace else 'figure'} {k} {v:.6g} "
+              f"{UNITS.get(k) or SPAN_UNITS[k.rsplit('.', 1)[1]]}")
     print("# wall: " + " ".join(f"{k}={v:.6g}" for k, v in wall.items()))
     op = [v for g in by_kind(res["samples"], "op_ms") for v in g]
     p = stats.tail_pct(len(op))
@@ -344,7 +388,8 @@ def main(argv=None):
           f"ops={len(op)} op_tail({tail}) "
           f"attempted={res['attempted']} failed={res['failed']} "
           f"failed_frac={res['failed'] / max(1, res['attempted']):.4g} "
-          f"measure_s={res['measure_s']:.3f} gen_s={gen_s:.2f} cpus={res['cpus']} "
+          f"measure_s={res['measure_s']:.3f} jit_ms={res['jit_ms']:.0f} "
+          f"gen_s={gen_s:.2f} cpus={res['cpus']} "
           f"nproc={res['nproc']} steal_s={res['steal_s']:.2f} "
           f"cotenant_cpus={res['cotenant_cpus']:.2f} "
           f"counters={json.dumps(res['counters'], sort_keys=True)}")

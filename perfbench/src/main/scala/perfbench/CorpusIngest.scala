@@ -20,7 +20,7 @@ import graft.pipelines.{CorpusPipeline => CP}
 object CorpusIngest extends Workload {
   /** Batches the gated figures cover: each batch meets a larger state,
     * so a fixed count keeps them independent of run speed. */
-  val Window = 6
+  val Window = 4
   val N = 3
   val K = 16
   val BandRows = 4

@@ -34,6 +34,7 @@ final class Ctx(val spark: SparkSession, val tracer: Tracer,
   var failed = 0
   var measureS = 0.0
   var gcMs = 0.0
+  var jitMs = 0.0
   var stealS = 0.0
   var cotenantCpus = 0.0
 
@@ -95,10 +96,16 @@ final class Ctx(val spark: SparkSession, val tracer: Tracer,
     (0 until reps).map { r =>
       val (v, cpu) = processCpuTimed(build(r))
       fixtureCpuMs += cpu
+      Host.log(s"fixture $r built")
       v
     }.last
 
-  def warmup(body: => Unit): Unit = warmupCpuMs = processCpuTimed(body)._2
+  def warmup[T](body: => T): T = {
+    val (r, cpu) = processCpuTimed(body)
+    warmupCpuMs = cpu
+    Host.log("warm-up done")
+    r
+  }
 
   /** The closed loop: one client, the next op starts when the previous
     * one ends, until `seconds` have passed, the op count is a multiple
@@ -115,6 +122,7 @@ final class Ctx(val spark: SparkSession, val tracer: Tracer,
     this.window = window
     Host.log("loop start")
     val gc0 = Host.gcMs()
+    val jit0 = Host.jitMs()
     val host0 = Host.ticks()
     val start = System.nanoTime()
     var paused = 0L // time in afterOp bookkeeping, not measured
@@ -151,6 +159,7 @@ final class Ctx(val spark: SparkSession, val tracer: Tracer,
     measureS = wallS - paused / 1e9
     Host.log(s"loop ${measureS}s, $attempted ops")
     gcMs = Host.gcMs() - gc0
+    jitMs = Host.jitMs() - jit0
     val (st, co) = Host.contention(host0, Host.ticks(), wallS)
     stealS = st
     cotenantCpus = co
@@ -177,6 +186,7 @@ object Main {
       args.get("trace").contains("1")), args)
     // the process's CPU time so far: JVM start and session build
     c.sessionCpuMs = Host.cpuMs()
+    Host.log("session ready")
     try {
       w.run(c)
     } catch {
@@ -196,6 +206,7 @@ object Main {
       "failed" -> c.failed,
       "measure_s" -> c.measureS,
       "gc_ms" -> c.gcMs,
+      "jit_ms" -> c.jitMs,
       "peak_rss_mb" -> Host.peakRssMb(),
       "nproc" -> Runtime.getRuntime.availableProcessors(),
       "steal_s" -> c.stealS,
@@ -274,6 +285,10 @@ object Host {
   def cpuMs(): Double = ManagementFactory.getOperatingSystemMXBean
     .asInstanceOf[com.sun.management.OperatingSystemMXBean]
     .getProcessCpuTime / 1e6
+
+  /** Time the JIT compiler threads spent compiling so far. */
+  def jitMs(): Double =
+    ManagementFactory.getCompilationMXBean.getTotalCompilationTime.toDouble
 
   def gcMs(): Double = ManagementFactory.getGarbageCollectorMXBeans.asScala
     .map(_.getCollectionTime.max(0L)).sum.toDouble

@@ -25,7 +25,7 @@ import graft.ops.{ManifestTable => MT, ZTable}
   * row count, and a pruned scan and the Bloom candidates of a live key
   * return what a filter over the full read returns. */
 object MorDml extends Workload {
-  val BinPackEvery = 2
+  val BinPackEvery = 1
   val Cycles = 2
   /** One table for the warm-up, one for the measured loop. */
   val FixtureReps = 2

@@ -12,7 +12,7 @@ import org.apache.spark.sql.types.StructType
   * The client serves the generated request sequence: rounds, each a
   * seeded permutation of the mix (see gen.py), measured in whole
   * rounds, so every run serves the same mix and only the order depends
-  * on the seed. One draw of each query warms the JVM first. A draw
+  * on the seed. `WarmRounds` rounds of the mix warm the JVM first. A draw
   * builds the query's DataFrame (`queries.build`), forces its physical
   * plan (`plan`) and runs that plan, collecting every output row and
   * column to the client (`exec`). Its samples are kept per query, and
@@ -23,9 +23,12 @@ import org.apache.spark.sql.types.StructType
   * VERIFYHASH.json, and every measured draw returns the same rows. */
 object ServeGold extends Workload {
   /** Rounds of the mix the gated figures cover. A query's CPU time
-    * still falls from draw to draw (JIT), by a third or more from its second
-    * draw to its fifth, so the figures take the same draws every run. */
+    * still falls from draw to draw (JIT), so the figures take the same
+    * draws every run. */
   val Rounds = 3
+  /** Rounds of the mix the warm-up serves; its first round's rows are
+    * the ones checked against the oracle hashes. */
+  val WarmRounds = 2
 
   /** Order-insensitive digest of collected rows. */
   def rowsHash(rows: Array[Row]): String = {
@@ -60,13 +63,17 @@ object ServeGold extends Workload {
       } else if (h != first(n)) differs += n
     }
 
-    c.warmup {
-      mix.foreach { n =>
-        val df = queries(n)(spark, dir)
-        verify(n, df.collect(), df.schema)
-        graft.CacheTracker.releaseAll()
-      }
+    val warm = c.warmup {
+      (1 to WarmRounds).map { _ =>
+        mix.map { n =>
+          val df = queries(n)(spark, dir)
+          val rows = df.collect()
+          graft.CacheTracker.releaseAll()
+          (n, rows, df.schema)
+        }
+      }.head
     }
+    warm.foreach { case (n, rows, schema) => verify(n, rows, schema) }
 
     val t = c.tracer
     c.loop(draws.size, granule = mix.size, window = Rounds * mix.size,

@@ -122,16 +122,37 @@ class StatsTest(unittest.TestCase):
 
 
 class MetricListTest(unittest.TestCase):
-    def test_benchmark_json_lists_what_the_workloads_report(self):
-        """Every metric a workload reports has a unit in BENCHMARK.json,
-        and BENCHMARK.json lists no metric that no workload reports."""
-        e2e = {n for w in run.WORKLOADS.values() for n in w["end_to_end"]}
-        layer = {n for w in run.WORKLOADS for n in run.per_layer_names(w)}
-        self.assertEqual(e2e, {m["name"] for m in run.BENCHMARK["end_to_end"]})
-        self.assertEqual(layer, {m["name"] for m in run.BENCHMARK["per_layer"]})
+    def test_benchmark_json_lists_what_every_workload_reports(self):
+        """Every workload reports every metric BENCHMARK.json lists: the
+        end-to-end ones untraced, the per-layer ones traced."""
+        self.assertEqual(run.END_TO_END, [m["name"] for m in run.BENCHMARK["end_to_end"]])
+        self.assertEqual(run.PER_LAYER, [m["name"] for m in run.BENCHMARK["per_layer"]])
         self.assertEqual(set(run.WORKLOADS), set(gen.WORKLOADS))
         self.assertEqual(set(run.WORKLOADS),
                          {w["name"] for w in run.BENCHMARK["workloads"]})
+
+    def test_per_layer_reports_every_metric_of_any_workload(self):
+        """A traced run's result has every per-layer metric, however
+        many of them its spans feed."""
+        for wl, w in run.WORKLOADS.items():
+            span = next(iter(w["spans"]))
+            res = {
+                "spans": [{"name": span, "start": 0.0, "end": 10.0, "extra": {}},
+                          {"name": "unnamed", "start": 20.0, "end": 30.0, "extra": {}}],
+                "jobs": [{"span": span, "start": 2.0, "end": 6.0, "tasks": 4,
+                          "cpu_ns": 2e6, "in_bytes": 8, "shuffle_bytes": 0,
+                          "out_bytes": 0, "spill_bytes": 0}],
+                "ops": [(0.0, 12.0), (20.0, 32.0)], "gc_ms": 3.0,
+                "peak_rss_mb": 900.0, "session_cpu_ms": 100.0,
+                "fixture_cpu_ms": [], "warmup_cpu_ms": 50.0,
+                "samples": {"op_ms": [12.0, 12.0]},
+                "window_samples": {"op_cpu_ms": [7.0, 9.0]}}
+            m = run.per_layer(res, wl)
+            self.assertEqual(list(m), run.PER_LAYER, wl)
+            self.assertEqual(m["op.jobs"], 0.5, wl)
+            self.assertEqual(m["op.gap_ms"], 3.0, wl)
+            self.assertEqual(m["trace.span_coverage"], 10 / 24, wl)
+            self.assertEqual(m["setup.prepare_ms"], 50.0, wl)
 
 
 if __name__ == "__main__":
