@@ -531,13 +531,19 @@ object ManifestTable {
     * semi-join write per carry); past the cap it falls back to the
     * broadcast semi-join under the metadata-action conf. Writes
     * nothing when no row survives (same contract as before: absent
-    * `_dv` = no deletions). */
-  private[ops] val dvLocalCarryCap = 16L * 1024 * 1024
+    * `_dv` = no deletions).
+    *
+    * The cap is the one driver-versus-Spark gate of the commit
+    * metadata (DV carries, Bloom carries and fragment register builds
+    * in [[ZTable]]); specs scope it with `withValue(0L)` to drive the
+    * Spark (100 TB) side at test scale. */
+  private[ops] val dvLocalCarryCap =
+    new scala.util.DynamicVariable[Long](16L * 1024 * 1024)
   private[ops] def carryDvFiltered(spark: SparkSession, root: String,
       baseDir: String, newDir: String, keepKeys: Set[String]): Unit = {
     val src = s"$root/$baseDir/_dv"
     if (MetaIO.carryFrameFiltered(spark, src, s"$root/$newDir/_dv",
-        "path", keepKeys, dvLocalCarryCap)) return
+        "path", keepKeys, dvLocalCarryCap.value)) return
     import spark.implicits._
     val dv = MetaIO.readParquet(spark, src)
     val kept = dv.join(
@@ -792,15 +798,8 @@ object ManifestTable {
         .filter(n => !n.startsWith("_") && !n.startsWith("."))
         .map(n => s"$dir/$n")
     }
-    val conf = spark.sparkContext.hadoopConfiguration
-    val rows = refs.map { r =>
-      val p = new Path(resolveRef(root, r))
-      import scala.jdk.CollectionConverters._
-      org.apache.parquet.hadoop.ParquetFileReader.readFooter(
-        conf, p,
-        org.apache.parquet.format.converter.ParquetMetadataConverter
-          .NO_FILTER).getBlocks.asScala.map(_.getRowCount).sum
-    }.sum
+    val rows = MetaIO.footerRowCount(spark,
+      refs.map(r => new Path(resolveRef(root, r))))
     val dvP = new Path(new Path(root, dir), "_dv")
     val deleted = if (fsOf(spark, root).exists(dvP))
       MetaIO.footerRowCount(spark, dvP.toString) else 0L
@@ -2137,7 +2136,7 @@ object ManifestTable {
     // O(files) distinct file keys of the vector — driver frame read
     // when planning-sized, one collect job past the cap
     val dirtyKeys =
-      if (dvBytesOf(spark, root, baseDir) <= dvLocalCarryCap)
+      if (dvBytesOf(spark, root, baseDir) <= dvLocalCarryCap.value)
         MetaIO.frameRows(spark, s"$root/$baseDir/_dv").iterator
           .flatMap(m => Option(m.getOrElse("path", null))
             .map(_.asInstanceOf[String])).toSet
@@ -2793,7 +2792,7 @@ object ManifestTable {
     dv.foreach { v =>
       if (!MetaIO.carryFrameFiltered(spark, s"$root/$baseDir/_dv",
           s"$root/$dir/_dv", "path", large.map(fileKeyOf).toSet,
-          dvLocalCarryCap)) {
+          dvLocalCarryCap.value)) {
         import spark.implicits._
         val surviving = v.join(
           smallKeys.toDF("path"), Seq("path"), "left_anti")

@@ -40,7 +40,7 @@ object MetaIO {
   /** Order-preserving parallel map on the IO pool; sequential under 3
     * elements (pool latency beats the win there). Exceptions rethrow
     * as the original cause. */
-  private def parMap[A, B](in: Seq[A])(f: A => B): Seq[B] =
+  private[ops] def parMap[A, B](in: Seq[A])(f: A => B): Seq[B] =
     if (in.sizeIs <= 2) in.map(f)
     else {
       val futs = in.map(a => ioPool.submit(
@@ -229,20 +229,79 @@ object MetaIO {
   /** Total row count of the parquet files under `dir` (non-recursive),
     * from footers on the driver — exact for every type, no job. */
   def footerRowCount(spark: SparkSession, dir: String): Long = {
-    val conf = spark.sparkContext.hadoopConfiguration
     val d = new Path(dir)
-    val fs = d.getFileSystem(conf)
-    import scala.jdk.CollectionConverters._
-    val files = fs.listStatus(d).iterator
+    val fs = d.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    footerRowCount(spark, fs.listStatus(d).iterator
       .filter(st => st.isFile && { val n = st.getPath.getName
         !n.startsWith("_") && !n.startsWith(".") })
-      .map(_.getPath).toSeq
+      .map(_.getPath).toSeq)
+  }
+
+  /** Total row count of `files`, from their footers read on the bounded
+    * IO pool — exact for every type, no job. */
+  def footerRowCount(spark: SparkSession, files: Seq[Path]): Long = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    import scala.jdk.CollectionConverters._
     parMap(files) { p =>
       org.apache.parquet.hadoop.ParquetFileReader.readFooter(
         conf, p,
         org.apache.parquet.format.converter.ParquetMetadataConverter
           .NO_FILTER).getBlocks.asScala.map(_.getRowCount).sum
     }.sum
+  }
+
+  /** The values of top-level column `name` in each of `absPaths`, read
+    * on the DRIVER (parquet-mr, projected to that one column, files on
+    * the bounded IO pool), in file order. Values are typed as Spark
+    * reads them: a string column's raw UTF-8 bytes as [[UTF8String]],
+    * an int/short/byte column as Int, a long column as Long, nulls as
+    * null. None (caller keeps its Spark path) unless every file holds
+    * the column with one of those Spark types. */
+  def columnValues(spark: SparkSession, absPaths: Seq[String],
+      name: String): Option[Seq[Seq[Any]]] = {
+    import org.apache.spark.sql.types._
+    import org.apache.spark.unsafe.types.UTF8String
+    val conf = spark.sparkContext.hadoopConfiguration
+    def oneFile(ap: String): Option[Seq[Any]] = {
+      val file = new Path(ap)
+      val fileSchema = org.apache.parquet.hadoop.ParquetFileReader
+        .readFooter(conf, file,
+          org.apache.parquet.format.converter.ParquetMetadataConverter
+            .NO_FILTER).getFileMetaData.getSchema
+      if (!fileSchema.containsField(name)) return None
+      val sparkType = new org.apache.spark.sql.execution.datasources
+        .parquet.ParquetToSparkSchemaConverter(
+          conf = spark.sessionState.conf)
+        .convert(fileSchema)(name).dataType
+      val get: (org.apache.parquet.example.data.Group => Any) =
+        sparkType match {
+          case StringType =>
+            g => UTF8String.fromBytes(g.getBinary(0, 0).getBytes)
+          case IntegerType | ShortType | ByteType => g => g.getInteger(0, 0)
+          case LongType => g => g.getLong(0, 0)
+          case _ => return None
+        }
+      val projected = new org.apache.parquet.schema.MessageType(
+        fileSchema.getName, fileSchema.getType(fileSchema.getFieldIndex(name)))
+      val rc = new Configuration(conf)
+      rc.set(org.apache.parquet.hadoop.api.ReadSupport.PARQUET_READ_SCHEMA,
+        projected.toString)
+      val reader = org.apache.parquet.hadoop.ParquetReader
+        .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(),
+          file)
+        .withConf(rc).build()
+      val out = scala.collection.mutable.ArrayBuffer.empty[Any]
+      try {
+        var g = reader.read()
+        while (g != null) {
+          out += (if (g.getFieldRepetitionCount(0) == 0) null else get(g))
+          g = reader.read()
+        }
+      } finally reader.close()
+      Some(out.toSeq)
+    }
+    val per = parMap(absPaths)(oneFile)
+    if (per.exists(_.isEmpty)) None else Some(per.map(_.get))
   }
 
   /** First row of a tiny metadata parquet dir, read on the DRIVER
@@ -340,15 +399,14 @@ object MetaIO {
   /** [[frameRows]] as Spark Rows in `schema`'s field order — the form
     * the driver-side frame rewrites need (carry/filter a committed
     * frame without a Spark job). Returns None when any schema field
-    * is missing from the frame's rows' keys (caller falls back to the
-    * Spark read). Values pass through as read (Long/Int/String/
-    * Boolean/Double or null). */
+    * is missing from ANY row's keys — a frame dir whose part files
+    * disagree on shape (caller falls back to the Spark read). Values
+    * pass through as read (Long/Int/String/Boolean/Double or null). */
   def frameRowsAs(spark: SparkSession, dir: String,
       schema: StructType): Option[Seq[org.apache.spark.sql.Row]] = {
     val maps = frameRows(spark, dir)
-    if (maps.isEmpty) return Some(Seq.empty)
     val names = schema.fields.map(_.name)
-    if (!names.forall(maps.head.keySet.contains)) return None
+    if (!maps.forall(m => names.forall(m.contains))) return None
     // schema-attached rows: callers use fieldIndex/getAs by name,
     // exactly like rows collected from a Spark read
     Some(maps.map(m =>
@@ -382,11 +440,17 @@ object MetaIO {
     * already materialized on the driver. `append = false` mirrors
     * Spark's errorifexists (the frame dirs are write-once);
     * `append = true` adds one part file to an existing frame dir (the
-    * extendStats carry-all shape). */
+    * extendStats carry-all shape). A null in a non-nullable field
+    * throws before any file is written — parquet-mr would otherwise
+    * write a record missing a required value, a corrupt file. */
   def writeFrame(spark: SparkSession, dir: String, schema: StructType,
       rows: Seq[org.apache.spark.sql.Row], append: Boolean = false)
       : Unit = {
     require(frameWritable(schema), s"writeFrame: unsupported schema $schema")
+    val required = schema.fields.indices.filterNot(schema.fields(_).nullable)
+    rows.foreach(r => required.foreach(i => require(!r.isNullAt(i),
+      s"writeFrame: null in non-nullable field ${schema.fields(i).name} " +
+        s"of $dir")))
     val conf = new Configuration(spark.sparkContext.hadoopConfiguration)
     val d = new Path(dir)
     val fs = d.getFileSystem(conf)

@@ -119,55 +119,37 @@ object ZTable {
       bl.select(col("path")).distinct().withColumn("m", lit(M))
   }
 
-  /** ONE shared Bloom probe over a committed frame: the paths whose
-    * registers admit `key` under BOTH hash seeds — a provable superset
-    * (no false negatives; a path with no surviving register row has
-    * bit 0 and is excluded). O(register rows) metadata scan, never
-    * data. Serves [[bloomCandidateFiles]] and the planner's
-    * [[graft.ops.GraftPruning.bloomCandidates]]. */
-  private[ops] def bloomProbePaths(spark: SparkSession, root: String,
-      dir: String, key: Column): Seq[String] =
-    bloomProbePathsAny(spark, root, dir, array(key))
-
-  /** Multi-key form: the paths whose registers admit ANY of the keys
-    * in `keys` (an array column of same-typed literals) — the IN-list
-    * probe as ONE metadata pass instead of one join per key.
+  /** The paths of a committed frame whose registers admit ANY of
+    * `keys` (same-typed literal values, e.g. an IN list) under BOTH
+    * hash seeds — a provable superset (no false negatives; a path with
+    * no surviving register row has bit 0 and is excluded). Serves
+    * [[bloomCandidateFiles]] and the planner's
+    * [[graft.ops.GraftPruning.bloomCandidates]]/`bloomCandidatesIn`.
     *
-    * Driver fast path (round-15 VERDICT ask #6): when the committed
-    * register frame is planning-sized (on-disk bytes ≤
-    * `spark.graft.bloom.localProbeMaxBytes`, default 4 MiB) and every
-    * key is a string/integer literal, the probe runs ENTIRELY on the
-    * driver — one parquet-mr frame read + the same two-seed
-    * md5-prefix check ([[graft.expressions.Md5Prefix60.hash60]], the
-    * identical hash the registers were built with) — zero Spark jobs
-    * where the join probe paid a collect + two broadcast builds. Past
-    * the cap, or for exotic key types, the distributed register join
-    * runs unchanged (the 100 TB path: O(files × words) rows, never
-    * data). Both paths compute the same superset by construction. */
+    * Driver path: when the committed register frame is planning-sized
+    * (on-disk bytes ≤ `spark.graft.bloom.localProbeMaxBytes`, default
+    * 4 MiB) and every key is a string or integral value, the probe
+    * runs ENTIRELY on the driver — one parquet-mr frame read + the
+    * same two-seed md5-prefix check
+    * ([[graft.expressions.Md5Prefix60.hash60]], the identical hash the
+    * registers were built with) — zero Spark jobs, where the register
+    * join pays a collect plus its broadcast builds. Past the cap, or
+    * for other key types, the distributed register join runs (the
+    * 100 TB path: O(files × words) rows, never data). Both compute the
+    * same superset. */
   private[ops] def bloomProbePathsAny(spark: SparkSession, root: String,
-      dir: String, keys: Column): Seq[String] =
+      dir: String, keys: Seq[Any]): Seq[String] =
     localBloomProbe(spark, root, dir, keys).getOrElse(
-      joinBloomProbe(spark, root, dir, keys))
+      joinBloomProbe(spark, root, dir, array(keys.map(lit): _*)))
 
   private def localBloomProbe(spark: SparkSession, root: String,
-      dir: String, keys: Column): Option[Seq[String]] = {
-    import org.apache.spark.sql.catalyst.expressions.{CreateArray, Literal}
-    import org.apache.spark.sql.types._
-    // literal keys only, rendered exactly as concat_ws's cast-to-string
-    val lits: Seq[String] =
-      org.apache.spark.sql.graft.Bridge.expression(keys) match {
-        case CreateArray(children, _)
-            if children.forall(_.isInstanceOf[Literal]) =>
-          children.map(_.asInstanceOf[Literal]).map { l =>
-            (l.value, l.dataType) match {
-              case (v, StringType) if v != null => v.toString
-              case (v, LongType | IntegerType | ShortType | ByteType)
-                  if v != null => v.toString
-              case _ => return None
-            }
-          }
-        case _ => return None
-      }
+      dir: String, keys: Seq[Any]): Option[Seq[String]] = {
+    // rendered exactly as concat_ws's cast-to-string
+    val lits: Seq[String] = keys.map {
+      case s: String => s
+      case n @ (_: Long | _: Int | _: Short | _: Byte) => n.toString
+      case _ => return None
+    }
     val f = fs(spark, root)
     val bp = new org.apache.hadoop.fs.Path(s"$root/$dir/_bloom")
     if (!f.exists(bp)) return None
@@ -621,8 +603,11 @@ object ZTable {
     // into the NEW dir, so stats(v) never chases old dirs. Built from
     // the rows ALREADY collected above (O(files) driver memory) — no
     // second read of the stats parquet per DML
-    val carriedBloom = bloom(spark, root, base)
-      .map(_.filter(col("path").isin(untouchedPaths: _*)))
+    val bloomDir = s"$root/$baseDir/_bloom"
+    val carriedBloom =
+      Option.when(fs(spark, root).exists(
+        new org.apache.hadoop.fs.Path(bloomDir)))(
+        bloomDir -> untouchedPaths.toSet)
     writeStats(spark, root, dir, newPaths, xCol, yCol, bloomCol,
       Some((stSchema, untouched.toSeq)), carriedBloom,
       bloomBpk = geomOf(spark, root, baseDir))
@@ -740,7 +725,7 @@ object ZTable {
             // under the same cap as DV frames, semi-join past it
             if (!MetaIO.carryFrameFiltered(spark, bloomPath.toString,
                 s"$root/$newDir/_bloom", "path", keep,
-                ManifestTable.dvLocalCarryCap, writeEmpty = true))
+                ManifestTable.dvLocalCarryCap.value, writeEmpty = true))
               MetaIO.withMetaActionConf(spark)(
                 MetaIO.readParquet(spark, bloomPath.toString)
                   .join(broadcast(ps.toDF("path")), Seq("path"),
@@ -749,16 +734,11 @@ object ZTable {
             geomOf(spark, root, baseDir).foreach(bpk =>
               writeGeom(f, root, newDir, bpk))
           }
-        } else {
-          val carriedBloom =
-            if (hasBloom) Some(MetaIO.readParquet(spark,
-                bloomPath.toString)
-              .join(broadcast(ps.toDF("path")), Seq("path"), "left_semi"))
-            else None
+        } else
           writeStats(spark, root, newDir, appendedPaths, xCol, yCol,
-            bloomCol, Some((cSchema, cRows)), carriedBloom,
+            bloomCol, Some((cSchema, cRows)),
+            Option.when(hasBloom)(bloomPath.toString -> keep),
             bloomBpk = geomOf(spark, root, baseDir))
-        }
     }
     true
   }
@@ -830,13 +810,15 @@ object ZTable {
     * reading the files as written, union carried rows, and write the
     * frames under the version dir. The read-back costs one extra scan
     * of the REWRITTEN bytes only — the price of stats that can never
-    * disagree with the files. */
+    * disagree with the files. `carriedBloom` is a committed `_bloom`
+    * frame dir and the paths whose register rows ride along. */
   private def writeStats(spark: SparkSession, root: String, dir: String,
       paths: Seq[String], xCol: String, yCol: String,
       bloomCol: Option[String],
       carriedStats: Option[(org.apache.spark.sql.types.StructType,
         Seq[org.apache.spark.sql.Row])],
-      carriedBloom: Option[DataFrame], append: Boolean = false,
+      carriedBloom: Option[(String, Set[String])],
+      append: Boolean = false,
       bloomBpk: Option[Long] = Some(bloomBitsPerKey)): Unit = {
     val mode = if (append) "append" else "errorifexists"
     // working set of this stats/register pass = the appended bytes —
@@ -922,59 +904,159 @@ object ZTable {
       append = append)
     bloomCol.foreach { bc =>
       // q221's register shape at committed grain: (path, word, bits)
-      // rows built by ONE bit_or agg; 32-bit blocks keep the shifted
-      // bit far from the sign bit. Register size per file: scaled
+      // rows, one per OR-folded 32-bit block (far from the sign bit),
+      // built on the driver under the gate and by one Spark bit_or
+      // aggregation past it. Register size per file: scaled
       // frames (`bloomBpk` Some) use m = max(8192, bpk·n_rows) off
       // the SAME collected rows the `_stats` frame was written from
       // (no read-back — byte-identical inputs), so registers grow
       // with the file instead of saturating; legacy frames stay at
       // the fixed M. The per-path m MUST match what
-      // [[bloomProbePaths]] derives at read time — both sides compute
+      // [[bloomProbePathsAny]] derives at read time — both sides compute
       // it from the same committed n_rows.
       val mOf: Long => Long = bloomBpk match {
         case Some(bpk) => n => math.max(M, n * bpk)
         case None => _ => M
       }
-      import spark.implicits._
       val sizePairs = allLocal
         .map(r => (r.getString(0), mOf(r.getLong(1))))
-      // per-path register size as a LITERAL MAP when the commit's file
-      // list is SMALL (every MoR fragment commit) — the broadcast join
-      // cost a dedicated broadcast-build job per commit; element_at
-      // over a map literal is pure codegen. Threshold is LOW on
-      // purpose: element_at on an ArrayBasedMapData literal is a
-      // LINEAR scan per row (a 640-entry map over a 100× establish's
-      // 33M rows cost seconds — measured), so wide establishes keep
-      // the O(1)-per-row broadcast hash join.
-      val mCol: DataFrame => DataFrame =
-        if (sizePairs.sizeIs <= 64) { w =>
-          w.withColumn("m", element_at(
-            typedLit(sizePairs.toMap), col("path")))
-        } else { w =>
-          w.join(broadcast(sizePairs.toDF("path", "m")), Seq("path"))
-        }
-      val words = mCol(Seq(501, 502).map(seed =>
-        withPath.select(col("__path").as("path"),
-          graft.functions.TextFunctions.hash60(col(bc), seed)
-            .as("h0")))
-        .reduce(_ unionByName _))
-        .select(col("path"), (col("h0") % col("m")).as("h"))
-        .select(col("path"), shiftright(col("h"), 5).as("word"),
-          expr("shiftleft(CAST(1 AS BIGINT), CAST(h & 31 AS INT))")
-            .as("bit"))
-      val freshBloom = words.groupBy(col("path"), col("word"))
-        .agg(expr("bit_or(bit)").as("bits"))
-      val allBloom = carriedBloom.fold(freshBloom)(_ unionByName freshBloom)
-      // register build: the exchange carries O(files × register words)
-      // rows after map-side partial agg — metadata-action conf (AQE
-      // off, working-set-sized reduce) turns the 3-job AQE
-      // choreography into ONE job; the data-sized map side keeps its
-      // input parallelism and a 100× establish keeps its reduce width
-      MetaIO.withMetaActionConf(spark, appendedBytes)(
-        allBloom.coalesce(1).write.mode(mode)
-          .parquet(s"$root/$dir/_bloom"))
+      localRegisters(spark, root, s"$root/$dir/_bloom", append, paths,
+          bc, sizePairs.toMap, carriedBloom, appendedBytes) match {
+        case Some(rows) =>
+          MetaIO.writeFrame(spark, s"$root/$dir/_bloom", bloomSchema,
+            rows, append = append)
+        case None =>
+          sparkRegisters(spark, root, dir, withPath, bc, sizePairs,
+            carriedBloom, appendedBytes, mode)
+      }
       bloomBpk.foreach(bpk => writeGeom(fs(spark, root), root, dir, bpk))
     }
+  }
+
+  /** The `_bloom` frame's shape: one row per (file, register word). */
+  private val bloomSchema = {
+    import org.apache.spark.sql.types._
+    StructType(Seq(StructField("path", StringType),
+      StructField("word", LongType), StructField("bits", LongType)))
+  }
+
+  /** The `_bloom` rows of `paths` (register size per file key from
+    * `mByKey`), after the carried rows, built on the DRIVER: one
+    * projected parquet-mr read of column `bc` per file, the two-seed
+    * [[graft.expressions.Md5Prefix60.hash60]] over exactly the strings
+    * the Spark build hashes (`concat_ws("|", seed, v)`, so a NULL
+    * value hashes the bare seed), and an OR-fold per (path, word) —
+    * the rows [[sparkRegisters]] writes, without its job. Gated on
+    * [[ManifestTable.dvLocalCarryCap]]: None (caller runs the Spark
+    * build) when the appended or carried bytes are past it, or when
+    * the column's type, or the shape of the carried frame or of the
+    * frame `target` appended to, isn't driver readable. */
+  private def localRegisters(spark: SparkSession, root: String,
+      target: String, append: Boolean, paths: Seq[String], bc: String,
+      mByKey: Map[String, Long],
+      carriedBloom: Option[(String, Set[String])],
+      appendedBytes: Option[Long]): Option[Seq[org.apache.spark.sql.Row]] = {
+    import org.apache.spark.unsafe.types.UTF8String
+    val cap = ManifestTable.dvLocalCarryCap.value
+    if (!appendedBytes.exists(_ <= cap)) return None
+    val f = fs(spark, root)
+    def shapeOk(dir: String) = {
+      val p = new org.apache.hadoop.fs.Path(dir)
+      !f.exists(p) || MetaIO.schemaOf(spark, p).forall(s =>
+        s.map(x => (x.name, x.dataType)) ==
+          bloomSchema.map(x => (x.name, x.dataType)))
+    }
+    if (append && !shapeOk(target)) return None
+    val carried = carriedBloom match {
+      case None => Seq.empty
+      case Some((src, keep)) =>
+        val p = new org.apache.hadoop.fs.Path(src)
+        if (f.listStatus(p).filter(_.isFile).map(_.getLen).sum > cap ||
+            !shapeOk(src))
+          return None
+        MetaIO.frameRowsAs(spark, src, bloomSchema).getOrElse(return None)
+          .filter(r => !r.isNullAt(0) && keep.contains(r.getString(0)))
+    }
+    val values = MetaIO.columnValues(spark, paths.map(p => s"$root/$p"),
+      bc).getOrElse(return None)
+    val seeds = Seq(501, 502).map(_.toString)
+    val prefixes = seeds.map(sd => UTF8String.fromString(s"$sd|"))
+    val bare = seeds.map(UTF8String.fromString)
+    val fresh = MetaIO.parMap(paths.zip(values)) { case (p, vs) =>
+      val key = p.split('/').takeRight(2).mkString("/")
+      val m = mByKey(key)
+      val regs = scala.collection.mutable.LongMap.empty[Long]
+      vs.foreach { v =>
+        val s = v match {
+          case null => null
+          case u: UTF8String => u
+          case n => UTF8String.fromString(n.toString)
+        }
+        var i = 0
+        while (i < 2) {
+          val in =
+            if (s == null) bare(i) else UTF8String.concat(prefixes(i), s)
+          val h = graft.expressions.Md5Prefix60.hash60(in) % m
+          val w = h >> 5
+          regs(w) = regs.getOrElse(w, 0L) | (1L << (h & 31).toInt)
+          i += 1
+        }
+      }
+      regs.toSeq.sortBy(_._1).map { case (w, b) =>
+        org.apache.spark.sql.Row(key, w, b) }
+    }.flatten
+    Some(carried ++ fresh)
+  }
+
+  /** The Spark register build (past the driver gate — the 100 TB
+    * path): (path, word, bits) rows of `withPath`'s column `bc` by ONE
+    * bit_or aggregation, unioned with the carried rows. */
+  private def sparkRegisters(spark: SparkSession, root: String,
+      dir: String, withPath: DataFrame, bc: String,
+      sizePairs: Seq[(String, Long)],
+      carriedBloom: Option[(String, Set[String])],
+      appendedBytes: Option[Long], mode: String): Unit = {
+    import spark.implicits._
+    // per-path register size as a LITERAL MAP when the commit's file
+    // list is SMALL (every MoR fragment commit) — the broadcast join
+    // cost a dedicated broadcast-build job per commit; element_at
+    // over a map literal is pure codegen. Threshold is LOW on
+    // purpose: element_at on an ArrayBasedMapData literal is a
+    // LINEAR scan per row (a 640-entry map over a 100× establish's
+    // 33M rows cost seconds — measured), so wide establishes keep
+    // the O(1)-per-row broadcast hash join.
+    val mCol: DataFrame => DataFrame =
+      if (sizePairs.sizeIs <= 64) { w =>
+        w.withColumn("m", element_at(
+          typedLit(sizePairs.toMap), col("path")))
+      } else { w =>
+        w.join(broadcast(sizePairs.toDF("path", "m")), Seq("path"))
+      }
+    val words = mCol(Seq(501, 502).map(seed =>
+      withPath.select(col("__path").as("path"),
+        graft.functions.TextFunctions.hash60(col(bc), seed)
+          .as("h0")))
+      .reduce(_ unionByName _))
+      .select(col("path"), (col("h0") % col("m")).as("h"))
+      .select(col("path"), shiftright(col("h"), 5).as("word"),
+        expr("shiftleft(CAST(1 AS BIGINT), CAST(h & 31 AS INT))")
+          .as("bit"))
+    val freshBloom = words.groupBy(col("path"), col("word"))
+      .agg(expr("bit_or(bit)").as("bits"))
+    val allBloom = carriedBloom.fold(freshBloom) { case (src, keep) =>
+      MetaIO.readParquet(spark, src)
+        .join(broadcast(keep.toSeq.toDF("path")), Seq("path"),
+          "left_semi")
+        .unionByName(freshBloom)
+    }
+    // register build: the exchange carries O(files × register words)
+    // rows after map-side partial agg — metadata-action conf (AQE
+    // off, working-set-sized reduce) turns the 3-job AQE
+    // choreography into ONE job; the data-sized map side keeps its
+    // input parallelism and a 100× establish keeps its reduce width
+    MetaIO.withMetaActionConf(spark, appendedBytes)(
+      allBloom.coalesce(1).write.mode(mode)
+        .parquet(s"$root/$dir/_bloom"))
   }
 
   /** Bloom point-lookup planning off the COMMITTED registers: the
@@ -985,10 +1067,31 @@ object ZTable {
       key: Column): Seq[String] = {
     val v = ManifestTable.currentVersion(spark, root)
       .getOrElse(sys.error(s"no committed version at $root"))
-    bloom(spark, root, v).getOrElse(
-      sys.error(s"version $v of $root has no committed Bloom index"))
-    bloomProbePaths(spark, root,
-      ManifestTable.versionDataDir(spark, root, v), key)
+    val dir = ManifestTable.versionDataDir(spark, root, v)
+    require(fs(spark, root).exists(
+      new org.apache.hadoop.fs.Path(s"$root/$dir/_bloom")),
+      s"version $v of $root has no committed Bloom index")
+    keyValue(spark, key) match {
+      case Some(k) => bloomProbePathsAny(spark, root, dir, Seq(k))
+      case None => joinBloomProbe(spark, root, dir, array(key))
+    }
+  }
+
+  /** The value of a constant key column (`lit(..)` or any foldable
+    * expression), resolved once on the driver — analysis and a
+    * constant evaluation, no Spark job. None for a non-constant key. */
+  private def keyValue(spark: SparkSession, key: Column): Option[Any] = {
+    import org.apache.spark.sql.catalyst.CatalystTypeConverters
+    import org.apache.spark.sql.catalyst.expressions.Alias
+    import org.apache.spark.sql.catalyst.plans.logical.Project
+    spark.range(1).select(key).queryExecution.analyzed match {
+      case Project(Seq(ne), _) =>
+        val e = ne match { case Alias(c, _) => c; case other => other }
+        if (!e.foldable) None
+        else Some(CatalystTypeConverters.convertToScala(e.eval(),
+          e.dataType))
+      case _ => None
+    }
   }
 
   /** Read the Bloom candidate files for `key` WITH the current

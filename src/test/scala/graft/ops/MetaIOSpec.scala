@@ -186,6 +186,26 @@ class MetaIOSpec extends SparkSpec {
     assert(!MetaIO.frameWritable(arr.schema))
   }
 
+  test("writeFrame throws on a null in a non-nullable field before " +
+      "writing any file") {
+    import org.apache.spark.sql.types._
+    val d = freshDir()
+    val schema = StructType(Seq(StructField("path", StringType),
+      StructField("n", LongType, nullable = false)))
+    val rows = Seq(org.apache.spark.sql.Row("a", 1L),
+      org.apache.spark.sql.Row("b", null))
+    val e = intercept[IllegalArgumentException] {
+      MetaIO.writeFrame(spark, s"$d/f", schema, rows)
+    }
+    assert(e.getMessage.contains("non-nullable field n"))
+    assert(!new java.io.File(s"$d/f").exists(),
+      "a refused frame left a directory behind")
+    // the same null in a nullable field writes and reads back as null
+    MetaIO.writeFrame(spark, s"$d/g",
+      StructType(schema.map(_.copy(nullable = true))), rows)
+    assert(MetaIO.frameRows(spark, s"$d/g").map(_("n")) == Seq(1L, null))
+  }
+
   test("carryFrameFiltered == the broadcast semi-join carry; over-cap " +
       "frames decline (caller falls back)") {
     val d = freshDir()
@@ -234,6 +254,32 @@ class MetaIOSpec extends SparkSpec {
       org.apache.spark.sql.types.StructField("nope",
         org.apache.spark.sql.types.StringType)))
     assert(MetaIO.frameRowsAs(spark, s"$d/f", other).isEmpty)
+  }
+
+  test("frameRowsAs checks every row's keys: a later part file that " +
+      "lacks a field declines the whole frame") {
+    import org.apache.spark.sql.types._
+    val d = freshDir()
+    val full = StructType(Seq(StructField("path", StringType),
+      StructField("n", LongType)))
+    val short = StructType(Seq(StructField("path", StringType)))
+    MetaIO.writeFrame(spark, s"$d/a", full,
+      Seq(org.apache.spark.sql.Row("p1", 1L)))
+    MetaIO.writeFrame(spark, s"$d/b", short,
+      Seq(org.apache.spark.sql.Row("p2")))
+    // one frame dir whose FIRST file (name order) has every field
+    val f = new java.io.File(s"$d/f")
+    f.mkdirs()
+    Seq("a" -> "part-0.parquet", "b" -> "part-1.parquet").foreach {
+      case (src, name) =>
+        val file = new java.io.File(s"$d/$src").listFiles()
+          .find(_.getName.endsWith(".parquet")).get
+        java.nio.file.Files.copy(file.toPath, new java.io.File(f, name).toPath)
+    }
+    assert(MetaIO.frameRowsAs(spark, s"$d/a", full).get.size == 1)
+    assert(MetaIO.frameRowsAs(spark, f.getPath, full).isEmpty)
+    assert(MetaIO.frameRowsAs(spark, f.getPath, short).get
+      .map(_.getString(0)) == Seq("p1", "p2"))
   }
 
   test("multi-path readParquet invariant: every footer of an unpinned " +
