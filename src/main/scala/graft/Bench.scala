@@ -3,10 +3,6 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // default to the host's cores (the driver's local[32] shape), not a
-    // conservative constant — an unset env var must not quarter the bench
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
     // N iterations per query, reporting the per-query MIN: single-shot
     // timing on a shared box produced phantom ±50% swings on unchanged
     // code (round-2 ledger); the min across runs is the established
@@ -106,33 +102,11 @@ object Bench {
     val busyStart = busyTicks()
     val selfStart = selfTicks()
     val wallStart = System.nanoTime()
-    val builder0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-    // local FS without the per-file chmod fork (no native hadoop lib
-    // on the driver box; see [[graft.ops.FastLocalFileSystem]]).
-    // SPARK_GRAFT_STOCK_LOCALFS=1 keeps the stock Hadoop local FS —
-    // the steal-matched A/B knob for attributing session-global drift
-    // to the fs.file.impl wiring (round-15 VERDICT "What's wrong" #1
-    // bisect protocol); subset-mode instrument, same as NO_EXT.
-    val builder =
-      if (sys.env.contains("SPARK_GRAFT_STOCK_LOCALFS")) builder0
-      else builder0.config("spark.hadoop.fs.file.impl",
-        classOf[graft.ops.FastLocalFileSystem].getName)
-    // q241/q243/q245 drive table-format DML through spark.sql text;
-    // the parser/TVF/optimizer injection only applies at session
-    // construction. SPARK_GRAFT_NO_EXT=1 skips it — the steal-matched
-    // A/B knob for attributing session-global drift to the injection
-    // (round-13 "What's wrong" #2 protocol); table-format queries
-    // fail without it, so it is strictly a subset-mode instrument.
-    val spark = (if (sys.env.contains("SPARK_GRAFT_NO_EXT")) builder
-      else builder.withExtensions(new graft.expressions.GraftExtensions))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftSession.quietBoundedWindowWarnings()
+    // the shipped session: local[SPARK_GRAFT_CPUS], defaulting to the
+    // host's cores (the driver's local[32] shape), not a conservative
+    // constant — an unset env var must not quarter the bench
+    val spark = GraftSession.getOrCreate(GraftSession.builder("graft-bench")
+      .config("spark.ui.enabled", "false"))
     // Uncounted warm-up: absorb JVM/codegen/parquet-footer startup so the
     // first measured query isn't charged for session bring-up, and read
     // each benched table through once so cold page-cache I/O isn't

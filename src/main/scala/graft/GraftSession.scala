@@ -12,6 +12,12 @@ import org.apache.spark.sql.SparkSession
   *  - UTC session TZ (the reference pins NTZ semantics, SURVEY §1.2);
   *  - parquet pushdown/pruning on (defaults, pinned explicitly so a
   *    misconfigured base conf can't silently disable them).
+  *
+  * It is the engine's only session factory: Bench, Verify, the tools
+  * and the test suite all start from [[builder]] and add their few
+  * real differences (test master, warehouse dir, no UI) as
+  * `.config(..)`, so the session that is measured and tested is the
+  * one that ships.
   */
 object GraftSession {
   def builder(appName: String = "graft",
@@ -52,7 +58,7 @@ object GraftSession {
     * window regressing in is structural —
     * PlanRegressionSpec's unpartitioned-window sweep pins the
     * declared set exactly — so dropping the log line loses nothing. */
-  def quietBoundedWindowWarnings(): Unit =
+  private def quietBoundedWindowWarnings(): Unit =
     try {
       org.apache.logging.log4j.core.config.Configurator.setLevel(
         "org.apache.spark.sql.execution.window.WindowExec",
@@ -65,8 +71,14 @@ object GraftSession {
         org.apache.logging.log4j.Level.ERROR)
     } catch { case _: Throwable => () } // non-log4j2: keep the noise
 
-  def getOrCreate(appName: String = "graft"): SparkSession = {
-    val s = builder(appName).getOrCreate()
+  def getOrCreate(appName: String = "graft"): SparkSession =
+    getOrCreate(builder(appName))
+
+  /** Build (or reuse) the session of a [[builder]] the caller has
+    * adjusted with its own `.config(..)`, then apply the finishing
+    * steps every engine session shares. */
+  def getOrCreate(b: SparkSession.Builder): SparkSession = {
+    val s = b.getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     quietBoundedWindowWarnings()
     registerFunctions(s)
@@ -83,7 +95,7 @@ object GraftSession {
     *  - `bottomk_sample(h, v)` — deterministic bottom-k uniform sample
     *    of values (sorted array out), the bounded-memory quantile
     *    path. */
-  def registerFunctions(s: SparkSession): Unit = {
+  private def registerFunctions(s: SparkSession): Unit = {
     s.udf.register("kmv_distinct",
       org.apache.spark.sql.functions.udaf(graft.functions.KmvSketch(64)))
     s.udf.register("bottomk_sample",

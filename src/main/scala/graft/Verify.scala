@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
@@ -16,20 +15,10 @@ object Verify {
       s"unknown query names: ${(only -- SparkEntry.queries.keySet).mkString(", ")}")
     def selected(name: String): Boolean = only.isEmpty || only(name)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.hadoop.fs.file.impl",
-        classOf[graft.ops.FastLocalFileSystem].getName)
-      .config("spark.ui.enabled", "false")
-      // SQL-text surface (q241 drives DML through spark.sql strings):
-      // parser injection only applies at session construction
-      .withExtensions(new graft.expressions.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftSession.quietBoundedWindowWarnings()
+    val spark = GraftSession.getOrCreate(
+      GraftSession.builder("graft-verify", Some(s"local[$cpus]"))
+        .config("spark.sql.shuffle.partitions", cpus)
+        .config("spark.ui.enabled", "false"))
     new java.io.File(outDir).mkdirs()
     // run queries concurrently from the driver (separate output dirs,
     // Spark schedules the jobs in parallel) — halves driver wall-time

@@ -505,7 +505,7 @@ object ManifestTable {
   }
 
   /** Broadcast hint for the delta-sized side of a checkpoint-pinned
-    * join (the DvMergeProbe lesson: `localCheckpoint` plans compile
+    * join (the SCALE.md mergeDV lesson: `localCheckpoint` plans compile
     * OUTSIDE AQE, where an un-hinted join degrades to a full-table
     * sort-merge shuffle) — GUARDED by the frame's on-disk footprint.
     * The cumulative vector grows monotonically across MoR commits
@@ -533,10 +533,10 @@ object ManifestTable {
     * nothing when no row survives (same contract as before: absent
     * `_dv` = no deletions).
     *
-    * The cap is the one driver-versus-Spark gate of the commit
-    * metadata (DV carries, Bloom carries and fragment register builds
-    * in [[ZTable]]); specs scope it with `withValue(0L)` to drive the
-    * Spark (100 TB) side at test scale. */
+    * The cap is the one driver-versus-Spark gate of the table
+    * metadata: DV carries, and in [[ZTable]] Bloom carries, fragment
+    * register builds and Bloom probes. Specs scope it with
+    * `withValue(0L)` to drive the Spark (100 TB) side at test scale. */
   private[ops] val dvLocalCarryCap =
     new scala.util.DynamicVariable[Long](16L * 1024 * 1024)
   private[ops] def carryDvFiltered(spark: SparkSession, root: String,
@@ -1798,7 +1798,7 @@ object ManifestTable {
       if (isUnbacked(p)) (l, l) else (l, p) })
     // broadcast hint: the localCheckpoint below compiles outside AQE,
     // where an un-hinted anti-join degrades to a full-table
-    // sort-merge shuffle (the mergeDV lesson — DvMergeProbe); the
+    // sort-merge shuffle (the mergeDV lesson, SCALE.md); the
     // vector is O(deleted) by contract, and the hint is size-guarded
     // ([[hintIfSmall]]) so a vector grown past broadcast limits falls
     // back to the un-hinted join instead of failing every MoR DML
@@ -1820,8 +1820,11 @@ object ManifestTable {
       .localCheckpoint() // positions and post-images must come from
     // ONE evaluation — a recompute between the two writes could
     // re-plan the scan and tear position from image
+    // each SET value takes its column's type: an untyped `lit(null)`
+    // would otherwise append a boolean column the next read can't merge
     val postImage = matched.select(dataCols.map { c =>
-      set.get(c).map(_.as(c)).getOrElse(col(c))
+      set.get(c).map(_.cast(current.schema(c).dataType).as(c))
+        .getOrElse(col(c))
     }: _*)
     Checks.enforce(spark, root, postImage, "update post-image")
     val fs = fsOf(spark, root)
@@ -2002,7 +2005,7 @@ object ManifestTable {
     // localCheckpoint below compiles its plan OUTSIDE AQE (RDD
     // conversion), where the un-hinted joins degrade to sort-merge
     // shuffles of the FULL table scan — measured 43 s vs 3.6 s at
-    // 100× (DvMergeProbe). The vector and the batch's key set are
+    // 100× (SCALE.md). The vector and the batch's key set are
     // O(delta) by the merge-on-read contract; a delta too large to
     // broadcast belongs on the copy-on-write [[merge]] path anyway.
     // The VECTOR hint is size-guarded ([[hintIfSmall]]): it grows

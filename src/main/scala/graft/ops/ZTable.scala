@@ -127,8 +127,9 @@ object ZTable {
     * [[graft.ops.GraftPruning.bloomCandidates]]/`bloomCandidatesIn`.
     *
     * Driver path: when the committed register frame is planning-sized
-    * (on-disk bytes ≤ `spark.graft.bloom.localProbeMaxBytes`, default
-    * 4 MiB) and every key is a string or integral value, the probe
+    * (on-disk bytes ≤ [[ManifestTable.dvLocalCarryCap]], the gate the
+    * commit path already uses to carry the same frame on the driver)
+    * and every key is a string or integral value, the probe
     * runs ENTIRELY on the driver — one parquet-mr frame read + the
     * same two-seed md5-prefix check
     * ([[graft.expressions.Md5Prefix60.hash60]], the identical hash the
@@ -153,9 +154,8 @@ object ZTable {
     val f = fs(spark, root)
     val bp = new org.apache.hadoop.fs.Path(s"$root/$dir/_bloom")
     if (!f.exists(bp)) return None
-    val cap = spark.conf.get("spark.graft.bloom.localProbeMaxBytes",
-      (4L * 1024 * 1024).toString).toLong
-    if (f.listStatus(bp).filter(_.isFile).map(_.getLen).sum > cap)
+    if (f.listStatus(bp).filter(_.isFile).map(_.getLen).sum >
+        ManifestTable.dvLocalCarryCap.value)
       return None
     val rows = MetaIO.frameRows(spark, bp.toString)
     if (rows.isEmpty) return Some(Seq.empty)
@@ -527,15 +527,18 @@ object ZTable {
       val cond =
         coalesce(col(xCol).cast("long").between(lo, hi) && extra,
           lit(false))
+      // each SET value takes its column's type (an untyped NULL too)
+      val typed =
+        set.map { case (c, e) => c -> e.cast(df.schema(c).dataType) }
       // CHECK constraints on the post-image of matched rows only —
       // filter-then-assign so the WHERE sees pre-update values (same
       // shape as [[ManifestTable.updateWhere]]'s enforcement)
       Checks.enforce(spark, root,
         df.filter(cond).select(df.columns.toIndexedSeq.map { c =>
-          set.get(c).map(_.as(c)).getOrElse(col(c))
+          typed.get(c).map(_.as(c)).getOrElse(col(c))
         }: _*), "update post-image")
       df.select(df.columns.toIndexedSeq.map { c =>
-        set.get(c) match {
+        typed.get(c) match {
           case Some(e) => when(cond, e).otherwise(col(c)).as(c)
           case None => col(c)
         }

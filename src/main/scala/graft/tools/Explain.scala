@@ -2,22 +2,9 @@
 // Run: sbt -batch "runMain graft.tools.Explain q04 q13 ..."
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 object Explain {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.hadoop.fs.file.impl",
-        classOf[graft.ops.FastLocalFileSystem].getName)
-      // the SQL-text queries (graft_table TVF, table-format DML) need
-      // the session extensions, same as Bench/Verify
-      .withExtensions(new graft.expressions.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.getOrCreate("graft-explain")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     val wanted = if (args.isEmpty) Seq("q04") else args.toSeq
     graft.SparkEntry.queries

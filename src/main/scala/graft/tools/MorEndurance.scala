@@ -11,7 +11,6 @@
 // args: nBatches rowsPerBatch binPackEvery
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 object MorEndurance {
@@ -19,16 +18,7 @@ object MorEndurance {
     val nBatches = args.headOption.map(_.toInt).getOrElse(200)
     val rowsPerBatch = args.drop(1).headOption.map(_.toInt).getOrElse(2000)
     val binPackEvery = args.drop(2).headOption.map(_.toInt).getOrElse(20)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.hadoop.fs.file.impl",
-        classOf[graft.ops.FastLocalFileSystem].getName)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.getOrCreate("graft-morendurance")
     import graft.ops.ManifestTable
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "target/scale100")
     val base = java.nio.file.Files

@@ -22,7 +22,7 @@
 //    the same reason, preserving the cell/cluster geometry per replica.
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 object ScaleGen {
@@ -31,16 +31,7 @@ object ScaleGen {
   def main(args: Array[String]): Unit = {
     val Array(inDir, outDir, factorStr) = args.take(3)
     val factor = factorStr.toInt
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "16"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.hadoop.fs.file.impl",
-        classOf[graft.ops.FastLocalFileSystem].getName)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.getOrCreate("graft-scalegen")
 
     def read(t: String): DataFrame =
       spark.read.parquet(s"$inDir/$t.parquet")

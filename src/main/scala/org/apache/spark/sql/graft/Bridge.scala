@@ -1,5 +1,6 @@
 package org.apache.spark.sql.graft
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
@@ -11,8 +12,14 @@ import org.apache.spark.sql.classic.ExpressionUtils
   * `private[sql]` — hence this one-file shim inside the sql namespace,
   * the conventional pattern for third-party Catalyst expression
   * libraries. Everything else in graft stays in its own package.
+  *
+  * It also drains the listener bus (package-private to Spark) for the
+  * job decomposition of [[graft.tools.Probe]].
   */
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+  /** Block until every posted listener event has been delivered. */
+  def drainListeners(sc: SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 }

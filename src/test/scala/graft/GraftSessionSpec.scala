@@ -3,13 +3,19 @@ package graft
 /** The session factory must hand back a session whose SQL surface
   * includes BOTH the custom aggregates (kmv_distinct) and the native
   * expressions (graft_*) — whether the session was freshly built with
-  * extensions or reused from an earlier builder (retrofit path). */
+  * extensions or reused from an earlier builder (retrofit path) — and
+  * it must be the only session factory, so the suite, Bench and Verify
+  * run on the session that ships. */
 class GraftSessionSpec extends SparkSpec {
 
   test("getOrCreate exposes native expressions and aggregates in SQL") {
-    // the shared test JVM already holds a session built WITHOUT the
-    // extensions — this exercises exactly the retrofit branch
-    val s = GraftSession.getOrCreate("graft-session-spec")
+    // the shared test session is already factory-built, so this takes
+    // getOrCreate's reuse path: the finishing steps run again on it,
+    // and the builder's runtime confs land on the shared session — put
+    // back its test width for the suites that follow
+    val width = spark.conf.get("spark.sql.shuffle.partitions")
+    val s = try GraftSession.getOrCreate("graft-session-spec")
+      finally spark.conf.set("spark.sql.shuffle.partitions", width)
     val g = s.sql("SELECT graft_word_shingles('a b c', 2) AS g")
       .collect().head.getSeq[String](0)
     assert(g == Seq("a b", "b c"))
@@ -18,5 +24,33 @@ class GraftSessionSpec extends SparkSpec {
     assert(s.sql(
       "SELECT kmv_distinct(graft_md5prefix60(CAST(x AS STRING))) AS n " +
         "FROM range(1000) t(x)").collect().head.getDouble(0) > 0.0)
+  }
+
+  test("the test session carries the shipped factory's conf") {
+    val s = SparkSpec.session
+    val fastFs = classOf[graft.ops.FastLocalFileSystem].getName
+    assert(s.sparkContext.getConf.get("spark.hadoop.fs.file.impl") == fastFs)
+    assert(s.sessionState.newHadoopConf().get("fs.file.impl") == fastFs)
+    assert(s.conf.get("spark.sql.session.timeZone") == "UTC")
+    assert(s.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
+    assert(s.sessionState.sqlParser.isInstanceOf[graft.sql.GraftSqlParser])
+  }
+
+  test("GraftSession is the only caller of the Spark session builder") {
+    // comment lines (a scaladoc usage example) are not calls
+    val call = "SparkSession" + ".builder("
+    def comment(l: String) = {
+      val t = l.trim
+      t.startsWith("*") || t.startsWith("//") || t.startsWith("/*")
+    }
+    import scala.jdk.CollectionConverters._
+    val callers = Seq("src/main", "src/test").flatMap { d =>
+      val w = java.nio.file.Files.walk(java.nio.file.Paths.get(d))
+      try w.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
+      finally w.close()
+    }.filter(p => java.nio.file.Files.readAllLines(p).asScala
+      .exists(l => !comment(l) && l.contains(call)))
+      .map(_.getFileName.toString)
+    assert(callers == Seq("GraftSession.scala"))
   }
 }

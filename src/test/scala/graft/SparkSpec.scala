@@ -13,20 +13,12 @@ object SparkSpec {
   lazy val session: SparkSession = {
     val scratch = java.nio.file.Files.createTempDirectory("graft_spark_")
     System.setProperty("derby.system.home", scratch.toString)
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", s"$scratch/warehouse")
-      // native expressions + the graft SQL-text parser (specs drive
-      // table-format DML through spark.sql strings)
-      .withExtensions(new graft.expressions.GraftExtensions)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    GraftSession.quietBoundedWindowWarnings()
-    s
+    // the shipped factory's session (FastLocalFileSystem, UTC,
+    // nanosAsLong, the graft extensions and aggregates), at test width
+    GraftSession.getOrCreate(
+      GraftSession.builder("graft-test", Some("local[4]"))
+        .config("spark.sql.shuffle.partitions", "4")
+        .config("spark.ui.enabled", "false")
+        .config("spark.sql.warehouse.dir", s"$scratch/warehouse"))
   }
 }

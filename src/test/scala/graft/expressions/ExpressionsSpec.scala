@@ -1,28 +1,12 @@
 package graft.expressions
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.VectorFunctions
 import org.apache.spark.sql.functions._
 
 /** Native-expression behavior: eval + codegen parity, SQL registration
-  * via SparkSessionExtensions. Uses its own session (withExtensions
-  * must be set at build time). */
-class ExpressionsSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-ext-test")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    // getOrCreate may have reused a pre-existing session (shared test
-    // JVM) whose construction never saw the extensions — retrofit then
-    GraftExtensions.register(s)
-    s
-  }
+  * via SparkSessionExtensions (the shared session is factory-built, so
+  * it carries them). */
+class ExpressionsSpec extends graft.SparkSpec {
 
   test("graft_dotq callable from SQL text (EP1) via extensions") {
     val row = spark.sql(
@@ -81,7 +65,6 @@ class ExpressionsSpec extends AnyFunSuite {
     val idem = df.select((T.nfc(col("got")) === col("got")).as("ok"))
     assert(idem.filter(!col("ok")).count() == 0)
     // SQL surface
-    graft.expressions.GraftExtensions.register(spark)
     val r = spark.sql("SELECT graft_nfc('cafe\u0301') AS s, " +
       "length(graft_nfc('cafe\u0301')) AS n").collect().head
     assert(r.getString(0) == "caf\u00e9" && r.getInt(1) == 4)

@@ -42,7 +42,6 @@ class BottomKSampleSpec extends SparkSpec {
   }
 
   test("bottomk_sample is registered on the SQL surface") {
-    graft.GraftSession.registerFunctions(spark)
     spark.range(10)
       .select(TextFunctions.hash60($"id".cast("string"), 0).as("hv"),
         $"id".cast("double").as("v"))

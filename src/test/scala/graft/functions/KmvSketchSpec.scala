@@ -33,7 +33,6 @@ class KmvSketchSpec extends SparkSpec {
   }
 
   test("kmv_distinct is registered on the SQL surface") {
-    graft.GraftSession.registerFunctions(spark)
     spark.range(30).select(TextFunctions.hash60($"id".cast("string"), 0).as("hv"))
       .createOrReplaceTempView("kmv_in")
     assert(spark.sql("SELECT kmv_distinct(hv) FROM kmv_in")

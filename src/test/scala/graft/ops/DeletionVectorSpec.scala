@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.functions.{col, concat, lit}
 
 /** Merge-on-read DELETE via deletion vectors: the version carries the
   * base's files unchanged plus a position vector; readers anti-join,
@@ -123,6 +123,36 @@ class DeletionVectorSpec extends SparkSpec {
       Map("a" -> col("b"), "b" -> col("a")))
     assert(ManifestTable.read(spark, root2).get
       .as[(Long, Long, Long)].collect().toSeq == Seq((1L, 20L, 10L)))
+  }
+
+  test("an untyped NULL SET keeps its column's type (MoR and scoped " +
+      "update): full reads and readVersion still succeed") {
+    val root = freshRoot()
+    ManifestTable.commit(spark.range(1, 41).select(col("id").as("x"),
+      (col("id") % 4).as("y"), col("id").as("k"),
+      col("id").cast("int").as("i"),
+      concat(lit("s"), col("id")).as("s")), root)                 // v1
+    ZTable.optimizeZOrder(spark, root, "x", "y", "k", nFiles = 4)  // v2
+    def types(v: Long) = ManifestTable.readVersion(spark, root, v)
+      .schema.map(f => f.name -> f.dataType)
+    val base = types(1L)
+    ManifestTable.updateWhereDV(spark, root, col("x") <= 10L,
+      Map("i" -> lit(null), "s" -> lit(null)))                     // v3
+    ZTable.updateWhereScoped(spark, root, 31L, 40L,
+      Map("i" -> lit(null), "s" -> lit(null)))                     // v4
+    Seq(3L, 4L).foreach { v =>
+      assert(types(v) == base, s"v$v changed the column types")
+      assert(ManifestTable.readVersion(spark, root, v).count() == 40L)
+    }
+    val cur = ManifestTable.read(spark, root).get
+    assert(cur.schema.map(f => f.name -> f.dataType) == base)
+    val rows = cur.select("x", "i", "s")
+      .as[(Long, Option[Int], Option[String])].collect()
+    assert(rows.length == 40)
+    rows.foreach { case (x, i, s) =>
+      val nulled = x <= 10L || x > 30L
+      assert(i.isEmpty == nulled && s.isEmpty == nulled, s"row x=$x")
+    }
   }
 
   test("DV update enforces checks on the post-image; stats survive") {

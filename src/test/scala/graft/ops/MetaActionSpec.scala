@@ -27,11 +27,8 @@ class MetaActionSpec extends SparkSpec {
       bloomCol = Some("s"))
     ZTable.optimizeZOrder(spark, lroot, "y", "k", "k", nFiles = 6,
       bloomCol = Some("k"))
-    val capKey = "spark.graft.bloom.localProbeMaxBytes"
-    def joined[T](body: => T): T = {
-      spark.conf.set(capKey, "0")
-      try body finally spark.conf.unset(capKey)
-    }
+    def joined[T](body: => T): T =
+      ManifestTable.dvLocalCarryCap.withValue(0L)(body)
     // the default gate probes on the driver (0 jobs), the forced one
     // runs the register join (≥ 1 job), and both return the same set
     def parity(what: String, local: => Seq[String],
