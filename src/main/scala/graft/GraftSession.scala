@@ -74,11 +74,18 @@ object GraftSession {
   def getOrCreate(appName: String = "graft"): SparkSession =
     getOrCreate(builder(appName))
 
-  /** Build (or reuse) the session of a [[builder]] the caller has
-    * adjusted with its own `.config(..)`, then apply the finishing
-    * steps every engine session shares. */
+  /** Build the session of a [[builder]] the caller has adjusted with
+    * its own `.config(..)` — or reuse the live session of this JVM AS
+    * IT STANDS — then apply the finishing steps every engine session
+    * shares. Spark's own `Builder.getOrCreate` would apply the
+    * builder's runtime confs to a reused session, silently resetting
+    * e.g. its `spark.sql.shuffle.partitions` to this host's core
+    * count; a reused session keeps its conf. */
   def getOrCreate(b: SparkSession.Builder): SparkSession = {
-    val s = b.getOrCreate()
+    val s = SparkSession.getActiveSession
+      .orElse(SparkSession.getDefaultSession)
+      .filterNot(_.sparkContext.isStopped)
+      .getOrElse(b.getOrCreate())
     s.sparkContext.setLogLevel("WARN")
     quietBoundedWindowWarnings()
     registerFunctions(s)

@@ -38,6 +38,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // [[graft.plans.GraftPruneScans]].
     ext.injectOptimizerRule(session =>
       new graft.plans.GraftPruneScans(session))
+    // the in-scan deletion-vector filter runs after the caller's own
+    // conjuncts, on the rows they keep ([[graft.plans.LiveRowsLast]])
+    ext.injectOptimizerRule(_ => graft.plans.LiveRowsLast)
     // READ surface as table-valued functions (the FROM-clause side of
     // EP1 parity — Delta exposes table_changes() the same way):
     //   graft_table('/p')              current version

@@ -494,9 +494,9 @@ object ManifestTable {
   }
 
   /** On-disk parquet footprint of a version's deletion vector, 0 when
-    * none — the O(files-under-`_dv`) metadata probe that gates the
-    * broadcast hint below. */
-  private def dvBytesOf(spark: SparkSession, root: String,
+    * none — the O(files-under-`_dv`) metadata probe that chooses how
+    * [[live]] applies the vector and gates the broadcast hint below. */
+  private[ops] def dvBytesOf(spark: SparkSession, root: String,
       dir: String): Long = {
     val fs = fsOf(spark, root)
     val p = new Path(new Path(root, dir), "_dv")
@@ -504,10 +504,11 @@ object ManifestTable {
     else fs.listStatus(p).map(_.getLen).sum
   }
 
-  /** Broadcast hint for the delta-sized side of a checkpoint-pinned
-    * join (the SCALE.md mergeDV lesson: `localCheckpoint` plans compile
+  /** Broadcast hint for the vector side of [[applyDv]]'s anti-join
+    * (the SCALE.md mergeDV lesson: `localCheckpoint` plans compile
     * OUTSIDE AQE, where an un-hinted join degrades to a full-table
-    * sort-merge shuffle) — GUARDED by the frame's on-disk footprint.
+    * sort-merge shuffle; every DV read past [[dvLocalCarryCap]] takes
+    * the same hint) — GUARDED by the frame's on-disk footprint.
     * The cumulative vector grows monotonically across MoR commits
     * until a [[reorg]]/[[optimize]]; un-guarded, a long-lived table
     * whose vector outgrew Spark's broadcast limit (or driver memory)
@@ -730,22 +731,81 @@ object ManifestTable {
     }
   }
 
+  /** The LIVE rows of `raw`, a file-source read of (some of) version
+    * dir `dir`'s files: the one entry point through which every reader
+    * and rewriter applies the version's deletion vector. No `_dv` →
+    * `raw` itself. A vector within [[dvLocalCarryCap]] (the on-disk
+    * footprint, checked before anything else is built) is read on the
+    * DRIVER (one parquet-mr frame read, no job), shipped as per-file
+    * sorted row-index arrays in one broadcast variable and applied
+    * INSIDE the scan by [[graft.expressions.LiveRows]] over
+    * `_metadata.file_path`/`_metadata.row_index`: one same-file check
+    * and one probe per row, no join, no exchange. Past the cap the
+    * vector is the 100 TB case and the [[applyDv]] anti-join runs,
+    * broadcast-hinted while [[hintIfSmall]] allows. The result keeps
+    * `raw`'s columns and its `_metadata`, so callers may tag positions
+    * after it — then only the rows they keep pay for them. */
+  private[ops] def live(spark: SparkSession, root: String, dir: String,
+      raw: DataFrame): DataFrame = {
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.graft.Bridge
+    val bytes = dvBytesOf(spark, root, dir)
+    val dvDir = s"$root/$dir/_dv"
+    if (bytes == 0L) raw
+    else if (bytes <= dvLocalCarryCap.value) {
+      val positions = MetaIO.dvPositions(spark, dvDir)
+      if (positions.isEmpty) raw
+      else raw.filter(Bridge.column(graft.expressions.LiveRows(
+        Bridge.expression(col("_metadata.file_path")),
+        Bridge.expression(col("_metadata.row_index")),
+        dvDir)(spark.sparkContext.broadcast(positions))))
+    } else applyDv(raw, MetaIO.readParquet(spark, dvDir), bytes)
+  }
+
   /** Anti-join `raw` (a file-source read) against a deletion vector:
     * rows whose (file key, row index) appear in `dv` disappear. The
-    * join is keyed on metadata columns computed in the scan itself;
-    * the vector is O(deleted) rows and AQE broadcasts it when small —
-    * the merge-on-read price is one anti-join, never a rewrite. */
-  private[ops] def applyDv(raw: DataFrame, dv: DataFrame): DataFrame = {
+    * join is keyed on metadata columns computed in the scan itself —
+    * the path of [[live]] for a vector past [[dvLocalCarryCap]]. */
+  private def applyDv(raw: DataFrame, dv: DataFrame,
+      bytes: Long): DataFrame = {
     import org.apache.spark.sql.functions.{col, substring_index}
-    val cols = raw.columns.toIndexedSeq
-    raw
-      .withColumn("__dv_path",
-        substring_index(col("_metadata.file_path"), "/", -2))
-      .withColumn("__dv_ri", col("_metadata.row_index"))
-      .join(dv.select(col("path").as("__dv_path"),
-          col("row_index").as("__dv_ri")),
-        Seq("__dv_path", "__dv_ri"), "left_anti")
-      .select(cols.map(col): _*)
+    val meta = raw.metadataColumn("_metadata")
+    val keys = hintIfSmall(dv.select(col("path").as("__dv_path"),
+      col("row_index").as("__dv_ri")), bytes)
+    // keyed on expressions, not on added columns: the result keeps
+    // `raw`'s output and its `_metadata` (no projection on top)
+    raw.join(keys,
+      substring_index(meta.getField("file_path"), "/", -2) ===
+        keys("__dv_path") &&
+        meta.getField("row_index") === keys("__dv_ri"), "left_anti")
+  }
+
+  /** Tag a DML find-positions scan with its rows' positions: `__path`
+    * the scan's file path, `__ri` the row index. The file KEY is
+    * derived in [[positionsOf]], from the rows a DML keeps. */
+  private def positionTagged(scan: DataFrame): DataFrame = {
+    import org.apache.spark.sql.functions.col
+    scan.withColumn("__path", col("_metadata.file_path"))
+      .withColumn("__ri", col("_metadata.row_index"))
+  }
+
+  /** The deletion-vector rows of [[positionTagged]] rows: (`path` =
+    * the [[fileKeyOf]] key, exactly `substring_index(path, '/', -2)`
+    * as every DV reader derives it, `row_index`). */
+  private def positionsOf(tagged: DataFrame): DataFrame = {
+    import org.apache.spark.sql.functions.{col, substring_index}
+    tagged.select(substring_index(col("__path"), "/", -2).as("path"),
+      col("__ri").as("row_index"))
+  }
+
+  /** Copy the base version's vector files (if any) into `dir`'s
+    * `_dv` verbatim — a driver byte copy; the caller appends its new
+    * positions as one more part file. */
+  private def carryPriorDv(fs: org.apache.hadoop.fs.FileSystem,
+      root: String, baseDir: String, dir: String): Unit = {
+    val prior = new Path(s"$root/$baseDir/_dv")
+    if (fs.exists(prior))
+      ZTable.copyFrame(fs, prior.toString, s"$root/$dir/_dv")
   }
 
   /** Read a resolved data dir — through its `_files` manifest when the
@@ -772,11 +832,11 @@ object ManifestTable {
         GraftPruning.register(spark, Seq(s"$root/$dir"), root, dir)
         MetaIO.readParquet(spark, s"$root/$dir")
     }
-    val live = dvOf(spark, root, dir).fold(raw)(applyDv(raw, _))
+    val rows = live(spark, root, dir, raw)
     // column mapping LAST: logical names are the only thing any
     // consumer above this line ever sees (a dropped column's physical
     // data stays in the files, invisible from here on)
-    colmapOf(spark, root, dir).fold(live)(toLogical(live, _))
+    colmapOf(spark, root, dir).fold(rows)(toLogical(rows, _))
   }
 
   /** Time travel: read a specific committed version. Fails loudly if
@@ -1662,10 +1722,12 @@ object ManifestTable {
     * the base version's files UNCHANGED (a `_files` manifest of the
     * same references — zero data bytes rewritten at any table size)
     * plus a `_dv` frame of the (file key, row index) positions now
-    * deleted, CUMULATIVE over any prior vector. Readers pay one
-    * anti-join against the O(deleted) vector ([[applyDv]], inside
-    * [[readDataDir]] — so merges, feeds, DML and OPTIMIZE all see
-    * post-delete truth automatically); a 100 TB DELETE costs one scan
+    * deleted, CUMULATIVE over any prior vector. Readers apply the
+    * O(deleted) vector through [[live]] (inside [[readDataDir]] — so
+    * merges, feeds, DML and OPTIMIZE all see post-delete truth
+    * automatically): a row-index filter inside the scan while the
+    * vector is within [[dvLocalCarryCap]], one broadcast anti-join
+    * past it, never a rewrite. A 100 TB DELETE costs one scan
     * to FIND the positions and O(deleted) metadata to commit, where
     * the copy-on-write [[deleteWhere]] costs a table rewrite. Any
     * rewriting commit ([[optimize]], the full-rewrite DML, a plain
@@ -1676,8 +1738,7 @@ object ManifestTable {
     * matched = kept). Returns the new version. */
   def deleteWhereDV(spark: SparkSession, root: String,
       condition: org.apache.spark.sql.Column): Long = {
-    import org.apache.spark.sql.functions.{coalesce, col, lit,
-      substring_index}
+    import org.apache.spark.sql.functions.{coalesce, lit}
     val (live, compacted) = commitState(spark, root)
     val markers = namesOf(live, compacted)
     require(markers.nonEmpty, s"nothing to delete from at $root")
@@ -1691,25 +1752,20 @@ object ManifestTable {
         .map(n => s"$baseDir/$n")
     }
     require(refs.nonEmpty, s"version $base of $root has no data files")
-    val prior = dvOf(spark, root, baseDir)
     // one scan to FIND positions: current (post-prior-DV) rows
     // matching the predicate, keyed by (file key, row index). The
-    // position columns are computed ONCE at the scan, before any
-    // join, so metadata-column lineage is never in question
-    val tagged = readRefsRaw(spark, root, baseDir, refs)
-      .withColumn("__path",
-        substring_index(col("_metadata.file_path"), "/", -2))
-      .withColumn("__ri", col("_metadata.row_index"))
+    // scan applies the prior vector ([[live]]) and is tagged with its
+    // position columns before any join, so metadata-column lineage is
+    // never in question; the predicate sinks below the tags, so only
+    // matched rows derive a file key
+    val tagged = positionTagged(
+      ManifestTable.live(spark, root, baseDir,
+        readRefsRaw(spark, root, baseDir, refs)))
     val cm = colmapOf(spark, root, baseDir)
-    val current0 = prior.fold(tagged)(dv =>
-      tagged.join(dv.select(col("path").as("__path"),
-          col("row_index").as("__ri")),
-        Seq("__path", "__ri"), "left_anti"))
     // LOGICAL view for the predicate when a column mapping is active
-    val current = cm.fold(current0)(
-      toLogical(current0, _, passthrough = Seq("__path", "__ri")))
-    val fresh = current.filter(coalesce(condition, lit(false)))
-      .select(col("__path").as("path"), col("__ri").as("row_index"))
+    val current = cm.fold(tagged)(
+      toLogical(tagged, _, passthrough = Seq("__path", "__ri")))
+    val fresh = positionsOf(current.filter(coalesce(condition, lit(false))))
     val fs = fsOf(spark, root)
     val next = base + 1
     val dir = newDataDirName(next)
@@ -1720,8 +1776,7 @@ object ManifestTable {
     // commit) + this delete's positions appended as one new part file
     // (same physical schema by construction: both sides are the same
     // metadata-column projection)
-    prior.foreach(_ => ZTable.copyFrame(fs, s"$root/$baseDir/_dv",
-      s"$root/$dir/_dv"))
+    carryPriorDv(fs, root, baseDir, dir)
     fresh.coalesce(1).write.mode("append").parquet(s"$root/$dir/_dv")
     // _parts rides too: a DV delete changes no file set, so the
     // partition metadata stays exact (the appending MoR DML paths
@@ -1766,8 +1821,7 @@ object ManifestTable {
   def updateWhereDV(spark: SparkSession, root: String,
       condition: org.apache.spark.sql.Column,
       set: Map[String, org.apache.spark.sql.Column]): Long = {
-    import org.apache.spark.sql.functions.{broadcast, coalesce, col,
-      lit, substring_index}
+    import org.apache.spark.sql.functions.{coalesce, col, lit}
     val (live, compacted) = commitState(spark, root)
     val markers = namesOf(live, compacted)
     require(markers.nonEmpty, s"nothing to update at $root")
@@ -1781,11 +1835,9 @@ object ManifestTable {
         .map(n => s"$baseDir/$n")
     }
     require(refs.nonEmpty, s"version $base of $root has no data files")
-    val prior = dvOf(spark, root, baseDir)
-    val tagged = readRefsRaw(spark, root, baseDir, refs)
-      .withColumn("__path",
-        substring_index(col("_metadata.file_path"), "/", -2))
-      .withColumn("__ri", col("_metadata.row_index"))
+    val tagged = positionTagged(
+      ManifestTable.live(spark, root, baseDir,
+        readRefsRaw(spark, root, baseDir, refs)))
     val cm = colmapOf(spark, root, baseDir)
     // pending metadata-only ADD COLUMNs are PHYSICALLY BACKED in this
     // commit's appended post-images (a SET may even backfill them);
@@ -1796,20 +1848,9 @@ object ManifestTable {
       .map(e => (e._1, unbackedType(e._2)))
     val cmBacked = cm.map(_.map { case (l, p) =>
       if (isUnbacked(p)) (l, l) else (l, p) })
-    // broadcast hint: the localCheckpoint below compiles outside AQE,
-    // where an un-hinted anti-join degrades to a full-table
-    // sort-merge shuffle (the mergeDV lesson, SCALE.md); the
-    // vector is O(deleted) by contract, and the hint is size-guarded
-    // ([[hintIfSmall]]) so a vector grown past broadcast limits falls
-    // back to the un-hinted join instead of failing every MoR DML
-    val dvFootprint = dvBytesOf(spark, root, baseDir)
-    val current0 = prior.fold(tagged)(dv =>
-      tagged.join(hintIfSmall(dv.select(col("path").as("__path"),
-          col("row_index").as("__ri")), dvFootprint),
-        Seq("__path", "__ri"), "left_anti"))
     // LOGICAL view: WHERE, SET and checks all resolve logical names
-    val current = cm.fold(current0)(
-      toLogical(current0, _, passthrough = Seq("__path", "__ri")))
+    val current = cm.fold(tagged)(
+      toLogical(tagged, _, passthrough = Seq("__path", "__ri")))
     val dataCols = current.columns.toIndexedSeq
       .filter(c => c != "__path" && c != "__ri")
     require(set.keySet.subsetOf(dataCols.toSet),
@@ -1865,14 +1906,12 @@ object ManifestTable {
           .filter(n => !n.startsWith("_") && !n.startsWith("."))
           .map(n => s"$dir/$n"), Nil)
     }
-    val fresh = matched
-      .select(col("__path").as("path"), col("__ri").as("row_index"))
     // prior vector files carried verbatim (driver copy), this
     // update's positions appended — O(matched) write, never a
     // re-encode of the cumulative vector (see [[deleteWhereDV]])
-    prior.foreach(_ => ZTable.copyFrame(fs, s"$root/$baseDir/_dv",
-      s"$root/$dir/_dv"))
-    fresh.coalesce(1).write.mode("append").parquet(s"$root/$dir/_dv")
+    carryPriorDv(fs, root, baseDir, dir)
+    positionsOf(matched).coalesce(1).write.mode("append")
+      .parquet(s"$root/$dir/_dv")
     val out = fs.create(new Path(new Path(root, dir), "_files"), true)
     try out.write((refs ++ appended).mkString("\n").getBytes("UTF-8"))
     finally out.close()
@@ -1957,8 +1996,7 @@ object ManifestTable {
       source: DataFrame, keys: Seq[String],
       updateCols: Option[Seq[String]], batchKey: String,
       batchKeyRetention: Long = Long.MaxValue): Long = {
-    import org.apache.spark.sql.functions.{broadcast, col,
-      substring_index}
+    import org.apache.spark.sql.functions.{broadcast, col}
     val (live, compacted) = commitState(spark, root)
     val markers = namesOf(live, compacted)
     if (batchKey.nonEmpty &&
@@ -1982,11 +2020,9 @@ object ManifestTable {
         .map(n => s"$baseDir/$n")
     }
     require(refs.nonEmpty, s"version $base of $root has no data files")
-    val prior = dvOf(spark, root, baseDir)
-    val tagged = readRefsRaw(spark, root, baseDir, refs)
-      .withColumn("__path",
-        substring_index(col("_metadata.file_path"), "/", -2))
-      .withColumn("__ri", col("_metadata.row_index"))
+    val tagged = positionTagged(
+      ManifestTable.live(spark, root, baseDir,
+        readRefsRaw(spark, root, baseDir, refs)))
     val cm = colmapOf(spark, root, baseDir)
     // a metadata-only ADD COLUMN pending (unbacked mapping entries):
     // this commit PHYSICALLY BACKS the column in its appended
@@ -2001,25 +2037,10 @@ object ManifestTable {
       .map(e => (e._1, unbackedType(e._2)))
     val cmBacked = cm.map(_.map { case (l, p) =>
       if (isUnbacked(p)) (l, l) else (l, p) })
-    // EXPLICIT broadcast hints on the delta-sized sides: the
-    // localCheckpoint below compiles its plan OUTSIDE AQE (RDD
-    // conversion), where the un-hinted joins degrade to sort-merge
-    // shuffles of the FULL table scan — measured 43 s vs 3.6 s at
-    // 100× (SCALE.md). The vector and the batch's key set are
-    // O(delta) by the merge-on-read contract; a delta too large to
-    // broadcast belongs on the copy-on-write [[merge]] path anyway.
-    // The VECTOR hint is size-guarded ([[hintIfSmall]]): it grows
-    // cumulatively until a reorg, and an unconditional hint would
-    // make every MoR DML fail once it outgrew broadcast limits
-    val dvFootprint = dvBytesOf(spark, root, baseDir)
-    val current0 = prior.fold(tagged)(dv =>
-      tagged.join(hintIfSmall(dv.select(col("path").as("__path"),
-          col("row_index").as("__ri")), dvFootprint),
-        Seq("__path", "__ri"), "left_anti"))
     // LOGICAL view: keys, source columns and the kernel all resolve
     // logical names when a column mapping is active
-    val current = cm.fold(current0)(
-      toLogical(current0, _, passthrough = Seq("__path", "__ri")))
+    val current = cm.fold(tagged)(
+      toLogical(tagged, _, passthrough = Seq("__path", "__ri")))
     val dataCols = current.columns.toIndexedSeq
       .filter(c => c != "__path" && c != "__ri")
     require(keys.forall(dataCols.contains),
@@ -2036,13 +2057,16 @@ object ManifestTable {
     // positions (old images to hide) and matched pre-images come from
     // ONE evaluation — a recompute between the DV write and the
     // post-image write could re-plan the scan and tear them apart.
-    // O(matched) rows, the merge-on-read price
+    // O(matched) rows, the merge-on-read price. EXPLICIT broadcast
+    // hint on the batch's key set: the localCheckpoint compiles its
+    // plan OUTSIDE AQE (RDD conversion), where an un-hinted join
+    // degrades to a sort-merge shuffle of the FULL table scan —
+    // measured 43 s vs 3.6 s at 100× (SCALE.md); a delta too large
+    // to broadcast belongs on the copy-on-write [[merge]] path anyway
     val matched = current
       .join(broadcast(srcProj.select(keys.map(col): _*).distinct()),
         keys, "left_semi")
       .localCheckpoint()
-    val positions = matched
-      .select(col("__path").as("path"), col("__ri").as("row_index"))
     // the upsert kernel on the MATCHED SLICE yields exactly the
     // append set: updated matched rows (both-sides branch) + inserted
     // source-only rows (insert branch); the unmatched-target branch
@@ -2083,9 +2107,9 @@ object ManifestTable {
     }
     // prior vector files carried verbatim (driver copy), the batch's
     // positions appended — O(delta) write (see [[deleteWhereDV]])
-    prior.foreach(_ => ZTable.copyFrame(fs, s"$root/$baseDir/_dv",
-      s"$root/$dir/_dv"))
-    positions.coalesce(1).write.mode("append").parquet(s"$root/$dir/_dv")
+    carryPriorDv(fs, root, baseDir, dir)
+    positionsOf(matched).coalesce(1).write.mode("append")
+      .parquet(s"$root/$dir/_dv")
     val out = fs.create(new Path(new Path(root, dir), "_files"), true)
     try out.write((refs ++ appended).mkString("\n").getBytes("UTF-8"))
     finally out.close()
@@ -2126,9 +2150,8 @@ object ManifestTable {
     val base = markers.map(versionOf).max
     val baseDir = dirOf(spark, root,
       winnersByVersion(markers)(base), live, compacted)
-    val dvOpt = dvOf(spark, root, baseDir)
-    if (dvOpt.isEmpty) return base
-    val dv = dvOpt.get
+    val dvBytes = dvBytesOf(spark, root, baseDir)
+    if (dvBytes == 0L) return base
     val refs = fileList(spark, root, baseDir).getOrElse {
       fsOf(spark, root).listStatus(new Path(root, baseDir)).toSeq
         .map(_.getPath.getName)
@@ -2139,11 +2162,10 @@ object ManifestTable {
     // O(files) distinct file keys of the vector — driver frame read
     // when planning-sized, one collect job past the cap
     val dirtyKeys =
-      if (dvBytesOf(spark, root, baseDir) <= dvLocalCarryCap.value)
-        MetaIO.frameRows(spark, s"$root/$baseDir/_dv").iterator
-          .flatMap(m => Option(m.getOrElse("path", null))
-            .map(_.asInstanceOf[String])).toSet
-      else dv.select("path").distinct()
+      if (dvBytes <= dvLocalCarryCap.value)
+        MetaIO.dvPositions(spark, s"$root/$baseDir/_dv").keySet
+          .map(_.toString)
+      else dvOf(spark, root, baseDir).get.select("path").distinct()
         .collect().map(_.getString(0)).toSet
     val (dirty, clean) = refs.partition(r =>
       dirtyKeys.contains(fileKeyOf(r)))
@@ -2163,7 +2185,8 @@ object ManifestTable {
         fs.mkdirs(new Path(root, dir))
         (Seq.empty[String], Seq.empty[(String, String)])
       } else {
-        val purged = applyDv(readRefsRaw(spark, root, baseDir, dirty), dv)
+        val purged = ManifestTable.live(spark, root, baseDir,
+          readRefsRaw(spark, root, baseDir, dirty))
         baseParts match {
           case Some((pcol, _)) =>
             val rows = PartitionedTable.writeFlattened(spark, root,
@@ -2756,7 +2779,6 @@ object ManifestTable {
       fs.getFileStatus(new Path(resolveRef(root, r))).getLen
         < minFileBytes)
     if (small.size < 2) return base
-    val dv = dvOf(spark, root, baseDir)
     val smallKeys = small.map(fileKeyOf)
     // rewrite the small files RAW (physical names preserved — the
     // carried large files keep theirs, one mixed read must not tear);
@@ -2764,7 +2786,7 @@ object ManifestTable {
     val raw = readRefsRaw(spark, root, baseDir, small)
     val next = base + 1
     val dir = newDataDirName(next)
-    val rewritten = dv.fold(raw)(applyDv(raw, _))
+    val rewritten = ManifestTable.live(spark, root, baseDir, raw)
     // a PARTITIONED base keeps its `_parts` through the fold: the
     // compacted output lands partition-pure via the same flatten the
     // DML paths use (rows repartitioned BY the partition column so a
@@ -2792,18 +2814,16 @@ object ManifestTable {
     // filter+rewrite when planning-sized (zero Spark actions), else
     // the anti-join single pass (write, then drop if empty — row
     // count from the written footers, no extra job)
-    dv.foreach { v =>
-      if (!MetaIO.carryFrameFiltered(spark, s"$root/$baseDir/_dv",
-          s"$root/$dir/_dv", "path", large.map(fileKeyOf).toSet,
-          dvLocalCarryCap.value)) {
-        import spark.implicits._
-        val surviving = v.join(
-          smallKeys.toDF("path"), Seq("path"), "left_anti")
-        MetaIO.withMetaActionConf(spark)(
-          surviving.coalesce(1).write.parquet(s"$root/$dir/_dv"))
-        if (MetaIO.footerRowCount(spark, s"$root/$dir/_dv") == 0L)
-          fs.delete(new Path(new Path(root, dir), "_dv"), true)
-      }
+    if (!MetaIO.carryFrameFiltered(spark, s"$root/$baseDir/_dv",
+        s"$root/$dir/_dv", "path", large.map(fileKeyOf).toSet,
+        dvLocalCarryCap.value)) {
+      import spark.implicits._
+      val surviving = MetaIO.readParquet(spark, s"$root/$baseDir/_dv")
+        .join(smallKeys.toDF("path"), Seq("path"), "left_anti")
+      MetaIO.withMetaActionConf(spark)(
+        surviving.coalesce(1).write.parquet(s"$root/$dir/_dv"))
+      if (MetaIO.footerRowCount(spark, s"$root/$dir/_dv") == 0L)
+        fs.delete(new Path(new Path(root, dir), "_dv"), true)
     }
     val out = fs.create(new Path(new Path(root, dir), "_files"), true)
     try out.write((large ++ appended).mkString("\n").getBytes("UTF-8"))

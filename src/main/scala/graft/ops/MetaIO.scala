@@ -2,6 +2,9 @@ package graft.ops
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.example.data.Group
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.io.InputFile
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.StructType
 
@@ -286,10 +289,7 @@ object MetaIO {
       val rc = new Configuration(conf)
       rc.set(org.apache.parquet.hadoop.api.ReadSupport.PARQUET_READ_SCHEMA,
         projected.toString)
-      val reader = org.apache.parquet.hadoop.ParquetReader
-        .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(),
-          file)
-        .withConf(rc).build()
+      val reader = groupReader(HadoopInputFile.fromPath(file, rc))
       val out = scala.collection.mutable.ArrayBuffer.empty[Any]
       try {
         var g = reader.read()
@@ -320,6 +320,66 @@ object MetaIO {
       val h = frameRows(spark, dir, limit = 1).headOption
       if (h.isDefined) headMemo.getOrElseUpdate(spark, dir, h)
       h
+    }
+  }
+
+  /** The part files of a frame dir (non-underscore, non-dot), sorted
+    * by name; empty when the dir does not exist. */
+  private def frameFiles(fs: org.apache.hadoop.fs.FileSystem,
+      d: Path): Seq[org.apache.hadoop.fs.FileStatus] =
+    try fs.listStatus(d).iterator
+      .filter(st => st.isFile && { val n = st.getPath.getName
+        !n.startsWith("_") && !n.startsWith(".") })
+      .toSeq.sortBy(_.getPath.getName)
+    catch { case _: java.io.FileNotFoundException => Seq.empty }
+
+  /** A parquet-mr example-record reader over `file`, configured by the
+    * file's own conf. `ParquetReader.builder(readSupport, path)` would
+    * build a fresh `Configuration` per reader and re-parse Hadoop's
+    * default XML resources each time; the `InputFile` builder reuses
+    * the caller's. */
+  private final class GroupReaderBuilder(file: InputFile)
+      extends org.apache.parquet.hadoop.ParquetReader.Builder[Group](file) {
+    override protected def getReadSupport()
+        : org.apache.parquet.hadoop.api.ReadSupport[Group] =
+      new org.apache.parquet.hadoop.example.GroupReadSupport()
+  }
+  private def groupReader(file: InputFile)
+      : org.apache.parquet.hadoop.ParquetReader[Group] =
+    new GroupReaderBuilder(file).build()
+
+  /** The positions of a deletion-vector frame dir (`path`, `row_index`
+    * rows), read on the DRIVER (parquet-mr, no Spark job) and grouped
+    * per file key: the key's raw UTF-8 bytes exactly as the writer
+    * stored them → that file's deleted row indexes, sorted ascending.
+    * Empty when the dir does not exist. */
+  def dvPositions(spark: SparkSession, dir: String)
+      : Map[org.apache.spark.unsafe.types.UTF8String, Array[Long]] = {
+    import org.apache.spark.unsafe.types.UTF8String
+    val conf = spark.sparkContext.hadoopConfiguration
+    val d = new Path(dir)
+    val per = parMap(frameFiles(d.getFileSystem(conf), d)) { f =>
+      val acc = scala.collection.mutable.HashMap
+        .empty[UTF8String, scala.collection.mutable.ArrayBuilder.ofLong]
+      val reader = groupReader(HadoopInputFile.fromStatus(f, conf))
+      try {
+        var g = reader.read()
+        if (g != null) {
+          val pi = g.getType.getFieldIndex("path")
+          val ri = g.getType.getFieldIndex("row_index")
+          while (g != null) {
+            val key = UTF8String.fromBytes(g.getBinary(pi, 0).getBytes)
+            acc.getOrElseUpdate(key, new scala.collection.mutable
+              .ArrayBuilder.ofLong) += g.getLong(ri, 0)
+            g = reader.read()
+          }
+        }
+      } finally reader.close()
+      acc.view.mapValues(_.result()).toSeq
+    }
+    per.flatten.groupMapReduce(_._1)(_._2)(_ ++ _).map { case (k, v) =>
+      java.util.Arrays.sort(v)
+      k -> v
     }
   }
 
@@ -360,18 +420,11 @@ object MetaIO {
     val conf = spark.sparkContext.hadoopConfiguration
     val d = new Path(dir)
     val fs = d.getFileSystem(conf)
-    val files =
-      try fs.listStatus(d).iterator
-        .filter(st => st.isFile && { val n = st.getPath.getName
-          !n.startsWith("_") && !n.startsWith(".") })
-        .map(_.getPath).toSeq.sortBy(_.getName)
-      catch { case _: java.io.FileNotFoundException => Seq.empty }
-    def readFile(f: Path, cap: Long): Seq[Map[String, Any]] = {
+    val files = frameFiles(fs, d)
+    def readFile(f: org.apache.hadoop.fs.FileStatus,
+        cap: Long): Seq[Map[String, Any]] = {
       val out = scala.collection.mutable.ArrayBuffer.empty[Map[String, Any]]
-      val reader = org.apache.parquet.hadoop.ParquetReader
-        .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(),
-          f)
-        .withConf(conf).build()
+      val reader = groupReader(HadoopInputFile.fromStatus(f, conf))
       try {
         var g = reader.read()
         while (g != null && out.size < cap) {

@@ -267,15 +267,14 @@ object PartitionedTable {
       s"no partition of $root matches ${values.mkString(",")}")
     val next = base + 1
     val dir = ManifestTable.newDataDirName(next)
-    val touchedRaw = MetaIO.readParquet(spark,
-      touched.map(r => ManifestTable.resolveRef(root, r._1)))
     // the base version's DELETION VECTOR applies to the touched read
     // (reading the raw paths would RESURRECT rows a prior DV delete
     // removed); the rewrite MATERIALIZES those deletions for the
     // touched files — their DV rows drop with the files — while the
     // untouched files' rows carry in [[commitCarry]]
-    val touchedLive = ManifestTable.dvOf(spark, root, baseDir)
-      .fold(touchedRaw)(ManifestTable.applyDv(touchedRaw, _))
+    val touchedLive = ManifestTable.live(spark, root, baseDir,
+      MetaIO.readParquet(spark,
+        touched.map(r => ManifestTable.resolveRef(root, r._1))))
     val remaining = touchedLive.filter(!coalesce(extra, lit(false)))
     val fresh =
       if (remaining.isEmpty) {
@@ -346,12 +345,10 @@ object PartitionedTable {
     if (paths.isEmpty)
       ManifestTable.read(spark, root).get.filter(lit(false))
     else {
-      val raw = MetaIO.readParquet(spark,
-        paths.map(p => ManifestTable.resolveRef(root, p)))
       // a merge-on-read DELETE's vector applies to the pruned read
       // too (reading raw paths would resurrect deleted rows)
-      ManifestTable.dvOf(spark, root, dir)
-        .fold(raw)(ManifestTable.applyDv(raw, _))
+      ManifestTable.live(spark, root, dir, MetaIO.readParquet(spark,
+        paths.map(p => ManifestTable.resolveRef(root, p))))
     }
   }
 

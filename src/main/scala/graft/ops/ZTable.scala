@@ -267,7 +267,7 @@ object ZTable {
     // shape keeps the read-back aggregation.
     val baseDir = ManifestTable.versionDataDir(spark, root, base)
     val footerB: Option[(Any, Any, Any, Any)] =
-      if (ManifestTable.dvOf(spark, root, baseDir).nonEmpty ||
+      if (ManifestTable.dvBytesOf(spark, root, baseDir) > 0L ||
           ManifestTable.colmapOf(spark, root, baseDir).nonEmpty) None
       else {
         val refs = ManifestTable.versionFileRefs(spark, root, base)
@@ -363,10 +363,8 @@ object ZTable {
     require(touched.nonEmpty,
       s"no partition of $root matches ${values.mkString(",")}")
     val touchedPaths = touched.map(_._1)
-    val dv = ManifestTable.dvOf(spark, root, baseDir)
-    val raw = ManifestTable.readRefsRaw(spark, root, baseDir,
-      touchedPaths)
-    val cur = dv.fold(raw)(ManifestTable.applyDv(raw, _))
+    val cur = ManifestTable.live(spark, root, baseDir,
+      ManifestTable.readRefsRaw(spark, root, baseDir, touchedPaths))
     val cols = cur.columns.toSet
     (Seq(xCol, yCol, tieCol, pcol) ++ bloomCol).foreach(c =>
       require(cols.contains(c), s"no column $c in $root (has $cols)"))
@@ -407,9 +405,8 @@ object ZTable {
       untouched ++ fresh, pcol)
     // vector rows of untouched files survive; the touched files'
     // slice materialized in the rewrite
-    if (dv.nonEmpty)
-      ManifestTable.carryDvFiltered(spark, root, baseDir, dir,
-        untouchedPaths.map(ManifestTable.fileKeyOf).toSet)
+    ManifestTable.carryDvFiltered(spark, root, baseDir, dir,
+      untouchedPaths.map(ManifestTable.fileKeyOf).toSet)
     // stats: extend when the base has them; otherwise ESTABLISH for
     // the whole version (partial coverage would be unsound)
     val extended = extendStats(spark, root, baseDir, dir,
@@ -481,14 +478,13 @@ object ZTable {
       if (keep.isEmpty)
         ManifestTable.readVersion(spark, root, v).filter(lit(false))
       else {
-        val raw = MetaIO.readParquet(spark,
-          keep.map(p => ManifestTable.resolveRef(root, p)))
         // a merge-on-read version's deletions apply to the pruned
         // read too (stats keep pre-delete bounds — still a sound
         // SUPERSET, deletion only shrinks file content)
-        ManifestTable.dvOf(spark, root,
-          ManifestTable.versionDataDir(spark, root, v))
-          .fold(raw)(ManifestTable.applyDv(raw, _))
+        ManifestTable.live(spark, root,
+          ManifestTable.versionDataDir(spark, root, v),
+          MetaIO.readParquet(spark,
+            keep.map(p => ManifestTable.resolveRef(root, p))))
       }
     pruned.filter(col(xCol).cast("long").between(lo, hi))
   }
@@ -590,14 +586,12 @@ object ZTable {
     val dir = ManifestTable.newDataDirName(next)
     val touchedPaths = touched.map(r => s(r, "path")).toIndexedSeq
     val baseDir = ManifestTable.versionDataDir(spark, root, base)
-    val dv = ManifestTable.dvOf(spark, root, baseDir)
-    val touchedRaw = MetaIO.readParquet(spark,
-      touchedPaths.map(p => ManifestTable.resolveRef(root, p)))
     // a merge-on-read version's deletions MATERIALIZE for the files
     // this rewrite touches (they are being rewritten anyway) and are
     // CARRIED for the untouched rest
-    val touchedCur = dv.fold(touchedRaw)(
-      ManifestTable.applyDv(touchedRaw, _))
+    val touchedCur = ManifestTable.live(spark, root, baseDir,
+      MetaIO.readParquet(spark,
+        touchedPaths.map(p => ManifestTable.resolveRef(root, p))))
     transform(touchedCur, xCol)
       .write.parquet(s"$root/$dir")
     val newPaths = dataPaths(spark, root, dir)
@@ -614,9 +608,8 @@ object ZTable {
     writeStats(spark, root, dir, newPaths, xCol, yCol, bloomCol,
       Some((stSchema, untouched.toSeq)), carriedBloom,
       bloomBpk = geomOf(spark, root, baseDir))
-    if (dv.nonEmpty)
-      ManifestTable.carryDvFiltered(spark, root, baseDir, dir,
-        untouchedPaths.map(ManifestTable.fileKeyOf).toSet)
+    ManifestTable.carryDvFiltered(spark, root, baseDir, dir,
+      untouchedPaths.map(ManifestTable.fileKeyOf).toSet)
     val manifest = (untouchedPaths ++ newPaths).mkString("\n")
     val f = fs(spark, root)
     val mp = new org.apache.hadoop.fs.Path(s"$root/$dir/_files")
@@ -1110,10 +1103,9 @@ object ZTable {
     val cands = bloomCandidateFiles(spark, root, key)
     if (cands.isEmpty)
       return ManifestTable.readVersion(spark, root, v).filter(lit(false))
-    val raw = MetaIO.readParquet(spark,
-      cands.map(p => ManifestTable.resolveRef(root, p)))
-    ManifestTable.dvOf(spark, root,
-      ManifestTable.versionDataDir(spark, root, v))
-      .fold(raw)(ManifestTable.applyDv(raw, _))
+    ManifestTable.live(spark, root,
+      ManifestTable.versionDataDir(spark, root, v),
+      MetaIO.readParquet(spark,
+        cands.map(p => ManifestTable.resolveRef(root, p))))
   }
 }

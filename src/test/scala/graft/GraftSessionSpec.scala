@@ -11,11 +11,12 @@ class GraftSessionSpec extends SparkSpec {
   test("getOrCreate exposes native expressions and aggregates in SQL") {
     // the shared test session is already factory-built, so this takes
     // getOrCreate's reuse path: the finishing steps run again on it,
-    // and the builder's runtime confs land on the shared session — put
-    // back its test width for the suites that follow
+    // and the live session's conf (its test width) stays as it was,
+    // even against a builder that asks for another width
     val width = spark.conf.get("spark.sql.shuffle.partitions")
-    val s = try GraftSession.getOrCreate("graft-session-spec")
-      finally spark.conf.set("spark.sql.shuffle.partitions", width)
+    val s = GraftSession.getOrCreate(GraftSession.builder("graft-session-spec")
+      .config("spark.sql.shuffle.partitions", (width.toInt + 3).toString))
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == width)
     val g = s.sql("SELECT graft_word_shingles('a b c', 2) AS g")
       .collect().head.getSeq[String](0)
     assert(g == Seq("a b", "b c"))
