@@ -30,62 +30,6 @@ object Compute {
     else ds.repartition(target)
   }
 
-  /** The optimizer's byte estimate for `df`'s plan, or None when the
-    * estimate is unusable (unknown leaves / join-product blowup) —
-    * callers then skip scaling (today's behaviour). */
-  def planBytes(df: org.apache.spark.sql.DataFrame): Option[Long] =
-    try {
-      val b = df.queryExecution.optimizedPlan.stats.sizeInBytes
-      if (b < 0 || b > BigInt(1L << 50)) None else Some(b.toLong)
-    } catch { case _: Throwable => None }
-
-  /** Total on-disk bytes under `path` (0 when absent) — the working-
-    * set size of a persistent state root, one FS metadata call. */
-  def dirBytes(spark: org.apache.spark.sql.SparkSession,
-      path: String): Long =
-    try {
-      val p = new org.apache.hadoop.fs.Path(path)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) fs.getContentSummary(p).getLength else 0L
-    } catch { case _: Throwable => 0L }
-
-  /** Run `body` with `spark.sql.shuffle.partitions` scaled to the
-    * working set it processes (guide §2 — partitioning derived from
-    * input size, not a constant): target = ceil(mult × bytes /
-    * advisoryPartitionSize), clamped to [1, session partitions].
-    * `localCheckpoint()` trees compile OUTSIDE AQE, so coalescing
-    * never repairs their exchanges — a micro-batch ingest paid
-    * 32-task exchanges on 250-row frames (measured, q82). `mult`
-    * headrooms the estimate for expansion-heavy transforms
-    * (shingling, banding). A working set the caller cannot bound
-    * (None) runs unscaled. Scale posture: a GB-scale batch derives
-    * the session's full parallelism — the clamp only ever LOWERS
-    * partition counts the optimizer can prove small. Conf is
-    * restored after; the engine's ingest paths run on the committing
-    * thread only. */
-  def withScaledShufflePartitions[T](
-      spark: org.apache.spark.sql.SparkSession,
-      workingSetBytes: Option[Long], mult: Int = 4)(body: => T): T = {
-    val sess = spark.sessionState.conf.numShufflePartitions
-    val target = workingSetBytes match {
-      case Some(b) =>
-        val adv = spark.sessionState.conf.getConf(
-          org.apache.spark.sql.internal.SQLConf
-            .ADVISORY_PARTITION_SIZE_IN_BYTES)
-        if (adv <= 0) sess
-        else math.max(1L, math.min(sess.toLong,
-          (b.toDouble * mult / adv.toDouble).ceil.toLong)).toInt
-      case None => sess
-    }
-    if (target >= sess) body
-    else {
-      val key = "spark.sql.shuffle.partitions"
-      val old = spark.conf.get(key)
-      spark.conf.set(key, target.toString)
-      try body finally spark.conf.set(key, old)
-    }
-  }
-
   /** Materialized byte size of a `localCheckpoint()`ed frame — read
     * from the block manager's storage info for the checkpoint RDD
     * (the blocks exist by definition). None when the plan isn't a

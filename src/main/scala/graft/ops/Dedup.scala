@@ -635,13 +635,6 @@ object Dedup {
       text: String = "text", n: Int = 3, k: Int = 16,
       rows: Int = 4): DataFrame = {
     import graft.ops.{Upsert => U}
-    // shuffle partitioning scaled to the batch + both persisted state
-    // roots (guide §2 — see [[graft.pipelines.CorpusPipeline
-    // .ingestNewNearDup]]): the checkpoint trees compile outside AQE
-    Compute.withScaledShufflePartitions(spark,
-      Compute.planBytes(docs).map(_ +
-        Compute.dirBytes(spark, bandRoot) +
-        Compute.dirBytes(spark, decisionRoot))) {
     val sig = minhashSignatures(docs, id, text, n, k)
     val newBands = bandKeys(sig, id, k, rows).localCheckpoint()
     val bandSchema = s"$id BIGINT, band INT, band_key STRING"
@@ -694,7 +687,6 @@ object Dedup {
       decisionRoot, batchId)
     graft.CacheTracker.releaseCheckpoint(newBands) // written: now dead
     decided
-    }
   }
 
   /** SemDeDup-style SEMANTIC dedup (Abbas et al. 2023, "SemDeDup:

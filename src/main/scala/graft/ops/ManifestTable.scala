@@ -530,9 +530,8 @@ object ManifestTable {
     * one parquet-mr frame read + one frame write, zero Spark actions
     * (the pre-round-16 shape paid an isEmpty probe + a broadcast
     * semi-join write per carry); past the cap it falls back to the
-    * broadcast semi-join under the metadata-action conf. Writes
-    * nothing when no row survives (same contract as before: absent
-    * `_dv` = no deletions).
+    * broadcast semi-join. Writes nothing when no row survives (same
+    * contract as before: absent `_dv` = no deletions).
     *
     * The cap is the one driver-versus-Spark gate of the table
     * metadata: DV carries, and in [[ZTable]] Bloom carries, fragment
@@ -550,10 +549,8 @@ object ManifestTable {
     val kept = dv.join(
       org.apache.spark.sql.functions.broadcast(
         keepKeys.toSeq.toDF("path")), Seq("path"), "left_semi")
-    MetaIO.withMetaActionConf(spark) {
-      if (!kept.isEmpty)
-        kept.coalesce(1).write.parquet(s"$root/$newDir/_dv")
-    }
+    if (!kept.isEmpty)
+      kept.coalesce(1).write.parquet(s"$root/$newDir/_dv")
   }
 
   /** A version's COLUMN MAPPING, if it carries one (`_colmap`, a tiny
@@ -1246,10 +1243,7 @@ object ManifestTable {
     // AFTER data landed needs one [[Checks.validate]] sweep.
     Checks.enforce(spark, root, src, "merge source")
     val next = base.getOrElse(0L) + 1
-    // table-footprint-scaled exchanges (see [[mergeBatchFold]])
-    val dir = Compute.withScaledShufflePartitions(spark,
-      base.map(_ => Compute.dirBytes(spark, root)))(
-      writeVersionData(result, root, next))
+    val dir = writeVersionData(result, root, next)
     writeOpMeta(spark, root, dir, "MERGE")
     writeMarker(spark, root, next, dataDir = dir)
     maybeAutoCompact(spark, root, live.size + 1)
@@ -1278,10 +1272,7 @@ object ManifestTable {
     }
     Checks.enforce(spark, root, src, "merge source")
     val next = base.getOrElse(0L) + 1
-    // table-footprint-scaled exchanges (see [[mergeBatchFold]])
-    val dir = Compute.withScaledShufflePartitions(spark,
-      base.map(_ => Compute.dirBytes(spark, root)))(
-      writeVersionData(result, root, next))
+    val dir = writeVersionData(result, root, next)
     writeOpMeta(spark, root, dir, "MERGE")
     writeMarker(spark, root, next, dataDir = dir)
     maybeAutoCompact(spark, root, live.size + 1)
@@ -1366,12 +1357,7 @@ object ManifestTable {
       (if (markers.isEmpty) 0L else markers.map(versionOf).max) + 1
     val full = Generated(spark, root, df, "commitBatch")
     Checks.enforce(spark, root, full, "commitBatch")
-    // table-footprint-scaled exchanges (see [[mergeBatchFold]]) — the
-    // CDF sync consumers commit group-grain state through here
-    val dir = Compute.withScaledShufflePartitions(spark,
-      if (markers.isEmpty) None
-      else Some(Compute.dirBytes(spark, root)))(
-      writeVersionData(full, root, next))
+    val dir = writeVersionData(full, root, next)
     writeOpMeta(spark, root, dir, "WRITE")
     writeMarker(spark, root, next, batchKey, dir)
     maybeAutoCompact(spark, root, live.size + 1)
@@ -1427,31 +1413,20 @@ object ManifestTable {
     // our read and our marker the batch must conflict loudly, never
     // silently drop the interloper's rows
     val base = if (markers.isEmpty) None else Some(markers.map(versionOf).max)
-    // shuffle partitioning scaled to the committed table's footprint
-    // (guide §2): the per-batch COW merge of a small decision table
-    // paid full-session-width exchanges per micro-batch; dirBytes
-    // covers every retained version (overestimate — the clamp only
-    // LOWERS provably-small counts, a TB table keeps the session
-    // parallelism) and the helper's ×4 mult headrooms the batch side.
-    // First commit (no base) runs unscaled.
-    val scaleBytes =
-      if (base.isEmpty) None else Some(Compute.dirBytes(spark, root))
-    val dir = Compute.withScaledShufflePartitions(spark, scaleBytes) {
-      val result = base match {
-        case Some(v) =>
-          val baseDf = readVersionWith(spark, root, v, live, compacted)
-          val src = Generated(spark, root, fold(Some(baseDf)),
-            "mergeBatch source")
-          Checks.enforce(spark, root, src, "mergeBatch source")
-          Upsert.upsert(baseDf, src, keys, updateCols)
-        case None =>
-          val src = Generated(spark, root, fold(None), "mergeBatch source")
-          Checks.enforce(spark, root, src, "mergeBatch source")
-          src
-      }
-      writeVersionData(result, root, base.getOrElse(0L) + 1)
+    val result = base match {
+      case Some(v) =>
+        val baseDf = readVersionWith(spark, root, v, live, compacted)
+        val src = Generated(spark, root, fold(Some(baseDf)),
+          "mergeBatch source")
+        Checks.enforce(spark, root, src, "mergeBatch source")
+        Upsert.upsert(baseDf, src, keys, updateCols)
+      case None =>
+        val src = Generated(spark, root, fold(None), "mergeBatch source")
+        Checks.enforce(spark, root, src, "mergeBatch source")
+        src
     }
     val next = base.getOrElse(0L) + 1
+    val dir = writeVersionData(result, root, next)
     writeOpMeta(spark, root, dir, "MERGE")
     writeMarker(spark, root, next, batchKey, dir)
     // the sink's own auto-compaction applies the caller's retention
@@ -2557,13 +2532,12 @@ object ManifestTable {
             })
           case None =>
             import org.apache.spark.sql.functions.{col, concat, lit, when}
-            MetaIO.withMetaActionConf(spark)(
-              MetaIO.readParquet(spark, src.toString)
-                .withColumn("path",
-                  when(col("path").startsWith("/") ||
-                       col("path").contains("://"), col("path"))
-                    .otherwise(concat(lit(s"$sourceRoot/"), col("path"))))
-                .coalesce(1).write.parquet(dst))
+            MetaIO.readParquet(spark, src.toString)
+              .withColumn("path",
+                when(col("path").startsWith("/") ||
+                     col("path").contains("://"), col("path"))
+                  .otherwise(concat(lit(s"$sourceRoot/"), col("path"))))
+              .coalesce(1).write.parquet(dst)
         }
       }
     }
@@ -2820,8 +2794,7 @@ object ManifestTable {
       import spark.implicits._
       val surviving = MetaIO.readParquet(spark, s"$root/$baseDir/_dv")
         .join(smallKeys.toDF("path"), Seq("path"), "left_anti")
-      MetaIO.withMetaActionConf(spark)(
-        surviving.coalesce(1).write.parquet(s"$root/$dir/_dv"))
+      surviving.coalesce(1).write.parquet(s"$root/$dir/_dv")
       if (MetaIO.footerRowCount(spark, s"$root/$dir/_dv") == 0L)
         fs.delete(new Path(new Path(root, dir), "_dv"), true)
     }

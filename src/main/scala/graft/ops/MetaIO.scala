@@ -579,38 +579,4 @@ object MetaIO {
       case None => false
     }
   }
-
-  /** Scoped session conf for ENGINE-INTERNAL metadata-frame ACTIONS
-    * only (round-15 VERDICT ask #1): AQE off + a WORKING-SET-derived
-    * reduce width around a Spark action whose exchanges carry
-    * O(metadata) bytes after map-side partial aggregation (Bloom
-    * register builds, filtered frame carries). AQE's per-stage
-    * materialization jobs are pure overhead there; map-side
-    * parallelism is untouched (input partitioning is unchanged).
-    * The flips apply ONLY when the caller's working set is provably
-    * tiny (`workingSetBytes` at most one advisory partition, or None
-    * = caller-known-tiny): the fusion saves the AQE stage-job
-    * round-trips that dominate a micro-commit, while anything bigger
-    * runs completely UNWRAPPED — measured on the 100× 640-file
-    * register build, the wrap cost ~3 s vs stock AQE, so size-gating
-    * is what keeps this scale-honest rather than a local-mode trick.
-    * Conf is restored after; the commit protocol runs these actions
-    * on the committing thread only. */
-  def withMetaActionConf[T](spark: SparkSession,
-      workingSetBytes: Option[Long] = None)(body: => T): T = {
-    val adv = spark.sessionState.conf.getConf(
-      org.apache.spark.sql.internal.SQLConf
-        .ADVISORY_PARTITION_SIZE_IN_BYTES)
-    if (workingSetBytes.exists(b => adv > 0 && b > adv))
-      return body // not provably tiny: stock AQE behaviour
-    val c = spark.conf
-    val flips = Seq("spark.sql.adaptive.enabled" -> "false",
-      "spark.sql.shuffle.partitions" -> "1")
-    val olds = flips.map { case (k, _) =>
-      k -> (try Some(c.get(k)) catch { case _: Throwable => None }) }
-    flips.foreach { case (k, v) => c.set(k, v) }
-    try body
-    finally olds.foreach { case (k, o) =>
-      o.fold(c.unset(k))(c.set(k, _)) }
-  }
 }

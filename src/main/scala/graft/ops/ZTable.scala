@@ -710,8 +710,7 @@ object ZTable {
           case None =>
             val df = MetaIO.readParquet(spark, stPath.toString)
               .join(broadcast(ps.toDF("path")), Seq("path"), "left_semi")
-            (df.schema, MetaIO.withMetaActionConf(spark)(
-              df.collect().toSeq))
+            (df.schema, df.collect().toSeq)
         }
         if (appendedPaths.isEmpty) {
           MetaIO.writeFrame(spark, s"$root/$newDir/_stats",
@@ -722,11 +721,10 @@ object ZTable {
             if (!MetaIO.carryFrameFiltered(spark, bloomPath.toString,
                 s"$root/$newDir/_bloom", "path", keep,
                 ManifestTable.dvLocalCarryCap.value, writeEmpty = true))
-              MetaIO.withMetaActionConf(spark)(
-                MetaIO.readParquet(spark, bloomPath.toString)
-                  .join(broadcast(ps.toDF("path")), Seq("path"),
-                    "left_semi")
-                  .coalesce(1).write.parquet(s"$root/$newDir/_bloom"))
+              MetaIO.readParquet(spark, bloomPath.toString)
+                .join(broadcast(ps.toDF("path")), Seq("path"),
+                  "left_semi")
+                .coalesce(1).write.parquet(s"$root/$newDir/_bloom")
             geomOf(spark, root, baseDir).foreach(bpk =>
               writeGeom(f, root, newDir, bpk))
           }
@@ -818,8 +816,7 @@ object ZTable {
       bloomBpk: Option[Long] = Some(bloomBitsPerKey)): Unit = {
     val mode = if (append) "append" else "errorifexists"
     // working set of this stats/register pass = the appended bytes —
-    // sizes the metadata-action reduce width (1 task for a fragment
-    // commit, full width for a 100× establish)
+    // what the driver register build is gated on
     val appendedBytes: Option[Long] = try {
       val f0 = fs(spark, root)
       Some(paths.map(p => f0.getFileStatus(
@@ -856,11 +853,8 @@ object ZTable {
           org.apache.spark.sql.Row(k, n, mnx, mxx, mny, mxy,
             xCol, yCol, bloomCol.orNull) }
         // fallback aggregation (non-int dims): the exchange carries
-        // O(files) rows after map-side partial agg — metadata-action
-        // conf (AQE off, working-set-sized reduce) collapses the AQE
-        // stage choreography into one job at any scale
-        case None => MetaIO.withMetaActionConf(spark, appendedBytes)(
-          fresh0.collect().toSeq)
+        // O(files) rows after map-side partial agg
+        case None => fresh0.collect().toSeq
       }
     // EMPTY files yield no read-back group — synthesize their rows
     // (0 rows, NULL bounds) so stats(v) covers EXACTLY the version's
@@ -923,7 +917,7 @@ object ZTable {
             rows, append = append)
         case None =>
           sparkRegisters(spark, root, dir, withPath, bc, sizePairs,
-            carriedBloom, appendedBytes, mode)
+            carriedBloom, mode)
       }
       bloomBpk.foreach(bpk => writeGeom(fs(spark, root), root, dir, bpk))
     }
@@ -1011,7 +1005,7 @@ object ZTable {
       dir: String, withPath: DataFrame, bc: String,
       sizePairs: Seq[(String, Long)],
       carriedBloom: Option[(String, Set[String])],
-      appendedBytes: Option[Long], mode: String): Unit = {
+      mode: String): Unit = {
     import spark.implicits._
     // per-path register size as a LITERAL MAP when the commit's file
     // list is SMALL (every MoR fragment commit) — the broadcast join
@@ -1046,13 +1040,9 @@ object ZTable {
         .unionByName(freshBloom)
     }
     // register build: the exchange carries O(files × register words)
-    // rows after map-side partial agg — metadata-action conf (AQE
-    // off, working-set-sized reduce) turns the 3-job AQE
-    // choreography into ONE job; the data-sized map side keeps its
-    // input parallelism and a 100× establish keeps its reduce width
-    MetaIO.withMetaActionConf(spark, appendedBytes)(
-      allBloom.coalesce(1).write.mode(mode)
-        .parquet(s"$root/$dir/_bloom"))
+    // rows after map-side partial agg
+    allBloom.coalesce(1).write.mode(mode)
+      .parquet(s"$root/$dir/_bloom")
   }
 
   /** Bloom point-lookup planning off the COMMITTED registers: the

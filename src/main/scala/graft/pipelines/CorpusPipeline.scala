@@ -1653,14 +1653,6 @@ object CorpusPipeline {
       id: String = "doc_id", text: String = "text",
       n: Int = 3, k: Int = 16, bandRows: Int = 4): DataFrame = {
     import graft.ops.Upsert
-    // shuffle partitioning scaled to this batch + the persisted band
-    // state (guide §2): the internal localCheckpoint trees compile
-    // outside AQE, so a micro-batch paid 32-task exchanges on
-    // 250-row frames; a GB-scale batch still derives the session's
-    // full parallelism (clamp only lowers provably-small counts)
-    graft.ops.Compute.withScaledShufflePartitions(spark,
-      graft.ops.Compute.planBytes(newDocs)
-        .map(_ + graft.ops.Compute.dirBytes(spark, bucketPath))) {
     val sig = Dedup.minhashSignatures(newDocs, id, text, n, k)
     // checkpointed: feeds four subtrees and must stay stable across the
     // bucket-table swap below
@@ -1711,7 +1703,6 @@ object CorpusPipeline {
     // and is swept at the harness's query boundary
     graft.CacheTracker.releaseCheckpoint(bands)
     graft.CacheTracker.trackCheckpoint(admitted)
-    }
   }
 
   /** Read the near-dup bucket state: union of every completed batch

@@ -37,21 +37,36 @@ class GraftSessionSpec extends SparkSpec {
     assert(s.sessionState.sqlParser.isInstanceOf[graft.sql.GraftSqlParser])
   }
 
-  test("GraftSession is the only caller of the Spark session builder") {
-    // comment lines (a scaladoc usage example) are not calls
-    val call = "SparkSession" + ".builder("
-    def comment(l: String) = {
-      val t = l.trim
-      t.startsWith("*") || t.startsWith("//") || t.startsWith("/*")
-    }
+  // comment lines (a scaladoc usage example) are not calls
+  private def comment(l: String) = {
+    val t = l.trim
+    t.startsWith("*") || t.startsWith("//") || t.startsWith("/*")
+  }
+
+  /** File names of the Scala sources under `dirs` with a non-comment
+    * line that contains any of `calls`. */
+  private def callers(dirs: Seq[String], calls: Seq[String]): Seq[String] = {
     import scala.jdk.CollectionConverters._
-    val callers = Seq("src/main", "src/test").flatMap { d =>
+    dirs.flatMap { d =>
       val w = java.nio.file.Files.walk(java.nio.file.Paths.get(d))
       try w.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
       finally w.close()
     }.filter(p => java.nio.file.Files.readAllLines(p).asScala
-      .exists(l => !comment(l) && l.contains(call)))
+      .exists(l => !comment(l) && calls.exists(l.contains)))
       .map(_.getFileName.toString)
-    assert(callers == Seq("GraftSession.scala"))
+  }
+
+  test("GraftSession is the only caller of the Spark session builder") {
+    assert(callers(Seq("src/main", "src/test"),
+      Seq("SparkSession" + ".builder(")) == Seq("GraftSession.scala"))
+  }
+
+  test("no engine path outside GraftSession changes the session conf") {
+    // the session is shared by concurrent threads (Verify's query pool,
+    // ModelRegistry.runParallel): a set-and-restore around one action
+    // would leak into every other thread's plans
+    val mutations = Seq("conf.set(", "conf.unset(", ".unset(", "setConf(")
+    assert(callers(Seq("src/main/scala/graft"), mutations)
+      .forall(_ == "GraftSession.scala"))
   }
 }

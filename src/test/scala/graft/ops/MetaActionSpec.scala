@@ -6,8 +6,7 @@ import org.apache.spark.sql.functions._
 
 /** Round-16 metadata-action layer: the driver-side Bloom probe must
   * run without a Spark job and equal the distributed register join
-  * bit-for-bit, and the scoped conf helpers must scale/restore
-  * exactly. */
+  * bit-for-bit. */
 class MetaActionSpec extends SparkSpec {
   import spark.implicits._
 
@@ -150,32 +149,6 @@ class MetaActionSpec extends SparkSpec {
     }
   }
 
-  test("withScaledShufflePartitions derives from bytes, clamps to " +
-      "[1, session], and restores the conf (also on throw)") {
-    val sess = spark.sessionState.conf.numShufflePartitions
-    val key = "spark.sql.shuffle.partitions"
-    // tiny working set → 1 partition inside, restored after
-    Compute.withScaledShufflePartitions(spark, Some(10L)) {
-      assert(spark.conf.get(key).toInt == 1)
-    }
-    assert(spark.conf.get(key).toInt == sess)
-    // huge working set → clamp at the session value (no conf flip)
-    Compute.withScaledShufflePartitions(spark, Some(1L << 40)) {
-      assert(spark.conf.get(key).toInt == sess)
-    }
-    // unknown working set → unscaled
-    Compute.withScaledShufflePartitions(spark, None) {
-      assert(spark.conf.get(key).toInt == sess)
-    }
-    // restore survives a throwing body
-    intercept[RuntimeException] {
-      Compute.withScaledShufflePartitions(spark, Some(10L)) {
-        throw new RuntimeException("boom")
-      }
-    }
-    assert(spark.conf.get(key).toInt == sess)
-  }
-
   test("countVersion == readVersion.count() across COW commits, MoR " +
       "deletes/updates and file-list carries") {
     val root = freshDir() + "/t"
@@ -193,19 +166,5 @@ class MetaActionSpec extends SparkSpec {
         ManifestTable.readVersion(spark, root, v).count(),
         s"countVersion diverged at v$v")
     }
-  }
-
-  test("withMetaActionConf flips AQE off + 1 shuffle partition for " +
-      "the action only, restoring both") {
-    val key = "spark.sql.shuffle.partitions"
-    val aqe = "spark.sql.adaptive.enabled"
-    val sess = spark.conf.get(key)
-    val aqe0 = spark.conf.get(aqe, "true")
-    MetaIO.withMetaActionConf(spark) {
-      assert(spark.conf.get(key) == "1")
-      assert(spark.conf.get(aqe) == "false")
-    }
-    assert(spark.conf.get(key) == sess)
-    assert(spark.conf.get(aqe, "true") == aqe0)
   }
 }

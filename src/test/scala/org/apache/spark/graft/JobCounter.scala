@@ -1,9 +1,12 @@
 package org.apache.spark.graft
 
-import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
+  SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 /** Counts the Spark jobs a block of code starts: a listener keeps the
   * jobs started under a job group unique to the call, and the listener
@@ -13,8 +16,12 @@ import org.apache.spark.sql.SparkSession
   * Spark's package because the listener bus is package-private. */
 object JobCounter {
 
-  /** One counted job: its id and the call site Spark recorded for its
-    * first stage (a stack trace that names the engine frames). */
+  /** One counted job: its id and its call site, a stack trace that
+    * names the engine frames. A job of a SQL execution takes the call
+    * site the execution recorded on the thread that started it: under
+    * AQE the query-stage jobs are submitted from Spark's own threads,
+    * so their first stage's call site names no engine frame. Any other
+    * job takes the call site of its first stage. */
   final case class Job(id: Int, callSite: String)
 
   private val groupKey = "spark.jobGroup.id"
@@ -25,11 +32,22 @@ object JobCounter {
     val sc = spark.sparkContext
     val group = s"graft-jobcount-${java.util.UUID.randomUUID()}"
     val seen = new ConcurrentLinkedQueue[Job]()
+    // an execution's start event is posted before any of its jobs
+    val executionSites = new ConcurrentHashMap[Long, String]()
     val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart =>
+          executionSites.put(s.executionId, s.details)
+        case _ =>
+      }
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty(groupKey) == group))
-          seen.add(Job(e.jobId,
-            e.stageInfos.headOption.map(_.details).getOrElse("")))
+        if (Option(e.properties).exists(_.getProperty(groupKey) == group)) {
+          val execution = Option(e.properties
+            .getProperty(SQLExecution.EXECUTION_ID_KEY))
+            .flatMap(id => Option(executionSites.get(id.toLong)))
+          seen.add(Job(e.jobId, execution.getOrElse(
+            e.stageInfos.headOption.map(_.details).getOrElse(""))))
+        }
     }
     val before = saved.map(k => k -> sc.getLocalProperty(k))
     sc.addSparkListener(listener)
