@@ -348,6 +348,15 @@ object MetaIO {
       : org.apache.parquet.hadoop.ParquetReader[Group] =
     new GroupReaderBuilder(file).build()
 
+  /** A parquet-mr file reader over `st`, its read options built from
+    * `conf`: `ParquetFileReader.open(InputFile)` alone builds a fresh
+    * Hadoop `Configuration` per file, re-parsing the default XML. */
+  private def openFile(st: org.apache.hadoop.fs.FileStatus,
+      conf: Configuration): org.apache.parquet.hadoop.ParquetFileReader =
+    org.apache.parquet.hadoop.ParquetFileReader.open(
+      HadoopInputFile.fromStatus(st, conf),
+      org.apache.parquet.HadoopReadOptions.builder(conf).build())
+
   /** The positions of a deletion-vector frame dir (`path`, `row_index`
     * rows), read on the DRIVER (parquet-mr, no Spark job) and grouped
     * per file key: the key's raw UTF-8 bytes exactly as the writer
@@ -383,6 +392,92 @@ object MetaIO {
     }
   }
 
+  /** Stream the rows of frame dir `dir` as (`key`, `a`, `b`) — one
+    * string and two long columns — into `f`, in frame order (sorted
+    * part files, row order within each), read on the DRIVER through
+    * parquet-mr's column readers with no record object per row; a
+    * dictionary-encoded key is decoded once per dictionary entry, so
+    * consecutive rows of one key hand `f` the same String instance.
+    * Returns false, cutting the stream short, when `f` returns false,
+    * a row holds a null in one of the columns, or a part lacks one of
+    * them with that physical type — the caller's cue for its
+    * fallback. */
+  private[ops] def streamKeyLongLong(spark: SparkSession, dir: String,
+      key: String, a: String, b: String)(
+      f: (String, Long, Long) => Boolean): Boolean = {
+    import org.apache.parquet.io.api._
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+    val conf = spark.sparkContext.hadoopConfiguration
+    val d = new Path(dir)
+    var k: String = null
+    var va, vb = 0L
+    var seen = 0
+    var ok = true
+    val keyConv = new PrimitiveConverter {
+      private var dict: Array[String] = Array.empty
+      override def hasDictionarySupport: Boolean = true
+      override def setDictionary(
+          dictionary: org.apache.parquet.column.Dictionary): Unit =
+        dict = Array.tabulate(dictionary.getMaxId + 1)(
+          dictionary.decodeToBinary(_).toStringUsingUTF8)
+      override def addValueFromDictionary(id: Int): Unit = {
+        k = dict(id); seen |= 1
+      }
+      override def addBinary(v: Binary): Unit = {
+        k = v.toStringUsingUTF8; seen |= 1
+      }
+    }
+    val convs: Array[Converter] = Array(keyConv,
+      new PrimitiveConverter {
+        override def addLong(v: Long): Unit = { va = v; seen |= 2 }
+      },
+      new PrimitiveConverter {
+        override def addLong(v: Long): Unit = { vb = v; seen |= 4 }
+      })
+    val materializer = new RecordMaterializer[Object] {
+      private val root = new GroupConverter {
+        override def getConverter(i: Int): Converter = convs(i)
+        override def start(): Unit = seen = 0
+        override def end(): Unit =
+          ok = seen == 7 && f(k, va, vb)
+      }
+      override def getCurrentRecord: Object = null
+      override def getRootConverter: GroupConverter = root
+    }
+    frameFiles(d.getFileSystem(conf), d).iterator.takeWhile(_ => ok)
+      .foreach { st =>
+        val r = openFile(st, conf)
+        try {
+          val fileSchema = r.getFooter.getFileMetaData.getSchema
+          def field(c: String) =
+            fileSchema.getType(fileSchema.getFieldIndex(c))
+          def has(c: String, t: PrimitiveTypeName) =
+            fileSchema.containsField(c) && field(c).isPrimitive &&
+              !field(c).isRepetition(
+                org.apache.parquet.schema.Type.Repetition.REPEATED) &&
+              field(c).asPrimitiveType.getPrimitiveTypeName == t
+          if (!has(key, PrimitiveTypeName.BINARY) ||
+              !has(a, PrimitiveTypeName.INT64) ||
+              !has(b, PrimitiveTypeName.INT64)) ok = false
+          else {
+            val proj = new org.apache.parquet.schema.MessageType(
+              fileSchema.getName, field(key), field(a), field(b))
+            r.setRequestedSchema(proj)
+            val io = new org.apache.parquet.io.ColumnIOFactory()
+              .getColumnIO(proj, fileSchema)
+            var pages = r.readNextRowGroup()
+            while (ok && pages != null) {
+              val rr = io.getRecordReader(pages, materializer)
+              var i = 0L
+              while (ok && i < pages.getRowCount) { rr.read(); i += 1 }
+              pages = r.readNextRowGroup()
+            }
+          }
+        } finally r.close()
+      }
+    ok
+  }
+
   private def groupToMap(
       g: org.apache.parquet.example.data.Group): Map[String, Any] = {
     val gt = g.getType
@@ -409,6 +504,23 @@ object MetaIO {
     }.toMap
   }
 
+  /** The first `cap` rows of one part file of a frame, as
+    * [[frameRows]] returns them. */
+  private def partRows(conf: Configuration,
+      f: org.apache.hadoop.fs.FileStatus,
+      cap: Long = Long.MaxValue): Seq[Map[String, Any]] = {
+    val out = scala.collection.mutable.ArrayBuffer.empty[Map[String, Any]]
+    val reader = groupReader(HadoopInputFile.fromStatus(f, conf))
+    try {
+      var g = reader.read()
+      while (g != null && out.size < cap) {
+        out += groupToMap(g)
+        g = reader.read()
+      }
+    } finally reader.close()
+    out.toSeq
+  }
+
   /** ALL rows of a tiny metadata parquet dir, read on the DRIVER
     * (parquet-mr example reader — no Spark job): one (column name →
     * value) map per row, string/long/int/bool/double primitives,
@@ -421,32 +533,19 @@ object MetaIO {
     val d = new Path(dir)
     val fs = d.getFileSystem(conf)
     val files = frameFiles(fs, d)
-    def readFile(f: org.apache.hadoop.fs.FileStatus,
-        cap: Long): Seq[Map[String, Any]] = {
-      val out = scala.collection.mutable.ArrayBuffer.empty[Map[String, Any]]
-      val reader = groupReader(HadoopInputFile.fromStatus(f, conf))
-      try {
-        var g = reader.read()
-        while (g != null && out.size < cap) {
-          out += groupToMap(g)
-          g = reader.read()
-        }
-      } finally reader.close()
-      out.toSeq
-    }
     if (limit != Long.MaxValue) {
       // bounded probe (frame heads): sequential, stop at the limit —
       // usually one footer + one row group of the first file
       val out = scala.collection.mutable.ArrayBuffer.empty[Map[String, Any]]
       files.iterator.takeWhile(_ => out.size < limit).foreach { f =>
-        out ++= readFile(f, limit - out.size)
+        out ++= partRows(conf, f, limit - out.size)
       }
       out.toSeq
     } else
       // full frame read: one task per file on the bounded IO pool,
       // order-preserving (concatenation order = sorted file order,
       // same as the sequential loop)
-      parMap(files)(readFile(_, Long.MaxValue)).flatten
+      parMap(files)(partRows(conf, _)).flatten
   }
 
   /** [[frameRows]] as Spark Rows in `schema`'s field order — the form
@@ -456,8 +555,11 @@ object MetaIO {
     * disagree on shape (caller falls back to the Spark read). Values
     * pass through as read (Long/Int/String/Boolean/Double or null). */
   def frameRowsAs(spark: SparkSession, dir: String,
-      schema: StructType): Option[Seq[org.apache.spark.sql.Row]] = {
-    val maps = frameRows(spark, dir)
+      schema: StructType): Option[Seq[org.apache.spark.sql.Row]] =
+    rowsAs(frameRows(spark, dir), schema)
+
+  private def rowsAs(maps: Seq[Map[String, Any]], schema: StructType)
+      : Option[Seq[org.apache.spark.sql.Row]] = {
     val names = schema.fields.map(_.name)
     if (!maps.forall(m => names.forall(m.contains))) return None
     // schema-attached rows: callers use fieldIndex/getAs by name,
@@ -547,17 +649,187 @@ object MetaIO {
     } finally w.close()
   }
 
+  /** The distinct values of the string column `key` of an open
+    * parquet file, taken from its column chunks' dictionary pages, and
+    * whether the column may hold a null (a chunk without a null count
+    * may). None when the column is not a top-level binary, or a chunk
+    * that holds values has a data page that is not dictionary-encoded
+    * (a writer's dictionary fallback) — its key set then takes a
+    * decode. A dictionary holds exactly the values its chunk was
+    * written from; were it ever a superset, both uses below (all keys
+    * kept, no key kept) would stay sound. */
+  private def dictKeys(r: org.apache.parquet.hadoop.ParquetFileReader,
+      key: String): Option[(Set[String], Boolean)] = {
+    import scala.jdk.CollectionConverters._
+    import org.apache.parquet.column.Encoding
+    val schema = r.getFooter.getFileMetaData.getSchema
+    if (!schema.containsField(key)) return None
+    val kt = schema.getType(schema.getFieldIndex(key))
+    if (!kt.isPrimitive || kt.asPrimitiveType.getPrimitiveTypeName !=
+        org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.BINARY)
+      return None
+    val desc = schema.getColumnDescription(Array(key))
+    // parquet-mr's own test (DictionaryFilter): page encoding stats
+    // when the writer kept them, else the chunk's encoding list — v1
+    // dictionary pages plus level encodings only
+    def dictOnly(cc: org.apache.parquet.hadoop.metadata.ColumnChunkMetaData) =
+      Option(cc.getEncodingStats) match {
+        case Some(es) => !es.hasNonDictionaryEncodedPages
+        case None =>
+          val encs = cc.getEncodings.asScala.toSet
+          encs.contains(Encoding.PLAIN_DICTIONARY) &&
+            (encs -- Set(Encoding.PLAIN_DICTIONARY, Encoding.RLE,
+              Encoding.BIT_PACKED)).isEmpty
+      }
+    val keys = Set.newBuilder[String]
+    var nulls = false
+    r.getRowGroups.asScala.foreach { b =>
+      val cc = b.getColumns.asScala.find(_.getPath.toDotString == key)
+        .getOrElse(return None)
+      if (cc.getValueCount > 0) {
+        if (!cc.hasDictionaryPage || !dictOnly(cc)) return None
+        val store: org.apache.parquet.column.page.DictionaryPageReadStore =
+          r.getDictionaryReader(b)
+        val page = store.readDictionaryPage(desc)
+        if (page == null) return None
+        val dict = page.getEncoding.initDictionary(desc, page)
+        var i = 0
+        while (i <= dict.getMaxId) {
+          keys += dict.decodeToBinary(i).toStringUsingUTF8
+          i += 1
+        }
+        val st = cc.getStatistics
+        if (st == null || !st.isNumNullsSet || st.getNumNulls > 0)
+          nulls = true
+      }
+    }
+    Some((keys.result(), nulls))
+  }
+
+  /** A filtered carry of a committed frame dir, planned on the
+    * driver: the one part file carried whole (`copy`) and every other
+    * surviving row, in frame order. */
+  private[ops] final case class FrameCarry(
+      copy: Option[org.apache.hadoop.fs.FileStatus],
+      rows: Seq[org.apache.spark.sql.Row])
+
+  /** Plan the carry of frame dir `src` filtered to the rows whose
+    * `keyCol` is in `keep`, PART BY PART (a frame dir holds one part
+    * per commit that appended to it). A part whose key set (from its
+    * dictionary pages, [[dictKeys]]) lies inside `keep`, holds no null
+    * key and has `schema`'s shape is carried whole; a part whose key
+    * set misses `keep` is skipped unread; any other part is decoded
+    * and filtered. Only the LARGEST whole part is copied: every other
+    * survivor lands in `rows`, so a carry leaves at most two parts —
+    * the part count of a frame stays bounded across commits. None
+    * when a decoded part lacks a field of `schema` (caller falls back
+    * to Spark). */
+  private[ops] def planCarry(spark: SparkSession, src: String,
+      schema: StructType, keyCol: String, keep: Set[String])
+      : Option[FrameCarry] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val d = new Path(src)
+    val shape = schema.map(f => (f.name, f.dataType))
+    val converter = new org.apache.spark.sql.execution.datasources.parquet
+      .ParquetToSparkSchemaConverter(conf = spark.sessionState.conf)
+    // per part: Some(true) whole, Some(false) skipped, None decode
+    val parts = frameFiles(d.getFileSystem(conf), d)
+    val verdicts = parMap(parts) { f =>
+      val r = openFile(f, conf)
+      try dictKeys(r, keyCol) match {
+        case Some((ks, _)) if !ks.exists(keep.contains) => Some(false)
+        case Some((ks, false)) if ks.forall(keep.contains) &&
+            converter.convert(r.getFileMetaData.getSchema)
+              .map(x => (x.name, x.dataType)) == shape => Some(true)
+        case _ => None
+      } finally r.close()
+    }
+    val whole = parts.zip(verdicts).collect { case (f, Some(true)) => f }
+    val copy = whole.maxByOption(_.getLen)
+    val ki = schema.fieldIndex(keyCol)
+    val decoded = parMap(parts.zip(verdicts).filter {
+      case (f, v) => v.isEmpty || (v.contains(true) && !copy.contains(f))
+    }) { case (f, _) =>
+      rowsAs(partRows(conf, f), schema).map(_.filter(r =>
+        !r.isNullAt(ki) && keep.contains(r.getString(ki))))
+    }
+    if (decoded.exists(_.isEmpty)) None
+    else Some(FrameCarry(copy, decoded.flatMap(_.get)))
+  }
+
+  /** Write a planned carry (plus `fresh` rows after the carried ones)
+    * as frame dir `dst`: the whole part byte-copied under its own name
+    * with its `.crc` sidecar on a local store ([[copyFiles]]), the
+    * other rows as one new part. `append = false` refuses
+    * an existing `dst`, like [[writeFrame]]; an empty carry writes an
+    * empty part only when `writeEmpty`. */
+  private[ops] def writeCarry(spark: SparkSession, dst: String,
+      schema: StructType, carry: FrameCarry,
+      fresh: Seq[org.apache.spark.sql.Row] = Nil, append: Boolean = false,
+      writeEmpty: Boolean = false): Unit = {
+    val d = new Path(dst)
+    val fs = d.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!append && fs.exists(d))
+      throw new org.apache.hadoop.fs.FileAlreadyExistsException(
+        s"writeCarry: $dst already exists")
+    carry.copy.foreach { st =>
+      val crc = new Path(st.getPath.getParent, s".${st.getPath.getName}.crc")
+      copyFiles(fs, st.getPath +: Seq(crc).filter(c =>
+        isLocal(fs) && localFile(c).isFile), fs, d)
+    }
+    val rows = carry.rows ++ fresh
+    if (rows.nonEmpty || (carry.copy.isEmpty && writeEmpty))
+      writeFrame(spark, dst, schema, rows, append = true)
+  }
+
+  /** Byte-copy `files` into `dstDir` under their own names. Between
+    * local stores the copy is pure nio and a `.crc` sidecar among
+    * `files` is copied verbatim (bytes identical, so it still
+    * verifies): the Hadoop FileUtil route re-created every file
+    * through ChecksumFileSystem.create, paying a chmod (a process FORK
+    * without the native lib) and a checksum recompute per file.
+    * Elsewhere each file goes through the FileSystems, which write
+    * their own checksums. */
+  private[ops] def copyFiles(fs: org.apache.hadoop.fs.FileSystem,
+      files: Seq[Path], fd: org.apache.hadoop.fs.FileSystem,
+      dstDir: Path): Unit =
+    if (isLocal(fs) && isLocal(fd)) {
+      val dd = localFile(dstDir)
+      java.nio.file.Files.createDirectories(dd.toPath)
+      files.foreach(p => java.nio.file.Files.copy(localFile(p).toPath,
+        new java.io.File(dd, p.getName).toPath,
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING))
+    } else {
+      fd.mkdirs(dstDir)
+      files.foreach(p => org.apache.hadoop.fs.FileUtil.copy(fs, p, fd,
+        new Path(dstDir, p.getName), false, fs.getConf))
+    }
+
+  /** Locality from the FileSystem INSTANCE, not string sniffing (a
+    * scheme-less path resolves against fs.defaultFS — on a non-local
+    * defaultFS an nio copy would read the wrong store). */
+  private[ops] def isLocal(fs: org.apache.hadoop.fs.FileSystem): Boolean =
+    fs.isInstanceOf[org.apache.hadoop.fs.LocalFileSystem] ||
+      fs.getScheme == "file"
+
+  private[ops] def localFile(p: Path): java.io.File =
+    new java.io.File(p.toUri.getPath)
+
   /** Filter a committed frame dir by a string-key set and write the
-    * survivors as a fresh frame at `dst` — DRIVER IO (one parquet-mr
-    * read + one [[writeFrame]], zero Spark actions) when the frame's
-    * on-disk footprint is at most `capBytes`. Returns false when the
-    * frame is over the cap or its shape isn't locally readable — the
-    * caller then runs its Spark fallback. Writes nothing (returns
-    * true) when no row survives and `writeEmpty` is false — an absent
-    * frame means "none", the DV contract; frames whose EXISTENCE is
-    * probed (`_bloom`) pass `writeEmpty = true` to keep an empty
-    * frame dir, byte-for-byte the old Spark path's behaviour. A
-    * missing source frame is a successful no-op. */
+    * survivors as a fresh frame at `dst` — DRIVER IO, zero Spark
+    * actions, when the frame's on-disk footprint is at most
+    * `capBytes`. The frame dir may hold several parts; the carry works
+    * per part ([[planCarry]]): parts wholly kept are byte-copied (the
+    * largest one) or re-written with the other survivors, parts wholly
+    * dropped are never read, only mixed parts are decoded — `dst`
+    * ends with at most two parts. Returns false when the frame is
+    * over the cap or its shape isn't locally readable — the caller
+    * then runs its Spark fallback. Writes nothing (returns true) when
+    * no row survives and `writeEmpty` is false — an absent frame means
+    * "none", the DV contract; frames whose EXISTENCE is probed
+    * (`_bloom`) pass `writeEmpty = true` to keep an empty frame dir,
+    * byte-for-byte the old Spark path's behaviour. A missing source
+    * frame is a successful no-op. */
   def carryFrameFiltered(spark: SparkSession, src: String, dst: String,
       keyCol: String, keep: Set[String], capBytes: Long,
       writeEmpty: Boolean = false): Boolean = {
@@ -566,15 +838,10 @@ object MetaIO {
     if (!fs.exists(p)) return true
     val bytes = fs.listStatus(p).filter(_.isFile).map(_.getLen).sum
     if (bytes > capBytes) return false
-    val local = schemaOf(spark, p).filter(frameWritable)
-      .flatMap(s => frameRowsAs(spark, src, s).map((s, _)))
-    local match {
-      case Some((schema, rows)) =>
-        val ki = schema.fieldIndex(keyCol)
-        val kept = rows.filter(r =>
-          !r.isNullAt(ki) && keep.contains(r.getString(ki)))
-        if (kept.nonEmpty || writeEmpty)
-          writeFrame(spark, dst, schema, kept)
+    schemaOf(spark, p).filter(frameWritable).flatMap(s =>
+      planCarry(spark, src, s, keyCol, keep).map((s, _))) match {
+      case Some((schema, carry)) =>
+        writeCarry(spark, dst, schema, carry, writeEmpty = writeEmpty)
         true
       case None => false
     }

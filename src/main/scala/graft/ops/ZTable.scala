@@ -143,6 +143,14 @@ object ZTable {
     localBloomProbe(spark, root, dir, keys).getOrElse(
       joinBloomProbe(spark, root, dir, array(keys.map(lit): _*)))
 
+  /** The driver side of [[bloomProbePathsAny]]: each file's needed
+    * (word, bit) pairs — two per key, from the key's two hashes modulo
+    * the file's register size — are worked out once per file, and the
+    * committed `(path, word, bits)` rows stream past them
+    * ([[MetaIO.streamKeyLongLong]]): no map per row, no table of all
+    * registers. The frame dir may hold several parts (one per commit
+    * that appended registers); a file's words may sit in any of them.
+    * Candidates come back in first-seen frame order. */
   private def localBloomProbe(spark: SparkSession, root: String,
       dir: String, keys: Seq[Any]): Option[Seq[String]] = {
     // rendered exactly as concat_ws's cast-to-string
@@ -157,24 +165,13 @@ object ZTable {
     if (f.listStatus(bp).filter(_.isFile).map(_.getLen).sum >
         ManifestTable.dvLocalCarryCap.value)
       return None
-    val rows = MetaIO.frameRows(spark, bp.toString)
-    if (rows.isEmpty) return Some(Seq.empty)
-    // (path, word) → OR of register words; row order is the committed
-    // frame order, so the result order is deterministic
-    val bits = new java.util.HashMap[(String, Long), java.lang.Long]()
-    val paths = scala.collection.mutable.LinkedHashSet.empty[String]
-    rows.foreach { m =>
-      (m.get("path"), m.get("word"), m.get("bits")) match {
-        case (Some(p: String), Some(w: java.lang.Number),
-            Some(b: java.lang.Number)) =>
-          paths += p
-          val k = (p, w.longValue)
-          bits.put(k, bits.getOrDefault(k, 0L) | b.longValue)
-        case _ => return None // unexpected shape: sound fallback
-      }
-    }
+    // hash of key i under seed j at index 2i + j
+    val hs = lits.flatMap(ks => Seq(501, 502).map(seed =>
+      graft.expressions.Md5Prefix60.hash60(
+        org.apache.spark.unsafe.types.UTF8String
+          .fromString(s"$seed|$ks")))).toArray
     // per-path register size, same derivation as [[mByPath]]
-    val mByP: Map[String, Long] = geomOf(spark, root, dir) match {
+    val mOf: String => Option[Long] = geomOf(spark, root, dir) match {
       case Some(bpk) =>
         val st = MetaIO.frameRows(spark, s"$root/$dir/_stats")
         val mm = st.map { r =>
@@ -184,20 +181,43 @@ object ZTable {
             case _ => return None
           }
         }.toMap
-        if (!paths.forall(mm.contains)) return None
-        mm
-      case None => paths.iterator.map(_ -> M).toMap
+        mm.get
+      case None => _ => Some(M)
     }
-    Some(paths.iterator.filter { p =>
-      val m = mByP(p)
-      lits.exists(ks => Seq(501, 502).forall { seed =>
-        val h = graft.expressions.Md5Prefix60.hash60(
-          org.apache.spark.unsafe.types.UTF8String
-            .fromString(s"$seed|$ks")) % m
-        val word = h >> 5
-        val bit = 1L << (h & 31).toInt
-        (bits.getOrDefault((p, word), 0L) & bit) != 0L
-      })
+    final class Needs(m: Long) {
+      val word: Array[Long] = hs.map(h => (h % m) >> 5)
+      val bit: Array[Long] = hs.map(h => 1L << ((h % m) & 31).toInt)
+      val hit = new Array[Boolean](hs.length)
+    }
+    val needs = new java.util.LinkedHashMap[String, Needs]()
+    var lastPath: String = null
+    var last: Needs = null
+    val streamed = MetaIO.streamKeyLongLong(spark, bp.toString, "path",
+        "word", "bits") { (p, w, b) =>
+      if (!(p eq lastPath)) {
+        lastPath = p
+        last = needs.get(p)
+        if (last == null) {
+          // a register row of a file `_stats` does not list: fall back
+          last = mOf(p).map(new Needs(_)).orNull
+          if (last != null) needs.put(p, last)
+        }
+      }
+      last != null && {
+        var i = 0
+        while (i < hs.length) {
+          if (last.word(i) == w && (b & last.bit(i)) != 0L)
+            last.hit(i) = true
+          i += 1
+        }
+        true
+      }
+    }
+    if (!streamed) return None
+    import scala.jdk.CollectionConverters._
+    Some(needs.asScala.iterator.collect {
+      case (p, n) if lits.indices.exists(i =>
+        n.hit(2 * i) && n.hit(2 * i + 1)) => p
     }.toSeq)
   }
 
@@ -749,44 +769,21 @@ object ZTable {
     val fd = if (fDst == null) f else fDst
     val s = new org.apache.hadoop.fs.Path(src)
     val d = new org.apache.hadoop.fs.Path(dst)
-    // locality from the FileSystem INSTANCES, not string sniffing
-    // (ADVICE r15: a scheme-less path resolves against fs.defaultFS —
-    // on a non-local defaultFS the nio branch would read the wrong
-    // store and silently write an empty frame)
-    def isLocal(fsys: org.apache.hadoop.fs.FileSystem) =
-      fsys.isInstanceOf[org.apache.hadoop.fs.LocalFileSystem] ||
-        fsys.getScheme == "file"
-    if (isLocal(f) && isLocal(fd)) {
-      // pure-nio byte copy, .crc sidecars included VERBATIM (bytes
-      // identical → checksums stay valid): the Hadoop FileUtil route
-      // re-created every file through ChecksumFileSystem.create,
-      // paying a chmod (a process FORK without the native lib) and a
-      // checksum recompute per file
-      def local(p: String) =
-        new java.io.File(if (p.startsWith("file:"))
-          new java.net.URI(p).getPath else p)
-      val sd = local(src)
-      val dd = local(dst)
-      val srcFiles = Option(sd.listFiles()).getOrElse(Array.empty)
+    if (MetaIO.isLocal(f) && MetaIO.isLocal(fd)) {
+      // every file, .crc sidecars included (a checksummed listing
+      // hides them)
+      val srcFiles = Option(MetaIO.localFile(s).listFiles())
+        .getOrElse(Array.empty[java.io.File]).filter(_.isFile)
       // the caller asserts the source frame exists — an empty listing
       // here means a resolution bug; fail loudly instead of silently
       // committing an empty frame
       require(srcFiles.nonEmpty,
         s"copyFrame: source frame dir $src lists no files")
-      java.nio.file.Files.createDirectories(dd.toPath)
-      srcFiles.foreach { sf =>
-        if (sf.isFile)
-          java.nio.file.Files.copy(sf.toPath,
-            new java.io.File(dd, sf.getName).toPath,
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      }
-    } else {
-      fd.mkdirs(d)
-      f.listStatus(s).filter(st => !st.getPath.getName.startsWith("."))
-        .foreach(st => org.apache.hadoop.fs.FileUtil.copy(f, st.getPath,
-          fd, new org.apache.hadoop.fs.Path(d, st.getPath.getName),
-          false, f.getConf))
-    }
+      MetaIO.copyFiles(f, srcFiles.toSeq.map(sf =>
+        new org.apache.hadoop.fs.Path(s, sf.getName)), fd, d)
+    } else
+      MetaIO.copyFiles(f, f.listStatus(s).toSeq.map(_.getPath)
+        .filter(!_.getName.startsWith(".")), fd, d)
   }
 
   /** The data files of a freshly-written dir, as root-relative paths
@@ -804,8 +801,15 @@ object ZTable {
     * reading the files as written, union carried rows, and write the
     * frames under the version dir. The read-back costs one extra scan
     * of the REWRITTEN bytes only — the price of stats that can never
-    * disagree with the files. `carriedBloom` is a committed `_bloom`
-    * frame dir and the paths whose register rows ride along. */
+    * disagree with the files; for int dims it is no scan at all (the
+    * footers), and the fresh rows take the constant [[statsSchema]],
+    * so no read-back DataFrame is planned unless the non-int fallback
+    * or the Spark register build runs it. `carriedBloom` is a
+    * committed `_bloom` frame dir — which may hold several parts, one
+    * per commit that appended registers — and the paths whose register
+    * rows ride along; under the driver gate its parts are carried part
+    * by part ([[MetaIO.planCarry]]), so the written `_bloom` holds at
+    * most two parts. */
   private def writeStats(spark: SparkSession, root: String, dir: String,
       paths: Seq[String], xCol: String, yCol: String,
       bloomCol: Option[String],
@@ -822,10 +826,13 @@ object ZTable {
       Some(paths.map(p => f0.getFileStatus(
         new org.apache.hadoop.fs.Path(s"$root/$p")).getLen).sum)
     } catch { case _: Throwable => None }
-    val df = MetaIO.readParquet(spark, paths.map(p => s"$root/$p"))
-    val withPath = df.withColumn("__path",
-      substring_index(input_file_name(), "/", -2))
-    val fresh0 = withPath.groupBy(col("__path").as("path"))
+    // the read-back plans are built only where something runs them:
+    // the non-int fallback collect and the Spark register build —
+    // planning one costs more driver CPU than the footer stats do
+    lazy val withPath = MetaIO.readParquet(spark,
+        paths.map(p => s"$root/$p"))
+      .withColumn("__path", substring_index(input_file_name(), "/", -2))
+    lazy val fresh0 = withPath.groupBy(col("__path").as("path"))
       .agg(count(lit(1)).as("n_rows"),
         min(col(xCol).cast("long")).as("min_x"),
         max(col(xCol).cast("long")).as("max_x"),
@@ -879,14 +886,15 @@ object ZTable {
     // carried column order, per-column nullability OR, fresh rows
     // re-ordered by name; a name mismatch throws exactly like
     // unionByName would.
+    val freshSchema = statsSchema(bloomCol.isDefined)
     val (outSchema, outRows) = carriedStats match {
-      case None => (fresh0.schema, allLocal)
+      case None => (freshSchema, allLocal)
       case Some((cs, crows)) =>
-        val idx = cs.fieldNames.map(fresh0.schema.fieldIndex)
+        val idx = cs.fieldNames.map(freshSchema.fieldIndex)
         val merged = org.apache.spark.sql.types.StructType(
           cs.fields.map { f =>
             f.copy(nullable =
-              f.nullable || fresh0.schema(f.name).nullable) })
+              f.nullable || freshSchema(f.name).nullable) })
         (merged, crows ++ allLocal.map(r =>
           org.apache.spark.sql.Row(idx.map(r.get).toIndexedSeq: _*)))
     }
@@ -912,15 +920,32 @@ object ZTable {
         .map(r => (r.getString(0), mOf(r.getLong(1))))
       localRegisters(spark, root, s"$root/$dir/_bloom", append, paths,
           bc, sizePairs.toMap, carriedBloom, appendedBytes) match {
-        case Some(rows) =>
-          MetaIO.writeFrame(spark, s"$root/$dir/_bloom", bloomSchema,
-            rows, append = append)
+        case Some((carry, fresh)) =>
+          MetaIO.writeCarry(spark, s"$root/$dir/_bloom", bloomSchema,
+            carry, fresh, append = append, writeEmpty = true)
         case None =>
           sparkRegisters(spark, root, dir, withPath, bc, sizePairs,
             carriedBloom, mode)
       }
       bloomBpk.foreach(bpk => writeGeom(fs(spark, root), root, dir, bpk))
     }
+  }
+
+  /** The schema of the read-back aggregation that [[writeStats]]
+    * computes fresh `_stats` rows with, as Spark analyses it for any
+    * dim types: the file key, the row count and the two dim names are
+    * never null, the four bounds are nullable longs (`min`/`max` of a
+    * cast), and `bloom_col` is a non-null literal when a Bloom column
+    * is set and a null string otherwise. */
+  private[ops] def statsSchema(bloom: Boolean)
+      : org.apache.spark.sql.types.StructType = {
+    import org.apache.spark.sql.types._
+    StructType(Seq(StructField("path", StringType, nullable = false),
+      StructField("n_rows", LongType, nullable = false)) ++
+      Seq("min_x", "max_x", "min_y", "max_y").map(StructField(_, LongType)) ++
+      Seq(StructField("x_col", StringType, nullable = false),
+        StructField("y_col", StringType, nullable = false),
+        StructField("bloom_col", StringType, nullable = !bloom)))
   }
 
   /** The `_bloom` frame's shape: one row per (file, register word). */
@@ -930,9 +955,11 @@ object ZTable {
       StructField("word", LongType), StructField("bits", LongType)))
   }
 
-  /** The `_bloom` rows of `paths` (register size per file key from
-    * `mByKey`), after the carried rows, built on the DRIVER: one
-    * projected parquet-mr read of column `bc` per file, the two-seed
+  /** The carried `_bloom` parts and rows ([[MetaIO.planCarry]]: the
+    * carried frame is filtered part by part, its largest wholly kept
+    * part copied as it is) and the fresh `_bloom` rows of `paths`
+    * (register size per file key from `mByKey`), built on the DRIVER:
+    * one projected parquet-mr read of column `bc` per file, the two-seed
     * [[graft.expressions.Md5Prefix60.hash60]] over exactly the strings
     * the Spark build hashes (`concat_ws("|", seed, v)`, so a NULL
     * value hashes the bare seed), and an OR-fold per (path, word) —
@@ -945,7 +972,8 @@ object ZTable {
       target: String, append: Boolean, paths: Seq[String], bc: String,
       mByKey: Map[String, Long],
       carriedBloom: Option[(String, Set[String])],
-      appendedBytes: Option[Long]): Option[Seq[org.apache.spark.sql.Row]] = {
+      appendedBytes: Option[Long])
+      : Option[(MetaIO.FrameCarry, Seq[org.apache.spark.sql.Row])] = {
     import org.apache.spark.unsafe.types.UTF8String
     val cap = ManifestTable.dvLocalCarryCap.value
     if (!appendedBytes.exists(_ <= cap)) return None
@@ -958,14 +986,14 @@ object ZTable {
     }
     if (append && !shapeOk(target)) return None
     val carried = carriedBloom match {
-      case None => Seq.empty
+      case None => MetaIO.FrameCarry(None, Seq.empty)
       case Some((src, keep)) =>
         val p = new org.apache.hadoop.fs.Path(src)
         if (f.listStatus(p).filter(_.isFile).map(_.getLen).sum > cap ||
             !shapeOk(src))
           return None
-        MetaIO.frameRowsAs(spark, src, bloomSchema).getOrElse(return None)
-          .filter(r => !r.isNullAt(0) && keep.contains(r.getString(0)))
+        MetaIO.planCarry(spark, src, bloomSchema, "path", keep)
+          .getOrElse(return None)
     }
     val values = MetaIO.columnValues(spark, paths.map(p => s"$root/$p"),
       bc).getOrElse(return None)
@@ -995,7 +1023,7 @@ object ZTable {
       regs.toSeq.sortBy(_._1).map { case (w, b) =>
         org.apache.spark.sql.Row(key, w, b) }
     }.flatten
-    Some(carried ++ fresh)
+    Some((carried, fresh))
   }
 
   /** The Spark register build (past the driver gate — the 100 TB
@@ -1064,19 +1092,24 @@ object ZTable {
   }
 
   /** The value of a constant key column (`lit(..)` or any foldable
-    * expression), resolved once on the driver — analysis and a
-    * constant evaluation, no Spark job. None for a non-constant key. */
+    * expression), resolved once on the driver — a literal directly,
+    * anything else by analysis and a constant evaluation, no Spark
+    * job. None for a non-constant key. */
   private def keyValue(spark: SparkSession, key: Column): Option[Any] = {
     import org.apache.spark.sql.catalyst.CatalystTypeConverters
-    import org.apache.spark.sql.catalyst.expressions.Alias
+    import org.apache.spark.sql.catalyst.expressions.{Alias, Literal}
     import org.apache.spark.sql.catalyst.plans.logical.Project
-    spark.range(1).select(key).queryExecution.analyzed match {
-      case Project(Seq(ne), _) =>
-        val e = ne match { case Alias(c, _) => c; case other => other }
-        if (!e.foldable) None
-        else Some(CatalystTypeConverters.convertToScala(e.eval(),
-          e.dataType))
-      case _ => None
+    org.apache.spark.sql.graft.Bridge.expression(key) match {
+      // a literal key (every `lit(..)` caller) is its own value: no plan
+      case Literal(v, dt) => Some(CatalystTypeConverters.convertToScala(v, dt))
+      case _ => spark.range(1).select(key).queryExecution.analyzed match {
+        case Project(Seq(ne), _) =>
+          val e = ne match { case Alias(c, _) => c; case other => other }
+          if (!e.foldable) None
+          else Some(CatalystTypeConverters.convertToScala(e.eval(),
+            e.dataType))
+        case _ => None
+      }
     }
   }
 

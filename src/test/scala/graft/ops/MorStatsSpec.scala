@@ -146,4 +146,87 @@ class MorStatsSpec extends SparkSpec {
       ZTable.stats(spark, plain, 2L)
     }
   }
+
+  test("the constant `_stats` schema is the read-back aggregation's, " +
+      "for int, long and non-int dims, with and without a Bloom column") {
+    val d = java.nio.file.Files.createTempDirectory("graft_morstats_")
+      .toString
+    spark.range(0, 50).select($"id".cast("int").as("i"), $"id".as("l"),
+      concat(lit("s"), $"id").as("s"), ($"id" / 4.0).as("dbl"),
+      lit(null).cast("long").as("n"))
+      .coalesce(2).write.parquet(s"$d/t")
+    // the aggregation writeStats plans for its fallback, verbatim
+    def readBack(x: String, y: String, bloom: Option[String]) =
+      MetaIO.readParquet(spark, s"$d/t")
+        .withColumn("__path", substring_index(input_file_name(), "/", -2))
+        .groupBy(col("__path").as("path"))
+        .agg(count(lit(1)).as("n_rows"),
+          min(col(x).cast("long")).as("min_x"),
+          max(col(x).cast("long")).as("max_x"),
+          min(col(y).cast("long")).as("min_y"),
+          max(col(y).cast("long")).as("max_y"))
+        .withColumn("x_col", lit(x))
+        .withColumn("y_col", lit(y))
+        .withColumn("bloom_col",
+          bloom.map(lit(_)).getOrElse(lit(null).cast("string")))
+        .schema
+    for ((x, y) <- Seq(("i", "l"), ("l", "l"), ("s", "dbl"), ("n", "i"));
+        bloom <- Seq(None, Some("s")))
+      assert(ZTable.statsSchema(bloom.isDefined) == readBack(x, y, bloom),
+        s"dims ($x, $y), bloom $bloom")
+  }
+
+  test("20 merge/update/delete/binPack cycles: `_bloom` and `_dv` stay " +
+      "at ≤ 2 parts after every binPack, the driver probe equals the " +
+      "register join, and the pruned scan equals the filtered read") {
+    val root = freshRoot()
+    def rows(ids: org.apache.spark.sql.Dataset[java.lang.Long]) =
+      ids.select($"id".as("k"), $"id".as("x"), ($"id" * 7 % 1000).as("y"),
+        ($"id" * 1.25).as("amt"), concat(lit("k"), $"id").as("v"))
+    ManifestTable.commit(rows(spark.range(0, 6000)).coalesce(1), root)
+    ZTable.optimizeZOrder(spark, root, "x", "y", "k", nFiles = 4,
+      bloomCol = Some("v"))
+    def parts(frame: String): Int = {
+      val v = ManifestTable.currentVersion(spark, root).get
+      Option(new java.io.File(
+        s"$root/${ManifestTable.versionDataDir(spark, root, v)}/$frame")
+        .listFiles()).getOrElse(Array.empty).count(f =>
+        !f.getName.startsWith("_") && !f.getName.startsWith("."))
+    }
+    (0 until 20).foreach { i =>
+      val lo = 200L * i
+      ManifestTable.mergeBatchDV(spark, root,
+        rows(spark.range(lo, lo + 40).union(
+          spark.range(10000 + 20L * i, 10020 + 20L * i))),
+        Seq("k"), batchKey = s"c$i")
+      ManifestTable.updateWhereDV(spark, root, $"k".between(lo + 50, lo + 80),
+        Map("amt" -> ($"amt" + 1.5)))
+      ManifestTable.deleteWhereDV(spark, root, $"k".between(lo + 100, lo + 110))
+      ManifestTable.optimizeBinPack(spark, root, minFileBytes = 16L * 1024)
+      assert(parts("_bloom") <= 2, s"cycle $i: ${parts("_bloom")} _bloom parts")
+      assert(parts("_dv") <= 2, s"cycle $i: ${parts("_dv")} _dv parts")
+      val v = ManifestTable.currentVersion(spark, root).get
+      statsCoverExactly(root, v)
+      val dir = ManifestTable.versionDataDir(spark, root, v)
+      val keys = Seq(s"k${lo + 10}", s"k${10000 + 20L * i}", s"k${lo + 60}",
+        "k5999", "absent")
+      val local = ZTable.bloomProbePathsAny(spark, root, dir, keys)
+      val joined = ManifestTable.dvLocalCarryCap.withValue(0L)(
+        ZTable.bloomProbePathsAny(spark, root, dir, keys))
+      assert(local.sorted == joined.sorted, s"cycle $i: probes diverge")
+      // no false negative: every file holding a key is a candidate
+      val holders = ManifestTable.read(spark, root).get
+        .filter($"v".isin(keys: _*))
+        .select(substring_index(input_file_name(), "/", -2))
+        .as[String].collect().toSet
+      assert(holders.subsetOf(local.map(ManifestTable.fileKeyOf).toSet),
+        s"cycle $i: a file holding a key is not a candidate")
+      val want = ManifestTable.read(spark, root).get
+        .filter($"x".between(lo, lo + 400)).select("k", "amt")
+        .as[(Long, Double)].collect().sorted.toSeq
+      assert(ZTable.scanXRange(spark, root, lo, lo + 400)
+        .select("k", "amt").as[(Long, Double)].collect().sorted.toSeq ==
+        want, s"cycle $i: pruned scan differs from the filtered read")
+    }
+  }
 }
