@@ -430,13 +430,107 @@ object ManifestTable {
   private[ops] def versionDataDir(spark: SparkSession, root: String,
       v: Long): String = {
     val (live, compacted) = commitState(spark, root)
+    retainedDirAt(spark, root, v, live, compacted)
+  }
+
+  /** Version `v`'s data-directory name in a commit-state snapshot. */
+  private def dirAt(spark: SparkSession, root: String, v: Long,
+      live: Seq[org.apache.hadoop.fs.FileStatus],
+      compacted: Map[String, String]): String = {
     val marker = winnersByVersion(namesOf(live, compacted)).get(v)
     require(marker.isDefined, s"version $v of $root was never committed")
-    val dir = dirOf(spark, root, marker.get, live, compacted)
+    dirOf(spark, root, marker.get, live, compacted)
+  }
+
+  /** [[dirAt]], failing loudly when the version's data was vacuumed. */
+  private def retainedDirAt(spark: SparkSession, root: String, v: Long,
+      live: Seq[org.apache.hadoop.fs.FileStatus],
+      compacted: Map[String, String]): String = {
+    val dir = dirAt(spark, root, v, live, compacted)
     require(fsOf(spark, root).exists(new Path(root, dir)),
       s"version $v of $root was vacuumed (commit record retained, " +
         "data directory dropped)")
     dir
+  }
+
+  /** The version a file-list commit starts from, resolved from ONE
+    * commit-state snapshot: its number `v`, its data `dir`, and the
+    * version the commit claims, `next`. Its file refs, `_parts` rows
+    * and `_stats` frame are read on first use and at most once, so the
+    * delta write and [[commitFiles]] share one read of each. */
+  private[ops] final class Base(spark: SparkSession, root: String,
+      val v: Long, val next: Long, val dir: String,
+      live: Seq[org.apache.hadoop.fs.FileStatus],
+      compacted: Map[String, String], refs0: => Seq[String],
+      parts0: => Option[(String, Seq[(String, String)])],
+      stats0: => Option[(org.apache.spark.sql.types.StructType,
+        Seq[org.apache.spark.sql.Row])]) {
+    /** Every data file of the version ([[refsOf]]). */
+    lazy val refs: Seq[String] = refs0
+    /** (pcol, (path, value) rows) when the version is partitioned. */
+    lazy val parts: Option[(String, Seq[(String, String)])] = parts0
+    /** The committed `_stats` frame as driver rows with its schema,
+      * None when the version carries none. */
+    lazy val stats: Option[(org.apache.spark.sql.types.StructType,
+        Seq[org.apache.spark.sql.Row])] = stats0
+    def liveCount: Int = live.size
+    def applied(batchKey: String): Boolean =
+      appliedKeys(spark, root, live, compacted).contains(batchKey)
+    /** Version `u` of the same snapshot as the SOURCE of a commit that
+      * still claims `next` (RESTORE); fails loudly when `u` was never
+      * committed or was vacuumed. */
+    def at(u: Long): Base =
+      baseAt(spark, root, u, next, retainedDirAt(spark, root, u, live,
+        compacted), live, compacted)
+    /** This base with its refs (and partition rows) already known to
+      * the caller: a partitioned base's `_parts` rows list exactly its
+      * files. */
+    def withRefs(rs: Seq[String]): Base =
+      new Base(spark, root, v, next, dir, live, compacted, rs, parts, stats)
+    def withParts(pcol: String, rows: Seq[(String, String)]): Base =
+      new Base(spark, root, v, next, dir, live, compacted,
+        rows.map(_._1), Some((pcol, rows)), stats)
+  }
+
+  private def baseAt(spark: SparkSession, root: String, v: Long,
+      next: Long, dir: String, live: Seq[org.apache.hadoop.fs.FileStatus],
+      compacted: Map[String, String]): Base =
+    new Base(spark, root, v, next, dir, live, compacted, {
+      val r = refsOf(spark, root, dir)
+      require(r.nonEmpty, s"version $v of $root has no data files")
+      r
+    }, PartitionedTable.partsRowsIfAny(spark, root, dir), {
+      // driver rows; a Spark collect for a shape the driver reader
+      // can't decode
+      val p = new Path(s"$root/$dir/_stats")
+      if (!fsOf(spark, root).exists(p)) None
+      else Some(MetaIO.schemaOf(spark, p).filter(MetaIO.frameWritable)
+        .flatMap(s => MetaIO.frameRowsAs(spark, p.toString, s).map((s, _)))
+        .getOrElse {
+          val df = MetaIO.readParquet(spark, p.toString)
+          (df.schema, df.collect().toSeq)
+        })
+    })
+
+  /** The current version as a [[Base]]; None before the first commit. */
+  private[ops] def latest(spark: SparkSession, root: String): Option[Base] = {
+    val (live, compacted) = commitState(spark, root)
+    val markers = namesOf(live, compacted)
+    if (markers.isEmpty) None
+    else {
+      val v = markers.map(versionOf).max
+      Some(baseAt(spark, root, v, v + 1,
+        dirOf(spark, root, winnersByVersion(markers)(v), live, compacted),
+        live, compacted))
+    }
+  }
+
+  /** [[latest]], failing loudly (`nothing to <what>`) on an empty root. */
+  private[ops] def baseOf(spark: SparkSession, root: String,
+      what: String): Base = {
+    val b = latest(spark, root)
+    require(b.isDefined, s"nothing to $what at $root")
+    b.get
   }
 
   /** The relative file paths a version's data dir carries FORWARD BY
@@ -455,6 +549,31 @@ object ManifestTable {
     if (!fs.exists(manifest)) None
     else Some(readSmallFile(fs, manifest).split("\n").toSeq
       .filter(_.nonEmpty))
+  }
+
+  /** The data files directly under `dir` (no `_`/`.` names), as
+    * root-relative `<dir>/<file>` refs — a whole-dir version's files,
+    * or what a commit just wrote into its own dir. */
+  private[ops] def dataFilesIn(fs: org.apache.hadoop.fs.FileSystem,
+      root: String, dir: String): Seq[String] =
+    fs.listStatus(new Path(root, dir)).toSeq
+      .map(_.getPath.getName)
+      .filter(n => !n.startsWith("_") && !n.startsWith("."))
+      .map(n => s"$dir/$n")
+
+  /** Every data file of the version at `dir`: its `_files` list, or
+    * the whole dir's files for a plain version. */
+  private[ops] def refsOf(spark: SparkSession, root: String,
+      dir: String): Seq[String] =
+    fileList(spark, root, dir)
+      .getOrElse(dataFilesIn(fsOf(spark, root), root, dir))
+
+  /** THE `_files` writer: every file-list version's manifest is
+    * written here and nowhere else. */
+  private def writeFileList(fs: org.apache.hadoop.fs.FileSystem,
+      root: String, dir: String, refs: Seq[String]): Unit = {
+    val out = fs.create(new Path(new Path(root, dir), "_files"), true)
+    try out.write(refs.mkString("\n").getBytes("UTF-8")) finally out.close()
   }
 
   /** Is a file-list entry an EXTERNAL reference — an absolute path
@@ -524,33 +643,34 @@ object ManifestTable {
       org.apache.spark.sql.functions.broadcast(df)
     else df
 
-  /** Carry the base version's deletion vector into `newDir`, filtered
-    * to the surviving file keys. When the vector's on-disk footprint
-    * is planning-sized (≤ [[dvLocalCarryCap]]) this is DRIVER IO —
-    * one parquet-mr frame read + one frame write, zero Spark actions
-    * (the pre-round-16 shape paid an isEmpty probe + a broadcast
-    * semi-join write per carry); past the cap it falls back to the
-    * broadcast semi-join. Writes nothing when no row survives (same
-    * contract as before: absent `_dv` = no deletions).
-    *
-    * The cap is the one driver-versus-Spark gate of the table
-    * metadata: DV carries, and in [[ZTable]] Bloom carries, fragment
-    * register builds and Bloom probes. Specs scope it with
-    * `withValue(0L)` to drive the Spark (100 TB) side at test scale. */
+  /** The one driver-versus-Spark gate of the table metadata, on a
+    * frame's on-disk footprint: filtered DV carries ([[commitFiles]]),
+    * DV reads ([[live]]), and in [[ZTable]] Bloom carries, fragment
+    * register builds and Bloom probes run on the driver within it and
+    * through Spark past it. Specs scope it with `withValue(0L)` to
+    * drive the Spark (100 TB) side at test scale. */
   private[ops] val dvLocalCarryCap =
     new scala.util.DynamicVariable[Long](16L * 1024 * 1024)
+
+  /** Carry the base version's deletion vector into `newDir`, filtered
+    * to the surviving file keys: DRIVER IO within [[dvLocalCarryCap]]
+    * ([[MetaIO.carryFrameFiltered]], zero Spark actions); past it one
+    * broadcast semi-join write, removed again when its footers count
+    * no row. Leaves no `_dv` when no row survives (absent `_dv` = no
+    * deletions). */
   private[ops] def carryDvFiltered(spark: SparkSession, root: String,
       baseDir: String, newDir: String, keepKeys: Set[String]): Unit = {
     val src = s"$root/$baseDir/_dv"
-    if (MetaIO.carryFrameFiltered(spark, src, s"$root/$newDir/_dv",
-        "path", keepKeys, dvLocalCarryCap.value)) return
+    val dst = s"$root/$newDir/_dv"
+    if (MetaIO.carryFrameFiltered(spark, src, dst, "path", keepKeys,
+        dvLocalCarryCap.value)) return
     import spark.implicits._
-    val dv = MetaIO.readParquet(spark, src)
-    val kept = dv.join(
-      org.apache.spark.sql.functions.broadcast(
+    MetaIO.readParquet(spark, src)
+      .join(org.apache.spark.sql.functions.broadcast(
         keepKeys.toSeq.toDF("path")), Seq("path"), "left_semi")
-    if (!kept.isEmpty)
-      kept.coalesce(1).write.parquet(s"$root/$newDir/_dv")
+      .coalesce(1).write.parquet(dst)
+    if (MetaIO.footerRowCount(spark, dst) == 0L)
+      fsOf(spark, root).delete(new Path(dst), true)
   }
 
   /** A version's COLUMN MAPPING, if it carries one (`_colmap`, a tiny
@@ -685,31 +805,56 @@ object ManifestTable {
     schemaOf(spark, root, fromDir).foreach(st =>
       writeSchemaFile(spark, root, toDir, st))
 
-  /** Commit the column-mapping + pinned-schema metadata of a MoR
-    * commit that may have PHYSICALLY BACKED pending ADD COLUMNs: with
-    * nothing pending, the base's mapping and schema carry verbatim;
-    * with pending columns, the mapping's unbacked entries become real
-    * (physical = logical) and the version pins the FULL physical
-    * schema — base files' physical fields plus the newly-backed
-    * columns — so every reader resolves the mixed file set exactly. */
+  /** Commit a version's column mapping and pinned schema: each one
+    * given is written, each one absent carries verbatim from the
+    * source dir. */
   private def writeBackedMeta(spark: SparkSession, root: String,
-      baseDir: String, dir: String,
-      taggedSchema: org.apache.spark.sql.types.StructType,
-      unbackedCols: Seq[(String, String)],
-      cmBacked: Option[Seq[(String, String)]]): Unit = {
-    import org.apache.spark.sql.types.{DataType, StructField, StructType}
-    if (unbackedCols.isEmpty) {
-      carryColmap(spark, root, baseDir, dir)
-      carrySchemaFile(spark, root, baseDir, dir)
-    } else {
-      writeColmap(spark, root, dir, cmBacked.get)
-      val physBase = StructType(taggedSchema
-        .filterNot(f => f.name == "__path" || f.name == "__ri"))
-      val extra = unbackedCols.map { case (n, t) =>
-        StructField(n, DataType.fromDDL(t)) }
-      writeSchemaFile(spark, root, dir, StructType(physBase ++ extra))
-    }
+      srcDir: String, dir: String, colmap: Option[Seq[(String, String)]],
+      schema: Option[org.apache.spark.sql.types.StructType]): Unit = {
+    colmap.fold(carryColmap(spark, root, srcDir, dir))(
+      writeColmap(spark, root, dir, _))
+    schema.fold(carrySchemaFile(spark, root, srcDir, dir))(
+      writeSchemaFile(spark, root, dir, _))
   }
+
+  /** The pending metadata-only ADD COLUMNs of mapping `cm` — (name,
+    * DDL type) per unbacked entry — and the mapping with them backed
+    * (physical = logical): what a MoR commit that PHYSICALLY BACKS
+    * them in its appended files commits. */
+  private def pendingAdds(cm: Option[Seq[(String, String)]])
+      : (Seq[(String, String)], Option[Seq[(String, String)]]) =
+    (cm.toSeq.flatten.filter(e => isUnbacked(e._2))
+      .map(e => (e._1, unbackedType(e._2))),
+     cm.map(_.map { case (l, p) => if (isUnbacked(p)) (l, l) else (l, p) }))
+
+  /** The (mapping, pinned schema) a commit backing `unbacked` writes:
+    * nothing new when none is pending; otherwise the backed mapping
+    * and the FULL physical schema — the source files' physical fields
+    * (`physical`, position tags dropped) plus the newly-backed columns
+    * — so every reader resolves the mixed file set exactly. */
+  private def backedMeta(unbacked: Seq[(String, String)],
+      cmBacked: Option[Seq[(String, String)]],
+      physical: => org.apache.spark.sql.types.StructType)
+      : (Option[Seq[(String, String)]],
+         Option[org.apache.spark.sql.types.StructType]) = {
+    import org.apache.spark.sql.types.{DataType, StructField, StructType}
+    if (unbacked.isEmpty) (None, None)
+    else (cmBacked, Some(StructType(physical
+      .filterNot(f => f.name == "__path" || f.name == "__ri") ++
+      unbacked.map { case (n, t) => StructField(n, DataType.fromDDL(t)) })))
+  }
+
+  /** A source frame filled at the declared type for every pending
+    * column it does not provide (a source that predates the ADD
+    * COLUMN); any OTHER missing column still fails at the caller's
+    * projection. */
+  private def fillPending(df: DataFrame,
+      unbacked: Seq[(String, String)]): DataFrame =
+    unbacked.foldLeft(df) { case (d, (n, t)) =>
+      if (d.columns.contains(n)) d
+      else d.withColumn(n, org.apache.spark.sql.functions.lit(null)
+        .cast(org.apache.spark.sql.types.DataType.fromDDL(t)))
+    }
 
   /** Read a set of file references RAW (physical schema), honoring
     * the owning version's pinned `_schema` when present — the one
@@ -795,14 +940,100 @@ object ManifestTable {
       col("__ri").as("row_index"))
   }
 
-  /** Copy the base version's vector files (if any) into `dir`'s
-    * `_dv` verbatim — a driver byte copy; the caller appends its new
-    * positions as one more part file. */
-  private def carryPriorDv(fs: org.apache.hadoop.fs.FileSystem,
-      root: String, baseDir: String, dir: String): Unit = {
-    val prior = new Path(s"$root/$baseDir/_dv")
-    if (fs.exists(prior))
-      ZTable.copyFrame(fs, prior.toString, s"$root/$dir/_dv")
+  /** Write a commit's new data files into its fresh `dir`: through
+    * the partition-pure flatten ([[PartitionedTable.writeFlattened]],
+    * one partition value per file) when the source carries `_parts`,
+    * a plain write otherwise. `shape` receives the partition column
+    * (None for the plain write) and returns the frame to write.
+    * Returns (appended refs, fresh `_parts` rows — Nil for the plain
+    * write). */
+  private[ops] def writeDelta(spark: SparkSession, root: String,
+      src: Base, dir: String)(shape: Option[String] => DataFrame)
+      : (Seq[String], Seq[(String, String)]) =
+    src.parts match {
+      case Some((pcol, _)) =>
+        val rows = PartitionedTable.writeFlattened(spark, root, dir,
+          shape(Some(pcol)), pcol)
+        (rows.map(_._1), rows)
+      case None =>
+        shape(None).write.parquet(s"$root/$dir")
+        (dataFilesIn(fsOf(spark, root), root, dir), Nil)
+    }
+
+  /** THE file-list commit: every version that carries files by
+    * reference is committed here, from its source version `src`, the
+    * fresh `dir` holding its new files, and what it keeps. The
+    * version layout, each frame worked out from the inputs, in write
+    * order (`dir` itself appears with the first file):
+    *
+    *  - `_files` = `carried` (refs of `src`) ++ `appended`.
+    *  - `_dv` = the source vector — copied verbatim when every source
+    *    file is carried, filtered to the carried files' keys otherwise
+    *    ([[carryDvFiltered]]), absent when `dvPurged` (the commit
+    *    materialized all of it) — plus `freshDv`, this commit's new
+    *    positions, as one appended part.
+    *  - `_parts` = the source rows of the carried files (they must
+    *    cover every one) ++ `freshParts`; copied verbatim when the
+    *    file list is unchanged; dropped when the appended files are not
+    *    partition-pure (`freshParts` does not list them) or the
+    *    mapping changes.
+    *  - `_colmap`/`_schema` = `colmap`/`schema` when given, else the
+    *    source's ([[writeBackedMeta]]).
+    *  - `_stats`/`_bloom`/`_bloom/_GEOM` = the source's rows of the
+    *    carried files plus read-back rows of the appended ones
+    *    ([[ZTable.extendStats]]; the file-grain copy when every source
+    *    file is carried); dropped when the mapping changes (their dim
+    *    names are physical).
+    *  - `_op`, then the marker — the commit point — at `src.next`, then
+    *    auto-compaction.
+    *
+    * Returns the committed version. */
+  private[ops] def commitFiles(spark: SparkSession, root: String,
+      src: Base, dir: String, carried: Seq[String], appended: Seq[String],
+      op: String, freshParts: Seq[(String, String)] = Nil,
+      freshDv: Option[DataFrame] = None, dvPurged: Boolean = false,
+      colmap: Option[Seq[(String, String)]] = None,
+      schema: Option[org.apache.spark.sql.types.StructType] = None,
+      batchKey: String = "", retention: Long = Long.MaxValue): Long = {
+    require(carried.nonEmpty || appended.nonEmpty,
+      s"commit of $root would have NO data files — use a plain empty " +
+        "commit (ManifestTable.commit) instead")
+    val fs = fsOf(spark, root)
+    val carryAll = carried.size == src.refs.size
+    def copyIfAny(frame: String): Unit = {
+      val p = new Path(s"$root/${src.dir}/$frame")
+      if (fs.exists(p)) ZTable.copyFrame(fs, p.toString, s"$root/$dir/$frame")
+    }
+    writeFileList(fs, root, dir, carried ++ appended)
+    if (!dvPurged) {
+      if (carryAll) copyIfAny("_dv")
+      else carryDvFiltered(spark, root, src.dir, dir,
+        carried.map(fileKeyOf).toSet)
+    }
+    freshDv.foreach(_.coalesce(1).write.mode("append")
+      .parquet(s"$root/$dir/_dv"))
+    if (colmap.isEmpty) {
+      if (carryAll && appended.isEmpty) copyIfAny("_parts")
+      else if (freshParts.size == appended.size)
+        src.parts.foreach { case (pcol, rows) =>
+          val keep = carried.toSet
+          val kept = rows.filter(r => keep.contains(r._1))
+          require(kept.size == carried.size,
+            s"partition metadata of $root v${src.v} does not cover " +
+              "every carried file — refusing a commit that would " +
+              "under-cover")
+          PartitionedTable.writeParts(spark, root, dir, kept ++ freshParts,
+            pcol)
+        }
+    }
+    writeBackedMeta(spark, root, src.dir, dir, colmap, schema)
+    if (colmap.isEmpty)
+      ZTable.extendStats(spark, root, src, dir, appended,
+        carriedPaths = if (carryAll) None else Some(carried))
+    writeOpMeta(spark, root, dir, op)
+    writeMarker(spark, root, src.next, batchKey, dir)
+    maybeAutoCompact(spark, root, src.liveCount + 1, retention)
+    src.next
   }
 
   /** Read a resolved data dir — through its `_files` manifest when the
@@ -849,12 +1080,7 @@ object ManifestTable {
     * MoR case). */
   def countVersion(spark: SparkSession, root: String, v: Long): Long = {
     val dir = versionDataDir(spark, root, v)
-    val refs = fileList(spark, root, dir).getOrElse {
-      fsOf(spark, root).listStatus(new Path(root, dir)).toSeq
-        .map(_.getPath.getName)
-        .filter(n => !n.startsWith("_") && !n.startsWith("."))
-        .map(n => s"$dir/$n")
-    }
+    val refs = refsOf(spark, root, dir)
     val rows = MetaIO.footerRowCount(spark,
       refs.map(r => new Path(resolveRef(root, r))))
     val dvP = new Path(new Path(root, dir), "_dv")
@@ -882,12 +1108,8 @@ object ManifestTable {
     * (on an object store the listing IS the cost). */
   private def readVersionWith(spark: SparkSession, root: String,
       v: Long, live: Seq[org.apache.hadoop.fs.FileStatus],
-      compacted: Map[String, String]): DataFrame = {
-    val marker = winnersByVersion(namesOf(live, compacted)).get(v)
-    require(marker.isDefined, s"version $v of $root was never committed")
-    readDataDir(spark, root,
-      dirOf(spark, root, marker.get, live, compacted))
-  }
+      compacted: Map[String, String]): DataFrame =
+    readDataDir(spark, root, dirAt(spark, root, v, live, compacted))
 
   /** Commit `df` as the next version; returns the new version number.
     * Crash-safe per the protocol above; fails loudly on a concurrent
@@ -923,17 +1145,9 @@ object ManifestTable {
     * constraints enforce on the batch (the inductive contract).
     * Returns the new version. */
   def append(spark: SparkSession, root: String, df: DataFrame): Long = {
-    val (live, compacted) = commitState(spark, root)
-    val markers = namesOf(live, compacted)
-    require(markers.nonEmpty,
-      s"nothing to append to at $root — CREATE TABLE … AS SELECT " +
-        "(or commit) first")
-    val base = markers.map(versionOf).max
-    val baseDir = dirOf(spark, root,
-      winnersByVersion(markers)(base), live, compacted)
-    val cm = colmapOf(spark, root, baseDir)
-    if (cm.isEmpty &&
-        PartitionedTable.partsRowsIfAny(spark, root, baseDir).isDefined) {
+    val base = baseOf(spark, root, "append to")
+    val cm = colmapOf(spark, root, base.dir)
+    if (cm.isEmpty && base.parts.isDefined) {
       // the SAME by-name alignment + cast-to-target-types the
       // unpartitioned path applies below (srcProj) must happen BEFORE
       // the partitioned delegation: appendPartitioned writes the batch
@@ -945,7 +1159,7 @@ object ManifestTable {
       // (appendPartitioned re-validates the now-provided values — a
       // no-op by construction).
       val gen = Generated(spark, root, df, "append")
-      val targetSchema = readDataDir(spark, root, baseDir).schema
+      val targetSchema = readDataDir(spark, root, base.dir).schema
       val coerced = gen.select(targetSchema.map(f =>
         org.apache.spark.sql.functions.col(f.name).cast(f.dataType)
           .as(f.name)): _*)
@@ -953,62 +1167,27 @@ object ManifestTable {
     }
     val src = Generated(spark, root, df, "append")
     Checks.enforce(spark, root, src, "append")
-    val refs = fileList(spark, root, baseDir).getOrElse {
-      fsOf(spark, root).listStatus(new Path(root, baseDir)).toSeq
-        .map(_.getPath.getName)
-        .filter(n => !n.startsWith("_") && !n.startsWith("."))
-        .map(n => s"$baseDir/$n")
-    }
-    require(refs.nonEmpty, s"version $base of $root has no data files")
+    val refs = base.refs
     // logical target schema = the base read's (colmap applied)
-    val targetSchema = readDataDir(spark, root, baseDir).schema
-    val unbackedCols: Seq[(String, String)] = cm.toSeq.flatten
-      .filter(e => isUnbacked(e._2))
-      .map(e => (e._1, unbackedType(e._2)))
-    val cmBacked = cm.map(_.map { case (l, p) =>
-      if (isUnbacked(p)) (l, l) else (l, p) })
-    val srcFilled = unbackedCols.foldLeft(src) { case (d, (n, t)) =>
-      if (d.columns.contains(n)) d
-      else d.withColumn(n, org.apache.spark.sql.functions.lit(null)
-        .cast(org.apache.spark.sql.types.DataType.fromDDL(t)))
-    }
+    val targetSchema = readDataDir(spark, root, base.dir).schema
+    val (unbackedCols, cmBacked) = pendingAdds(cm)
     // match by NAME, coerce to the target's TYPES (SQL INSERT
     // semantics — a decimal VALUES literal must land as the target's
     // double, or the mixed parquet schema mis-decodes; ANSI casts
     // keep bad values loud)
-    val srcProj = srcFilled.select(targetSchema.map(f =>
+    val srcProj = fillPending(src, unbackedCols).select(targetSchema.map(f =>
       org.apache.spark.sql.functions.col(f.name).cast(f.dataType)
         .as(f.name)): _*)
-    val fs = fsOf(spark, root)
-    val next = base + 1
-    val dir = newDataDirName(next)
-    cmBacked.fold(srcProj)(toPhysical(srcProj, _))
-      .write.parquet(s"$root/$dir")
-    val appended = fs.listStatus(new Path(root, dir)).toSeq
-      .map(_.getPath.getName)
-      .filter(n => !n.startsWith("_") && !n.startsWith("."))
-      .map(n => s"$dir/$n")
-    val out = fs.create(new Path(new Path(root, dir), "_files"), true)
-    try out.write((refs ++ appended).mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-    // every base file carried → the vector rides verbatim: file-grain
-    // driver copy, not a Spark re-encode of the whole vector
-    val dvSrcApp = new Path(new Path(root, baseDir), "_dv")
-    if (fs.exists(dvSrcApp))
-      ZTable.copyFrame(fs, dvSrcApp.toString, s"$root/$dir/_dv")
+    val dir = newDataDirName(base.next)
+    val (appended, _) = writeDelta(spark, root, base, dir)(_ =>
+      cmBacked.fold(srcProj)(toPhysical(srcProj, _)))
     // base PHYSICAL schema (footer-only read) — needed only when a
     // pending ADD COLUMN is being backed and `_schema` must pin the
     // mixed file set
-    val physSchema =
-      if (unbackedCols.isEmpty) org.apache.spark.sql.types.StructType(Nil)
-      else readRefsRaw(spark, root, baseDir, refs).schema
-    writeBackedMeta(spark, root, baseDir, dir, physSchema,
-      unbackedCols, cmBacked)
-    ZTable.extendStats(spark, root, baseDir, dir, appended)
-    writeOpMeta(spark, root, dir, "WRITE")
-    writeMarker(spark, root, next, dataDir = dir)
-    maybeAutoCompact(spark, root, live.size + 1)
-    next
+    val (colmap, schema) = backedMeta(unbackedCols, cmBacked,
+      readRefsRaw(spark, root, base.dir, refs).schema)
+    commitFiles(spark, root, base, dir, refs, appended, "WRITE",
+      colmap = colmap, schema = schema)
   }
 
   /** Step 1 of [[commit]] — returns the fresh unique data-dir name.
@@ -1714,19 +1893,7 @@ object ManifestTable {
   def deleteWhereDV(spark: SparkSession, root: String,
       condition: org.apache.spark.sql.Column): Long = {
     import org.apache.spark.sql.functions.{coalesce, lit}
-    val (live, compacted) = commitState(spark, root)
-    val markers = namesOf(live, compacted)
-    require(markers.nonEmpty, s"nothing to delete from at $root")
-    val base = markers.map(versionOf).max
-    val baseDir = dirOf(spark, root,
-      winnersByVersion(markers)(base), live, compacted)
-    val refs = fileList(spark, root, baseDir).getOrElse {
-      fsOf(spark, root).listStatus(new Path(root, baseDir)).toSeq
-        .map(_.getPath.getName)
-        .filter(n => !n.startsWith("_") && !n.startsWith("."))
-        .map(n => s"$baseDir/$n")
-    }
-    require(refs.nonEmpty, s"version $base of $root has no data files")
+    val base = baseOf(spark, root, "delete from")
     // one scan to FIND positions: current (post-prior-DV) rows
     // matching the predicate, keyed by (file key, row index). The
     // scan applies the prior vector ([[live]]) and is tagged with its
@@ -1734,43 +1901,16 @@ object ManifestTable {
     // never in question; the predicate sinks below the tags, so only
     // matched rows derive a file key
     val tagged = positionTagged(
-      ManifestTable.live(spark, root, baseDir,
-        readRefsRaw(spark, root, baseDir, refs)))
-    val cm = colmapOf(spark, root, baseDir)
+      ManifestTable.live(spark, root, base.dir,
+        readRefsRaw(spark, root, base.dir, base.refs)))
+    val cm = colmapOf(spark, root, base.dir)
     // LOGICAL view for the predicate when a column mapping is active
     val current = cm.fold(tagged)(
       toLogical(tagged, _, passthrough = Seq("__path", "__ri")))
     val fresh = positionsOf(current.filter(coalesce(condition, lit(false))))
-    val fs = fsOf(spark, root)
-    val next = base + 1
-    val dir = newDataDirName(next)
-    fs.mkdirs(new Path(root, dir))
-    // cumulative vector = PRIOR FILES CARRIED VERBATIM (driver byte
-    // copy — the old union re-read and re-encoded the whole prior
-    // vector through Spark on every DELETE, O(deleted) work per
-    // commit) + this delete's positions appended as one new part file
-    // (same physical schema by construction: both sides are the same
-    // metadata-column projection)
-    carryPriorDv(fs, root, baseDir, dir)
-    fresh.coalesce(1).write.mode("append").parquet(s"$root/$dir/_dv")
-    // _parts rides too: a DV delete changes no file set, so the
-    // partition metadata stays exact (the appending MoR DML paths
-    // keep it alive as well — their fragments land partition-pure
-    // through the flatten and extend the frame; see [[updateWhereDV]])
-    Seq("_stats", "_bloom", "_parts").foreach { frame =>
-      val src = new Path(s"$root/$baseDir/$frame")
-      if (fs.exists(src)) // verbatim carry: file-grain driver copy
-        ZTable.copyFrame(fs, src.toString, s"$root/$dir/$frame")
-    }
-    val out = fs.create(new Path(new Path(root, dir), "_files"), true)
-    try out.write(refs.mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-    carryColmap(spark, root, baseDir, dir)
-    carrySchemaFile(spark, root, baseDir, dir)
-    writeOpMeta(spark, root, dir, "DELETE")
-    writeMarker(spark, root, next, dataDir = dir)
-    maybeAutoCompact(spark, root, live.size + 1)
-    next
+    val dir = newDataDirName(base.next)
+    commitFiles(spark, root, base, dir, base.refs, Nil, "DELETE",
+      freshDv = Some(fresh))
   }
 
   /** UPDATE via DELETION VECTOR + APPEND — merge-on-read UPDATE
@@ -1797,32 +1937,16 @@ object ManifestTable {
       condition: org.apache.spark.sql.Column,
       set: Map[String, org.apache.spark.sql.Column]): Long = {
     import org.apache.spark.sql.functions.{coalesce, col, lit}
-    val (live, compacted) = commitState(spark, root)
-    val markers = namesOf(live, compacted)
-    require(markers.nonEmpty, s"nothing to update at $root")
-    val base = markers.map(versionOf).max
-    val baseDir = dirOf(spark, root,
-      winnersByVersion(markers)(base), live, compacted)
-    val refs = fileList(spark, root, baseDir).getOrElse {
-      fsOf(spark, root).listStatus(new Path(root, baseDir)).toSeq
-        .map(_.getPath.getName)
-        .filter(n => !n.startsWith("_") && !n.startsWith("."))
-        .map(n => s"$baseDir/$n")
-    }
-    require(refs.nonEmpty, s"version $base of $root has no data files")
+    val base = baseOf(spark, root, "update")
     val tagged = positionTagged(
-      ManifestTable.live(spark, root, baseDir,
-        readRefsRaw(spark, root, baseDir, refs)))
-    val cm = colmapOf(spark, root, baseDir)
+      ManifestTable.live(spark, root, base.dir,
+        readRefsRaw(spark, root, base.dir, base.refs)))
+    val cm = colmapOf(spark, root, base.dir)
     // pending metadata-only ADD COLUMNs are PHYSICALLY BACKED in this
     // commit's appended post-images (a SET may even backfill them);
     // the version pins `_schema` so the mixed read cannot tear — see
     // [[mergeDV]]'s identical lifting of the round-12 refusal
-    val unbackedCols: Seq[(String, String)] = cm.toSeq.flatten
-      .filter(e => isUnbacked(e._2))
-      .map(e => (e._1, unbackedType(e._2)))
-    val cmBacked = cm.map(_.map { case (l, p) =>
-      if (isUnbacked(p)) (l, l) else (l, p) })
+    val (unbackedCols, cmBacked) = pendingAdds(cm)
     // LOGICAL view: WHERE, SET and checks all resolve logical names
     val current = cm.fold(tagged)(
       toLogical(tagged, _, passthrough = Seq("__path", "__ri")))
@@ -1843,66 +1967,27 @@ object ManifestTable {
         .getOrElse(col(c))
     }: _*)
     Checks.enforce(spark, root, postImage, "update post-image")
-    val fs = fsOf(spark, root)
-    val next = base + 1
-    val dir = newDataDirName(next)
-    // PARTITION-PURE append when the base is a partitioned table
-    // (round-13's `_parts` drop closed, the extendStats move replayed
-    // on the partition frame): post-images land through the same
-    // flatten commitPartitioned uses — one partition value per
-    // appended file BY CONSTRUCTION, even when the SET rewrites the
-    // partition column itself (the post-image carries its own value)
-    // — and `_parts` extends with the fragments' values, so a
-    // date-partitioned fact keeps partition pruning through its daily
-    // MoR DML. A post-image with a NULL partition value fails loudly
-    // BEFORE the marker (no torn commit; the dir is vacuum-reclaimed).
-    // Column mapping doesn't compose with partitioning (a rename
-    // already drops `_parts`), so the flatten path requires cm empty.
-    val baseParts =
-      if (cm.isEmpty) PartitionedTable.partsRowsIfAny(spark, root, baseDir)
-      else None
-    val (appended, freshParts) = baseParts match {
-      case Some((pcol, _)) =>
-        val rows = PartitionedTable.writeFlattened(spark, root, dir,
-          postImage, pcol)
-        (rows.map(_._1), rows)
-      case None =>
-        // appended files must share the carried files' PHYSICAL
-        // schema; a freshly-backed column's physical name is its
-        // logical name. Right-sized output (guide §6): the post-image
-        // inherits the SCAN's partitioning — coalesce to the delta's
-        // real (checkpoint-measured) size so a small update lands one
-        // fragment file, not one per scan split
-        Compute.coalesceToDeltaSize(
-            cmBacked.fold(postImage)(toPhysical(postImage, _)), matched)
-          .write.parquet(s"$root/$dir") // the appended post-images
-        (fs.listStatus(new Path(root, dir)).toSeq
-          .map(_.getPath.getName)
-          .filter(n => !n.startsWith("_") && !n.startsWith("."))
-          .map(n => s"$dir/$n"), Nil)
+    val dir = newDataDirName(base.next)
+    // a PARTITIONED base gets partition-pure post-images (one value
+    // per file BY CONSTRUCTION, even when the SET rewrites the
+    // partition column itself), so a date-partitioned fact keeps
+    // partition pruning through its daily MoR DML; a NULL partition
+    // value fails loudly BEFORE the marker
+    val (appended, freshParts) = writeDelta(spark, root, base, dir) {
+      case Some(_) => postImage
+      // appended files must share the carried files' PHYSICAL
+      // schema; a freshly-backed column's physical name is its
+      // logical name. Right-sized output (guide §6): the post-image
+      // inherits the SCAN's partitioning — coalesce to the delta's
+      // real (checkpoint-measured) size so a small update lands one
+      // fragment file, not one per scan split
+      case None => Compute.coalesceToDeltaSize(
+        cmBacked.fold(postImage)(toPhysical(postImage, _)), matched)
     }
-    // prior vector files carried verbatim (driver copy), this
-    // update's positions appended — O(matched) write, never a
-    // re-encode of the cumulative vector (see [[deleteWhereDV]])
-    carryPriorDv(fs, root, baseDir, dir)
-    positionsOf(matched).coalesce(1).write.mode("append")
-      .parquet(s"$root/$dir/_dv")
-    val out = fs.create(new Path(new Path(root, dir), "_files"), true)
-    try out.write((refs ++ appended).mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-    baseParts.foreach { case (pcol, baseRows) =>
-      PartitionedTable.writeParts(spark, root, dir,
-        baseRows ++ freshParts, pcol)
-    }
-    writeBackedMeta(spark, root, baseDir, dir, tagged.schema,
-      unbackedCols, cmBacked)
-    // committed skipping survives MoR DML: carried rows ride, appended
-    // post-images get fresh read-back stats (O(matched))
-    ZTable.extendStats(spark, root, baseDir, dir, appended)
-    writeOpMeta(spark, root, dir, "UPDATE")
-    writeMarker(spark, root, next, dataDir = dir)
-    maybeAutoCompact(spark, root, live.size + 1)
-    next
+    val (colmap, schema) = backedMeta(unbackedCols, cmBacked, tagged.schema)
+    commitFiles(spark, root, base, dir, base.refs, appended, "UPDATE",
+      freshParts = freshParts, freshDv = Some(positionsOf(matched)),
+      colmap = colmap, schema = schema)
   }
 
   /** MERGE via DELETION VECTOR + APPEND — merge-on-read MERGE, the
@@ -1972,33 +2057,22 @@ object ManifestTable {
       updateCols: Option[Seq[String]], batchKey: String,
       batchKeyRetention: Long = Long.MaxValue): Long = {
     import org.apache.spark.sql.functions.{broadcast, col}
-    val (live, compacted) = commitState(spark, root)
-    val markers = namesOf(live, compacted)
-    if (batchKey.nonEmpty &&
-        appliedKeys(spark, root, live, compacted).contains(batchKey))
-      return markers.map(versionOf).max // replayed batch: no-op
+    val latestBase = latest(spark, root)
+    if (batchKey.nonEmpty && latestBase.exists(_.applied(batchKey)))
+      return latestBase.get.v // replayed batch: no-op
     val src = Generated(spark, root, source, "merge source")
     Checks.enforce(spark, root, src, "merge source")
-    if (markers.isEmpty) { // first commit: the source IS the table
+    if (latestBase.isEmpty) { // first commit: the source IS the table
       val dir = writeVersionData(src, root, 1L)
       writeOpMeta(spark, root, dir, "MERGE")
       writeMarker(spark, root, 1L, batchKey, dir)
       return 1L
     }
-    val base = markers.map(versionOf).max
-    val baseDir = dirOf(spark, root,
-      winnersByVersion(markers)(base), live, compacted)
-    val refs = fileList(spark, root, baseDir).getOrElse {
-      fsOf(spark, root).listStatus(new Path(root, baseDir)).toSeq
-        .map(_.getPath.getName)
-        .filter(n => !n.startsWith("_") && !n.startsWith("."))
-        .map(n => s"$baseDir/$n")
-    }
-    require(refs.nonEmpty, s"version $base of $root has no data files")
+    val base = latestBase.get
     val tagged = positionTagged(
-      ManifestTable.live(spark, root, baseDir,
-        readRefsRaw(spark, root, baseDir, refs)))
-    val cm = colmapOf(spark, root, baseDir)
+      ManifestTable.live(spark, root, base.dir,
+        readRefsRaw(spark, root, base.dir, base.refs)))
+    val cm = colmapOf(spark, root, base.dir)
     // a metadata-only ADD COLUMN pending (unbacked mapping entries):
     // this commit PHYSICALLY BACKS the column in its appended
     // fragments — null-filled at the declared type unless the source
@@ -2007,11 +2081,7 @@ object ManifestTable {
     // null-fill them via the explicit schema). Round-12's
     // "materialize first" refusal, lifted without the tear it
     // guarded against.
-    val unbackedCols: Seq[(String, String)] = cm.toSeq.flatten
-      .filter(e => isUnbacked(e._2))
-      .map(e => (e._1, unbackedType(e._2)))
-    val cmBacked = cm.map(_.map { case (l, p) =>
-      if (isUnbacked(p)) (l, l) else (l, p) })
+    val (unbackedCols, cmBacked) = pendingAdds(cm)
     // LOGICAL view: keys, source columns and the kernel all resolve
     // logical names when a column mapping is active
     val current = cm.fold(tagged)(
@@ -2021,14 +2091,8 @@ object ManifestTable {
     require(keys.forall(dataCols.contains),
       s"merge keys must exist on the target: ${keys.mkString(", ")}")
     // a source that predates the ADD COLUMN null-fills it (the
-    // streaming-sink story: the stream keeps running across the DDL);
-    // any OTHER missing column still fails loudly in the select below
-    val srcFilled = unbackedCols.foldLeft(src) { case (d, (n, t)) =>
-      if (d.columns.contains(n)) d
-      else d.withColumn(n, org.apache.spark.sql.functions.lit(null)
-        .cast(org.apache.spark.sql.types.DataType.fromDDL(t)))
-    }
-    val srcProj = srcFilled.select(dataCols.map(col): _*)
+    // streaming-sink story: the stream keeps running across the DDL)
+    val srcProj = fillPending(src, unbackedCols).select(dataCols.map(col): _*)
     // positions (old images to hide) and matched pre-images come from
     // ONE evaluation — a recompute between the DV write and the
     // post-image write could re-plan the scan and tear them apart.
@@ -2049,58 +2113,22 @@ object ManifestTable {
     val postImage =
       Upsert.upsert(matched.drop("__path", "__ri"), srcProj, keys,
         updateCols)
-    val fs = fsOf(spark, root)
-    val next = base + 1
-    val dir = newDataDirName(next)
-    // PARTITION-PURE append when the base is partitioned (see
-    // [[updateWhereDV]]): fragments land through the flatten — one
-    // partition value per file — and `_parts` extends with their
-    // values, so the reference's daily silver shape (MERGE into a
-    // date-partitioned fact, `dags/logistics-airbyte-sql.py:25-49`)
-    // keeps partition pruning at 100 TB between optimizes.
-    val baseParts =
-      if (cm.isEmpty) PartitionedTable.partsRowsIfAny(spark, root, baseDir)
-      else None
-    val (appended, freshParts) = baseParts match {
-      case Some((pcol, _)) =>
-        val rows = PartitionedTable.writeFlattened(spark, root, dir,
-          postImage, pcol)
-        (rows.map(_._1), rows)
-      case None =>
-        // appended files must share the carried files' PHYSICAL
-        // schema; a freshly-backed column's physical name is its
-        // logical name. Right-sized output: see [[updateWhereDV]] —
-        // the delta's measured size, not the scan's split count,
-        // decides the fragment file count
-        Compute.coalesceToDeltaSize(
-            cmBacked.fold(postImage)(toPhysical(postImage, _)), matched)
-          .write.parquet(s"$root/$dir")
-        (fs.listStatus(new Path(root, dir)).toSeq
-          .map(_.getPath.getName)
-          .filter(n => !n.startsWith("_") && !n.startsWith("."))
-          .map(n => s"$dir/$n"), Nil)
+    val dir = newDataDirName(base.next)
+    // a PARTITIONED base gets partition-pure fragments (see
+    // [[updateWhereDV]]), so the reference's daily silver shape (MERGE
+    // into a date-partitioned fact, `dags/logistics-airbyte-sql.py:25-49`)
+    // keeps partition pruning at 100 TB between optimizes
+    val (appended, freshParts) = writeDelta(spark, root, base, dir) {
+      case Some(_) => postImage
+      // physical names, right-sized: see [[updateWhereDV]]
+      case None => Compute.coalesceToDeltaSize(
+        cmBacked.fold(postImage)(toPhysical(postImage, _)), matched)
     }
-    // prior vector files carried verbatim (driver copy), the batch's
-    // positions appended — O(delta) write (see [[deleteWhereDV]])
-    carryPriorDv(fs, root, baseDir, dir)
-    positionsOf(matched).coalesce(1).write.mode("append")
-      .parquet(s"$root/$dir/_dv")
-    val out = fs.create(new Path(new Path(root, dir), "_files"), true)
-    try out.write((refs ++ appended).mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-    baseParts.foreach { case (pcol, baseRows) =>
-      PartitionedTable.writeParts(spark, root, dir,
-        baseRows ++ freshParts, pcol)
-    }
-    writeBackedMeta(spark, root, baseDir, dir, tagged.schema,
-      unbackedCols, cmBacked)
-    // committed skipping survives the MoR merge: carried rows ride,
-    // appended fragments get fresh read-back stats (O(delta))
-    ZTable.extendStats(spark, root, baseDir, dir, appended)
-    writeOpMeta(spark, root, dir, "MERGE")
-    writeMarker(spark, root, next, batchKey, dir)
-    maybeAutoCompact(spark, root, live.size + 1, batchKeyRetention)
-    next
+    val (colmap, schema) = backedMeta(unbackedCols, cmBacked, tagged.schema)
+    commitFiles(spark, root, base, dir, base.refs, appended, "MERGE",
+      freshParts = freshParts, freshDv = Some(positionsOf(matched)),
+      colmap = colmap, schema = schema, batchKey = batchKey,
+      retention = batchKeyRetention)
   }
 
   /** REORG … APPLY (PURGE) — materialize the deletion vector by
@@ -2119,84 +2147,31 @@ object ManifestTable {
     * purged rewrites get fresh read-back rows — pruning survives the
     * purge. Returns the committed (or current) version. */
   def reorg(spark: SparkSession, root: String): Long = {
-    val (live, compacted) = commitState(spark, root)
-    val markers = namesOf(live, compacted)
-    require(markers.nonEmpty, s"nothing to reorg at $root")
-    val base = markers.map(versionOf).max
-    val baseDir = dirOf(spark, root,
-      winnersByVersion(markers)(base), live, compacted)
-    val dvBytes = dvBytesOf(spark, root, baseDir)
-    if (dvBytes == 0L) return base
-    val refs = fileList(spark, root, baseDir).getOrElse {
-      fsOf(spark, root).listStatus(new Path(root, baseDir)).toSeq
-        .map(_.getPath.getName)
-        .filter(n => !n.startsWith("_") && !n.startsWith("."))
-        .map(n => s"$baseDir/$n")
-    }
-    require(refs.nonEmpty, s"version $base of $root has no data files")
+    val base = baseOf(spark, root, "reorg")
+    val dvBytes = dvBytesOf(spark, root, base.dir)
+    if (dvBytes == 0L) return base.v
     // O(files) distinct file keys of the vector — driver frame read
     // when planning-sized, one collect job past the cap
     val dirtyKeys =
       if (dvBytes <= dvLocalCarryCap.value)
-        MetaIO.dvPositions(spark, s"$root/$baseDir/_dv").keySet
+        MetaIO.dvPositions(spark, s"$root/${base.dir}/_dv").keySet
           .map(_.toString)
-      else dvOf(spark, root, baseDir).get.select("path").distinct()
+      else dvOf(spark, root, base.dir).get.select("path").distinct()
         .collect().map(_.getString(0)).toSet
-    val (dirty, clean) = refs.partition(r =>
+    val (dirty, clean) = base.refs.partition(r =>
       dirtyKeys.contains(fileKeyOf(r)))
-    val fs = fsOf(spark, root)
-    val next = base + 1
-    val dir = newDataDirName(next)
-    // a PARTITIONED base keeps `_parts` through the purge (see
-    // [[optimizeBinPack]]): dirty rewrites land partition-pure via
-    // the flatten, clean files keep their committed rows — REORG on a
+    val dir = newDataDirName(base.next)
+    // a PARTITIONED base keeps `_parts` through the purge: REORG on a
     // date-partitioned MoR fact must not cost its pruning
-    val baseParts =
-      if (colmapOf(spark, root, baseDir).isEmpty)
-        PartitionedTable.partsRowsIfAny(spark, root, baseDir)
-      else None
     val (appended, freshParts) =
-      if (dirty.isEmpty) {
-        fs.mkdirs(new Path(root, dir))
-        (Seq.empty[String], Seq.empty[(String, String)])
-      } else {
-        val purged = ManifestTable.live(spark, root, baseDir,
-          readRefsRaw(spark, root, baseDir, dirty))
-        baseParts match {
-          case Some((pcol, _)) =>
-            val rows = PartitionedTable.writeFlattened(spark, root,
-              dir, purged, pcol)
-            (rows.map(_._1), rows)
-          case None =>
-            purged.write.parquet(s"$root/$dir")
-            (fs.listStatus(new Path(root, dir)).toSeq
-              .map(_.getPath.getName)
-              .filter(n => !n.startsWith("_") && !n.startsWith("."))
-              .map(n => s"$dir/$n"), Nil)
-        }
-      }
-    val out = fs.create(new Path(new Path(root, dir), "_files"), true)
-    try out.write((clean ++ appended).mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-    baseParts.foreach { case (pcol, baseRows) =>
-      val cleanSet = clean.toSet
-      val carriedRows = baseRows.filter(r => cleanSet.contains(r._1))
-      require(carriedRows.size == clean.size,
-        s"partition metadata of $root v$base does not cover every " +
-          "carried file — refusing a commit that would under-cover")
-      PartitionedTable.writeParts(spark, root, dir,
-        carriedRows ++ freshParts, pcol)
-    }
-    carryColmap(spark, root, baseDir, dir)
-    carrySchemaFile(spark, root, baseDir, dir)
-    // skipping stats survive the purge: clean files' rows carried,
-    // purged rewrites get fresh read-back rows (exact, vector gone)
-    ZTable.extendStats(spark, root, baseDir, dir, appended,
-      carriedPaths = Some(clean))
-    writeOpMeta(spark, root, dir, "REORG")
-    writeMarker(spark, root, next, dataDir = dir)
-    maybeAutoCompact(spark, root, live.size + 1)
-    next
+      if (dirty.isEmpty) (Seq.empty[String], Seq.empty[(String, String)])
+      else writeDelta(spark, root, base, dir)(_ =>
+        ManifestTable.live(spark, root, base.dir,
+          readRefsRaw(spark, root, base.dir, dirty)))
+    // the clean files hold no vector rows, so the new version has no
+    // `_dv`; `dvPurged` spares reading the vector to learn that
+    commitFiles(spark, root, base, dir, clean, appended, "REORG",
+      freshParts = freshParts, dvPurged = true)
   }
 
   /** RENAME COLUMN — metadata-only (Delta's column-mapping mode): the
@@ -2298,12 +2273,7 @@ object ManifestTable {
       .getOrElse(sys.error(s"no committed version at $root"))
     val dir = versionDataDir(spark, root, cur)
     colmapOf(spark, root, dir).getOrElse {
-      val refs = fileList(spark, root, dir).getOrElse {
-        fsOf(spark, root).listStatus(new Path(root, dir)).toSeq
-          .map(_.getPath.getName)
-          .filter(n => !n.startsWith("_") && !n.startsWith("."))
-          .map(n => s"$dir/$n")
-      }
+      val refs = refsOf(spark, root, dir)
       require(refs.nonEmpty, s"current version of $root has no data")
       // driver-side footer read — no inference job for a schema probe
       MetaIO.schemaOf(spark, new Path(resolveRef(root, refs.head)))
@@ -2312,42 +2282,14 @@ object ManifestTable {
     }
   }
 
+  /** A metadata-only mapping commit: the files, their vector and the
+    * pinned read schema ride unchanged; only `_colmap` is new. */
   private def commitMapping(spark: SparkSession, root: String,
       cm: Seq[(String, String)], op: String): Long = {
-    val (live, compacted) = commitState(spark, root)
-    val markers = namesOf(live, compacted)
-    require(markers.nonEmpty, s"nothing to alter at $root")
-    val base = markers.map(versionOf).max
-    val baseDir = dirOf(spark, root,
-      winnersByVersion(markers)(base), live, compacted)
-    val refs = fileList(spark, root, baseDir).getOrElse {
-      fsOf(spark, root).listStatus(new Path(root, baseDir)).toSeq
-        .map(_.getPath.getName)
-        .filter(n => !n.startsWith("_") && !n.startsWith("."))
-        .map(n => s"$baseDir/$n")
-    }
-    require(refs.nonEmpty, s"version $base of $root has no data files")
-    val fs = fsOf(spark, root)
-    val next = base + 1
-    val dir = newDataDirName(next)
-    fs.mkdirs(new Path(root, dir))
-    // carry the deletion vector (file keys unchanged); stats/Bloom
-    // DROP — their dim names are physical and a consumer resolving
-    // them through the new logical schema would prune wrongly
-    val dvSrc = new Path(s"$root/$baseDir/_dv")
-    if (fs.exists(dvSrc)) // verbatim carry: file-grain driver copy
-      ZTable.copyFrame(fs, dvSrc.toString, s"$root/$dir/_dv")
-    writeColmap(spark, root, dir, cm)
-    // physical files unchanged: the pinned read schema (if any)
-    // stays valid across a metadata-only mapping commit
-    carrySchemaFile(spark, root, baseDir, dir)
-    val out = fs.create(new Path(new Path(root, dir), "_files"), true)
-    try out.write(refs.mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-    writeOpMeta(spark, root, dir, op)
-    writeMarker(spark, root, next, dataDir = dir)
-    maybeAutoCompact(spark, root, live.size + 1)
-    next
+    val base = baseOf(spark, root, "alter")
+    val dir = newDataDirName(base.next)
+    commitFiles(spark, root, base, dir, base.refs, Nil, op,
+      colmap = Some(cm))
   }
 
   /** UPDATE … SET … WHERE as a committed version: matching rows get
@@ -2423,47 +2365,19 @@ object ManifestTable {
     * inverse — Delta's `RESTORE TABLE … VERSION AS OF` semantics).
     * O(metadata): the new version is a `_files` manifest REFERENCING
     * version `v`'s data files — zero data bytes copied, at any table
-    * size. Version-`v` skipping stats/Bloom frames (`_stats`/`_bloom`,
-    * if present) are re-committed into the new version's dir
-    * (file-metadata-sized), so committed data skipping survives the
-    * restore. [[vacuum]]'s reference-awareness keeps the referenced
-    * dirs alive while this version is retained. Fails loudly if `v`
-    * was vacuumed. Returns the new version. */
+    * size. Version `v`'s metadata frames (`_dv`, `_parts`,
+    * `_stats`/`_bloom`, the column mapping) ride verbatim
+    * ([[commitFiles]]), so its deletions, partition pruning and data
+    * skipping survive the restore. [[vacuum]]'s reference-awareness
+    * keeps the referenced dirs alive while this version is retained.
+    * Fails loudly if `v` was vacuumed. Returns the new version. */
   def restore(spark: SparkSession, root: String, v: Long): Long = {
-    val cur = currentVersion(spark, root)
-      .getOrElse(sys.error(s"nothing to restore at $root"))
-    require(v <= cur, s"version $v of $root does not exist (current $cur)")
-    val srcDir = versionDataDir(spark, root, v) // throws if vacuumed
-    val fs = fsOf(spark, root)
-    val files = fileList(spark, root, srcDir).getOrElse {
-      fs.listStatus(new Path(root, srcDir)).toSeq
-        .map(_.getPath.getName)
-        .filter(n => !n.startsWith("_") && !n.startsWith("."))
-        .map(n => s"$srcDir/$n")
-    }
-    require(files.nonEmpty, s"version $v of $root has no data files")
-    val next = cur + 1
-    val dir = newDataDirName(next)
-    fs.mkdirs(new Path(root, dir))
-    // _dv rides too: restoring a merge-on-read version restores its
-    // deletions (file keys are dir/file, valid across the carry)
-    Seq("_stats", "_bloom", "_dv").foreach { frame =>
-      val src = new Path(s"$root/$srcDir/$frame")
-      if (fs.exists(src)) // verbatim carry: file-grain driver copy
-        ZTable.copyFrame(fs, src.toString, s"$root/$dir/$frame")
-    }
-    // the restored version's logical schema rides with its mapping
-    // (and its pinned physical read schema, when mixed-backed)
-    carryColmap(spark, root, srcDir, dir)
-    carrySchemaFile(spark, root, srcDir, dir)
-    val mp = new Path(s"$root/$dir/_files")
-    val out = fs.create(mp, true)
-    try out.write(files.mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-    writeOpMeta(spark, root, dir, "RESTORE")
-    writeMarker(spark, root, next, dataDir = dir)
-    maybeAutoCompact(spark, root)
-    next
+    val cur = baseOf(spark, root, "restore")
+    require(v <= cur.v,
+      s"version $v of $root does not exist (current ${cur.v})")
+    val src = cur.at(v) // throws if vacuumed
+    val dir = newDataDirName(src.next)
+    commitFiles(spark, root, src, dir, src.refs, Nil, "RESTORE")
   }
 
   /** SHALLOW CLONE (Delta's `CREATE TABLE … SHALLOW CLONE src`): make
@@ -2495,17 +2409,12 @@ object ManifestTable {
     val srcFs = fsOf(spark, sourceRoot)
     // absolutize: relative entries are relative to the SOURCE root;
     // a clone of a clone keeps already-absolute refs verbatim
-    val files = fileList(spark, sourceRoot, srcDir).getOrElse {
-      srcFs.listStatus(new Path(sourceRoot, srcDir)).toSeq
-        .map(_.getPath.getName)
-        .filter(n => !n.startsWith("_") && !n.startsWith("."))
-        .map(n => s"$srcDir/$n")
-    }.map(e => resolveRef(sourceRoot, e))
+    val files = refsOf(spark, sourceRoot, srcDir)
+      .map(e => resolveRef(sourceRoot, e))
     require(files.nonEmpty, s"version $v of $sourceRoot has no data files")
     val fs = fsOf(spark, cloneRoot)
     val next = 1L
     val dir = newDataDirName(next)
-    fs.mkdirs(new Path(cloneRoot, dir))
     Seq("_stats", "_bloom").foreach { frame =>
       val src = new Path(s"$sourceRoot/$srcDir/$frame")
       if (srcFs.exists(src)) {
@@ -2541,6 +2450,11 @@ object ManifestTable {
         }
       }
     }
+    // the registers keep their geometry: without `_GEOM` the clone
+    // would probe scaled registers at the legacy fixed size and miss
+    // keys the source finds
+    ZTable.geomOf(spark, sourceRoot, srcDir).foreach(
+      ZTable.writeGeom(fs, cloneRoot, dir, _))
     // the deletion vector rides VERBATIM: its `path` column is the
     // dir/file key, which an absolute external ref still ends in
     val dvSrc = new Path(s"$sourceRoot/$srcDir/_dv")
@@ -2553,9 +2467,7 @@ object ManifestTable {
       writeColmap(spark, cloneRoot, dir, cmS))
     schemaOf(spark, sourceRoot, srcDir).foreach(st =>
       writeSchemaFile(spark, cloneRoot, dir, st))
-    val out = fs.create(new Path(s"$cloneRoot/$dir/_files"), true)
-    try out.write(files.mkString("\n").getBytes("UTF-8"))
-    finally out.close()
+    writeFileList(fs, cloneRoot, dir, files)
     writeOpMeta(spark, cloneRoot, dir, "CLONE")
     writeMarker(spark, cloneRoot, next, dataDir = dir)
     next
@@ -2607,15 +2519,10 @@ object ManifestTable {
     val fs = fsOf(spark, root)
     val p = new Path(root, dataDir)
     require(fs.exists(p), s"no directory $dataDir under $root")
-    val files = fs.listStatus(p).toSeq.map(_.getPath.getName)
-      .filter(n => !n.startsWith("_") && !n.startsWith("."))
-      .map(n => s"$dataDir/$n")
+    val files = dataFilesIn(fs, root, dataDir)
     require(files.nonEmpty, s"$root/$dataDir has no data files")
     val dir = newDataDirName(1L)
-    fs.mkdirs(new Path(root, dir))
-    val out = fs.create(new Path(new Path(root, dir), "_files"), true)
-    try out.write(files.mkString("\n").getBytes("UTF-8"))
-    finally out.close()
+    writeFileList(fs, root, dir, files)
     writeOpMeta(spark, root, dir, "CONVERT")
     writeMarker(spark, root, 1L, dataDir = dir)
     1L
@@ -2734,92 +2641,31 @@ object ManifestTable {
       minFileBytes: Long = 32L * 1024 * 1024,
       targetFiles: Int = 1): Long = {
     require(targetFiles >= 1, "targetFiles must be >= 1")
-    val (live, compacted) = commitState(spark, root)
-    val markers = namesOf(live, compacted)
-    require(markers.nonEmpty, s"nothing to optimize at $root")
-    val base = markers.map(versionOf).max
-    val baseDir = dirOf(spark, root,
-      winnersByVersion(markers)(base), live, compacted)
-    val refs = fileList(spark, root, baseDir).getOrElse {
-      fsOf(spark, root).listStatus(new Path(root, baseDir)).toSeq
-        .map(_.getPath.getName)
-        .filter(n => !n.startsWith("_") && !n.startsWith("."))
-        .map(n => s"$baseDir/$n")
-    }
-    require(refs.nonEmpty, s"version $base of $root has no data files")
+    val base = baseOf(spark, root, "optimize")
     val fs = fsOf(spark, root)
     // O(files) metadata listing — the planning grain
-    val (small, large) = refs.partition(r =>
+    val (small, large) = base.refs.partition(r =>
       fs.getFileStatus(new Path(resolveRef(root, r))).getLen
         < minFileBytes)
-    if (small.size < 2) return base
-    val smallKeys = small.map(fileKeyOf)
+    if (small.size < 2) return base.v
     // rewrite the small files RAW (physical names preserved — the
     // carried large files keep theirs, one mixed read must not tear);
     // their vector slice materializes in the rewrite
-    val raw = readRefsRaw(spark, root, baseDir, small)
-    val next = base + 1
-    val dir = newDataDirName(next)
-    val rewritten = ManifestTable.live(spark, root, baseDir, raw)
-    // a PARTITIONED base keeps its `_parts` through the fold: the
-    // compacted output lands partition-pure via the same flatten the
-    // DML paths use (rows repartitioned BY the partition column so a
-    // partition's fragments fold into one file, not targetFiles ×
-    // partitions slivers) — the weekly file-count hygiene of a
-    // date-partitioned streaming MoR fact must not cost its pruning
-    val baseParts =
-      if (colmapOf(spark, root, baseDir).isEmpty)
-        PartitionedTable.partsRowsIfAny(spark, root, baseDir)
-      else None
-    val (appended, freshParts) = baseParts match {
-      case Some((pcol, _)) =>
-        val rows = PartitionedTable.writeFlattened(spark, root, dir,
-          rewritten.repartition(targetFiles,
-            org.apache.spark.sql.functions.col(pcol)), pcol)
-        (rows.map(_._1), rows)
-      case None =>
-        rewritten.repartition(targetFiles).write.parquet(s"$root/$dir")
-        (fs.listStatus(new Path(root, dir)).toSeq
-          .map(_.getPath.getName)
-          .filter(n => !n.startsWith("_") && !n.startsWith("."))
-          .map(n => s"$dir/$n"), Nil)
+    val rewritten = ManifestTable.live(spark, root, base.dir,
+      readRefsRaw(spark, root, base.dir, small))
+    val dir = newDataDirName(base.next)
+    // a PARTITIONED base keeps its `_parts` through the fold: rows
+    // repartition BY the partition column so a partition's fragments
+    // fold into one file, not targetFiles × partitions slivers — the
+    // weekly file-count hygiene of a date-partitioned streaming MoR
+    // fact must not cost its pruning
+    val (appended, freshParts) = writeDelta(spark, root, base, dir) {
+      case Some(pcol) => rewritten.repartition(targetFiles,
+        org.apache.spark.sql.functions.col(pcol))
+      case None => rewritten.repartition(targetFiles)
     }
-    // vector rows hitting LARGE files survive — driver frame
-    // filter+rewrite when planning-sized (zero Spark actions), else
-    // the anti-join single pass (write, then drop if empty — row
-    // count from the written footers, no extra job)
-    if (!MetaIO.carryFrameFiltered(spark, s"$root/$baseDir/_dv",
-        s"$root/$dir/_dv", "path", large.map(fileKeyOf).toSet,
-        dvLocalCarryCap.value)) {
-      import spark.implicits._
-      val surviving = MetaIO.readParquet(spark, s"$root/$baseDir/_dv")
-        .join(smallKeys.toDF("path"), Seq("path"), "left_anti")
-      surviving.coalesce(1).write.parquet(s"$root/$dir/_dv")
-      if (MetaIO.footerRowCount(spark, s"$root/$dir/_dv") == 0L)
-        fs.delete(new Path(new Path(root, dir), "_dv"), true)
-    }
-    val out = fs.create(new Path(new Path(root, dir), "_files"), true)
-    try out.write((large ++ appended).mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-    baseParts.foreach { case (pcol, baseRows) =>
-      val largeSet = large.toSet
-      val carriedRows = baseRows.filter(r => largeSet.contains(r._1))
-      require(carriedRows.size == large.size,
-        s"partition metadata of $root v$base does not cover every " +
-          "carried file — refusing a commit that would under-cover")
-      PartitionedTable.writeParts(spark, root, dir,
-        carriedRows ++ freshParts, pcol)
-    }
-    carryColmap(spark, root, baseDir, dir)
-    carrySchemaFile(spark, root, baseDir, dir)
-    // skipping stats survive the binPack: large files' rows carried,
-    // compacted output gets fresh read-back rows (exact post-DV)
-    ZTable.extendStats(spark, root, baseDir, dir, appended,
-      carriedPaths = Some(large))
-    writeOpMeta(spark, root, dir, "OPTIMIZE")
-    writeMarker(spark, root, next, dataDir = dir)
-    maybeAutoCompact(spark, root, live.size + 1)
-    next
+    commitFiles(spark, root, base, dir, large, appended, "OPTIMIZE",
+      freshParts = freshParts)
   }
 
   /** Drop the DATA of all versions older than the newest `keepLast`
@@ -2995,11 +2841,7 @@ object ManifestTable {
     val dir = dirOf(spark, root,
       winnersByVersion(markers)(cur), live, compacted)
     val refs = fileList(spark, root, dir)
-    val paths = refs.getOrElse(
-      fs.listStatus(new Path(root, dir)).toSeq
-        .map(_.getPath.getName)
-        .filter(n => !n.startsWith("_") && !n.startsWith("."))
-        .map(n => s"$dir/$n"))
+    val paths = refs.getOrElse(dataFilesIn(fs, root, dir))
     val bytes = paths.map { r =>
       try fs.getFileStatus(new Path(resolveRef(root, r))).getLen
       catch { case _: java.io.FileNotFoundException => 0L }

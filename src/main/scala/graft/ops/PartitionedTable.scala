@@ -138,8 +138,11 @@ object PartitionedTable {
 
   /** The partition metadata of version `v`: one (path, value, pcol)
     * row per data file. Fails loudly on an unpartitioned version. */
-  def parts(spark: SparkSession, root: String, v: Long): DataFrame = {
-    val dir = ManifestTable.versionDataDir(spark, root, v)
+  def parts(spark: SparkSession, root: String, v: Long): DataFrame =
+    partsAt(spark, root, v, ManifestTable.versionDataDir(spark, root, v))
+
+  private def partsAt(spark: SparkSession, root: String, v: Long,
+      dir: String): DataFrame = {
     val p = new org.apache.hadoop.fs.Path(s"$root/$dir/_parts")
     require(fs(spark, root).exists(p),
       s"version $v of $root carries no partition metadata — commit " +
@@ -185,16 +188,15 @@ object PartitionedTable {
     * inductive contract). */
   def appendPartitioned(spark: SparkSession, root: String,
       df: DataFrame): Long = {
-    val (base, baseDir, pcol, baseRows) = resolve(spark, root)
+    val (base, _) = resolve(spark, root)
     val batch = Generated(spark, root, df, "appendPartitioned")
     Checks.enforce(spark, root, batch, "appendPartitioned")
-    val next = base + 1
-    val dir = ManifestTable.newDataDirName(next)
-    val fresh = writeFlattened(spark, root, dir, batch, pcol)
+    val dir = ManifestTable.newDataDirName(base.next)
+    val (appended, fresh) =
+      ManifestTable.writeDelta(spark, root, base, dir)(_ => batch)
     require(fresh.nonEmpty, "appendPartitioned of an empty batch")
-    commitCarry(spark, root, dir, next,
-      carried = baseRows, fresh = fresh, pcol = pcol,
-      baseDir = baseDir, op = "WRITE", carryAll = true)
+    ManifestTable.commitFiles(spark, root, base, dir, base.refs,
+      appended, "WRITE", freshParts = fresh)
   }
 
   /** [[appendPartitioned]] with the OCC rebase-retry loop — the
@@ -237,19 +239,16 @@ object PartitionedTable {
     * them). The 100-TB retire-a-day operation at O(metadata). */
   def dropPartitions(spark: SparkSession, root: String,
       values: Seq[String]): Long = {
-    val (base, baseDir, pcol, baseRows) = resolve(spark, root)
+    val (base, baseRows) = resolve(spark, root)
     val drop = values.toSet
     val (dropped, kept) = baseRows.partition(r => drop.contains(r._2))
     require(dropped.nonEmpty,
       s"no partition of $root matches ${values.mkString(",")}")
     require(kept.nonEmpty,
       s"dropping every partition of $root — use a plain empty commit")
-    val next = base + 1
-    val dir = ManifestTable.newDataDirName(next)
-    fs(spark, root).mkdirs(new org.apache.hadoop.fs.Path(s"$root/$dir"))
-    commitCarry(spark, root, dir, next, carried = kept,
-      fresh = Nil, pcol = pcol, baseDir = baseDir, op = "DELETE",
-      carryAll = false)
+    val dir = ManifestTable.newDataDirName(base.next)
+    ManifestTable.commitFiles(spark, root, base, dir, kept.map(_._1), Nil,
+      "DELETE")
   }
 
   /** DELETE rows matching `extra` INSIDE the named partitions: only
@@ -259,32 +258,26 @@ object PartitionedTable {
     * (NULL = kept). */
   def deleteWhereInPartitions(spark: SparkSession, root: String,
       values: Seq[String], extra: Column): Long = {
-    val (base, baseDir, pcol, baseRows) = resolve(spark, root)
+    val (base, baseRows) = resolve(spark, root)
     val target = values.toSet
     val (touched, untouched) = baseRows.partition(r =>
       target.contains(r._2))
     require(touched.nonEmpty,
       s"no partition of $root matches ${values.mkString(",")}")
-    val next = base + 1
-    val dir = ManifestTable.newDataDirName(next)
+    val dir = ManifestTable.newDataDirName(base.next)
     // the base version's DELETION VECTOR applies to the touched read
     // (reading the raw paths would RESURRECT rows a prior DV delete
     // removed); the rewrite MATERIALIZES those deletions for the
-    // touched files — their DV rows drop with the files — while the
-    // untouched files' rows carry in [[commitCarry]]
-    val touchedLive = ManifestTable.live(spark, root, baseDir,
+    // touched files — their DV rows drop with the files
+    val touchedLive = ManifestTable.live(spark, root, base.dir,
       MetaIO.readParquet(spark,
         touched.map(r => ManifestTable.resolveRef(root, r._1))))
     val remaining = touchedLive.filter(!coalesce(extra, lit(false)))
-    val fresh =
-      if (remaining.isEmpty) {
-        fs(spark, root).mkdirs(
-          new org.apache.hadoop.fs.Path(s"$root/$dir"))
-        Nil
-      } else writeFlattened(spark, root, dir, remaining, pcol)
-    commitCarry(spark, root, dir, next, carried = untouched,
-      fresh = fresh, pcol = pcol, baseDir = baseDir, op = "DELETE",
-      carryAll = false)
+    val (appended, fresh) =
+      if (remaining.isEmpty) (Nil, Nil)
+      else ManifestTable.writeDelta(spark, root, base, dir)(_ => remaining)
+    ManifestTable.commitFiles(spark, root, base, dir, untouched.map(_._1),
+      appended, "DELETE", freshParts = fresh)
   }
 
   /** REPLACE the named partitions' content with `df`'s rows as ONE
@@ -310,27 +303,22 @@ object PartitionedTable {
     require(batchKey.nonEmpty, "replacePartitionsBatch needs a key")
     if (ManifestTable.appliedBatchKeys(spark, root).contains(batchKey))
       return None
-    val (base, baseDir, pcol, baseRows) = resolve(spark, root)
+    val (base, baseRows) = resolve(spark, root)
     val target = values.toSet
     val untouched = baseRows.filterNot(r => target.contains(r._2))
     val full = Generated(spark, root, df, "replacePartitionsBatch")
     Checks.enforce(spark, root, full, "replacePartitionsBatch")
-    val next = base + 1
-    val dir = ManifestTable.newDataDirName(next)
-    val fresh =
-      if (full.isEmpty) {
-        fs(spark, root).mkdirs(
-          new org.apache.hadoop.fs.Path(s"$root/$dir"))
-        Nil
-      } else writeFlattened(spark, root, dir, full, pcol)
+    val dir = ManifestTable.newDataDirName(base.next)
+    val (appended, fresh) =
+      if (full.isEmpty) (Nil, Nil)
+      else ManifestTable.writeDelta(spark, root, base, dir)(_ => full)
     val stray = fresh.map(_._2).toSet -- target
     require(stray.isEmpty,
       s"replacePartitionsBatch of $root: the batch carries partition " +
         s"values outside the named set: ${stray.mkString(",")}")
-    commitCarry(spark, root, dir, next, carried = untouched,
-      fresh = fresh, pcol = pcol, baseDir = baseDir, op = "WRITE",
-      carryAll = false, batchKey = batchKey)
-    Some(next)
+    Some(ManifestTable.commitFiles(spark, root, base, dir,
+      untouched.map(_._1), appended, "WRITE", freshParts = fresh,
+      batchKey = batchKey))
   }
 
   /** Pruned read of the CURRENT version: open ONLY the files of the
@@ -339,7 +327,7 @@ object PartitionedTable {
     * correctly-schemed empty frame when nothing matches. */
   def readPartitions(spark: SparkSession, root: String,
       values: Seq[String]): DataFrame = {
-    val (_, dir, _, rows) = resolve(spark, root)
+    val (base, rows) = resolve(spark, root)
     val want = values.toSet
     val paths = rows.filter(r => want.contains(r._2)).map(_._1)
     if (paths.isEmpty)
@@ -347,63 +335,26 @@ object PartitionedTable {
     else {
       // a merge-on-read DELETE's vector applies to the pruned read
       // too (reading raw paths would resurrect deleted rows)
-      ManifestTable.live(spark, root, dir, MetaIO.readParquet(spark,
+      ManifestTable.live(spark, root, base.dir, MetaIO.readParquet(spark,
         paths.map(p => ManifestTable.resolveRef(root, p))))
     }
   }
 
-  /** The current version's (version, dir, pcol, (path, value) rows).
-    * O(files) driver-side metadata — the planning grain. */
+  /** The current version — its `_parts` rows known, so a commit from
+    * it reads them once — with its (path, value) rows. O(files)
+    * metadata — the planning grain. */
   private def resolve(spark: SparkSession, root: String)
-      : (Long, String, String, Seq[(String, String)]) = {
-    val base = ManifestTable.currentVersion(spark, root)
+      : (ManifestTable.Base, Seq[(String, String)]) = {
+    val base = ManifestTable.latest(spark, root)
       .getOrElse(sys.error(s"no committed version at $root"))
-    val rows = parts(spark, root, base).collect()
+    val rows = partsAt(spark, root, base.v, base.dir).collect()
     require(rows.nonEmpty,
-      s"version $base of $root has an EMPTY partition metadata frame " +
-        "— the table holds no partitions (every partition was deleted " +
-        "or dropped); re-establish with commitPartitioned")
+      s"version ${base.v} of $root has an EMPTY partition metadata " +
+        "frame — the table holds no partitions (every partition was " +
+        "deleted or dropped); re-establish with commitPartitioned")
     val pcol = rows.head.getString(rows.head.fieldIndex("pcol"))
-    (base, ManifestTable.versionDataDir(spark, root, base), pcol,
-      rows.toSeq.map(r => (r.getString(r.fieldIndex("path")),
-        r.getString(r.fieldIndex("value")))))
-  }
-
-  /** Shared carry-commit tail: `_files` = carried refs + fresh files,
-    * `_parts` = both sides' rows, the base's DELETION VECTOR filtered
-    * to surviving files (a carry that dropped the vector would
-    * silently RESURRECT DV-deleted rows in the carried files),
-    * skipping stats extended when the base committed any
-    * ([[ZTable.extendStats]] — `carryAll` = every base file survives,
-    * the O(metadata) file-grain copy path), then op metadata + the
-    * marker. */
-  private def commitCarry(spark: SparkSession, root: String,
-      dir: String, next: Long, carried: Seq[(String, String)],
-      fresh: Seq[(String, String)], pcol: String, baseDir: String,
-      op: String, carryAll: Boolean, batchKey: String = ""): Long = {
-    require(carried.nonEmpty || fresh.nonEmpty,
-      s"commit of $root would have NO data files and no partitions — " +
-        "use a plain empty commit (ManifestTable.commit) instead")
-    val f = fs(spark, root)
-    val manifest = (carried.map(_._1) ++ fresh.map(_._1)).mkString("\n")
-    val out = f.create(
-      new org.apache.hadoop.fs.Path(s"$root/$dir/_files"), true)
-    try out.write(manifest.getBytes("UTF-8")) finally out.close()
-    writeParts(spark, root, dir, carried ++ fresh, pcol)
-    // the base's deletion vector rides, filtered to the files still
-    // referenced (rows of dropped/rewritten files fall away with
-    // them; FRESH files are new — they can have no DV rows): driver
-    // IO when planning-sized, semi-join past the cap
-    ManifestTable.carryDvFiltered(spark, root, baseDir, dir,
-      carried.map(r => ManifestTable.fileKeyOf(r._1)).toSet)
-    // committed skipping stats survive partitioned DML (no-op when
-    // the base never committed stats): carried files keep their
-    // rows, fresh files get O(fresh) read-back rows
-    ZTable.extendStats(spark, root, baseDir, dir, fresh.map(_._1),
-      carriedPaths = if (carryAll) None else Some(carried.map(_._1)))
-    ManifestTable.writeOpMeta(spark, root, dir, op)
-    ManifestTable.writeMarker(spark, root, next, batchKey, dir)
-    ManifestTable.maybeAutoCompact(spark, root)
-    next
+    val pr = rows.toSeq.map(r => (r.getString(r.fieldIndex("path")),
+      r.getString(r.fieldIndex("value"))))
+    (base.withParts(pcol, pr), pr)
   }
 }

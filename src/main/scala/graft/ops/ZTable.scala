@@ -98,7 +98,7 @@ object ZTable {
     }
   }
 
-  private def writeGeom(f: org.apache.hadoop.fs.FileSystem,
+  private[ops] def writeGeom(f: org.apache.hadoop.fs.FileSystem,
       root: String, dir: String, bpk: Long): Unit = {
     val p = geomPath(root, dir)
     if (f.exists(p)) return
@@ -290,8 +290,7 @@ object ZTable {
       if (ManifestTable.dvBytesOf(spark, root, baseDir) > 0L ||
           ManifestTable.colmapOf(spark, root, baseDir).nonEmpty) None
       else {
-        val refs = ManifestTable.versionFileRefs(spark, root, base)
-          .getOrElse(dataPaths(spark, root, baseDir))
+        val refs = ManifestTable.refsOf(spark, root, baseDir)
         MetaIO.footerIntStats(spark,
             refs.map(r => ManifestTable.resolveRef(root, r)),
             xCol, yCol)
@@ -325,7 +324,8 @@ object ZTable {
       .sortWithinPartitions(col("__z"), col(tieCol))
       .drop("__z")
       .write.parquet(s"$root/$dir")
-    writeStats(spark, root, dir, dataPaths(spark, root, dir),
+    writeStats(spark, root, dir,
+      ManifestTable.dataFilesIn(fs(spark, root), root, dir),
       xCol, yCol, bloomCol, carriedStats = None, carriedBloom = None)
     ManifestTable.writeOpMeta(spark, root, dir, "OPTIMIZE")
     ManifestTable.writeMarker(spark, root, next, dataDir = dir)
@@ -361,17 +361,16 @@ object ZTable {
       filesPerPartition: Int = 1, bloomCol: Option[String] = None,
       bits: Int = 16, expectPcol: Option[String] = None): Long = {
     require(filesPerPartition >= 1, "filesPerPartition must be >= 1")
-    val base = ManifestTable.currentVersion(spark, root)
-      .getOrElse(sys.error(s"nothing to optimize at $root"))
-    val baseDir = ManifestTable.versionDataDir(spark, root, base)
+    val base0 = ManifestTable.baseOf(spark, root, "optimize")
+    val baseDir = base0.dir
     require(ManifestTable.colmapOf(spark, root, baseDir).isEmpty,
       s"partition-scoped OPTIMIZE does not compose with column " +
         "mapping (a rename already drops `_parts`)")
-    val (pcol, baseRows) = PartitionedTable
-      .partsRowsIfAny(spark, root, baseDir)
-      .getOrElse(sys.error(s"version $base of $root carries no " +
+    val (pcol, baseRows) = base0.parts
+      .getOrElse(sys.error(s"version ${base0.v} of $root carries no " +
         "partition metadata — use optimizeZOrder (whole-table) or " +
         "commit through PartitionedTable first"))
+    val base = base0.withParts(pcol, baseRows)
     // the SQL form's WHERE column must BE the partition column — a
     // predicate on any other column is not a partition scope and
     // must refuse, not silently optimize the wrong slice
@@ -388,8 +387,7 @@ object ZTable {
     val cols = cur.columns.toSet
     (Seq(xCol, yCol, tieCol, pcol) ++ bloomCol).foreach(c =>
       require(cols.contains(c), s"no column $c in $root (has $cols)"))
-    val next = base + 1
-    val dir = ManifestTable.newDataDirName(next)
+    val dir = ManifestTable.newDataDirName(base.next)
     // normalize dims from the TOUCHED slice's bounds (the curve is
     // local to the rewrite; committed stats keep raw values, so
     // pruning stays exact regardless — see [[optimizeZOrder]])
@@ -413,31 +411,17 @@ object ZTable {
         col(pcol), col("__z"), col(tieCol))
       .sortWithinPartitions(col(pcol), col("__z"), col(tieCol))
       .drop("__z")
-    val fresh = PartitionedTable.writeFlattened(spark, root, dir,
-      clustered, pcol)
-    val f = fs(spark, root)
+    val (appended, freshParts) =
+      ManifestTable.writeDelta(spark, root, base, dir)(_ => clustered)
     val untouchedPaths = untouched.map(_._1)
-    val manifest = (untouchedPaths ++ fresh.map(_._1)).mkString("\n")
-    val out = f.create(
-      new org.apache.hadoop.fs.Path(s"$root/$dir/_files"), true)
-    try out.write(manifest.getBytes("UTF-8")) finally out.close()
-    PartitionedTable.writeParts(spark, root, dir,
-      untouched ++ fresh, pcol)
-    // vector rows of untouched files survive; the touched files'
-    // slice materialized in the rewrite
-    ManifestTable.carryDvFiltered(spark, root, baseDir, dir,
-      untouchedPaths.map(ManifestTable.fileKeyOf).toSet)
-    // stats: extend when the base has them; otherwise ESTABLISH for
-    // the whole version (partial coverage would be unsound)
-    val extended = extendStats(spark, root, baseDir, dir,
-      fresh.map(_._1), carriedPaths = Some(untouchedPaths))
-    if (!extended)
-      establishStats(spark, root, dir,
-        untouchedPaths ++ fresh.map(_._1), xCol, yCol, bloomCol)
-    ManifestTable.writeOpMeta(spark, root, dir, "OPTIMIZE")
-    ManifestTable.writeMarker(spark, root, next, dataDir = dir)
-    ManifestTable.maybeAutoCompact(spark, root)
-    next
+    // stats: the commit extends the base's; a base without any gets
+    // them ESTABLISHED for the whole version (partial coverage would
+    // be unsound)
+    if (base.stats.isEmpty)
+      establishStats(spark, root, dir, untouchedPaths ++ appended, xCol,
+        yCol, bloomCol)
+    ManifestTable.commitFiles(spark, root, base, dir, untouchedPaths,
+      appended, "OPTIMIZE", freshParts = freshParts)
   }
 
   /** The committed skipping stats of version `v` — one row per data
@@ -563,34 +547,23 @@ object ZTable {
 
   /** Shared scoped-rewrite skeleton: partition the current version's
     * files by committed-range intersection with [lo, hi], rewrite the
-    * intersecting ones through `transform`, carry the rest by
-    * reference, recompute stats/Bloom for the rewritten files only,
-    * and commit file-list + stats + bloom as the next version. */
+    * intersecting ones through `transform`, and commit them with the
+    * rest carried by reference ([[ManifestTable.commitFiles]]: stats/
+    * Bloom rows of the carried files ride, the rewrites get fresh
+    * ones). */
   private def rewriteScoped(spark: SparkSession, root: String, lo: Long,
       hi: Long, op: String)(
       transform: (DataFrame, String) => DataFrame): Long = {
-    val base = ManifestTable.currentVersion(spark, root)
-      .getOrElse(sys.error(s"no committed version at $root"))
-    // O(files) planning metadata read on the DRIVER (no Spark job) —
-    // the round-15 frameRows move applied to the scoped-DML planner
-    val stBaseDir = ManifestTable.versionDataDir(spark, root, base)
-    val stFrame = s"$root/$stBaseDir/_stats"
-    require(fs(spark, root).exists(
-      new org.apache.hadoop.fs.Path(stFrame)),
-      s"version $base of $root has no committed skipping stats — run " +
-        "optimizeZOrder first")
-    val stSchema = MetaIO.schemaOf(spark,
-      new org.apache.hadoop.fs.Path(stFrame)).getOrElse(
-      sys.error(s"empty stats frame at $root v$base"))
-    val st = MetaIO.frameRowsAs(spark, stFrame, stSchema)
-      .getOrElse(stats(spark, root, base).collect().toSeq).toArray
-    require(st.nonEmpty, s"empty stats at $root v$base")
+    val base0 = ManifestTable.baseOf(spark, root, op.toLowerCase)
+    // O(files) planning metadata read on the DRIVER (no Spark job),
+    // once: the commit's stats carry reuses the same rows
+    require(base0.stats.isDefined, s"version ${base0.v} of $root has " +
+      "no committed skipping stats — run optimizeZOrder first")
+    val st = base0.stats.get._2.toArray
+    require(st.nonEmpty, s"empty stats at $root v${base0.v}")
     def s(r: org.apache.spark.sql.Row, c: String) =
       r.getString(r.fieldIndex(c))
     val xCol = s(st.head, "x_col")
-    val yCol = s(st.head, "y_col")
-    val bloomCol = Option(st.head.get(st.head.fieldIndex("bloom_col")))
-      .map(_.toString)
     val (touched, untouched) = st.partition { r =>
       val (iLo, iHi) = (r.fieldIndex("min_x"), r.fieldIndex("max_x"))
       // NULL bounds = unknown range: conservatively touched
@@ -598,47 +571,25 @@ object ZTable {
         !(r.getLong(iHi) < lo || r.getLong(iLo) > hi)
     }
     require(touched.nonEmpty,
-      s"no file of $root v$base intersects [$lo,$hi] — nothing to do")
+      s"no file of $root v${base0.v} intersects [$lo,$hi] — nothing to do")
     require(untouched.nonEmpty,
-      s"every file of $root v$base intersects [$lo,$hi] — use the " +
+      s"every file of $root v${base0.v} intersects [$lo,$hi] — use the " +
         "unscoped DML (a full rewrite has no scope to exploit)")
-    val next = base + 1
-    val dir = ManifestTable.newDataDirName(next)
+    // the stats rows list exactly the version's files
+    val base = base0.withRefs(st.toSeq.map(r => s(r, "path")))
+    val dir = ManifestTable.newDataDirName(base.next)
     val touchedPaths = touched.map(r => s(r, "path")).toIndexedSeq
-    val baseDir = ManifestTable.versionDataDir(spark, root, base)
     // a merge-on-read version's deletions MATERIALIZE for the files
     // this rewrite touches (they are being rewritten anyway) and are
     // CARRIED for the untouched rest
-    val touchedCur = ManifestTable.live(spark, root, baseDir,
+    val touchedCur = ManifestTable.live(spark, root, base.dir,
       MetaIO.readParquet(spark,
         touchedPaths.map(p => ManifestTable.resolveRef(root, p))))
     transform(touchedCur, xCol)
       .write.parquet(s"$root/$dir")
-    val newPaths = dataPaths(spark, root, dir)
-    val untouchedPaths = untouched.map(r => s(r, "path")).toIndexedSeq
-    // self-contained version metadata: carried stats/bloom rows ride
-    // into the NEW dir, so stats(v) never chases old dirs. Built from
-    // the rows ALREADY collected above (O(files) driver memory) — no
-    // second read of the stats parquet per DML
-    val bloomDir = s"$root/$baseDir/_bloom"
-    val carriedBloom =
-      Option.when(fs(spark, root).exists(
-        new org.apache.hadoop.fs.Path(bloomDir)))(
-        bloomDir -> untouchedPaths.toSet)
-    writeStats(spark, root, dir, newPaths, xCol, yCol, bloomCol,
-      Some((stSchema, untouched.toSeq)), carriedBloom,
-      bloomBpk = geomOf(spark, root, baseDir))
-    ManifestTable.carryDvFiltered(spark, root, baseDir, dir,
-      untouchedPaths.map(ManifestTable.fileKeyOf).toSet)
-    val manifest = (untouchedPaths ++ newPaths).mkString("\n")
-    val f = fs(spark, root)
-    val mp = new org.apache.hadoop.fs.Path(s"$root/$dir/_files")
-    val out = f.create(mp, true)
-    try out.write(manifest.getBytes("UTF-8")) finally out.close()
-    ManifestTable.writeOpMeta(spark, root, dir, op)
-    ManifestTable.writeMarker(spark, root, next, dataDir = dir)
-    ManifestTable.maybeAutoCompact(spark, root)
-    next
+    ManifestTable.commitFiles(spark, root, base, dir,
+      untouched.toSeq.map(r => s(r, "path")),
+      ManifestTable.dataFilesIn(fs(spark, root), root, dir), op)
   }
 
   /** ESTABLISH committed skipping stats for a freshly-written version
@@ -672,24 +623,20 @@ object ZTable {
     * Appended fragments are not z-clustered, so their ranges may be
     * wide — pruning stays SOUND (read-back min/max are exact), just
     * less selective on fragments until the next re-cluster. No-op
-    * when the base version has no committed stats. Returns true iff
-    * frames were written. */
+    * when the base version has no committed stats (or only an empty
+    * frame while files are appended or dropped). */
   private[ops] def extendStats(spark: SparkSession, root: String,
-      baseDir: String, newDir: String, appendedPaths: Seq[String],
-      carriedPaths: Option[Seq[String]] = None): Boolean = {
+      base: ManifestTable.Base, newDir: String, appendedPaths: Seq[String],
+      carriedPaths: Option[Seq[String]]): Unit = {
     val f = fs(spark, root)
+    val baseDir = base.dir
     val stPath = new org.apache.hadoop.fs.Path(s"$root/$baseDir/_stats")
-    if (!f.exists(stPath)) return false
-    // frame HEAD (x_col/y_col/bloom_col) from a driver-side parquet
-    // read, memoized per immutable dir — no Spark job per DML commit
-    val head = MetaIO.frameHead(spark, stPath.toString)
-      .getOrElse(return false)
-    def s(c: String) = head(c).asInstanceOf[String]
-    val xCol = s("x_col")
-    val yCol = s("y_col")
-    val bloomCol = Option(head("bloom_col")).map(_.toString)
+    if (!f.exists(stPath)) return
     val bloomPath = new org.apache.hadoop.fs.Path(s"$root/$baseDir/_bloom")
     val hasBloom = f.exists(bloomPath)
+    def dims(head: String => Any) = (head("x_col").asInstanceOf[String],
+      head("y_col").asInstanceOf[String],
+      Option(head("bloom_col")).map(_.toString))
     carriedPaths match {
       case None =>
         // carry-ALL fast path (every MoR DML commit): the carried
@@ -699,10 +646,17 @@ object ZTable {
         // union-rewrite re-shuffled O(files × 256) Bloom rows through
         // a Spark job on EVERY commit — measured ~3 s of the 100×
         // mergeBatchDV wall; the copy is milliseconds at any scale.
+        // The frame HEAD (dim names) is read only when fresh rows
+        // need it — driver parquet read, memoized per immutable dir.
+        val head =
+          if (appendedPaths.isEmpty) None
+          else Some(MetaIO.frameHead(spark, stPath.toString)
+            .getOrElse(return))
         copyFrame(f, s"$root/$baseDir/_stats", s"$root/$newDir/_stats")
         if (hasBloom)
           copyFrame(f, bloomPath.toString, s"$root/$newDir/_bloom")
-        if (appendedPaths.nonEmpty)
+        head.foreach { h =>
+          val (xCol, yCol, bloomCol) = dims(h)
           // fresh fragment registers MUST follow the BASE frame's
           // geometry (the copied rows' word/bits were computed under
           // it and cannot be re-derived) — scaled iff the base is
@@ -710,28 +664,20 @@ object ZTable {
             bloomCol.filter(_ => hasBloom), carriedStats = None,
             carriedBloom = None, append = true,
             bloomBpk = geomOf(spark, root, baseDir))
+        }
       case Some(ps) =>
-        // filtered carry (binPack/reorg drop rewritten files' rows):
-        // `_stats` is O(files) planning metadata — read, filter and
-        // merge it on the DRIVER (the Spark semi-join + write cost a
-        // broadcast job + an action per commit); the Spark collect
-        // stays as the fallback for an unreadable legacy shape
+        // filtered carry (binPack/reorg/scoped and partitioned DML
+        // drop rewritten files' rows): `_stats` is O(files) planning
+        // metadata — the base's driver-read rows, filtered and merged
+        // on the DRIVER (the Spark semi-join + write cost a broadcast
+        // job + an action per commit)
         import spark.implicits._
         val keep = ps.toSet
-        val (cSchema, cRows) = MetaIO.schemaOf(spark, stPath)
-          .filter(MetaIO.frameWritable)
-          .flatMap(s =>
-            MetaIO.frameRowsAs(spark, stPath.toString, s).map((s, _)))
-          match {
-          case Some((s, rows)) =>
-            val pi = s.fieldIndex("path")
-            (s, rows.filter(r =>
-              !r.isNullAt(pi) && keep.contains(r.getString(pi))))
-          case None =>
-            val df = MetaIO.readParquet(spark, stPath.toString)
-              .join(broadcast(ps.toDF("path")), Seq("path"), "left_semi")
-            (df.schema, df.collect().toSeq)
-        }
+        val (cSchema, all) = base.stats.get
+        if (all.isEmpty) return
+        val pi = cSchema.fieldIndex("path")
+        val cRows = all.filter(r =>
+          !r.isNullAt(pi) && keep.contains(r.getString(pi)))
         if (appendedPaths.isEmpty) {
           MetaIO.writeFrame(spark, s"$root/$newDir/_stats",
             cSchema, cRows)
@@ -748,13 +694,15 @@ object ZTable {
             geomOf(spark, root, baseDir).foreach(bpk =>
               writeGeom(f, root, newDir, bpk))
           }
-        } else
+        } else {
+          val (xCol, yCol, bloomCol) =
+            dims(c => all.head.get(all.head.fieldIndex(c)))
           writeStats(spark, root, newDir, appendedPaths, xCol, yCol,
             bloomCol, Some((cSchema, cRows)),
             Option.when(hasBloom)(bloomPath.toString -> keep),
             bloomBpk = geomOf(spark, root, baseDir))
+        }
     }
-    true
   }
 
   /** File-grain copy of a tiny metadata frame dir (stats/Bloom/DV/
@@ -784,17 +732,6 @@ object ZTable {
     } else
       MetaIO.copyFiles(f, f.listStatus(s).toSeq.map(_.getPath)
         .filter(!_.getName.startsWith(".")), fd, d)
-  }
-
-  /** The data files of a freshly-written dir, as root-relative paths
-    * (`<dir>/<file>`). */
-  private def dataPaths(spark: SparkSession, root: String,
-      dir: String): IndexedSeq[String] = {
-    val p = new org.apache.hadoop.fs.Path(s"$root/$dir")
-    fs(spark, root).listStatus(p).toIndexedSeq
-      .map(_.getPath.getName)
-      .filter(n => !n.startsWith("_") && !n.startsWith("."))
-      .map(n => s"$dir/$n")
   }
 
   /** Compute per-file stats (and Bloom registers) for `paths` by

@@ -43,18 +43,22 @@ class GraftSessionSpec extends SparkSpec {
     t.startsWith("*") || t.startsWith("//") || t.startsWith("/*")
   }
 
-  /** File names of the Scala sources under `dirs` with a non-comment
-    * line that contains any of `calls`. */
-  private def callers(dirs: Seq[String], calls: Seq[String]): Seq[String] = {
+  /** (file name, lines) of every Scala source under `dirs`. */
+  private def sources(dirs: Seq[String]): Seq[(String, Seq[String])] = {
     import scala.jdk.CollectionConverters._
     dirs.flatMap { d =>
       val w = java.nio.file.Files.walk(java.nio.file.Paths.get(d))
       try w.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
       finally w.close()
-    }.filter(p => java.nio.file.Files.readAllLines(p).asScala
-      .exists(l => !comment(l) && calls.exists(l.contains)))
-      .map(_.getFileName.toString)
+    }.map(p => p.getFileName.toString ->
+      java.nio.file.Files.readAllLines(p).asScala.toSeq)
   }
+
+  /** File names of the Scala sources under `dirs` with a non-comment
+    * line that contains any of `calls`. */
+  private def callers(dirs: Seq[String], calls: Seq[String]): Seq[String] =
+    sources(dirs).collect { case (name, lines)
+      if lines.exists(l => !comment(l) && calls.exists(l.contains)) => name }
 
   test("GraftSession is the only caller of the Spark session builder") {
     assert(callers(Seq("src/main", "src/test"),
@@ -68,5 +72,25 @@ class GraftSessionSpec extends SparkSpec {
     val mutations = Seq("conf.set(", "conf.unset(", ".unset(", "setConf(")
     assert(callers(Seq("src/main/scala/graft"), mutations)
       .forall(_ == "GraftSession.scala"))
+  }
+
+  test("one function writes a version's `_files` list") {
+    // split each source at its `def`s; a def whose code names the
+    // `_files` manifest and creates a file writes one. A second
+    // hand-rolled file-list commit fails here
+    val defName = """\bdef\s+(\w+)""".r
+    val filesLiteral = """["/]_files"""".r
+    val writers = sources(Seq("src/main/scala/graft")).flatMap {
+      case (file, lines) =>
+        val code = lines.filterNot(comment).mkString("\n")
+        val starts = defName.findAllMatchIn(code).toSeq
+        starts.zip(starts.drop(1).map(_.start) :+ code.length)
+          .filter { case (m, end) =>
+            val body = code.substring(m.start, end)
+            filesLiteral.findFirstIn(body).isDefined &&
+              body.contains(".create(")
+          }.map { case (m, _) => s"$file:${m.group(1)}" }
+    }
+    assert(writers == Seq("ManifestTable.scala:writeFileList"))
   }
 }

@@ -101,6 +101,33 @@ class CloneHistoryChecksSpec extends SparkSpec {
     assert(ManifestTable.read(spark, src).get.count() == 400L)
   }
 
+  test("clone keeps the Bloom register geometry: every present key's " +
+      "file stays a candidate and a point read finds the key") {
+    val base = freshBase()
+    val (src, cl) = (s"$base/src", s"$base/cl")
+    // 4 files of 5000 rows: each register is scaled past the legacy
+    // fixed 8192 bits (more than 1024 rows per file)
+    ManifestTable.commit(spark.range(0, 20000).select(col("id").as("k"),
+      (col("id") % 97).as("x"), (col("id") / 100).as("y"),
+      col("id").cast("string").as("s")).coalesce(1), src)
+    ZTable.optimizeZOrder(spark, src, "x", "y", "k", nFiles = 4,
+      bloomCol = Some("s"))
+    ManifestTable.cloneShallow(spark, src, cl)
+    Seq(5L, 7001L, 12345L, 19999L).foreach { k =>
+      val key = k.toString
+      val holders = ManifestTable.read(spark, src).get
+        .filter(col("s") === key).select(col("_metadata.file_path"))
+        .as[String].collect().map(ManifestTable.fileKeyOf).toSet
+      assert(holders.size == 1, s"key $key")
+      val cands = ZTable.bloomCandidateFiles(spark, cl, lit(key))
+        .map(ManifestTable.fileKeyOf).toSet
+      assert(holders.subsetOf(cands), s"key $key: candidates $cands")
+      assert(ManifestTable.read(spark, cl).get.filter(col("s") === key)
+        .count() == ManifestTable.read(spark, src).get
+          .filter(col("s") === key).count(), s"key $key")
+    }
+  }
+
   test("cloneDeep materializes — no external refs, hazard-free") {
     val base = freshBase()
     val (src, cl) = (s"$base/src", s"$base/cl")

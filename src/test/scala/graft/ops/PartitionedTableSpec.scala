@@ -383,4 +383,22 @@ class PartitionedTableSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("plain empty commit"))
   }
+
+  test("restore of a partitioned version carries `_parts`: appends and " +
+      "pruned reads keep working after it") {
+    val root = freshRoot()
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select($"k", $"g", $"day", $"v")
+        .as[(Long, String, String, Double)].collect().toSeq.sorted
+    PartitionedTable.commitPartitioned(spark, root, fact(0, 100), "day")
+    PartitionedTable.appendPartitioned(spark, root, fact(100, 150))
+    val v3 = ManifestTable.restore(spark, root, 1L)
+    assert(PartitionedTable.parts(spark, root, v3).count() ==
+      ManifestTable.versionFileRefs(spark, root, v3).get.size)
+    PartitionedTable.appendPartitioned(spark, root, fact(200, 230))
+    val model = rows(fact(0, 100).union(fact(200, 230)))
+    assert(rows(ManifestTable.read(spark, root).get) == model)
+    assert(rows(PartitionedTable.readPartitions(spark, root, Seq("2"))) ==
+      model.filter(_._3 == "2"))
+  }
 }
