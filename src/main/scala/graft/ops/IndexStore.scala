@@ -20,6 +20,8 @@ import ProductQuantizer.IvfPqIndex
   *   root/d<N>-<token>/coarse/    — kc cell centroids
   *   root/d<N>-<token>/cents/     — m·k codebook rows
   *   root/d<N>-<token>/codes/     — n·m inverted-list rows
+  *   root/d<N>-<token>/_op        — operation + commit time, as every
+  *                                  version ([[ManifestTable.history]])
   * }}}
   *
   * A crash after any subset of the three writes leaves the marker
@@ -28,9 +30,10 @@ import ProductQuantizer.IvfPqIndex
   * argument, unchanged by the wider payload, since the marker is
   * still the single commit point). Versions are time-travelable:
   * yesterday's index keeps serving while today's retrain commits,
-  * and a rollback is `loadVersion(v-1)`. [[ManifestTable.vacuum]] and
-  * [[ManifestTable.compact]] work on these roots unchanged (they
-  * manage markers and whole data dirs, agnostic to what's inside).
+  * and a rollback is `loadVersion(v-1)`. [[ManifestTable.vacuum]],
+  * [[ManifestTable.compact]] and [[ManifestTable.history]] work on
+  * these roots unchanged (they manage markers and whole data dirs,
+  * agnostic to what's inside).
   *
   * 100-TB shape: the artifact is index-sized, not corpus-sized —
   * coarse is kc rows, codebooks m·k rows, codes n·m SMALL rows (two
@@ -46,16 +49,12 @@ object IndexStore {
     * attempt's staging dir is deleted). */
   def save(idx: IvfPqIndex, root: String): Long = {
     val spark = idx.coarse.sparkSession
-    val next = ManifestTable.currentVersion(spark, root).getOrElse(0L) + 1
-    val dir = ManifestTable.newDataDirName(next) // the shared convention
+    val src = ManifestTable.snapshot(spark, root)
+    val dir = ManifestTable.newDataDirName(src.next) // the shared convention
     idx.coarse.write.parquet(s"$root/$dir/coarse")
     idx.cents.write.parquet(s"$root/$dir/cents")
     idx.codes.write.parquet(s"$root/$dir/codes")
-    ManifestTable.writeMarker(spark, root, next, dataDir = dir)
-    // index roots compact like any other: a scheduled retrain must not
-    // grow the _commits listing without bound
-    ManifestTable.maybeAutoCompact(spark, root)
-    next
+    ManifestTable.publish(spark, root, src, dir, "WRITE")
   }
 
   /** Load the current committed index; None if never committed. */

@@ -78,9 +78,9 @@ final class ConcurrentCommitException(msg: String)
   * into ONE `_compact-<N>` file (the Delta checkpoint move) and
   * deletes the individual marker files; readers then list O(markers
   * since last compaction) and read one immutable, cached compact file.
-  * [[commit]]/[[mergeBatch]] auto-compact past
-  * [[autoCompactThreshold]] live markers, so resolution cost stays
-  * bounded no matter how many batches a sink commits. Compaction
+  * Every commit auto-compacts past [[autoCompactThreshold]] live
+  * markers ([[publish]]), so resolution cost stays bounded no matter
+  * how many batches a sink commits. Compaction
   * preserves every (version, batch-key) entry by default — exactly-
   * once replay detection never forgets a committed batch — and takes
   * an optional `batchKeyRetention` horizon so a years-long sink's
@@ -105,7 +105,7 @@ object ManifestTable {
   private type Path = org.apache.hadoop.fs.Path
 
   /** Live markers above this count trigger auto-compaction inside
-    * [[commit]]/[[mergeBatch]] — the bound on per-read listing cost
+    * every commit ([[publish]]) — the bound on per-read listing cost
     * under a streaming sink. */
   val autoCompactThreshold = 64
 
@@ -433,38 +433,34 @@ object ManifestTable {
     retainedDirAt(spark, root, v, live, compacted)
   }
 
-  /** Version `v`'s data-directory name in a commit-state snapshot. */
-  private def dirAt(spark: SparkSession, root: String, v: Long,
+  /** Version `v`'s data-directory name in a commit-state snapshot,
+    * failing loudly when it was never committed or was vacuumed. */
+  private def retainedDirAt(spark: SparkSession, root: String, v: Long,
       live: Seq[org.apache.hadoop.fs.FileStatus],
       compacted: Map[String, String]): String = {
     val marker = winnersByVersion(namesOf(live, compacted)).get(v)
     require(marker.isDefined, s"version $v of $root was never committed")
-    dirOf(spark, root, marker.get, live, compacted)
-  }
-
-  /** [[dirAt]], failing loudly when the version's data was vacuumed. */
-  private def retainedDirAt(spark: SparkSession, root: String, v: Long,
-      live: Seq[org.apache.hadoop.fs.FileStatus],
-      compacted: Map[String, String]): String = {
-    val dir = dirAt(spark, root, v, live, compacted)
+    val dir = dirOf(spark, root, marker.get, live, compacted)
     require(fsOf(spark, root).exists(new Path(root, dir)),
       s"version $v of $root was vacuumed (commit record retained, " +
         "data directory dropped)")
     dir
   }
 
-  /** The version a file-list commit starts from, resolved from ONE
-    * commit-state snapshot: its number `v`, its data `dir`, and the
-    * version the commit claims, `next`. Its file refs, `_parts` rows
-    * and `_stats` frame are read on first use and at most once, so the
-    * delta write and [[commitFiles]] share one read of each. */
+  /** The version a commit starts from, resolved from ONE commit-state
+    * snapshot: its number `v` (0 on an empty root), its data `dir`,
+    * and the version the commit claims, `next`. Its data dir, file
+    * refs, `_parts` rows and `_stats` frame are read on first use and
+    * at most once, so the delta write and [[commitFiles]] share one
+    * read of each, and a full rewrite reads none of them. */
   private[ops] final class Base(spark: SparkSession, root: String,
-      val v: Long, val next: Long, val dir: String,
+      val v: Long, val next: Long, dir0: => String,
       live: Seq[org.apache.hadoop.fs.FileStatus],
       compacted: Map[String, String], refs0: => Seq[String],
       parts0: => Option[(String, Seq[(String, String)])],
       stats0: => Option[(org.apache.spark.sql.types.StructType,
         Seq[org.apache.spark.sql.Row])]) {
+    lazy val dir: String = dir0
     /** Every data file of the version ([[refsOf]]). */
     lazy val refs: Seq[String] = refs0
     /** (pcol, (path, value) rows) when the version is partitioned. */
@@ -479,21 +475,20 @@ object ManifestTable {
     /** Version `u` of the same snapshot as the SOURCE of a commit that
       * still claims `next` (RESTORE); fails loudly when `u` was never
       * committed or was vacuumed. */
-    def at(u: Long): Base =
-      baseAt(spark, root, u, next, retainedDirAt(spark, root, u, live,
-        compacted), live, compacted)
-    /** This base with its refs (and partition rows) already known to
-      * the caller: a partitioned base's `_parts` rows list exactly its
-      * files. */
+    def at(u: Long): Base = {
+      val d = retainedDirAt(spark, root, u, live, compacted)
+      baseAt(spark, root, u, next, d, live, compacted)
+    }
+    /** This base with its refs already known to the caller (a
+      * partitioned base's `_parts` rows, a z-ordered base's `_stats`
+      * rows list exactly its files). */
     def withRefs(rs: Seq[String]): Base =
       new Base(spark, root, v, next, dir, live, compacted, rs, parts, stats)
-    def withParts(pcol: String, rows: Seq[(String, String)]): Base =
-      new Base(spark, root, v, next, dir, live, compacted,
-        rows.map(_._1), Some((pcol, rows)), stats)
   }
 
   private def baseAt(spark: SparkSession, root: String, v: Long,
-      next: Long, dir: String, live: Seq[org.apache.hadoop.fs.FileStatus],
+      next: Long, dir: => String,
+      live: Seq[org.apache.hadoop.fs.FileStatus],
       compacted: Map[String, String]): Base =
     new Base(spark, root, v, next, dir, live, compacted, {
       val r = refsOf(spark, root, dir)
@@ -512,18 +507,22 @@ object ManifestTable {
         })
     })
 
-  /** The current version as a [[Base]]; None before the first commit. */
-  private[ops] def latest(spark: SparkSession, root: String): Option[Base] = {
+  /** The current version as a [[Base]] — on an empty root version 0,
+    * whose commit claims v1: the one place a commit learns the version
+    * it claims. One `_commits` listing; the data dir is resolved on
+    * first use. */
+  private[ops] def snapshot(spark: SparkSession, root: String): Base = {
     val (live, compacted) = commitState(spark, root)
     val markers = namesOf(live, compacted)
-    if (markers.isEmpty) None
-    else {
-      val v = markers.map(versionOf).max
-      Some(baseAt(spark, root, v, v + 1,
-        dirOf(spark, root, winnersByVersion(markers)(v), live, compacted),
-        live, compacted))
-    }
+    val v = if (markers.isEmpty) 0L else markers.map(versionOf).max
+    baseAt(spark, root, v, v + 1,
+      dirOf(spark, root, winnersByVersion(markers)(v), live, compacted),
+      live, compacted)
   }
+
+  /** [[snapshot]]; None before the first commit. */
+  private[ops] def latest(spark: SparkSession, root: String): Option[Base] =
+    Some(snapshot(spark, root)).filter(_.v > 0)
 
   /** [[latest]], failing loudly (`nothing to <what>`) on an empty root. */
   private[ops] def baseOf(spark: SparkSession, root: String,
@@ -984,10 +983,8 @@ object ManifestTable {
     *    ([[ZTable.extendStats]]; the file-grain copy when every source
     *    file is carried); dropped when the mapping changes (their dim
     *    names are physical).
-    *  - `_op`, then the marker — the commit point — at `src.next`, then
-    *    auto-compaction.
     *
-    * Returns the committed version. */
+    * Then [[publish]]. Returns the committed version. */
   private[ops] def commitFiles(spark: SparkSession, root: String,
       src: Base, dir: String, carried: Seq[String], appended: Seq[String],
       op: String, freshParts: Seq[(String, String)] = Nil,
@@ -1030,10 +1027,7 @@ object ManifestTable {
     if (colmap.isEmpty)
       ZTable.extendStats(spark, root, src, dir, appended,
         carriedPaths = if (carryAll) None else Some(carried))
-    writeOpMeta(spark, root, dir, op)
-    writeMarker(spark, root, src.next, batchKey, dir)
-    maybeAutoCompact(spark, root, src.liveCount + 1, retention)
-    src.next
+    publish(spark, root, src, dir, op, batchKey, retention)
   }
 
   /** Read a resolved data dir — through its `_files` manifest when the
@@ -1102,30 +1096,24 @@ object ManifestTable {
       v: Long): Option[Seq[String]] =
     fileList(spark, root, versionDataDir(spark, root, v))
 
-  /** [[readVersion]] against an already-taken commit-state snapshot —
-    * the merge paths read the base version right after resolving it
-    * and must not pay a second `_commits` listing for the same state
-    * (on an object store the listing IS the cost). */
-  private def readVersionWith(spark: SparkSession, root: String,
-      v: Long, live: Seq[org.apache.hadoop.fs.FileStatus],
-      compacted: Map[String, String]): DataFrame =
-    readDataDir(spark, root, dirAt(spark, root, v, live, compacted))
-
   /** Commit `df` as the next version; returns the new version number.
     * Crash-safe per the protocol above; fails loudly on a concurrent
     * commit of the same version (see [[mergeWithRetry]] for the
     * rebase-and-retry loop). */
-  def commit(df: DataFrame, root: String): Long = {
+  def commit(df: DataFrame, root: String): Long =
+    replace(df, root, "commit", batchKey = "")
+
+  /** [[commit]] and [[commitBatch]]: `df` replaces the table as the
+    * next version, unless `batchKey` already committed. */
+  private def replace(df: DataFrame, root: String, what: String,
+      batchKey: String): Long = {
     val spark = df.sparkSession
-    val next = currentVersion(spark, root).getOrElse(0L) + 1
+    val src = snapshot(spark, root)
+    if (batchKey.nonEmpty && src.applied(batchKey)) return src.v
     // generated columns first (checks may reference them)
-    val full = Generated(spark, root, df, "commit")
-    Checks.enforce(spark, root, full, "commit")
-    val dir = writeVersionData(full, root, next)
-    writeOpMeta(spark, root, dir, "WRITE")
-    writeMarker(spark, root, next, dataDir = dir)
-    maybeAutoCompact(spark, root)
-    next
+    val full = Generated(spark, root, df, what)
+    Checks.enforce(spark, root, full, what)
+    commitData(full, root, src, "WRITE", batchKey)
   }
 
   /** APPEND `df` as the next version — O(batch): every base file is
@@ -1190,14 +1178,45 @@ object ManifestTable {
       colmap = colmap, schema = schema)
   }
 
-  /** Step 1 of [[commit]] — returns the fresh unique data-dir name.
-    * Package-private so the crash spec can stop exactly between data
-    * write and marker rename. */
+  /** Write `df` as the whole data of version `v` into a fresh dir;
+    * returns the dir name. Package-private so the crash and race specs
+    * can stop between data write and marker. */
   private[graft] def writeVersionData(df: DataFrame, root: String,
       v: Long): String = {
     val dir = newDataDirName(v)
     df.write.parquet(s"$root/$dir") // ErrorIfExists: the dir is unique
     dir
+  }
+
+  /** A full rewrite: `df` becomes the whole of the version `src`
+    * claims ([[writeVersionData]], then [[publish]]). */
+  private[ops] def commitData(df: DataFrame, root: String, src: Base,
+      op: String, batchKey: String = "",
+      retention: Long = Long.MaxValue): Long =
+    publish(df.sparkSession, root, src,
+      writeVersionData(df, root, src.next), op, batchKey, retention)
+
+  /** THE version publisher: every commit ends here, once its data and
+    * metadata frames are in `dir`. It writes, in order:
+    *
+    *  - `_op` ([[writeOpMeta]]) inside `dir`;
+    *  - the marker `v<src.next>` ([[writeMarker]]), the commit point;
+    *  - auto-compaction ([[maybeAutoCompact]]), counting the markers
+    *    of `src`'s snapshot plus this one, so no second listing.
+    *
+    * The marker comes LAST among the writes because it is what makes
+    * the version exist: everything in `dir` before it is invisible to
+    * readers, so a crash anywhere earlier leaves the table at `src`,
+    * and a committed version never lacks its `_op`. A lost race
+    * deletes `dir` and throws [[ConcurrentCommitException]]. Returns
+    * the committed version. */
+  private[ops] def publish(spark: SparkSession, root: String, src: Base,
+      dir: String, op: String, batchKey: String = "",
+      retention: Long = Long.MaxValue): Long = {
+    writeOpMeta(spark, root, dir, op)
+    writeMarker(spark, root, src.next, batchKey, dir)
+    maybeAutoCompact(spark, root, src.liveCount + 1, retention)
+    src.next
   }
 
   /** Unique per-attempt data-dir name — the ONE naming convention
@@ -1217,7 +1236,7 @@ object ManifestTable {
     * same as `_files`/`_stats`. This is what [[history]] reads —
     * Delta's `DESCRIBE HISTORY` operation + timestamp columns — and
     * what [[versionAsOf]] resolves `TIMESTAMP AS OF` against. */
-  private[ops] def writeOpMeta(spark: SparkSession, root: String,
+  private def writeOpMeta(spark: SparkSession, root: String,
       dir: String, op: String): Unit = {
     val fs = fsOf(spark, root)
     val out = fs.create(new Path(new Path(root, dir), "_op"), true)
@@ -1239,7 +1258,7 @@ object ManifestTable {
     }
   }
 
-  /** Step 2 of [[commit]] — the atomic commit point. The marker NAME
+  /** The atomic commit point of [[publish]]. The marker NAME
     * is version-only (`v<N>`), so ANY two committers of one version —
     * plain commits, [[mergeBatch]] commits with the same or different
     * batch keys — contend on the SAME rename target, and the rename
@@ -1373,17 +1392,12 @@ object ManifestTable {
     }.foreach(fs.delete(_, false))
   }
 
-  /** `liveCount` lets a committer that just took a snapshot pass the
-    * (pre-commit live count + 1) instead of paying another listing;
-    * -1 = unknown, list. */
-  private[ops] def maybeAutoCompact(spark: SparkSession, root: String,
-      liveCount: Int = -1,
-      batchKeyRetention: Long = Long.MaxValue): Unit = {
-    val n =
-      if (liveCount >= 0) liveCount
-      else commitState(spark, root)._1.size
-    if (n > autoCompactThreshold) compact(spark, root, batchKeyRetention)
-  }
+  /** [[compact]] once a root holds more than [[autoCompactThreshold]]
+    * live markers; [[publish]] passes the count its snapshot listed. */
+  private def maybeAutoCompact(spark: SparkSession, root: String,
+      liveCount: Int, batchKeyRetention: Long): Unit =
+    if (liveCount > autoCompactThreshold)
+      compact(spark, root, batchKeyRetention)
 
   /** Transactional MERGE behind the [[Upsert.upsert]] signature: read
     * the current version as the target, apply the upsert kernel
@@ -1394,7 +1408,26 @@ object ManifestTable {
     * [[mergeWithRetry]] when multiple writers may collide. */
   def merge(spark: SparkSession, root: String, source: DataFrame,
       keys: Seq[String], updateCols: Option[Seq[String]] = None)
-      : DataFrame = {
+      : DataFrame =
+    mergeWhole(spark, root, source, keys, updateCols, Upsert.upsert)
+
+  /** [[merge]] with SCHEMA EVOLUTION ([[Upsert.upsertEvolve]] — the
+    * Delta `mergeSchema` semantic): a source with new columns widens
+    * the committed table (old rows read NULL there); a source missing
+    * columns preserves them (inserted rows read NULL). Same pinned
+    * OCC version and commit protocol as [[merge]]. Type CHANGES on an
+    * existing column still fail loudly. */
+  def mergeEvolve(spark: SparkSession, root: String, source: DataFrame,
+      keys: Seq[String], updateCols: Option[Seq[String]] = None)
+      : DataFrame =
+    mergeWhole(spark, root, source, keys, updateCols, Upsert.upsertEvolve)
+
+  /** [[merge]] and [[mergeEvolve]], which differ only in `kernel`. */
+  private def mergeWhole(spark: SparkSession, root: String,
+      source: DataFrame, keys: Seq[String],
+      updateCols: Option[Seq[String]],
+      kernel: (DataFrame, DataFrame, Seq[String], Option[Seq[String]])
+        => DataFrame): DataFrame = {
     // OCC correctness: the committed version number is PINNED to
     // (version read) + 1, not re-derived at commit time. Re-deriving
     // let a concurrent commit land BETWEEN our read and our marker
@@ -1405,57 +1438,18 @@ object ManifestTable {
     // throw, which is exactly the signal mergeWithRetry rebases on.
     // ONE commit-state snapshot resolves the base version AND reads
     // it; only writeMarker re-lists (its CAS guard must be fresh)
-    val (live, compacted) = commitState(spark, root)
-    val markers = namesOf(live, compacted)
-    val base = if (markers.isEmpty) None else Some(markers.map(versionOf).max)
+    val base = snapshot(spark, root)
     val src = Generated(spark, root, source, "merge source")
-    val result = base match {
-      case Some(v) =>
-        Upsert.upsert(readVersionWith(spark, root, v, live, compacted),
-          src, keys, updateCols)
-      case None => src
-    }
+    val result =
+      if (base.v == 0) src
+      else kernel(readDataDir(spark, root, base.dir), src, keys, updateCols)
     // checks enforce on the SOURCE batch, not the merged whole:
     // unchanged target rows passed their own commit-time check
     // (inductive), and re-validating the table per merge is the
     // O(table)-per-batch cost a 100 TB sink cannot pay. A check added
     // AFTER data landed needs one [[Checks.validate]] sweep.
     Checks.enforce(spark, root, src, "merge source")
-    val next = base.getOrElse(0L) + 1
-    val dir = writeVersionData(result, root, next)
-    writeOpMeta(spark, root, dir, "MERGE")
-    writeMarker(spark, root, next, dataDir = dir)
-    maybeAutoCompact(spark, root, live.size + 1)
-    readVersion(spark, root, next)
-  }
-
-  /** [[merge]] with SCHEMA EVOLUTION ([[Upsert.upsertEvolve]] — the
-    * Delta `mergeSchema` semantic): a source with new columns widens
-    * the committed table (old rows read NULL there); a source missing
-    * columns preserves them (inserted rows read NULL). Same pinned
-    * OCC version and commit protocol as [[merge]]. Type CHANGES on an
-    * existing column still fail loudly. */
-  def mergeEvolve(spark: SparkSession, root: String, source: DataFrame,
-      keys: Seq[String], updateCols: Option[Seq[String]] = None)
-      : DataFrame = {
-    val (live, compacted) = commitState(spark, root)
-    val markers = namesOf(live, compacted)
-    val base = if (markers.isEmpty) None else Some(markers.map(versionOf).max)
-    val src = Generated(spark, root, source, "merge source")
-    val result = base match {
-      case Some(v) =>
-        Upsert.upsertEvolve(
-          readVersionWith(spark, root, v, live, compacted),
-          src, keys, updateCols)
-      case None => src
-    }
-    Checks.enforce(spark, root, src, "merge source")
-    val next = base.getOrElse(0L) + 1
-    val dir = writeVersionData(result, root, next)
-    writeOpMeta(spark, root, dir, "MERGE")
-    writeMarker(spark, root, next, dataDir = dir)
-    maybeAutoCompact(spark, root, live.size + 1)
-    readVersion(spark, root, next)
+    readVersion(spark, root, commitData(result, root, base, "MERGE"))
   }
 
   /** [[merge]] with the Delta-style rebase-and-retry loop: a losing
@@ -1468,17 +1462,23 @@ object ManifestTable {
   def mergeWithRetry(spark: SparkSession, root: String,
       source: DataFrame, keys: Seq[String],
       updateCols: Option[Seq[String]] = None,
-      maxAttempts: Int = 10): DataFrame = {
-    var attempt = 1
+      maxAttempts: Int = 10): DataFrame =
+    withRetry(maxAttempts)(merge(spark, root, source, keys, updateCols))
+
+  /** THE rebase-and-retry loop: run `attempt` until it commits, at
+    * most `maxAttempts` times; a lost version race re-runs it (each
+    * run re-resolves its base), the last loss is rethrown. */
+  private[ops] def withRetry[T](maxAttempts: Int)(attempt: => T): T = {
+    var n = 1
     while (true) {
       // classified by TYPE, not message prefix — rewording the error
       // (or an FS IOException sharing the prefix) must not silently
       // change retry semantics
-      try return merge(spark, root, source, keys, updateCols)
+      try return attempt
       catch {
         case e: ConcurrentCommitException =>
-          if (attempt >= maxAttempts) throw e
-          attempt += 1
+          if (n >= maxAttempts) throw e
+          n += 1
       }
     }
     sys.error("unreachable")
@@ -1526,21 +1526,8 @@ object ManifestTable {
     * new state is computed WHOLE — rows (e.g. emptied groups) can
     * disappear between versions, which an upsert-based [[mergeBatch]]
     * can never express. Same pinned-version commit protocol. */
-  def commitBatch(df: DataFrame, root: String, batchKey: String): Unit = {
-    val spark = df.sparkSession
-    val (live, compacted) = commitState(spark, root)
-    if (appliedKeys(spark, root, live, compacted).contains(batchKey))
-      return
-    val markers = namesOf(live, compacted)
-    val next =
-      (if (markers.isEmpty) 0L else markers.map(versionOf).max) + 1
-    val full = Generated(spark, root, df, "commitBatch")
-    Checks.enforce(spark, root, full, "commitBatch")
-    val dir = writeVersionData(full, root, next)
-    writeOpMeta(spark, root, dir, "WRITE")
-    writeMarker(spark, root, next, batchKey, dir)
-    maybeAutoCompact(spark, root, live.size + 1)
-  }
+  def commitBatch(df: DataFrame, root: String, batchKey: String): Unit =
+    replace(df, root, "commitBatch", batchKey)
 
   /** [[merge]] for streaming `foreachBatch`: EXACTLY-ONCE under
     * micro-batch replay. The commit marker carries the batch key
@@ -1583,36 +1570,22 @@ object ManifestTable {
       fold: Option[DataFrame] => DataFrame,
       updateCols: Option[Seq[String]] = None,
       batchKeyRetention: Long = Long.MaxValue): Unit = {
-    val (live, compacted) = commitState(spark, root)
-    val markers = namesOf(live, compacted)
-    if (appliedKeys(spark, root, live, compacted).contains(batchKey))
-      return
+    val base = snapshot(spark, root)
+    if (base.applied(batchKey)) return
     // same read-version pin as [[merge]]: a stream is normally this
     // table's only writer, but if anything else ever commits between
     // our read and our marker the batch must conflict loudly, never
     // silently drop the interloper's rows
-    val base = if (markers.isEmpty) None else Some(markers.map(versionOf).max)
-    val result = base match {
-      case Some(v) =>
-        val baseDf = readVersionWith(spark, root, v, live, compacted)
-        val src = Generated(spark, root, fold(Some(baseDf)),
-          "mergeBatch source")
-        Checks.enforce(spark, root, src, "mergeBatch source")
-        Upsert.upsert(baseDf, src, keys, updateCols)
-      case None =>
-        val src = Generated(spark, root, fold(None), "mergeBatch source")
-        Checks.enforce(spark, root, src, "mergeBatch source")
-        src
-    }
-    val next = base.getOrElse(0L) + 1
-    val dir = writeVersionData(result, root, next)
-    writeOpMeta(spark, root, dir, "MERGE")
-    writeMarker(spark, root, next, batchKey, dir)
+    val baseDf =
+      if (base.v == 0) None else Some(readDataDir(spark, root, base.dir))
+    val src = Generated(spark, root, fold(baseDf), "mergeBatch source")
+    Checks.enforce(spark, root, src, "mergeBatch source")
     // the sink's own auto-compaction applies the caller's retention
     // horizon, so a long-lived stream's compact file stays O(recent)
     // WITHOUT a separate maintenance job (only safe when the horizon
     // exceeds the stream's replay horizon — see [[compact]])
-    maybeAutoCompact(spark, root, live.size + 1, batchKeyRetention)
+    commitData(baseDf.fold(src)(Upsert.upsert(_, src, keys, updateCols)),
+      root, base, "MERGE", batchKey, batchKeyRetention)
   }
 
   /** [[mergeBatch]] with the [[mergeWithRetry]] rebase loop — the
@@ -1641,20 +1614,9 @@ object ManifestTable {
       fold: Option[DataFrame] => DataFrame,
       updateCols: Option[Seq[String]] = None,
       batchKeyRetention: Long = Long.MaxValue,
-      maxAttempts: Int = 10): Unit = {
-    var attempt = 1
-    while (true) {
-      try {
-        mergeBatchFold(spark, root, keys, batchKey, fold, updateCols,
-          batchKeyRetention)
-        return
-      } catch {
-        case e: ConcurrentCommitException =>
-          if (attempt >= maxAttempts) throw e
-          attempt += 1
-      }
-    }
-  }
+      maxAttempts: Int = 10): Unit =
+    withRetry(maxAttempts)(mergeBatchFold(spark, root, keys, batchKey,
+      fold, updateCols, batchKeyRetention))
 
   /** Mapping-THREAD counterpart resolution for [[changes]] when the
     * two-endpoint match is inconclusive: walk the commits from `toV`
@@ -1853,22 +1815,12 @@ object ManifestTable {
     * version. */
   def deleteWhere(spark: SparkSession, root: String,
       condition: org.apache.spark.sql.Column): Long = {
-    val (live, compacted) = commitState(spark, root)
-    val markers = namesOf(live, compacted)
-    require(markers.nonEmpty, s"nothing to delete from at $root")
-    val base = markers.map(versionOf).max
-    val next = base + 1
-    val dir = writeVersionData(
-      // null-safe negation: a NULL predicate row is NOT matched by the
-      // delete (SQL DELETE semantics), so it must be KEPT
-      readVersionWith(spark, root, base, live, compacted)
-        .filter(!org.apache.spark.sql.functions.coalesce(condition,
-          org.apache.spark.sql.functions.lit(false))),
-      root, next)
-    writeOpMeta(spark, root, dir, "DELETE")
-    writeMarker(spark, root, next, dataDir = dir)
-    maybeAutoCompact(spark, root, live.size + 1)
-    next
+    val base = baseOf(spark, root, "delete from")
+    // null-safe negation: a NULL predicate row is NOT matched by the
+    // delete (SQL DELETE semantics), so it must be KEPT
+    commitData(readDataDir(spark, root, base.dir)
+      .filter(!org.apache.spark.sql.functions.coalesce(condition,
+        org.apache.spark.sql.functions.lit(false))), root, base, "DELETE")
   }
 
   /** DELETE via DELETION VECTOR — merge-on-read (Delta's deletion
@@ -2037,38 +1989,23 @@ object ManifestTable {
       source: DataFrame, keys: Seq[String], batchKey: String,
       updateCols: Option[Seq[String]] = None,
       batchKeyRetention: Long = Long.MaxValue,
-      maxAttempts: Int = 10): Unit = {
-    var attempt = 1
-    while (true) {
-      try {
-        mergeBatchDV(spark, root, source, keys, batchKey, updateCols,
-          batchKeyRetention)
-        return
-      } catch {
-        case e: ConcurrentCommitException =>
-          if (attempt >= maxAttempts) throw e
-          attempt += 1
-      }
-    }
-  }
+      maxAttempts: Int = 10): Unit =
+    withRetry(maxAttempts)(mergeBatchDV(spark, root, source, keys,
+      batchKey, updateCols, batchKeyRetention))
 
   private def mergeDVImpl(spark: SparkSession, root: String,
       source: DataFrame, keys: Seq[String],
       updateCols: Option[Seq[String]], batchKey: String,
       batchKeyRetention: Long = Long.MaxValue): Long = {
     import org.apache.spark.sql.functions.{broadcast, col}
-    val latestBase = latest(spark, root)
-    if (batchKey.nonEmpty && latestBase.exists(_.applied(batchKey)))
-      return latestBase.get.v // replayed batch: no-op
+    val base = snapshot(spark, root)
+    if (batchKey.nonEmpty && base.applied(batchKey))
+      return base.v // replayed batch: no-op
     val src = Generated(spark, root, source, "merge source")
     Checks.enforce(spark, root, src, "merge source")
-    if (latestBase.isEmpty) { // first commit: the source IS the table
-      val dir = writeVersionData(src, root, 1L)
-      writeOpMeta(spark, root, dir, "MERGE")
-      writeMarker(spark, root, 1L, batchKey, dir)
-      return 1L
-    }
-    val base = latestBase.get
+    if (base.v == 0) // first commit: the source IS the table
+      return commitData(src, root, base, "MERGE", batchKey,
+        batchKeyRetention)
     val tagged = positionTagged(
       ManifestTable.live(spark, root, base.dir,
         readRefsRaw(spark, root, base.dir, base.refs)))
@@ -2097,11 +2034,14 @@ object ManifestTable {
     // ONE evaluation — a recompute between the DV write and the
     // post-image write could re-plan the scan and tear them apart.
     // O(matched) rows, the merge-on-read price. EXPLICIT broadcast
-    // hint on the batch's key set: the localCheckpoint compiles its
-    // plan OUTSIDE AQE (RDD conversion), where an un-hinted join
-    // degrades to a sort-merge shuffle of the FULL table scan —
-    // measured 43 s vs 3.6 s at 100× (SCALE.md); a delta too large
-    // to broadcast belongs on the copy-on-write [[merge]] path anyway
+    // hint on the batch's key set: an un-hinted join once degraded to
+    // a sort-merge shuffle of the FULL table scan (43 s vs 3.6 s at
+    // 100×, SCALE.md), measured when the localCheckpoint plan was
+    // believed to compile outside AQE. On Spark 4.1.2 it compiles
+    // under AQE (SCALE.md, "Lesson: `localCheckpoint()` trees do not
+    // compile outside AQE"), so the hint is unmeasured there; a delta
+    // too large to broadcast belongs on the copy-on-write [[merge]]
+    // path anyway
     val matched = current
       .join(broadcast(srcProj.select(keys.map(col): _*).distinct()),
         keys, "left_semi")
@@ -2306,11 +2246,8 @@ object ManifestTable {
       condition: org.apache.spark.sql.Column,
       set: Map[String, org.apache.spark.sql.Column]): Long = {
     import org.apache.spark.sql.functions.{coalesce, col, lit, when}
-    val (live, compacted) = commitState(spark, root)
-    val markers = namesOf(live, compacted)
-    require(markers.nonEmpty, s"nothing to update at $root")
-    val base = markers.map(versionOf).max
-    val baseDf = readVersionWith(spark, root, base, live, compacted)
+    val base = baseOf(spark, root, "update")
+    val baseDf = readDataDir(spark, root, base.dir)
     require(set.keySet.subsetOf(baseDf.columns.toSet),
       s"unknown columns in SET: ${set.keySet -- baseDf.columns}")
     val cond = coalesce(condition, lit(false)) // NULL predicate = no match
@@ -2330,12 +2267,7 @@ object ManifestTable {
         set.get(c).map(_.as(c)).getOrElse(col(c))
       }: _*)
     Checks.enforce(spark, root, matchedPost, "update post-image")
-    val next = base + 1
-    val dir = writeVersionData(result, root, next)
-    writeOpMeta(spark, root, dir, "UPDATE")
-    writeMarker(spark, root, next, dataDir = dir)
-    maybeAutoCompact(spark, root, live.size + 1)
-    next
+    commitData(result, root, base, "UPDATE")
   }
 
   /** Per-COMMIT change feed: [[changes]] returns the NET diff between
@@ -2388,9 +2320,10 @@ object ManifestTable {
     * clone's root (a scoped DML rewrites only intersecting files and
     * carries the still-external rest forward by reference); the source
     * never sees clone commits and vice versa. Committed skipping
-    * stats/Bloom frames are carried (file-metadata-sized re-write with
-    * paths absolutized), so [[ZTable.scanXRange]] and scoped DML work
-    * on the clone immediately.
+    * stats/Bloom and partition (`_parts`) frames are carried
+    * (file-metadata-sized re-write with paths absolutized), so
+    * [[ZTable.scanXRange]], scoped DML and every [[PartitionedTable]]
+    * op work on the clone immediately.
     *
     * HAZARD (same as Delta's): the clone BORROWS the source's files —
     * the source's [[vacuum]] does not know about clones, so vacuuming
@@ -2401,39 +2334,35 @@ object ManifestTable {
     * or keep the source's retention above the clone's lifetime. */
   def cloneShallow(spark: SparkSession, sourceRoot: String,
       cloneRoot: String): Long = {
-    require(currentVersion(spark, cloneRoot).isEmpty,
-      s"clone target $cloneRoot already has commits")
-    val v = currentVersion(spark, sourceRoot)
+    val dst = snapshot(spark, cloneRoot)
+    require(dst.v == 0, s"clone target $cloneRoot already has commits")
+    val src = latest(spark, sourceRoot)
       .getOrElse(sys.error(s"nothing to clone at $sourceRoot"))
-    val srcDir = versionDataDir(spark, sourceRoot, v) // throws if vacuumed
+    val srcDir = src.dir
     val srcFs = fsOf(spark, sourceRoot)
     // absolutize: relative entries are relative to the SOURCE root;
     // a clone of a clone keeps already-absolute refs verbatim
-    val files = refsOf(spark, sourceRoot, srcDir)
-      .map(e => resolveRef(sourceRoot, e))
-    require(files.nonEmpty, s"version $v of $sourceRoot has no data files")
+    val files = src.refs.map(e => resolveRef(sourceRoot, e))
     val fs = fsOf(spark, cloneRoot)
-    val next = 1L
-    val dir = newDataDirName(next)
-    Seq("_stats", "_bloom").foreach { frame =>
-      val src = new Path(s"$sourceRoot/$srcDir/$frame")
-      if (srcFs.exists(src)) {
+    val dir = newDataDirName(dst.next)
+    Seq("_stats", "_bloom", "_parts").foreach { frame =>
+      val from = new Path(s"$sourceRoot/$srcDir/$frame")
+      if (srcFs.exists(from)) {
         // tiny file-metadata frames; `path` entries become absolute so
         // the clone's planner resolves them without knowing the
         // source. O(files) planning metadata → rewrite on the DRIVER
         // (the Spark read+write paid an action + AQE round per frame);
         // Spark fallback for an unreadable legacy shape.
-        val dst = s"$cloneRoot/$dir/$frame"
+        val to = s"$cloneRoot/$dir/$frame"
         def absolutize(p: String): String =
-          if (p == null || p.startsWith("/") || p.contains("://")) p
-          else s"$sourceRoot/$p"
-        MetaIO.schemaOf(spark, src).filter(MetaIO.frameWritable)
+          if (p == null) p else resolveRef(sourceRoot, p)
+        MetaIO.schemaOf(spark, from).filter(MetaIO.frameWritable)
           .flatMap(s =>
-            MetaIO.frameRowsAs(spark, src.toString, s).map((s, _)))
+            MetaIO.frameRowsAs(spark, from.toString, s).map((s, _)))
           match {
           case Some((schema, rows)) =>
             val pi = schema.fieldIndex("path")
-            MetaIO.writeFrame(spark, dst, schema, rows.map { r =>
+            MetaIO.writeFrame(spark, to, schema, rows.map { r =>
               val vals = r.toSeq.toArray
               vals(pi) = absolutize(r.getString(pi))
               new org.apache.spark.sql.catalyst.expressions
@@ -2441,12 +2370,12 @@ object ManifestTable {
             })
           case None =>
             import org.apache.spark.sql.functions.{col, concat, lit, when}
-            MetaIO.readParquet(spark, src.toString)
+            MetaIO.readParquet(spark, from.toString)
               .withColumn("path",
                 when(col("path").startsWith("/") ||
                      col("path").contains("://"), col("path"))
                   .otherwise(concat(lit(s"$sourceRoot/"), col("path"))))
-              .coalesce(1).write.parquet(dst)
+              .coalesce(1).write.parquet(to)
         }
       }
     }
@@ -2468,9 +2397,7 @@ object ManifestTable {
     schemaOf(spark, sourceRoot, srcDir).foreach(st =>
       writeSchemaFile(spark, cloneRoot, dir, st))
     writeFileList(fs, cloneRoot, dir, files)
-    writeOpMeta(spark, cloneRoot, dir, "CLONE")
-    writeMarker(spark, cloneRoot, next, dataDir = dir)
-    next
+    publish(spark, cloneRoot, dst, dir, "CLONE")
   }
 
   /** DEEP CLONE: materialize the source's current version as the
@@ -2483,14 +2410,11 @@ object ManifestTable {
     * by [[optimize]] instead (a full local rewrite). */
   def cloneDeep(spark: SparkSession, sourceRoot: String,
       cloneRoot: String): Long = {
-    require(currentVersion(spark, cloneRoot).isEmpty,
-      s"clone target $cloneRoot already has commits")
+    val dst = snapshot(spark, cloneRoot)
+    require(dst.v == 0, s"clone target $cloneRoot already has commits")
     val df = read(spark, sourceRoot)
       .getOrElse(sys.error(s"nothing to clone at $sourceRoot"))
-    val dir = writeVersionData(df, cloneRoot, 1L)
-    writeOpMeta(spark, cloneRoot, dir, "CLONE")
-    writeMarker(spark, cloneRoot, 1L, dataDir = dir)
-    1L
+    commitData(df, cloneRoot, dst, "CLONE")
   }
 
   /** CONVERT an existing plain-parquet directory into a manifest
@@ -2512,8 +2436,8 @@ object ManifestTable {
     * only touches `d<N>-*` commit-attempt dirs). */
   def convertInPlace(spark: SparkSession, root: String,
       dataDir: String): Long = {
-    require(currentVersion(spark, root).isEmpty,
-      s"$root already has commits")
+    val dst = snapshot(spark, root)
+    require(dst.v == 0, s"$root already has commits")
     require(!dataDir.startsWith("/") && !dataDir.contains("://"),
       s"dataDir must be relative to the table root: $dataDir")
     val fs = fsOf(spark, root)
@@ -2521,11 +2445,9 @@ object ManifestTable {
     require(fs.exists(p), s"no directory $dataDir under $root")
     val files = dataFilesIn(fs, root, dataDir)
     require(files.nonEmpty, s"$root/$dataDir has no data files")
-    val dir = newDataDirName(1L)
+    val dir = newDataDirName(dst.next)
     writeFileList(fs, root, dir, files)
-    writeOpMeta(spark, root, dir, "CONVERT")
-    writeMarker(spark, root, 1L, dataDir = dir)
-    1L
+    publish(spark, root, dst, dir, "CONVERT")
   }
 
   /** DESCRIBE HISTORY: one row per committed version, oldest first —
@@ -2603,19 +2525,9 @@ object ManifestTable {
   def optimize(spark: SparkSession, root: String,
       targetFiles: Int = 1): Long = {
     require(targetFiles >= 1, "targetFiles must be >= 1")
-    val (live, compacted) = commitState(spark, root)
-    val markers = namesOf(live, compacted)
-    require(markers.nonEmpty, s"nothing to optimize at $root")
-    val base = markers.map(versionOf).max
-    val next = base + 1
-    val dir = writeVersionData(
-      readVersionWith(spark, root, base, live, compacted)
-        .repartition(targetFiles),
-      root, next)
-    writeOpMeta(spark, root, dir, "OPTIMIZE")
-    writeMarker(spark, root, next, dataDir = dir)
-    maybeAutoCompact(spark, root, live.size + 1)
-    next
+    val base = baseOf(spark, root, "optimize")
+    commitData(readDataDir(spark, root, base.dir).repartition(targetFiles),
+      root, base, "OPTIMIZE")
   }
 
   /** Incremental OPTIMIZE — bin-pack ONLY the small files (Delta's

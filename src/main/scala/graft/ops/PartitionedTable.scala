@@ -139,15 +139,17 @@ object PartitionedTable {
   /** The partition metadata of version `v`: one (path, value, pcol)
     * row per data file. Fails loudly on an unpartitioned version. */
   def parts(spark: SparkSession, root: String, v: Long): DataFrame =
-    partsAt(spark, root, v, ManifestTable.versionDataDir(spark, root, v))
+    MetaIO.readParquet(spark,
+      partsPath(spark, root, v, ManifestTable.versionDataDir(spark, root, v)))
 
-  private def partsAt(spark: SparkSession, root: String, v: Long,
-      dir: String): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(s"$root/$dir/_parts")
-    require(fs(spark, root).exists(p),
+  /** Version `v`'s `_parts` frame path; fails loudly when it has none. */
+  private def partsPath(spark: SparkSession, root: String, v: Long,
+      dir: String): String = {
+    val p = s"$root/$dir/_parts"
+    require(fs(spark, root).exists(new org.apache.hadoop.fs.Path(p)),
       s"version $v of $root carries no partition metadata — commit " +
         "through PartitionedTable.commitPartitioned first")
-    MetaIO.readParquet(spark, p.toString)
+    p
   }
 
   /** Commit `df` as the next version, partitioned by `pcol` — one
@@ -165,20 +167,16 @@ object PartitionedTable {
       df: DataFrame, pcol: String,
       statsCols: Option[(String, String, Option[String])] = None,
       batchKey: String = ""): Long = {
-    val next = ManifestTable.currentVersion(spark, root)
-      .getOrElse(0L) + 1
+    val src = ManifestTable.snapshot(spark, root)
     val full = Generated(spark, root, df, "commitPartitioned")
     Checks.enforce(spark, root, full, "commitPartitioned")
-    val dir = ManifestTable.newDataDirName(next)
+    val dir = ManifestTable.newDataDirName(src.next)
     val rows = writeFlattened(spark, root, dir, full, pcol)
     require(rows.nonEmpty, "partitioned write produced no data files")
     writeParts(spark, root, dir, rows, pcol)
     statsCols.foreach { case (x, y, b) =>
       ZTable.establishStats(spark, root, dir, rows.map(_._1), x, y, b) }
-    ManifestTable.writeOpMeta(spark, root, dir, "WRITE")
-    ManifestTable.writeMarker(spark, root, next, batchKey, dir)
-    ManifestTable.maybeAutoCompact(spark, root)
-    next
+    ManifestTable.publish(spark, root, src, dir, "WRITE", batchKey)
   }
 
   /** APPEND a batch into the partitioned fact as the next version:
@@ -207,7 +205,7 @@ object PartitionedTable {
     * the winner's version. */
   def appendPartitionedWithRetry(spark: SparkSession, root: String,
       df: DataFrame, maxAttempts: Int = 10): Long =
-    withRetry(maxAttempts)(appendPartitioned(spark, root, df))
+    ManifestTable.withRetry(maxAttempts)(appendPartitioned(spark, root, df))
 
   /** [[deleteWhereInPartitions]] with the OCC rebase-retry loop —
     * safe for the same reason: each attempt re-reads the CURRENT
@@ -216,21 +214,8 @@ object PartitionedTable {
   def deleteWhereInPartitionsWithRetry(spark: SparkSession,
       root: String, values: Seq[String], extra: Column,
       maxAttempts: Int = 10): Long =
-    withRetry(maxAttempts)(
+    ManifestTable.withRetry(maxAttempts)(
       deleteWhereInPartitions(spark, root, values, extra))
-
-  private def withRetry(maxAttempts: Int)(attempt: => Long): Long = {
-    var n = 1
-    while (true) {
-      try return attempt
-      catch {
-        case e: ConcurrentCommitException =>
-          if (n >= maxAttempts) throw e
-          n += 1
-      }
-    }
-    sys.error("unreachable")
-  }
 
   /** DROP whole partitions — ZERO-COPY: the new version's `_files`
     * references every file of every OTHER partition verbatim; the
@@ -340,21 +325,22 @@ object PartitionedTable {
     }
   }
 
-  /** The current version — its `_parts` rows known, so a commit from
-    * it reads them once — with its (path, value) rows. O(files)
-    * metadata — the planning grain. */
+  /** The current version — its refs known from its `_parts` rows, so
+    * a commit from it reads no `_files` — with its (path, value) rows.
+    * O(files) metadata read on the driver, no Spark job — the planning
+    * grain. */
   private def resolve(spark: SparkSession, root: String)
       : (ManifestTable.Base, Seq[(String, String)]) = {
     val base = ManifestTable.latest(spark, root)
       .getOrElse(sys.error(s"no committed version at $root"))
-    val rows = partsAt(spark, root, base.v, base.dir).collect()
+    val rows = base.parts.map(_._2).getOrElse {
+      partsPath(spark, root, base.v, base.dir) // no frame: fails here
+      Nil // an empty frame
+    }
     require(rows.nonEmpty,
       s"version ${base.v} of $root has an EMPTY partition metadata " +
         "frame — the table holds no partitions (every partition was " +
         "deleted or dropped); re-establish with commitPartitioned")
-    val pcol = rows.head.getString(rows.head.fieldIndex("pcol"))
-    val pr = rows.toSeq.map(r => (r.getString(r.fieldIndex("path")),
-      r.getString(r.fieldIndex("value"))))
-    (base.withParts(pcol, pr), pr)
+    (base.withRefs(rows.map(_._1)), rows)
   }
 }

@@ -264,14 +264,13 @@ object ZTable {
       yCol: String, tieCol: String, nFiles: Int,
       bloomCol: Option[String] = None, bits: Int = 16): Long = {
     require(nFiles >= 1, "nFiles must be >= 1")
-    val base = ManifestTable.currentVersion(spark, root)
+    val base = ManifestTable.latest(spark, root)
       .getOrElse(sys.error(s"nothing to optimize at $root"))
-    val df = ManifestTable.readVersion(spark, root, base)
+    val baseDir = base.dir
+    val df = ManifestTable.readDataDir(spark, root, baseDir)
     val cols = df.columns.toSet
     (Seq(xCol, yCol, tieCol) ++ bloomCol).foreach(c =>
       require(cols.contains(c), s"no column $c in $root (has $cols)"))
-    val next = base + 1
-    val dir = ManifestTable.newDataDirName(next)
     // NORMALIZE each dim to the curve's bit width from its ACTUAL
     // bounds (one metadata-sized agg): interleaving raw values breaks
     // down whenever a dim outgrows `bits` (low-bit aliasing scrambles
@@ -285,7 +284,6 @@ object ZTable {
     // layout and committed stats come out byte-identical — this only
     // removes the bounds job, never changes the curve. Any other
     // shape keeps the read-back aggregation.
-    val baseDir = ManifestTable.versionDataDir(spark, root, base)
     val footerB: Option[(Any, Any, Any, Any)] =
       if (ManifestTable.dvBytesOf(spark, root, baseDir) > 0L ||
           ManifestTable.colmapOf(spark, root, baseDir).nonEmpty) None
@@ -318,19 +316,16 @@ object ZTable {
     // ONE range shuffle on the z-value: each output file covers a
     // contiguous z-range, so BOTH dims' per-file min/max are tight —
     // the multi-dimensional clustering trade (Delta OPTIMIZE ZORDER)
-    df.withColumn("__z", Layout.zValue(scaled(col(xCol), 0, 1),
-        scaled(col(yCol), 2, 3), bits))
-      .repartitionByRange(nFiles, col("__z"), col(tieCol))
-      .sortWithinPartitions(col("__z"), col(tieCol))
-      .drop("__z")
-      .write.parquet(s"$root/$dir")
+    val dir = ManifestTable.writeVersionData(
+      df.withColumn("__z", Layout.zValue(scaled(col(xCol), 0, 1),
+          scaled(col(yCol), 2, 3), bits))
+        .repartitionByRange(nFiles, col("__z"), col(tieCol))
+        .sortWithinPartitions(col("__z"), col(tieCol))
+        .drop("__z"), root, base.next)
     writeStats(spark, root, dir,
       ManifestTable.dataFilesIn(fs(spark, root), root, dir),
       xCol, yCol, bloomCol, carriedStats = None, carriedBloom = None)
-    ManifestTable.writeOpMeta(spark, root, dir, "OPTIMIZE")
-    ManifestTable.writeMarker(spark, root, next, dataDir = dir)
-    ManifestTable.maybeAutoCompact(spark, root)
-    next
+    ManifestTable.publish(spark, root, base, dir, "OPTIMIZE")
   }
 
   /** PARTITION-SCOPED OPTIMIZE ZORDER — Delta's `OPTIMIZE tbl WHERE
@@ -370,7 +365,7 @@ object ZTable {
       .getOrElse(sys.error(s"version ${base0.v} of $root carries no " +
         "partition metadata — use optimizeZOrder (whole-table) or " +
         "commit through PartitionedTable first"))
-    val base = base0.withParts(pcol, baseRows)
+    val base = base0.withRefs(baseRows.map(_._1))
     // the SQL form's WHERE column must BE the partition column — a
     // predicate on any other column is not a partition scope and
     // must refuse, not silently optimize the wrong slice
@@ -585,11 +580,12 @@ object ZTable {
     val touchedCur = ManifestTable.live(spark, root, base.dir,
       MetaIO.readParquet(spark,
         touchedPaths.map(p => ManifestTable.resolveRef(root, p))))
-    transform(touchedCur, xCol)
-      .write.parquet(s"$root/$dir")
+    // partition-pure rewrites on a partitioned base keep its `_parts`
+    val (appended, freshParts) = ManifestTable.writeDelta(spark, root,
+      base, dir)(_ => transform(touchedCur, xCol))
     ManifestTable.commitFiles(spark, root, base, dir,
-      untouched.toSeq.map(r => s(r, "path")),
-      ManifestTable.dataFilesIn(fs(spark, root), root, dir), op)
+      untouched.toSeq.map(r => s(r, "path")), appended, op,
+      freshParts = freshParts)
   }
 
   /** ESTABLISH committed skipping stats for a freshly-written version

@@ -74,23 +74,38 @@ class GraftSessionSpec extends SparkSpec {
       .forall(_ == "GraftSession.scala"))
   }
 
-  test("one function writes a version's `_files` list") {
-    // split each source at its `def`s; a def whose code names the
-    // `_files` manifest and creates a file writes one. A second
-    // hand-rolled file-list commit fails here
+  /** (file name, def name, code) of every `def` under
+    * `src/main/scala/graft`, comment lines dropped; a def's code runs
+    * to the next `def` in its file. */
+  private lazy val defs: Seq[(String, String, String)] = {
     val defName = """\bdef\s+(\w+)""".r
-    val filesLiteral = """["/]_files"""".r
-    val writers = sources(Seq("src/main/scala/graft")).flatMap {
-      case (file, lines) =>
-        val code = lines.filterNot(comment).mkString("\n")
-        val starts = defName.findAllMatchIn(code).toSeq
-        starts.zip(starts.drop(1).map(_.start) :+ code.length)
-          .filter { case (m, end) =>
-            val body = code.substring(m.start, end)
-            filesLiteral.findFirstIn(body).isDefined &&
-              body.contains(".create(")
-          }.map { case (m, _) => s"$file:${m.group(1)}" }
+    sources(Seq("src/main/scala/graft")).flatMap { case (file, lines) =>
+      val code = lines.filterNot(comment).mkString("\n")
+      val starts = defName.findAllMatchIn(code).toSeq
+      starts.zip(starts.drop(1).map(_.start) :+ code.length).map {
+        case (m, end) => (file, m.group(1), code.substring(m.start, end))
+      }
     }
+  }
+
+  test("one function writes a version's `_files` list") {
+    // a def whose code names the `_files` manifest and creates a file
+    // writes one. A second hand-rolled file-list commit fails here
+    val filesLiteral = """["/]_files"""".r
+    val writers = defs.collect { case (file, name, body)
+      if filesLiteral.findFirstIn(body).isDefined &&
+        body.contains(".create(") => s"$file:$name" }
     assert(writers == Seq("ManifestTable.scala:writeFileList"))
+  }
+
+  test("one function publishes a version: `_op`, marker, compaction") {
+    // a commit that writes its own `_op`, marker or compaction fails
+    // here; the defining `def` line itself is not a call
+    Seq("writeOpMeta", "writeMarker", "maybeAutoCompact").foreach { f =>
+      val call = s"""(?<!def )\\b$f\\(""".r
+      val callers = defs.collect { case (file, name, body)
+        if call.findFirstIn(body).isDefined => s"$file:$name" }
+      assert(callers == Seq("ManifestTable.scala:publish"), f)
+    }
   }
 }

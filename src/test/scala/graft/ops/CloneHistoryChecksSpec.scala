@@ -200,22 +200,53 @@ class CloneHistoryChecksSpec extends SparkSpec {
   // -------------------------------------------------------- history
 
   test("history records version, operation, batch key, file-list") {
-    val root = freshBase() + "/tbl"
+    val base = freshBase()
+    val root = base + "/tbl"
+    def history(r: String) = ManifestTable.history(spark, r)
+      .select("version", "operation", "batch_key", "is_filelist")
+      .as[(Long, String, Option[String], Boolean)].collect().toSeq
     ManifestTable.commit(kv(1L -> 10L, 2L -> 20L), root)          // v1
     ManifestTable.mergeBatch(spark, root, kv(3L -> 30L), Seq("k"),
       batchKey = "run-7")                                          // v2
     ManifestTable.deleteWhere(spark, root, col("k") === 1L)        // v3
     ManifestTable.optimize(spark, root)                            // v4
     ManifestTable.restore(spark, root, 2L)                         // v5
-    val h = ManifestTable.history(spark, root)
-      .select("version", "operation", "batch_key", "is_filelist")
-      .as[(Long, String, Option[String], Boolean)].collect().toSeq
-    assert(h == Seq(
+    ManifestTable.commitBatch(kv(1L -> 10L, 2L -> 20L), root, "cb-1") // v6
+    ManifestTable.mergeEvolve(spark, root, kv(4L -> 40L), Seq("k")) // v7
+    ManifestTable.updateWhere(spark, root, col("k") === 2L,
+      Map("n" -> lit(21L)))                                        // v8
+    ZTable.optimizeZOrder(spark, root, "k", "n", "k", nFiles = 1)  // v9
+    assert(history(root) == Seq(
       (1L, "WRITE", None, false),
       (2L, "MERGE", Some("run-7"), false),
       (3L, "DELETE", None, false),
       (4L, "OPTIMIZE", None, false),
-      (5L, "RESTORE", None, true)))
+      (5L, "RESTORE", None, true),
+      (6L, "WRITE", Some("cb-1"), false),
+      (7L, "MERGE", None, false),
+      (8L, "UPDATE", None, false),
+      (9L, "OPTIMIZE", None, false)))
+    // every other first commit of a root
+    kv(5L -> 50L).write.parquet(s"$base/conv/raw")
+    val firsts: Seq[(String, String => Any,
+        (Long, String, Option[String], Boolean))] = Seq(
+      ("part", r => PartitionedTable.commitPartitioned(spark, r,
+        kv(1L -> 10L), "n", batchKey = "p-1"),
+        (1L, "WRITE", Some("p-1"), false)),
+      ("dv", r => ManifestTable.mergeBatchDV(spark, r, kv(1L -> 10L),
+        Seq("k"), batchKey = "dv-1"), (1L, "MERGE", Some("dv-1"), false)),
+      ("deep", ManifestTable.cloneDeep(spark, root, _),
+        (1L, "CLONE", None, false)),
+      ("shallow", ManifestTable.cloneShallow(spark, root, _),
+        (1L, "CLONE", None, true)),
+      ("conv", ManifestTable.convertInPlace(spark, _, "raw"),
+        (1L, "CONVERT", None, true)),
+      ("index", IndexStore.save(ProductQuantizer.IvfPqIndex(kv(1L -> 1L),
+        kv(2L -> 2L), kv(3L -> 3L)), _), (1L, "WRITE", None, false)))
+    firsts.foreach { case (name, first, want) =>
+      first(s"$base/$name")
+      assert(history(s"$base/$name") == Seq(want), name)
+    }
   }
 
   test("history survives vacuum: record kept, data_retained=false") {

@@ -39,12 +39,12 @@ class FileListCommitSpec extends SparkSpec {
 
   /** One commit of the walk: the call, its effect on the model, the
     * version it commits FROM when that is not the previous one, and
-    * which metadata it keeps of its source (`parts` = `_parts`;
-    * `mapping` = a column-mapping commit, which drops `_parts`,
-    * `_stats` and `_bloom`). */
+    * whether it is a column-mapping commit, which drops `_parts`,
+    * `_stats` and `_bloom` (every other commit keeps each frame its
+    * source has). */
   private case class Step(name: String, run: Walk => Any,
       next: (Walk, Model) => Model, source: Walk => Option[Long] = _ => None,
-      parts: Boolean = true, mapping: Boolean = false)
+      mapping: Boolean = false)
 
   private val mergeBatch =
     (1200L to 1220L).map(k => row(k).copy(_6 = -1.0)) ++
@@ -66,12 +66,11 @@ class FileListCommitSpec extends SparkSpec {
       (_, m) => m ++ mergeBatch.map(r => r._1 -> r)),
     // the merge's fragments are the only files reaching x >= 5000
     Step("deleteWhereScoped", w => ZTable.deleteWhereScoped(spark, w.root,
-      5000L, 5004L), (_, m) => m.filterNot(e => e._1 >= 5000 && e._1 <= 5004),
-      parts = false),
+      5000L, 5004L),
+      (_, m) => m.filterNot(e => e._1 >= 5000 && e._1 <= 5004)),
     Step("updateWhereScoped", w => ZTable.updateWhereScoped(spark, w.root,
       5005L, 5010L, Map("v" -> lit(-2.0))),
-      (_, m) => setV(m, r => r._1 >= 5005 && r._1 <= 5010, _ => -2.0),
-      parts = false),
+      (_, m) => setV(m, r => r._1 >= 5005 && r._1 <= 5010, _ => -2.0)),
     Step("restore", w => ManifestTable.restore(spark, w.root,
       w.after("mergeBatchDV")._1), (w, _) => w.after("mergeBatchDV")._2,
       source = w => Some(w.after("mergeBatchDV")._1)),
@@ -131,12 +130,9 @@ class FileListCommitSpec extends SparkSpec {
     if (s.mapping)
       Seq("_stats", "_bloom", "_parts").foreach(f =>
         assert(!has(root, dir, f), s"$at: $f survived a mapping change"))
-    else {
-      Seq("_stats", "_bloom", "_bloom/_GEOM").foreach(f =>
+    else
+      Seq("_stats", "_bloom", "_bloom/_GEOM", "_parts").foreach(f =>
         assert(has(root, dir, f) == has(root, srcDir, f), s"$at: $f"))
-      assert(has(root, dir, "_parts") ==
-        (s.parts && has(root, srcDir, "_parts")), s"$at: _parts")
-    }
     val read = ManifestTable.readVersion(spark, root, v)
     assert(ManifestTable.countVersion(spark, root, v) == read.count(), at)
     val vCol = if (read.columns.contains("v")) "v" else "v2"

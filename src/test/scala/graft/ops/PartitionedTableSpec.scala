@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.SparkSpec
+import org.apache.spark.graft.JobCounter
 import org.apache.spark.sql.functions._
 
 /** First-class partition columns in the manifest store
@@ -400,5 +401,36 @@ class PartitionedTableSpec extends SparkSpec {
     assert(rows(ManifestTable.read(spark, root).get) == model)
     assert(rows(PartitionedTable.readPartitions(spark, root, Seq("2"))) ==
       model.filter(_._3 == "2"))
+  }
+
+  test("a shallow clone of a partitioned table stays partitioned: " +
+      "appends and pruned reads work on the clone") {
+    val root = freshRoot()
+    val clone = freshRoot()
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select($"k", $"g", $"day", $"v")
+        .as[(Long, String, String, Double)].collect().toSeq.sorted
+    PartitionedTable.commitPartitioned(spark, root, fact(0, 100), "day")
+    ManifestTable.cloneShallow(spark, root, clone)
+    PartitionedTable.appendPartitioned(spark, clone, fact(100, 130))
+    val model = rows(fact(0, 130))
+    assert(rows(ManifestTable.read(spark, clone).get) == model)
+    assert(rows(PartitionedTable.readPartitions(spark, clone, Seq("2"))) ==
+      model.filter(_._3 == "2"))
+    // the source never sees the clone's commit
+    assert(rows(ManifestTable.read(spark, root).get) == rows(fact(0, 100)))
+  }
+
+  test("readPartitions plans its pruned read on the driver: no job " +
+      "before the DataFrame is returned") {
+    val root = freshRoot()
+    PartitionedTable.commitPartitioned(spark, root, fact(0, 200), "day")
+    ManifestTable.deleteWhereDV(spark, root, $"k" % 7 === 0)
+    val (df, jobs) = JobCounter.jobs(spark)(
+      PartitionedTable.readPartitions(spark, root, Seq("1", "3")))
+    assert(jobs.isEmpty, jobs.map(_.callSite).mkString("\n"))
+    assert(df.as[(Long, String, String, Double)].collect().map(_._1)
+      .sorted.toSeq == (0L until 200L).filter(k =>
+        k % 7 != 0 && (k % 5 == 1 || k % 5 == 3)))
   }
 }
