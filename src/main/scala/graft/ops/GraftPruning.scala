@@ -151,14 +151,10 @@ private[graft] object GraftPruning {
     // driver-side parquet-mr reads ([[MetaIO.frameRows]]) — planning
     // must not launch Spark jobs for O(files) metadata frames
     val (pcol, partValue) =
-      if (!exists("_parts")) (None, Map.empty[String, String])
-      else {
-        val rows = MetaIO.frameRows(spark, s"$root/$dir/_parts")
-        if (rows.isEmpty) (None, Map.empty[String, String])
-        else (Some(rows.head("pcol").asInstanceOf[String]),
-          rows.map(r => ManifestTable.fileKeyOf(
-              r("path").asInstanceOf[String]) ->
-            r("value").asInstanceOf[String]).toMap)
+      PartitionedTable.partsRowsIfAny(spark, root, dir) match {
+        case Some((pc, rows)) => (Some(pc),
+          rows.map(r => ManifestTable.fileKeyOf(r._1) -> r._2).toMap)
+        case None => (None, Map.empty[String, String])
       }
     val (xCol, yCol, ranges, bloomCol) =
       if (!exists("_stats"))

@@ -2,14 +2,15 @@ package graft.ops
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.example.data.Group
+import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.parquet.io.InputFile
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.StructType
 
-/** Driver-side parquet schema resolution for the table-format
-  * protocol's many tiny reads.
+/** Driver-side parquet metadata IO for the table-format protocol's
+  * many tiny reads: footers, and the rows of the `_stats`, `_parts`,
+  * `_bloom` and `_dv` frames.
   *
   * Every `spark.read.parquet(dir)` without an explicit schema launches
   * a one-task Spark JOB just to read a footer (schema inference).
@@ -22,7 +23,12 @@ import org.apache.spark.sql.types.StructType
   * from the first footer — exact, never guessed — and memoized for
   * the session. At 100 TB the same move matters more, not less: the
   * footer read is one ranged read of one file vs a scheduled task.
-  */
+  *
+  * Every file is opened through one helper ([[withFile]]) and every
+  * row is decoded by one loop ([[streamRows]]): parquet-mr's column
+  * readers over the projected top-level columns, a dictionary decoded
+  * once per entry, each row handed to a callback with no record
+  * object per row. */
 object MetaIO {
   /** Bounded driver-side IO pool for footer/frame reads (round-15
     * VERDICT "What's wrong" #2: the sequential footer loop becomes
@@ -72,11 +78,8 @@ object MetaIO {
     val converter =
       new org.apache.spark.sql.execution.datasources.parquet
         .ParquetToSparkSchemaConverter(conf = sqlConf)
-    val footer = org.apache.parquet.hadoop.ParquetFileReader.readFooter(
-      conf, file,
-      org.apache.parquet.format.converter.ParquetMetadataConverter
-        .NO_FILTER)
-    converter.convert(footer.getFileMetaData.getSchema)
+    converter.convert(withFile(HadoopInputFile.fromPath(file, conf))(
+      _.getFileMetaData.getSchema))
   }
 
   /** First data FILE of `dir` (non-underscore, non-dot), if any.
@@ -155,7 +158,6 @@ object MetaIO {
       colA: String, colB: String)
       : Option[Seq[(String, Long, Any, Any, Any, Any)]] = {
     import org.apache.parquet.schema.LogicalTypeAnnotation
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
     val conf = spark.sparkContext.hadoopConfiguration
     def intOk(t: org.apache.parquet.schema.Type): Boolean =
       t.isPrimitive && {
@@ -175,10 +177,8 @@ object MetaIO {
     // new floor at scale (round-15 VERDICT), and each footer read is
     // one independent ranged read
     def oneFile(ap: String): Option[(String, Long, Any, Any, Any, Any)] = {
-      val footer = org.apache.parquet.hadoop.ParquetFileReader.readFooter(
-        conf, new Path(ap),
-        org.apache.parquet.format.converter.ParquetMetadataConverter
-          .NO_FILTER)
+      val footer =
+        withFile(HadoopInputFile.fromPath(new Path(ap), conf))(_.getFooter)
       val schema = footer.getFileMetaData.getSchema
       def fieldOk(c: String) =
         schema.containsField(c) &&
@@ -231,82 +231,72 @@ object MetaIO {
 
   /** Total row count of the parquet files under `dir` (non-recursive),
     * from footers on the driver — exact for every type, no job. */
-  def footerRowCount(spark: SparkSession, dir: String): Long = {
-    val d = new Path(dir)
-    val fs = d.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    footerRowCount(spark, fs.listStatus(d).iterator
-      .filter(st => st.isFile && { val n = st.getPath.getName
-        !n.startsWith("_") && !n.startsWith(".") })
-      .map(_.getPath).toSeq)
-  }
+  def footerRowCount(spark: SparkSession, dir: String): Long =
+    footerRowCount(spark, frameParts(spark, dir).map(_.getPath))
 
   /** Total row count of `files`, from their footers read on the bounded
     * IO pool — exact for every type, no job. */
   def footerRowCount(spark: SparkSession, files: Seq[Path]): Long = {
     val conf = spark.sparkContext.hadoopConfiguration
     import scala.jdk.CollectionConverters._
-    parMap(files) { p =>
-      org.apache.parquet.hadoop.ParquetFileReader.readFooter(
-        conf, p,
-        org.apache.parquet.format.converter.ParquetMetadataConverter
-          .NO_FILTER).getBlocks.asScala.map(_.getRowCount).sum
-    }.sum
+    parMap(files)(p => withFile(HadoopInputFile.fromPath(p, conf))(
+      _.getFooter.getBlocks.asScala.map(_.getRowCount).sum)).sum
+  }
+
+  /** Whether no row of `files` holds a null in top-level column
+    * `name`, from their footers' null counts on the bounded IO pool;
+    * a chunk that records no null count counts as holding one. */
+  private[ops] def footerNullFree(spark: SparkSession, files: Seq[Path],
+      name: String): Boolean = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    import scala.jdk.CollectionConverters._
+    parMap(files)(p => withFile(HadoopInputFile.fromPath(p, conf))(
+      _.getFooter.getBlocks.asScala.forall(_.getColumns.asScala.exists(cc =>
+        cc.getPath.toDotString == name && {
+          val st = cc.getStatistics
+          st != null && st.isNumNullsSet && st.getNumNulls == 0L
+        })))).forall(identity)
   }
 
   /** The values of top-level column `name` in each of `absPaths`, read
-    * on the DRIVER (parquet-mr, projected to that one column, files on
-    * the bounded IO pool), in file order. Values are typed as Spark
-    * reads them: a string column's raw UTF-8 bytes as [[UTF8String]],
-    * an int/short/byte column as Int, a long column as Long, nulls as
-    * null. None (caller keeps its Spark path) unless every file holds
-    * the column with one of those Spark types. */
+    * on the DRIVER ([[streamRows]], files on the bounded IO pool), in
+    * file order. Values are typed as Spark reads them: a string
+    * column's raw UTF-8 bytes as [[UTF8String]], an int/short/byte
+    * column as Int, a long column as Long, nulls as null. None (caller
+    * keeps its Spark path) unless every file holds the column with one
+    * of those Spark types. */
   def columnValues(spark: SparkSession, absPaths: Seq[String],
       name: String): Option[Seq[Seq[Any]]] = {
     import org.apache.spark.sql.types._
-    import org.apache.spark.unsafe.types.UTF8String
     val conf = spark.sparkContext.hadoopConfiguration
-    def oneFile(ap: String): Option[Seq[Any]] = {
-      val file = new Path(ap)
-      val fileSchema = org.apache.parquet.hadoop.ParquetFileReader
-        .readFooter(conf, file,
-          org.apache.parquet.format.converter.ParquetMetadataConverter
-            .NO_FILTER).getFileMetaData.getSchema
-      if (!fileSchema.containsField(name)) return None
-      val sparkType = new org.apache.spark.sql.execution.datasources
-        .parquet.ParquetToSparkSchemaConverter(
-          conf = spark.sessionState.conf)
-        .convert(fileSchema)(name).dataType
-      val get: (org.apache.parquet.example.data.Group => Any) =
-        sparkType match {
-          case StringType =>
-            g => UTF8String.fromBytes(g.getBinary(0, 0).getBytes)
-          case IntegerType | ShortType | ByteType => g => g.getInteger(0, 0)
-          case LongType => g => g.getLong(0, 0)
-          case _ => return None
+    def oneFile(ap: String): Option[Seq[Any]] =
+      withFile(HadoopInputFile.fromPath(new Path(ap), conf)) { r =>
+        val fileSchema = r.getFileMetaData.getSchema
+        val physical =
+          if (!fileSchema.containsField(name)) None
+          else new org.apache.spark.sql.execution.datasources.parquet
+              .ParquetToSparkSchemaConverter(conf = spark.sessionState.conf)
+              .convert(fileSchema)(name).dataType match {
+            case StringType => Some(PrimitiveTypeName.BINARY)
+            case IntegerType | ShortType | ByteType =>
+              Some(PrimitiveTypeName.INT32)
+            case LongType => Some(PrimitiveTypeName.INT64)
+            case _ => None
+          }
+        physical.map { t =>
+          val out = scala.collection.mutable.ArrayBuffer.empty[Any]
+          streamRows(r, Seq(name -> t), utf8 = true) { row =>
+            out += row(0); true }
+          out.toSeq
         }
-      val projected = new org.apache.parquet.schema.MessageType(
-        fileSchema.getName, fileSchema.getType(fileSchema.getFieldIndex(name)))
-      val rc = new Configuration(conf)
-      rc.set(org.apache.parquet.hadoop.api.ReadSupport.PARQUET_READ_SCHEMA,
-        projected.toString)
-      val reader = groupReader(HadoopInputFile.fromPath(file, rc))
-      val out = scala.collection.mutable.ArrayBuffer.empty[Any]
-      try {
-        var g = reader.read()
-        while (g != null) {
-          out += (if (g.getFieldRepetitionCount(0) == 0) null else get(g))
-          g = reader.read()
-        }
-      } finally reader.close()
-      Some(out.toSeq)
-    }
+      }
     val per = parMap(absPaths)(oneFile)
     if (per.exists(_.isEmpty)) None else Some(per.map(_.get))
   }
 
   /** First row of a tiny metadata parquet dir, read on the DRIVER
-    * (parquet-mr example reader — no Spark job): (column name →
-    * value) for string/long primitives, absent fields null. Memoized
+    * ([[frameRows]] with `limit = 1` — no Spark job): (column name →
+    * value), typed as [[frameRows]] types them. Memoized
     * per (session, dir) — committed frame dirs are immutable. Used
     * for the `_stats` frame HEAD (x_col/y_col/bloom_col), which every
     * [[ZTable.extendStats]] call on a MoR DML commit needs. */
@@ -325,65 +315,162 @@ object MetaIO {
 
   /** The part files of a frame dir (non-underscore, non-dot), sorted
     * by name; empty when the dir does not exist. */
-  private def frameFiles(fs: org.apache.hadoop.fs.FileSystem,
-      d: Path): Seq[org.apache.hadoop.fs.FileStatus] =
-    try fs.listStatus(d).iterator
+  private def frameParts(spark: SparkSession, dir: String)
+      : Seq[HadoopInputFile] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val d = new Path(dir)
+    try d.getFileSystem(conf).listStatus(d).iterator
       .filter(st => st.isFile && { val n = st.getPath.getName
         !n.startsWith("_") && !n.startsWith(".") })
       .toSeq.sortBy(_.getPath.getName)
+      .map(HadoopInputFile.fromStatus(_, conf))
     catch { case _: java.io.FileNotFoundException => Seq.empty }
-
-  /** A parquet-mr example-record reader over `file`, configured by the
-    * file's own conf. `ParquetReader.builder(readSupport, path)` would
-    * build a fresh `Configuration` per reader and re-parse Hadoop's
-    * default XML resources each time; the `InputFile` builder reuses
-    * the caller's. */
-  private final class GroupReaderBuilder(file: InputFile)
-      extends org.apache.parquet.hadoop.ParquetReader.Builder[Group](file) {
-    override protected def getReadSupport()
-        : org.apache.parquet.hadoop.api.ReadSupport[Group] =
-      new org.apache.parquet.hadoop.example.GroupReadSupport()
   }
-  private def groupReader(file: InputFile)
-      : org.apache.parquet.hadoop.ParquetReader[Group] =
-    new GroupReaderBuilder(file).build()
 
-  /** A parquet-mr file reader over `st`, its read options built from
-    * `conf`: `ParquetFileReader.open(InputFile)` alone builds a fresh
+  /** THE file opener: a parquet-mr reader over `file`, handed to `f`
+    * and closed after. Its read options are built from the file's own
+    * conf: `ParquetFileReader.open(InputFile)` alone builds a fresh
     * Hadoop `Configuration` per file, re-parsing the default XML. */
-  private def openFile(st: org.apache.hadoop.fs.FileStatus,
-      conf: Configuration): org.apache.parquet.hadoop.ParquetFileReader =
-    org.apache.parquet.hadoop.ParquetFileReader.open(
-      HadoopInputFile.fromStatus(st, conf),
-      org.apache.parquet.HadoopReadOptions.builder(conf).build())
+  private def withFile[A](file: HadoopInputFile)(
+      f: ParquetFileReader => A): A = {
+    val r = ParquetFileReader.open(file, org.apache.parquet.HadoopReadOptions
+      .builder(file.getConfiguration).build())
+    try f(r) finally r.close()
+  }
+
+  /** The physical types the row decoder reads: those of the frames'
+    * Spark types, [[frameCols]]. */
+  private val frameTypes = Set(PrimitiveTypeName.BINARY,
+    PrimitiveTypeName.INT32, PrimitiveTypeName.INT64,
+    PrimitiveTypeName.BOOLEAN, PrimitiveTypeName.DOUBLE)
+
+  /** `schema`'s fields with the physical types Spark's writer and
+    * [[writeFrame]] store them as; None when a field is not of a type
+    * frames hold. */
+  private def frameCols(schema: StructType)
+      : Option[Seq[(String, PrimitiveTypeName)]] = {
+    import org.apache.spark.sql.types._
+    val cols = schema.fields.toSeq.flatMap(f => (f.dataType match {
+      case StringType => Some(PrimitiveTypeName.BINARY)
+      case IntegerType => Some(PrimitiveTypeName.INT32)
+      case LongType => Some(PrimitiveTypeName.INT64)
+      case BooleanType => Some(PrimitiveTypeName.BOOLEAN)
+      case DoubleType => Some(PrimitiveTypeName.DOUBLE)
+      case _ => None
+    }).map(f.name -> _))
+    Some(cols).filter(_.size == schema.size)
+  }
+
+  /** The physical type of top-level field `t` when the row decoder can
+    * read it: a non-repeated primitive of one of [[frameTypes]]. */
+  private def readable(t: org.apache.parquet.schema.Type)
+      : Option[PrimitiveTypeName] =
+    Some(t).filter(t => t.isPrimitive &&
+        !t.isRepetition(org.apache.parquet.schema.Type.Repetition.REPEATED))
+      .map(_.asPrimitiveType.getPrimitiveTypeName).filter(frameTypes)
+
+  /** THE row decoder: stream the rows of the open file `r`, projected
+    * to the top-level columns `cols` (name, physical type), into `f`
+    * in row order, through parquet-mr's column readers with no record
+    * object per row: `f` sees one array, refilled for every row, that
+    * holds column `i` at index `i`. BINARY is a `String`, or with
+    * `utf8` its raw UTF-8 bytes as a [[UTF8String]]; INT32 is an Int,
+    * INT64 a Long, BOOLEAN and DOUBLE themselves, a null null. A
+    * dictionary-encoded BINARY column is decoded once per dictionary
+    * entry, so consecutive rows of one value hand `f` the same
+    * instance. Returns false, cutting the stream short, when `f`
+    * returns false or the file lacks one of `cols` as a readable field
+    * of that type ([[readable]]). */
+  private def streamRows(r: ParquetFileReader,
+      cols: Seq[(String, PrimitiveTypeName)], utf8: Boolean)(
+      f: Array[Any] => Boolean): Boolean = {
+    import org.apache.parquet.io.api._
+    val fileSchema = r.getFileMetaData.getSchema
+    def field(c: String) = fileSchema.getType(fileSchema.getFieldIndex(c))
+    if (!cols.forall { case (c, t) =>
+        fileSchema.containsField(c) && readable(field(c)).contains(t) })
+      return false
+    val row = new Array[Any](cols.size)
+    var ok = true
+    val convs: Array[Converter] = Array.tabulate(cols.size) { i =>
+      new PrimitiveConverter {
+        private var dict: Array[AnyRef] = Array.empty
+        private def decode(v: Binary): AnyRef =
+          if (utf8) org.apache.spark.unsafe.types.UTF8String
+            .fromBytes(v.getBytes)
+          else v.toStringUsingUTF8
+        override def hasDictionarySupport: Boolean =
+          cols(i)._2 == PrimitiveTypeName.BINARY
+        override def setDictionary(
+            d: org.apache.parquet.column.Dictionary): Unit =
+          dict = Array.tabulate(d.getMaxId + 1)(j =>
+            decode(d.decodeToBinary(j)))
+        override def addValueFromDictionary(id: Int): Unit = row(i) = dict(id)
+        override def addBinary(v: Binary): Unit = row(i) = decode(v)
+        override def addInt(v: Int): Unit = row(i) = v
+        override def addLong(v: Long): Unit = row(i) = v
+        override def addBoolean(v: Boolean): Unit = row(i) = v
+        override def addDouble(v: Double): Unit = row(i) = v
+      }
+    }
+    val materializer = new RecordMaterializer[Object] {
+      private val root = new GroupConverter {
+        override def getConverter(i: Int): Converter = convs(i)
+        // a column the record does not set is null in it
+        override def start(): Unit = java.util.Arrays.fill(row, null)
+        override def end(): Unit = ok = f(row)
+      }
+      override def getCurrentRecord: Object = null
+      override def getRootConverter: GroupConverter = root
+    }
+    val proj = new org.apache.parquet.schema.MessageType(
+      fileSchema.getName, cols.map(c => field(c._1)): _*)
+    r.setRequestedSchema(proj)
+    val io = new org.apache.parquet.io.ColumnIOFactory()
+      .getColumnIO(proj, fileSchema)
+    var pages = r.readNextRowGroup()
+    while (ok && pages != null) {
+      val rr = io.getRecordReader(pages, materializer)
+      var i = 0L
+      while (ok && i < pages.getRowCount) { rr.read(); i += 1 }
+      pages = r.readNextRowGroup()
+    }
+    ok
+  }
+
+  /** [[streamRows]] over frame dir `dir` projected to `schema`'s
+    * fields, in frame order (sorted part files, row order within
+    * each), part after part on the calling thread. Returns false,
+    * cutting the stream short, when `f` returns false, a field's type
+    * is not a frame type, or a part lacks a field with that type. */
+  private[ops] def streamFrame(spark: SparkSession, dir: String,
+      schema: StructType)(f: Array[Any] => Boolean): Boolean =
+    frameCols(schema).exists(cols => frameParts(spark, dir).forall(
+      withFile(_)(streamRows(_, cols, utf8 = false)(f))))
 
   /** The positions of a deletion-vector frame dir (`path`, `row_index`
-    * rows), read on the DRIVER (parquet-mr, no Spark job) and grouped
-    * per file key: the key's raw UTF-8 bytes exactly as the writer
-    * stored them → that file's deleted row indexes, sorted ascending.
-    * Empty when the dir does not exist. */
+    * rows), read on the DRIVER ([[streamRows]], parts on the bounded IO
+    * pool) and grouped per file key: the key's raw UTF-8 bytes exactly
+    * as the writer stored them → that file's deleted row indexes,
+    * sorted ascending. Empty when the dir does not exist. */
   def dvPositions(spark: SparkSession, dir: String)
       : Map[org.apache.spark.unsafe.types.UTF8String, Array[Long]] = {
     import org.apache.spark.unsafe.types.UTF8String
-    val conf = spark.sparkContext.hadoopConfiguration
-    val d = new Path(dir)
-    val per = parMap(frameFiles(d.getFileSystem(conf), d)) { f =>
+    val per = parMap(frameParts(spark, dir)) { part =>
       val acc = scala.collection.mutable.HashMap
         .empty[UTF8String, scala.collection.mutable.ArrayBuilder.ofLong]
-      val reader = groupReader(HadoopInputFile.fromStatus(f, conf))
-      try {
-        var g = reader.read()
-        if (g != null) {
-          val pi = g.getType.getFieldIndex("path")
-          val ri = g.getType.getFieldIndex("row_index")
-          while (g != null) {
-            val key = UTF8String.fromBytes(g.getBinary(pi, 0).getBytes)
-            acc.getOrElseUpdate(key, new scala.collection.mutable
-              .ArrayBuilder.ofLong) += g.getLong(ri, 0)
-            g = reader.read()
+      val read = withFile(part)(
+        streamRows(_, Seq("path" -> PrimitiveTypeName.BINARY,
+          "row_index" -> PrimitiveTypeName.INT64), utf8 = true) { row =>
+          !row.contains(null) && {
+            acc.getOrElseUpdate(row(0).asInstanceOf[UTF8String],
+              new scala.collection.mutable.ArrayBuilder.ofLong) +=
+              row(1).asInstanceOf[Long]
+            true
           }
-        }
-      } finally reader.close()
+        })
+      require(read, s"deletion vector part ${part.getPath} holds a row " +
+        "that is not a non-null (path, row_index)")
       acc.view.mapValues(_.result()).toSeq
     }
     per.flatten.groupMapReduce(_._1)(_._2)(_ ++ _).map { case (k, v) =>
@@ -392,195 +479,83 @@ object MetaIO {
     }
   }
 
-  /** Stream the rows of frame dir `dir` as (`key`, `a`, `b`) — one
-    * string and two long columns — into `f`, in frame order (sorted
-    * part files, row order within each), read on the DRIVER through
-    * parquet-mr's column readers with no record object per row; a
-    * dictionary-encoded key is decoded once per dictionary entry, so
-    * consecutive rows of one key hand `f` the same String instance.
-    * Returns false, cutting the stream short, when `f` returns false,
-    * a row holds a null in one of the columns, or a part lacks one of
-    * them with that physical type — the caller's cue for its
-    * fallback. */
-  private[ops] def streamKeyLongLong(spark: SparkSession, dir: String,
-      key: String, a: String, b: String)(
-      f: (String, Long, Long) => Boolean): Boolean = {
-    import org.apache.parquet.io.api._
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-    val conf = spark.sparkContext.hadoopConfiguration
-    val d = new Path(dir)
-    var k: String = null
-    var va, vb = 0L
-    var seen = 0
-    var ok = true
-    val keyConv = new PrimitiveConverter {
-      private var dict: Array[String] = Array.empty
-      override def hasDictionarySupport: Boolean = true
-      override def setDictionary(
-          dictionary: org.apache.parquet.column.Dictionary): Unit =
-        dict = Array.tabulate(dictionary.getMaxId + 1)(
-          dictionary.decodeToBinary(_).toStringUsingUTF8)
-      override def addValueFromDictionary(id: Int): Unit = {
-        k = dict(id); seen |= 1
-      }
-      override def addBinary(v: Binary): Unit = {
-        k = v.toStringUsingUTF8; seen |= 1
-      }
-    }
-    val convs: Array[Converter] = Array(keyConv,
-      new PrimitiveConverter {
-        override def addLong(v: Long): Unit = { va = v; seen |= 2 }
-      },
-      new PrimitiveConverter {
-        override def addLong(v: Long): Unit = { vb = v; seen |= 4 }
-      })
-    val materializer = new RecordMaterializer[Object] {
-      private val root = new GroupConverter {
-        override def getConverter(i: Int): Converter = convs(i)
-        override def start(): Unit = seen = 0
-        override def end(): Unit =
-          ok = seen == 7 && f(k, va, vb)
-      }
-      override def getCurrentRecord: Object = null
-      override def getRootConverter: GroupConverter = root
-    }
-    frameFiles(d.getFileSystem(conf), d).iterator.takeWhile(_ => ok)
-      .foreach { st =>
-        val r = openFile(st, conf)
-        try {
-          val fileSchema = r.getFooter.getFileMetaData.getSchema
-          def field(c: String) =
-            fileSchema.getType(fileSchema.getFieldIndex(c))
-          def has(c: String, t: PrimitiveTypeName) =
-            fileSchema.containsField(c) && field(c).isPrimitive &&
-              !field(c).isRepetition(
-                org.apache.parquet.schema.Type.Repetition.REPEATED) &&
-              field(c).asPrimitiveType.getPrimitiveTypeName == t
-          if (!has(key, PrimitiveTypeName.BINARY) ||
-              !has(a, PrimitiveTypeName.INT64) ||
-              !has(b, PrimitiveTypeName.INT64)) ok = false
-          else {
-            val proj = new org.apache.parquet.schema.MessageType(
-              fileSchema.getName, field(key), field(a), field(b))
-            r.setRequestedSchema(proj)
-            val io = new org.apache.parquet.io.ColumnIOFactory()
-              .getColumnIO(proj, fileSchema)
-            var pages = r.readNextRowGroup()
-            while (ok && pages != null) {
-              val rr = io.getRecordReader(pages, materializer)
-              var i = 0L
-              while (ok && i < pages.getRowCount) { rr.read(); i += 1 }
-              pages = r.readNextRowGroup()
-            }
-          }
-        } finally r.close()
-      }
-    ok
-  }
-
-  private def groupToMap(
-      g: org.apache.parquet.example.data.Group): Map[String, Any] = {
-    val gt = g.getType
-    (0 until gt.getFieldCount).map { i =>
-      val ft = gt.getType(i)
-      val name = ft.getName
-      val v: Any =
-        if (g.getFieldRepetitionCount(i) == 0) null
-        else if (!ft.isPrimitive) null
-        else ft.asPrimitiveType().getPrimitiveTypeName match {
-          case org.apache.parquet.schema.PrimitiveType
-            .PrimitiveTypeName.BINARY => g.getString(i, 0)
-          case org.apache.parquet.schema.PrimitiveType
-            .PrimitiveTypeName.INT64 => g.getLong(i, 0)
-          case org.apache.parquet.schema.PrimitiveType
-            .PrimitiveTypeName.INT32 => g.getInteger(i, 0)
-          case org.apache.parquet.schema.PrimitiveType
-            .PrimitiveTypeName.BOOLEAN => g.getBoolean(i, 0)
-          case org.apache.parquet.schema.PrimitiveType
-            .PrimitiveTypeName.DOUBLE => g.getDouble(i, 0)
-          case _ => null
-        }
-      name -> v
-    }.toMap
-  }
-
   /** The first `cap` rows of one part file of a frame, as
     * [[frameRows]] returns them. */
-  private def partRows(conf: Configuration,
-      f: org.apache.hadoop.fs.FileStatus,
-      cap: Long = Long.MaxValue): Seq[Map[String, Any]] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[Map[String, Any]]
-    val reader = groupReader(HadoopInputFile.fromStatus(f, conf))
-    try {
-      var g = reader.read()
-      while (g != null && out.size < cap) {
-        out += groupToMap(g)
-        g = reader.read()
+  private def partRows(part: HadoopInputFile,
+      cap: Long = Long.MaxValue): Seq[Map[String, Any]] =
+    withFile(part) { r =>
+      import scala.jdk.CollectionConverters._
+      val fields = r.getFileMetaData.getSchema.getFields.asScala.toSeq
+      val cols = fields.flatMap(t => readable(t).map(t.getName -> _))
+      // a field the decoder does not read is null in every row
+      val at = fields.map(t => t.getName -> cols.indexWhere(_._1 == t.getName))
+      val out = scala.collection.mutable.ArrayBuffer.empty[Map[String, Any]]
+      streamRows(r, cols, utf8 = false) { row =>
+        out += at.map { case (n, i) => n -> (if (i < 0) null else row(i)) }
+          .toMap
+        out.size < cap
       }
-    } finally reader.close()
-    out.toSeq
+      out.toSeq
+    }
+
+  /** One part file of a frame as Spark Rows in `schema`'s field order,
+    * values as [[frameRows]] reads them; None when the part lacks a
+    * field of `schema` with its type. */
+  private def partRowsAs(part: HadoopInputFile, schema: StructType)
+      : Option[Seq[org.apache.spark.sql.Row]] = {
+    val out = scala.collection.mutable.ArrayBuffer
+      .empty[org.apache.spark.sql.Row]
+    // schema-attached rows: callers use fieldIndex/getAs by name,
+    // exactly like rows collected from a Spark read
+    frameCols(schema).filter(cols => withFile(part)(streamRows(_, cols,
+      utf8 = false) { row =>
+        out += new org.apache.spark.sql.catalyst.expressions
+          .GenericRowWithSchema(row.clone(), schema)
+        true
+      })).map(_ => out.toSeq)
   }
 
   /** ALL rows of a tiny metadata parquet dir, read on the DRIVER
-    * (parquet-mr example reader — no Spark job): one (column name →
-    * value) map per row, string/long/int/bool/double primitives,
-    * null-safe. For O(files) planning frames (`_stats`, `_parts`) —
-    * NEVER for data. NOT memoized (callers cache at their own grain);
-    * `limit` bounds the read for head probes. */
+    * ([[streamRows]] — no Spark job): one (column name → value) map per
+    * row, its part file's every top-level field: BINARY as String,
+    * INT32 as Int, INT64 as Long, BOOLEAN and DOUBLE as themselves,
+    * nulls and any other field as null. For O(files) planning frames
+    * (`_stats`, `_parts`) — NEVER for data. NOT memoized (callers cache
+    * at their own grain); `limit` bounds the read for head probes. */
   def frameRows(spark: SparkSession, dir: String,
       limit: Long = Long.MaxValue): Seq[Map[String, Any]] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val d = new Path(dir)
-    val fs = d.getFileSystem(conf)
-    val files = frameFiles(fs, d)
+    val files = frameParts(spark, dir)
     if (limit != Long.MaxValue) {
       // bounded probe (frame heads): sequential, stop at the limit —
       // usually one footer + one row group of the first file
       val out = scala.collection.mutable.ArrayBuffer.empty[Map[String, Any]]
       files.iterator.takeWhile(_ => out.size < limit).foreach { f =>
-        out ++= partRows(conf, f, limit - out.size)
+        out ++= partRows(f, limit - out.size)
       }
       out.toSeq
     } else
       // full frame read: one task per file on the bounded IO pool,
       // order-preserving (concatenation order = sorted file order,
       // same as the sequential loop)
-      parMap(files)(partRows(conf, _)).flatten
+      parMap(files)(partRows(_)).flatten
   }
 
   /** [[frameRows]] as Spark Rows in `schema`'s field order — the form
     * the driver-side frame rewrites need (carry/filter a committed
-    * frame without a Spark job). Returns None when any schema field
-    * is missing from ANY row's keys — a frame dir whose part files
-    * disagree on shape (caller falls back to the Spark read). Values
-    * pass through as read (Long/Int/String/Boolean/Double or null). */
+    * frame without a Spark job). Returns None when any part file
+    * lacks a schema field with its type — a frame dir whose part files
+    * disagree on shape (caller falls back to the Spark read). */
   def frameRowsAs(spark: SparkSession, dir: String,
-      schema: StructType): Option[Seq[org.apache.spark.sql.Row]] =
-    rowsAs(frameRows(spark, dir), schema)
-
-  private def rowsAs(maps: Seq[Map[String, Any]], schema: StructType)
-      : Option[Seq[org.apache.spark.sql.Row]] = {
-    val names = schema.fields.map(_.name)
-    if (!maps.forall(m => names.forall(m.contains))) return None
-    // schema-attached rows: callers use fieldIndex/getAs by name,
-    // exactly like rows collected from a Spark read
-    Some(maps.map(m =>
-      new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(
-        names.map(m(_)).toArray, schema)))
+      schema: StructType): Option[Seq[org.apache.spark.sql.Row]] = {
+    val per = parMap(frameParts(spark, dir))(partRowsAs(_, schema))
+    if (per.exists(_.isEmpty)) None else Some(per.flatMap(_.get))
   }
 
   /** Can [[writeFrame]] represent this schema? Flat frames of the
     * protocol's primitive types only — anything else keeps the Spark
     * write path. */
   def frameWritable(schema: StructType): Boolean =
-    schema.fields.forall(f => f.dataType match {
-      case org.apache.spark.sql.types.LongType |
-           org.apache.spark.sql.types.IntegerType |
-           org.apache.spark.sql.types.StringType |
-           org.apache.spark.sql.types.BooleanType |
-           org.apache.spark.sql.types.DoubleType => true
-      case _ => false
-    })
+    frameCols(schema).isDefined
 
   /** DRIVER-SIDE parquet write of a tiny metadata frame (`_stats`,
     * `_parts`, `_dv` carries): one file, written through parquet-mr
@@ -658,15 +633,15 @@ object MetaIO {
     * decode. A dictionary holds exactly the values its chunk was
     * written from; were it ever a superset, both uses below (all keys
     * kept, no key kept) would stay sound. */
-  private def dictKeys(r: org.apache.parquet.hadoop.ParquetFileReader,
+  private def dictKeys(r: ParquetFileReader,
       key: String): Option[(Set[String], Boolean)] = {
     import scala.jdk.CollectionConverters._
     import org.apache.parquet.column.Encoding
     val schema = r.getFooter.getFileMetaData.getSchema
     if (!schema.containsField(key)) return None
     val kt = schema.getType(schema.getFieldIndex(key))
-    if (!kt.isPrimitive || kt.asPrimitiveType.getPrimitiveTypeName !=
-        org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.BINARY)
+    if (!kt.isPrimitive ||
+        kt.asPrimitiveType.getPrimitiveTypeName != PrimitiveTypeName.BINARY)
       return None
     val desc = schema.getColumnDescription(Array(key))
     // parquet-mr's own test (DictionaryFilter): page encoding stats
@@ -709,8 +684,7 @@ object MetaIO {
   /** A filtered carry of a committed frame dir, planned on the
     * driver: the one part file carried whole (`copy`) and every other
     * surviving row, in frame order. */
-  private[ops] final case class FrameCarry(
-      copy: Option[org.apache.hadoop.fs.FileStatus],
+  private[ops] final case class FrameCarry(copy: Option[HadoopInputFile],
       rows: Seq[org.apache.spark.sql.Row])
 
   /** Plan the carry of frame dir `src` filtered to the rows whose
@@ -727,30 +701,29 @@ object MetaIO {
   private[ops] def planCarry(spark: SparkSession, src: String,
       schema: StructType, keyCol: String, keep: Set[String])
       : Option[FrameCarry] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val d = new Path(src)
     val shape = schema.map(f => (f.name, f.dataType))
     val converter = new org.apache.spark.sql.execution.datasources.parquet
       .ParquetToSparkSchemaConverter(conf = spark.sessionState.conf)
     // per part: Some(true) whole, Some(false) skipped, None decode
-    val parts = frameFiles(d.getFileSystem(conf), d)
+    val parts = frameParts(spark, src)
     val verdicts = parMap(parts) { f =>
-      val r = openFile(f, conf)
-      try dictKeys(r, keyCol) match {
-        case Some((ks, _)) if !ks.exists(keep.contains) => Some(false)
-        case Some((ks, false)) if ks.forall(keep.contains) &&
-            converter.convert(r.getFileMetaData.getSchema)
-              .map(x => (x.name, x.dataType)) == shape => Some(true)
-        case _ => None
-      } finally r.close()
+      withFile(f) { r =>
+        dictKeys(r, keyCol) match {
+          case Some((ks, _)) if !ks.exists(keep.contains) => Some(false)
+          case Some((ks, false)) if ks.forall(keep.contains) &&
+              converter.convert(r.getFileMetaData.getSchema)
+                .map(x => (x.name, x.dataType)) == shape => Some(true)
+          case _ => None
+        }
+      }
     }
     val whole = parts.zip(verdicts).collect { case (f, Some(true)) => f }
-    val copy = whole.maxByOption(_.getLen)
+    val copy = whole.maxByOption(_.getLength)
     val ki = schema.fieldIndex(keyCol)
     val decoded = parMap(parts.zip(verdicts).filter {
       case (f, v) => v.isEmpty || (v.contains(true) && !copy.contains(f))
     }) { case (f, _) =>
-      rowsAs(partRows(conf, f), schema).map(_.filter(r =>
+      partRowsAs(f, schema).map(_.filter(r =>
         !r.isNullAt(ki) && keep.contains(r.getString(ki))))
     }
     if (decoded.exists(_.isEmpty)) None
@@ -772,9 +745,10 @@ object MetaIO {
     if (!append && fs.exists(d))
       throw new org.apache.hadoop.fs.FileAlreadyExistsException(
         s"writeCarry: $dst already exists")
-    carry.copy.foreach { st =>
-      val crc = new Path(st.getPath.getParent, s".${st.getPath.getName}.crc")
-      copyFiles(fs, st.getPath +: Seq(crc).filter(c =>
+    carry.copy.foreach { part =>
+      val p = part.getPath
+      val crc = new Path(p.getParent, s".${p.getName}.crc")
+      copyFiles(fs, p +: Seq(crc).filter(c =>
         isLocal(fs) && localFile(c).isFile), fs, d)
     }
     val rows = carry.rows ++ fresh

@@ -61,10 +61,6 @@ object PartitionedTable {
       dir: String, df: DataFrame, pcol: String)
       : Seq[(String, String)] = {
     require(df.columns.contains(pcol), s"no partition column $pcol")
-    val nulls = df.filter(col(pcol).isNull).limit(1).count()
-    require(nulls == 0L,
-      s"partition column $pcol contains NULL — null routes to hive's " +
-        "default bucket and every pruning decision would misclassify")
     df.withColumn("__gp", col(pcol).cast("string"))
       .write.mode("append").partitionBy("__gp")
       .parquet(s"$root/$dir")
@@ -74,22 +70,34 @@ object PartitionedTable {
       .filter(st => st.isDirectory &&
         st.getPath.getName.startsWith("__gp="))
       .sortBy(_.getPath.getName)
+    def files(pd: org.apache.hadoop.fs.FileStatus) =
+      f.listStatus(pd.getPath).toSeq.map(_.getPath)
+        .filter(p => !p.getName.startsWith("_") && !p.getName.startsWith("."))
+    // Spark writes a NULL and an empty string alike into its default
+    // partition; the footers' null counts of `pcol` tell them apart
+    val default = "__gp=" + org.apache.spark.sql.catalyst.catalog
+      .ExternalCatalogUtils.DEFAULT_PARTITION_NAME
+    val nullFree = partDirs.filter(_.getPath.getName == default)
+      .forall(pd => MetaIO.footerNullFree(spark, files(pd), pcol))
+    if (!nullFree) partDirs.foreach(pd => f.delete(pd.getPath, true))
+    require(nullFree,
+      s"partition column $pcol contains NULL — null routes to hive's " +
+        "default bucket and every pruning decision would misclassify")
     val out = scala.collection.mutable.ListBuffer.empty[(String, String)]
     partDirs.zipWithIndex.foreach { case (pd, i) =>
       // Spark escapes special chars in partition dir names the hive
       // way (%XX); decode to recover the exact string value
-      val enc = pd.getPath.getName.drop("__gp=".length)
-      val value = java.net.URLDecoder.decode(
-        enc.replace("+", "%2B"), "UTF-8")
-      f.listStatus(pd.getPath).toSeq.map(_.getPath.getName)
-        .filter(n => !n.startsWith("_") && !n.startsWith("."))
-        .foreach { n =>
-          val target = new org.apache.hadoop.fs.Path(base, s"p$i-$n")
-          require(f.rename(
-            new org.apache.hadoop.fs.Path(pd.getPath, n), target),
-            s"flatten rename failed for $n")
-          out += ((s"$dir/p$i-$n", value))
-        }
+      val name = pd.getPath.getName
+      val value =
+        if (name == default) ""
+        else java.net.URLDecoder.decode(
+          name.drop("__gp=".length).replace("+", "%2B"), "UTF-8")
+      files(pd).foreach { src =>
+        val target = new org.apache.hadoop.fs.Path(base, s"p$i-${src.getName}")
+        require(f.rename(src, target),
+          s"flatten rename failed for ${src.getName}")
+        out += ((s"$dir/p$i-${src.getName}", value))
+      }
       f.delete(pd.getPath, true) // now-empty hive dir
     }
     // empty input → Nil (callers decide: a full commit REQUIRES data,

@@ -147,7 +147,7 @@ object ZTable {
     * (word, bit) pairs — two per key, from the key's two hashes modulo
     * the file's register size — are worked out once per file, and the
     * committed `(path, word, bits)` rows stream past them
-    * ([[MetaIO.streamKeyLongLong]]): no map per row, no table of all
+    * ([[MetaIO.streamFrame]]): no map per row, no table of all
     * registers. The frame dir may hold several parts (one per commit
     * that appended registers); a file's words may sit in any of them.
     * Candidates come back in first-seen frame order. */
@@ -192,25 +192,30 @@ object ZTable {
     val needs = new java.util.LinkedHashMap[String, Needs]()
     var lastPath: String = null
     var last: Needs = null
-    val streamed = MetaIO.streamKeyLongLong(spark, bp.toString, "path",
-        "word", "bits") { (p, w, b) =>
-      if (!(p eq lastPath)) {
-        lastPath = p
-        last = needs.get(p)
-        if (last == null) {
-          // a register row of a file `_stats` does not list: fall back
-          last = mOf(p).map(new Needs(_)).orNull
-          if (last != null) needs.put(p, last)
+    // a row with a null falls back, like a part of another shape
+    val streamed = MetaIO.streamFrame(spark, bp.toString, bloomSchema) {
+      row => !row.contains(null) && {
+        val p = row(0).asInstanceOf[String]
+        if (!(p eq lastPath)) {
+          lastPath = p
+          last = needs.get(p)
+          if (last == null) {
+            // a register row of a file `_stats` does not list: fall back
+            last = mOf(p).map(new Needs(_)).orNull
+            if (last != null) needs.put(p, last)
+          }
         }
-      }
-      last != null && {
-        var i = 0
-        while (i < hs.length) {
-          if (last.word(i) == w && (b & last.bit(i)) != 0L)
-            last.hit(i) = true
-          i += 1
+        last != null && {
+          val w = row(1).asInstanceOf[Long]
+          val b = row(2).asInstanceOf[Long]
+          var i = 0
+          while (i < hs.length) {
+            if (last.word(i) == w && (b & last.bit(i)) != 0L)
+              last.hit(i) = true
+            i += 1
+          }
+          true
         }
-        true
       }
     }
     if (!streamed) return None
@@ -453,11 +458,11 @@ object ZTable {
     * here is committed version payload. */
   def scanXRange(spark: SparkSession, root: String, lo: Long, hi: Long)
       : DataFrame = {
-    val v = ManifestTable.currentVersion(spark, root)
-      .getOrElse(sys.error(s"no committed version at $root"))
+    // one snapshot: the version, its data dir and its `_dv` agree
+    val b = ManifestTable.baseOf(spark, root, "read")
+    val (v, sDir) = (b.v, b.dir)
     // O(files) planning metadata, read on the DRIVER via parquet-mr
     // (the collect() paid a Spark job per pruned scan plan)
-    val sDir = ManifestTable.versionDataDir(spark, root, v)
     val sP = new org.apache.hadoop.fs.Path(s"$root/$sDir/_stats")
     require(fs(spark, root).exists(sP),
       s"version $v of $root has no committed skipping stats — run " +
@@ -475,13 +480,12 @@ object ZTable {
     }.map(_("path").asInstanceOf[String]).toIndexedSeq
     val pruned =
       if (keep.isEmpty)
-        ManifestTable.readVersion(spark, root, v).filter(lit(false))
+        ManifestTable.readDataDir(spark, root, sDir).filter(lit(false))
       else {
         // a merge-on-read version's deletions apply to the pruned
         // read too (stats keep pre-delete bounds — still a sound
         // SUPERSET, deletion only shrinks file content)
-        ManifestTable.live(spark, root,
-          ManifestTable.versionDataDir(spark, root, v),
+        ManifestTable.live(spark, root, sDir,
           MetaIO.readParquet(spark,
             keep.map(p => ManifestTable.resolveRef(root, p))))
       }
@@ -1011,13 +1015,17 @@ object ZTable {
     * indexed column (a provable superset — Bloom has no false
     * negatives). O(files) planning, same as [[scanXRange]]. */
   def bloomCandidateFiles(spark: SparkSession, root: String,
-      key: Column): Seq[String] = {
-    val v = ManifestTable.currentVersion(spark, root)
-      .getOrElse(sys.error(s"no committed version at $root"))
-    val dir = ManifestTable.versionDataDir(spark, root, v)
+      key: Column): Seq[String] =
+    bloomCandidateFiles(spark, root,
+      ManifestTable.baseOf(spark, root, "read"), key)
+
+  /** [[bloomCandidateFiles]] of version snapshot `b`. */
+  private def bloomCandidateFiles(spark: SparkSession, root: String,
+      b: ManifestTable.Base, key: Column): Seq[String] = {
+    val dir = b.dir
     require(fs(spark, root).exists(
       new org.apache.hadoop.fs.Path(s"$root/$dir/_bloom")),
-      s"version $v of $root has no committed Bloom index")
+      s"version ${b.v} of $root has no committed Bloom index")
     keyValue(spark, key) match {
       case Some(k) => bloomProbePathsAny(spark, root, dir, Seq(k))
       case None => joinBloomProbe(spark, root, dir, array(key))
@@ -1053,14 +1061,18 @@ object ZTable {
     * resurrect deleted rows). Returns an empty (correctly-schemed)
     * frame when no file can contain the key. */
   def readBloomCandidates(spark: SparkSession, root: String,
-      key: Column): DataFrame = {
-    val v = ManifestTable.currentVersion(spark, root)
-      .getOrElse(sys.error(s"no committed version at $root"))
-    val cands = bloomCandidateFiles(spark, root, key)
+      key: Column): DataFrame =
+    readBloomCandidates(spark, root,
+      ManifestTable.baseOf(spark, root, "read"), key)
+
+  /** [[readBloomCandidates]] of version snapshot `b`: its candidate
+    * files are read under its own deletion vector. */
+  private[ops] def readBloomCandidates(spark: SparkSession, root: String,
+      b: ManifestTable.Base, key: Column): DataFrame = {
+    val cands = bloomCandidateFiles(spark, root, b, key)
     if (cands.isEmpty)
-      return ManifestTable.readVersion(spark, root, v).filter(lit(false))
-    ManifestTable.live(spark, root,
-      ManifestTable.versionDataDir(spark, root, v),
+      return ManifestTable.readDataDir(spark, root, b.dir).filter(lit(false))
+    ManifestTable.live(spark, root, b.dir,
       MetaIO.readParquet(spark,
         cands.map(p => ManifestTable.resolveRef(root, p))))
   }

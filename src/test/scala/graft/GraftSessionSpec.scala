@@ -108,4 +108,17 @@ class GraftSessionSpec extends SparkSpec {
       assert(callers == Seq("ManifestTable.scala:publish"), f)
     }
   }
+
+  test("parquet-mr files are read in one place") {
+    // MetaIO holds the one file opener and the one row decoder: a
+    // second parquet-mr reader elsewhere fails here, and so does the
+    // example-record reader or the deprecated footer read anywhere
+    val readers = Seq("ParquetFileReader", "ParquetReader",
+      "GroupReadSupport", "ColumnIOFactory")
+    assert(callers(Seq("src/main/scala/graft"), readers) ==
+      Seq("MetaIO.scala"))
+    assert(sources(Seq("src/main/scala/graft")).filter { case (_, lines) =>
+      lines.exists(l => l.contains("GroupReadSupport") ||
+        l.contains("readFooter(")) }.isEmpty)
+  }
 }

@@ -13,6 +13,66 @@ class MetaIOSpec extends SparkSpec {
   private def freshDir(): String =
     java.nio.file.Files.createTempDirectory("graft_metaio_").toString
 
+  /** The frame readers' parity inputs: every type a frame holds. */
+  private val parity = {
+    import org.apache.spark.sql.types._
+    StructType(Seq(StructField("path", StringType),
+      StructField("row_index", LongType), StructField("i", IntegerType),
+      StructField("b", BooleanType), StructField("d", DoubleType)))
+  }
+
+  /** Rows `lo until hi` of the parity frame: runs of one `path`, and
+    * with `nulls` a null in every column somewhere. */
+  private def parityRows(lo: Long, hi: Long, nulls: Boolean) = {
+    def orNull(c: org.apache.spark.sql.Column, m: Int) =
+      if (nulls) when($"id" % m =!= m / 2, c) else c
+    spark.range(lo, hi).select(
+      orNull(concat(lit("d1/f"), ($"id" / 37).cast("long")), 53).as("path"),
+      orNull($"id" * 7, 59).as("row_index"),
+      orNull(($"id" % 11).cast("int"), 61).as("i"),
+      orNull($"id" % 3 === 0, 67).as("b"),
+      orNull($"id" / 4.0, 71).as("d"))
+  }
+
+  /** A multi-part parity frame at `dir`, in frame order: a Spark part
+    * with dictionaries, a [[MetaIO.writeFrame]] part and a Spark part
+    * without dictionaries, each Spark part cut into several row
+    * groups. Returns the part files, sorted. */
+  private def parityFrame(dir: String, nulls: Boolean): Seq[String] = {
+    def sparkPart(n: Int, lo: Long, hi: Long, dictionary: Boolean) = {
+      val tmp = freshDir() + "/w"
+      parityRows(lo, hi, nulls).coalesce(1).write
+        .option("parquet.enable.dictionary", dictionary.toString)
+        .option("parquet.block.size", "1024").parquet(tmp)
+      val part = new java.io.File(tmp).listFiles()
+        .filter(_.getName.startsWith("part-")).head
+      new java.io.File(dir).mkdirs()
+      java.nio.file.Files.copy(part.toPath,
+        new java.io.File(dir, s"part-00$n-${part.getName}").toPath)
+    }
+    sparkPart(0, 0, 400, dictionary = true)
+    MetaIO.writeFrame(spark, dir, parity,
+      parityRows(400, 500, nulls).collect().toSeq, append = true)
+    sparkPart(1, 500, 900, dictionary = false)
+    val files = new java.io.File(dir).listFiles().map(_.getPath)
+      .filter(_.split('/').last.startsWith("part-")).toSeq.sorted
+    assert(files.size == 3)
+    files.foreach(f => assert(
+      f.split('/').last.startsWith("part-00000-") || rowGroups(f) > 1, f))
+    files
+  }
+
+  private def rowGroups(file: String): Int =
+    org.apache.parquet.hadoop.ParquetFileReader.readFooter(
+      spark.sparkContext.hadoopConfiguration,
+      new org.apache.hadoop.fs.Path(file), org.apache.parquet.format
+        .converter.ParquetMetadataConverter.NO_FILTER).getBlocks.size
+
+  /** Each part of `files` read by Spark in `parity`'s shape, in order. */
+  private def sparkRows(files: Seq[String]): Seq[Seq[Any]] =
+    files.flatMap(f =>
+      spark.read.schema(parity).parquet(f).collect().map(_.toSeq))
+
   test("readParquet: footer-resolved schema equals inference, " +
       "rows identical") {
     val d = freshDir()
@@ -254,6 +314,42 @@ class MetaIOSpec extends SparkSpec {
       org.apache.spark.sql.types.StructField("nope",
         org.apache.spark.sql.types.StringType)))
     assert(MetaIO.frameRowsAs(spark, s"$d/f", other).isEmpty)
+    // every reader equals the Spark read of a frame holding each type,
+    // nulls, dictionary and plain parts, and several row groups
+    val files = parityFrame(s"$d/p", nulls = true)
+    val truth = sparkRows(files)
+    assert(truth.size == 900 && parity.indices.forall(j =>
+      truth.exists(_(j) == null)))
+    assert(MetaIO.frameRows(spark, s"$d/p").map(m =>
+      parity.fieldNames.toSeq.map(m(_))) == truth)
+    assert(MetaIO.frameRowsAs(spark, s"$d/p", parity).get.map(_.toSeq) ==
+      truth)
+    val streamed = scala.collection.mutable.ArrayBuffer.empty[Seq[Any]]
+    val paths = scala.collection.mutable.ArrayBuffer.empty[String]
+    assert(MetaIO.streamFrame(spark, s"$d/p", parity) { row =>
+      streamed += row.toSeq
+      paths += row(0).asInstanceOf[String]
+      true
+    })
+    assert(streamed == truth)
+    // the dictionary part (the first 400 rows) hands one String
+    // instance to a run of one key within a row group
+    val runs = paths.take(400).sliding(2).filter(p =>
+      p(0) != null && p(0) == p(1)).toSeq
+    assert(runs.size > 300 &&
+      runs.count(p => !(p(0) eq p(1))) < rowGroups(files.head))
+    Seq("path", "row_index", "i").foreach { c =>
+      val j = parity.fieldIndex(c)
+      assert(MetaIO.columnValues(spark, files, c).get.flatten.map {
+        case u: org.apache.spark.unsafe.types.UTF8String => u.toString
+        case v => v
+      } == truth.map(_(j)), c)
+    }
+    val dv = sparkRows(parityFrame(s"$d/dv", nulls = false))
+      .groupMap(_(0).toString)(_(1).asInstanceOf[Long])
+      .map { case (k, v) => k -> v.sorted }
+    assert(MetaIO.dvPositions(spark, s"$d/dv").map { case (k, v) =>
+      k.toString -> v.toSeq } == dv)
   }
 
   test("frameRowsAs checks every row's keys: a later part file that " +
@@ -280,6 +376,21 @@ class MetaIOSpec extends SparkSpec {
     assert(MetaIO.frameRowsAs(spark, f.getPath, full).isEmpty)
     assert(MetaIO.frameRowsAs(spark, f.getPath, short).get
       .map(_.getString(0)) == Seq("p1", "p2"))
+    // a parity frame plus a part that lacks `d`: the full-shape
+    // readers decline, the others read the part's fields as Spark does
+    val files = parityFrame(s"$d/p", nulls = true)
+    MetaIO.writeFrame(spark, s"$d/p", StructType(parity.take(4)),
+      Seq(org.apache.spark.sql.Row("d9/x", 1L, 2, true)), append = true)
+    val all = new java.io.File(s"$d/p").listFiles().map(_.getPath)
+      .filter(_.split('/').last.startsWith("part-")).toSeq.sorted
+    assert(all.size == files.size + 1)
+    assert(MetaIO.frameRows(spark, s"$d/p").map(m =>
+      parity.fieldNames.toSeq.map(m.getOrElse(_, null))) == sparkRows(all))
+    assert(MetaIO.frameRowsAs(spark, s"$d/p", parity).isEmpty)
+    assert(!MetaIO.streamFrame(spark, s"$d/p", parity)(_ => true))
+    assert(MetaIO.columnValues(spark, all, "d").isEmpty)
+    assert(MetaIO.columnValues(spark, all, "path").get.flatten.size ==
+      sparkRows(all).size)
   }
 
   test("multi-path readParquet invariant: every footer of an unpinned " +

@@ -433,4 +433,37 @@ class PartitionedTableSpec extends SparkSpec {
       .sorted.toSeq == (0L until 200L).filter(k =>
         k % 7 != 0 && (k % 5 == 1 || k % 5 == 3)))
   }
+
+  test("the NULL check rides the partitioned write: an empty string is " +
+      "a partition value, a NULL refuses and publishes nothing") {
+    val root = freshRoot()
+    val df = Seq((1L, "a"), (2L, ""), (3L, ""), (4L, "b")).toDF("k", "day")
+    // commitPartitioned starts the jobs of its write and no more
+    val (v1, jobs) = JobCounter.jobs(spark)(
+      PartitionedTable.commitPartitioned(spark, root, df, "day"))
+    val (_, writeJobs) = JobCounter.jobs(spark)(df
+      .withColumn("__gp", $"day").write.partitionBy("__gp")
+      .parquet(freshRoot()))
+    assert(v1 == 1L && jobs.size == writeJobs.size,
+      jobs.map(_.callSite).mkString("\n"))
+    // Spark writes "" into its default partition; `_parts` records ""
+    assert(PartitionedTable.parts(spark, root, 1L).select("value")
+      .as[String].collect().toSet == Set("a", "", "b"))
+    assert(PartitionedTable.readPartitions(spark, root, Seq(""))
+      .select("k").as[Long].collect().sorted.toSeq == Seq(2L, 3L))
+    assert(spark.sql(s"SELECT k FROM graft_table('$root') WHERE day = ''")
+      .as[Long].collect().sorted.toSeq == Seq(2L, 3L))
+    // a NULL, alone or beside "" in the default partition, refuses
+    // with the message of old and leaves the table at v1
+    Seq(Seq((5L, null: String), (6L, "a")),
+        Seq((5L, null: String), (6L, ""))).foreach { batch =>
+      val e = intercept[IllegalArgumentException] {
+        PartitionedTable.appendPartitioned(spark, root, batch.toDF("k", "day"))
+      }
+      assert(e.getMessage.contains("partition column day contains NULL"))
+      assert(ManifestTable.currentVersion(spark, root).contains(1L))
+    }
+    assert(ManifestTable.read(spark, root).get.select("k").as[Long]
+      .collect().sorted.toSeq == Seq(1L, 2L, 3L, 4L))
+  }
 }

@@ -286,4 +286,29 @@ class ZTableSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("optimizeZOrder"))
   }
+
+  test("readBloomCandidates resolves its version once: candidates of a " +
+      "held snapshot read under its own deletion vector while a newer " +
+      "MoR merge lands") {
+    val root = freshRoot()
+    seed(root)
+    ZTable.optimizeZOrder(spark, root, "x", "y", "k", nFiles = 8,
+      bloomCol = Some("v"))                                    // v2
+    val held = ManifestTable.latest(spark, root).get
+    assert(held.v == 2L)
+    // v3 updates the probed key: its old row is deleted by a vector,
+    // its new row lands in a fresh file that the Bloom index lists
+    ManifestTable.mergeBatchDV(spark, root,
+      Seq((123L, 123L, 1L, "v123")).toDF("k", "x", "y", "v"), Seq("k"),
+      batchKey = "b1")
+    assert(ManifestTable.currentVersion(spark, root).contains(3L))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.filter($"v" === "v123").select("k", "x", "y", "v")
+        .as[(Long, Long, Long, String)].collect().toSeq
+    val got = rows(ZTable.readBloomCandidates(spark, root, held, lit("v123")))
+    assert(got == rows(ManifestTable.readVersion(spark, root, 2L)))
+    assert(got == Seq((123L, 123L, 0L, "v123")))
+    assert(rows(ZTable.readBloomCandidates(spark, root, lit("v123"))) ==
+      Seq((123L, 123L, 1L, "v123")))
+  }
 }
