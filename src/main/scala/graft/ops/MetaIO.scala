@@ -498,21 +498,20 @@ object MetaIO {
       out.toSeq
     }
 
-  /** One part file of a frame as Spark Rows in `schema`'s field order,
-    * values as [[frameRows]] reads them; None when the part lacks a
-    * field of `schema` with its type. */
-  private def partRowsAs(part: HadoopInputFile, schema: StructType)
+  /** The open part file `r` of a frame as Spark Rows in `schema`'s
+    * field order, values as [[frameRows]] reads them; None when the
+    * part lacks a field of `schema` with its type. */
+  private def partRowsAs(r: ParquetFileReader, schema: StructType)
       : Option[Seq[org.apache.spark.sql.Row]] = {
     val out = scala.collection.mutable.ArrayBuffer
       .empty[org.apache.spark.sql.Row]
     // schema-attached rows: callers use fieldIndex/getAs by name,
     // exactly like rows collected from a Spark read
-    frameCols(schema).filter(cols => withFile(part)(streamRows(_, cols,
-      utf8 = false) { row =>
+    frameCols(schema).filter(streamRows(r, _, utf8 = false) { row =>
         out += new org.apache.spark.sql.catalyst.expressions
           .GenericRowWithSchema(row.clone(), schema)
         true
-      })).map(_ => out.toSeq)
+      }).map(_ => out.toSeq)
   }
 
   /** ALL rows of a tiny metadata parquet dir, read on the DRIVER
@@ -547,7 +546,8 @@ object MetaIO {
     * disagree on shape (caller falls back to the Spark read). */
   def frameRowsAs(spark: SparkSession, dir: String,
       schema: StructType): Option[Seq[org.apache.spark.sql.Row]] = {
-    val per = parMap(frameParts(spark, dir))(partRowsAs(_, schema))
+    val per = parMap(frameParts(spark, dir))(
+      withFile(_)(partRowsAs(_, schema)))
     if (per.exists(_.isEmpty)) None else Some(per.flatMap(_.get))
   }
 
@@ -704,27 +704,30 @@ object MetaIO {
     val shape = schema.map(f => (f.name, f.dataType))
     val converter = new org.apache.spark.sql.execution.datasources.parquet
       .ParquetToSparkSchemaConverter(conf = spark.sessionState.conf)
-    // per part: Some(true) whole, Some(false) skipped, None decode
+    val ki = schema.fieldIndex(keyCol)
+    // per part: Left(true) whole, Left(false) skipped, Right its
+    // surviving rows, decoded by the reader that read its verdict
     val parts = frameParts(spark, src)
     val verdicts = parMap(parts) { f =>
       withFile(f) { r =>
         dictKeys(r, keyCol) match {
-          case Some((ks, _)) if !ks.exists(keep.contains) => Some(false)
+          case Some((ks, _)) if !ks.exists(keep.contains) => Left(false)
           case Some((ks, false)) if ks.forall(keep.contains) &&
               converter.convert(r.getFileMetaData.getSchema)
-                .map(x => (x.name, x.dataType)) == shape => Some(true)
-          case _ => None
+                .map(x => (x.name, x.dataType)) == shape => Left(true)
+          case _ => Right(partRowsAs(r, schema).map(_.filter(row =>
+            !row.isNullAt(ki) && keep.contains(row.getString(ki)))))
         }
       }
     }
-    val whole = parts.zip(verdicts).collect { case (f, Some(true)) => f }
+    val whole = parts.zip(verdicts).collect { case (f, Left(true)) => f }
     val copy = whole.maxByOption(_.getLength)
-    val ki = schema.fieldIndex(keyCol)
-    val decoded = parMap(parts.zip(verdicts).filter {
-      case (f, v) => v.isEmpty || (v.contains(true) && !copy.contains(f))
-    }) { case (f, _) =>
-      partRowsAs(f, schema).map(_.filter(r =>
-        !r.isNullAt(ki) && keep.contains(r.getString(ki))))
+    // a whole part that is not the copy is decoded in full
+    val decoded = parMap(parts.zip(verdicts)) {
+      case (f, Left(true)) if !copy.contains(f) =>
+        withFile(f)(partRowsAs(_, schema))
+      case (_, Right(rows)) => rows
+      case _ => Some(Nil)
     }
     if (decoded.exists(_.isEmpty)) None
     else Some(FrameCarry(copy, decoded.flatMap(_.get)))
