@@ -722,7 +722,7 @@ object MetaIO {
     }
     val whole = parts.zip(verdicts).collect { case (f, Left(true)) => f }
     val copy = whole.maxByOption(_.getLength)
-    // a whole part that is not the copy is decoded in full
+    // every key of a whole part survives: it is read unfiltered
     val decoded = parMap(parts.zip(verdicts)) {
       case (f, Left(true)) if !copy.contains(f) =>
         withFile(f)(partRowsAs(_, schema))
